@@ -29,23 +29,25 @@ from .dialect import substitute_select_alias, to_spark_sql
 from .sources import sinks
 
 
-# FTS scores-view memo (r13): session-keyed (weak — a stopped session's
-# entries vanish) map of (backing path, id col, terms, fields, k1, b,
-# conjunctive) → temp view name; plus a session-global name sequence so
-# concurrent Engine instances never reuse a view name. Metadata only —
-# the scores view holds a PLAN, never rows.
+# FTS scores-view memo: session-keyed (weak — a stopped session's
+# entries vanish) map of (backing path, its (mtime_ns, size), id col,
+# terms, fields, k1, b, conjunctive) → temp view name; plus a
+# session-global name sequence so concurrent Engine instances never
+# reuse a view name. Metadata only — the scores view holds a PLAN,
+# never rows.
 import itertools
 import weakref
 
 _FTS_SCORES_BY_PATH: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
 _FTS_VIEW_SEQ = itertools.count(1)
 
-# File-level DML probe gate (r13): when the manifest stats cut excluded
-# nothing, the exact input_file_name() probe scans the whole table; below
-# this many TOTAL snapshot bytes the full rewrite it could at best avoid
-# is cheaper than the probe job itself, so the probe is skipped. Bytes,
-# not file/row/core counts, so the gate scales with data; override for
-# clusters whose write tasks are sized differently.
+# File-level DML probe gate: the exact input_file_name() probe only
+# narrows the manifest stats cut's candidate files; when the candidates
+# total at most this many bytes, rewriting them all is cheaper than the
+# probe job, so they are taken as the hit set unprobed (a full rewrite
+# when they are every file). Bytes, not file/row/core counts, so the gate
+# scales with data; override for clusters whose write tasks are sized
+# differently.
 _DML_PROBE_SKIP_MAX_BYTES = int(os.environ.get(
     "DDBRS_DML_PROBE_SKIP_MAX_BYTES", 32 * 1024 * 1024))
 
@@ -1914,7 +1916,7 @@ class Engine:
         if not cand:
             return full.limit(0)
         return self._read_file_subset(
-            name, {e["path"] for e in cand}).select(*kcols)
+            name, {e["path"] for e in cand}, entries.schema).select(*kcols)
 
     def _check_unique_indexes(self, name: str, new_df: DataFrame) -> None:
         """Raise if appending ``new_df`` to table ``name`` would violate a
@@ -4020,8 +4022,15 @@ class Engine:
             path = self._table_paths.get(tbl.lower())
             if path is not None:
                 cache = _FTS_SCORES_BY_PATH.setdefault(self.spark, {})
-                ckey = (path, info["id"], tuple(terms), tuple(fields),
-                        k1, bb, conj)
+                # the file's identity too: a rewritten file at the same
+                # path must get a fresh view, not the old file's scores
+                try:
+                    st = os.stat(path)
+                    ident = (st.st_mtime_ns, st.st_size)
+                except OSError:
+                    ident = None
+                ckey = (path, ident, info["id"], tuple(terms),
+                        tuple(fields), k1, bb, conj)
             else:
                 cache = getattr(self, "_fts_view_cache", None)
                 if cache is None:
@@ -4832,22 +4841,25 @@ class Engine:
 
     def _file_level_targets(
         self, name: str, pred: str, dialect: str
-    ) -> tuple[set[str], list[dict]] | None:
-        """Which data files of versioned table ``name`` contain pred-TRUE
-        rows — so DML rewrites only those and carries the rest by
-        reference (the table-format file-skipping idea,
+    ) -> tuple[set[str], list[dict], str | None] | None:
+        """Which data files of versioned table ``name`` may contain
+        pred-TRUE rows — so DML rewrites only those and carries the rest
+        by reference (the table-format file-skipping idea,
         /root/reference/metadata:1-17, re-expressed over the snapshot log).
 
-        Two steps, both cheap relative to a table rewrite:
         1. manifest min/max stats cut (pure metadata, no Spark job);
-        2. exact probe over the surviving candidates:
+        2. when the candidates total more than
+           ``_DML_PROBE_SKIP_MAX_BYTES``, an exact probe over them:
            ``SELECT DISTINCT input_file_name() WHERE pred`` — a
            column-pruned, predicate-pushdown scan (what Delta's DELETE
-           does to find touched files).
+           does to find touched files). Below the gate the candidates
+           ARE the hit set: rewriting a candidate without pred-TRUE rows
+           keeps every row (DELETE keeps ``IS NOT TRUE``, UPDATE's CASE
+           falls through) and its CDC emits nothing.
 
-        Returns ``(hit_rel_paths, carried_entries)``; None when the
-        snapshot is single-file or every file is hit (plain full rewrite
-        is then strictly better — no manifest to carry)."""
+        Returns ``(hit_rel_paths, carried_entries, physical_schema)``;
+        None when the snapshot is single-file or every file is hit (plain
+        full rewrite is then strictly better — no manifest to carry)."""
         import os
 
         table_dir = self._versioned[name]
@@ -4858,31 +4870,20 @@ class Engine:
         if len(entries) <= 1:
             return None
         cand = snapshots.prune_by_stats(entries, pred)
-        if len(cand) == len(entries):
-            # The stats cut excluded nothing, so the exact probe would
-            # scan the ENTIRE table to maybe exclude a few files. When
-            # the whole snapshot is smaller than one write task's worth
-            # of data, a plain full rewrite is strictly cheaper than
-            # paying a discovery job first (r13, guide §1.2/§6). The
-            # gate is BYTES-based so it follows data size, never core
-            # count; at scale the probe always runs (its saving there is
-            # an O(table) rewrite). Stats-prunable predicates keep the
-            # probe regardless — carried files are already guaranteed.
-            try:
-                total = sum(
-                    os.path.getsize(os.path.join(table_dir, e["path"]))
-                    for e in entries)
-            except OSError:
-                total = None
-            if total is not None and total <= _DML_PROBE_SKIP_MAX_BYTES:
-                return None
-        hit_rel: set[str] = set()
-        if cand:
+        try:
+            cand_bytes = sum(
+                os.path.getsize(os.path.join(table_dir, e["path"]))
+                for e in cand)
+        except OSError:
+            cand_bytes = None
+        if cand_bytes is not None and cand_bytes <= _DML_PROBE_SKIP_MAX_BYTES:
+            hit_rel = {e["path"] for e in cand}
+        else:
             from pyspark.sql import functions as F
 
-            paths = [os.path.join(table_dir, e["path"]) for e in cand]
-            probe = (self.spark.read.option("mergeSchema", "true")
-                     .parquet(*paths))
+            probe = snapshots.read_files(
+                self.spark, [os.path.join(table_dir, e["path"]) for e in cand],
+                entries.schema)
             # Apply the ALTER ledger first: a pre-rename candidate file
             # carries the OLD column name, and probing the new name as
             # NULL would miss every pred-TRUE row in it — turning the
@@ -4890,9 +4891,9 @@ class Engine:
             probe = snapshots.apply_schema_patches(probe, table_dir)
             # Align to the CURRENT table schema: the stats cut may leave
             # only pre-evolution files that lack a column the predicate
-            # references; mergeSchema can't invent it, so add it as NULL
-            # (matching _read_file_subset) or the probe would raise where
-            # the full-rewrite path succeeds.
+            # references; the file read can't invent it, so add it as
+            # NULL (matching _read_file_subset) or the probe would raise
+            # where the full-rewrite path succeeds.
             schema = self.table(name).schema
             probe = probe.select(
                 *[F.col(f.name).cast(f.dataType) if f.name in probe.columns
@@ -4915,12 +4916,14 @@ class Engine:
         if len(hit_rel) >= len(entries):
             return None
         carried = [e for e in entries if e["path"] not in hit_rel]
-        return hit_rel, carried
+        return hit_rel, carried, entries.schema
 
-    def _read_file_subset(self, name: str, rel_paths: set[str]) -> DataFrame:
+    def _read_file_subset(self, name: str, rel_paths: set[str],
+                          phys_schema: str | None) -> DataFrame:
         """The hit-file subset of a versioned table, aligned to the
         current table schema (carried files may pre-date appended
-        columns)."""
+        columns). ``phys_schema`` is the snapshot's recorded physical
+        schema (None → inferred from the files' footers)."""
         import os
 
         from pyspark.sql import functions as F
@@ -4929,8 +4932,9 @@ class Engine:
         if not rel_paths:
             return self.table(name).limit(0)
         table_dir = self._versioned[name]
-        df = (self.spark.read.option("mergeSchema", "true")
-              .parquet(*[os.path.join(table_dir, p) for p in sorted(rel_paths)]))
+        df = snapshots.read_files(
+            self.spark, [os.path.join(table_dir, p) for p in sorted(rel_paths)],
+            phys_schema)
         # Apply the ALTER ledger BEFORE aligning to the table schema:
         # a hit file written before a RENAME carries the old column name,
         # and without the rename coalesce the select below would surface
@@ -4945,7 +4949,7 @@ class Engine:
     def _merge_file_targets(
         self, target: str, talias: str, source: str, salias: str,
         on: str, dialect: str,
-    ) -> tuple[set[str], list[dict]] | None:
+    ) -> tuple[set[str], list[dict], str | None] | None:
         """MERGE's touched-file discovery: target files containing at
         least one ON-matching row, found with one join that scans only
         the join-key columns (+ file name). Source rows can only match
@@ -4971,7 +4975,7 @@ class Engine:
         if len(hit_rel) >= len(entries):
             return None
         carried = [e for e in entries if e["path"] not in hit_rel]
-        return hit_rel, carried
+        return hit_rel, carried, entries.schema
 
     _REC_UNION_N = [0]
 
@@ -5515,8 +5519,8 @@ class Engine:
                 # cache the subset so the sidecar write reuses the blocks
                 # the kept-write materialized instead of re-scanning
                 # parquet: ONE scan per DELETE (r13, guide §2.4/§6).
-                hit_rel, carried = targets
-                sub = self._read_file_subset(name, hit_rel).cache()
+                hit_rel, carried, phys = targets
+                sub = self._read_file_subset(name, hit_rel, phys).cache()
                 try:
                     sub.createOrReplaceTempView(name)
                     kept = self.sql(
@@ -5613,8 +5617,8 @@ class Engine:
                 # pre/post images are THREE reads of the same files —
                 # one parquet scan materializes the cache, the sidecar
                 # reads blocks (r13, guide §2.4/§6)
-                hit_rel, carried = targets
-                sub = self._read_file_subset(name, hit_rel).cache()
+                hit_rel, carried, phys = targets
+                sub = self._read_file_subset(name, hit_rel, phys).cache()
                 try:
                     sub.createOrReplaceTempView(name)
                     updated = self.sql(
@@ -5992,8 +5996,8 @@ class Engine:
             fl = self._merge_file_targets(target, talias, source, salias, on,
                                           dialect)
         if fl is not None:
-            hit_rel, carried = fl
-            sub = self._read_file_subset(target, hit_rel)
+            hit_rel, carried, phys = fl
+            sub = self._read_file_subset(target, hit_rel, phys)
             try:
                 sub.createOrReplaceTempView(target)
                 result = self.sql(full_sql, dialect=dialect)

@@ -43,6 +43,7 @@ import uuid
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 _LOG_DIR = "_log"
 _DATA_DIR = "data"
@@ -75,6 +76,11 @@ class Commit:
     # table content is unchanged, so table_changes emits nothing for them
     # (the Delta ``dataChange=false`` flag).
     data_change: bool = True
+    # the snapshot's PHYSICAL schema (its data files' columns, before the
+    # ALTER ledger) as Spark JSON with every field nullable — what a
+    # mergeSchema footer scan would infer, recorded so reads skip that
+    # Spark job. None → unknown (older logs, or the files disagree).
+    schema: str | None = None
 
 
 def _log_path(table_dir: str, version: int) -> str:
@@ -100,8 +106,55 @@ def read_log(table_dir: str) -> list[Commit]:
                               d.get("stream_batch_id"),
                               d.get("stream_app_id"),
                               d.get("cdc"),
-                              d.get("data_change", True)))
+                              d.get("data_change", True),
+                              d.get("schema")))
     return commits
+
+
+class Manifest(list):
+    """A snapshot's file entries (a plain list) plus its physical schema
+    (``Commit.schema`` of the snapshot's version), from one log replay."""
+
+    schema: str | None = None
+
+
+def _physical_schema(schema: StructType) -> str:
+    """``schema`` as stored in the log: Spark JSON with every field,
+    array element and map value nullable, as Spark reads parquet back."""
+    def nullable(t):
+        if not isinstance(t, dict):
+            return t
+        t = dict(t)
+        if t["type"] == "struct":
+            t["fields"] = [dict(f, nullable=True, type=nullable(f["type"]))
+                           for f in t["fields"]]
+        elif t["type"] == "array":
+            t.update(elementType=nullable(t["elementType"]),
+                     containsNull=True)
+        elif t["type"] == "map":
+            t.update(keyType=nullable(t["keyType"]),
+                     valueType=nullable(t["valueType"]),
+                     valueContainsNull=True)
+        return t
+
+    return json.dumps(nullable(json.loads(schema.json())))
+
+
+def _columns(schema: str) -> list[tuple]:
+    """The ordered (name, type) list of a stored schema."""
+    return [(f["name"], f["type"]) for f in json.loads(schema)["fields"]]
+
+
+def read_files(spark: SparkSession, paths: list[str],
+               schema: str | None) -> DataFrame:
+    """Read snapshot data files/dirs. With the log's recorded physical
+    schema Spark reads no footers up front; without one it falls back to
+    a ``mergeSchema`` footer scan (one Spark job), which also reconciles
+    files that disagree (additive appends, post-RENAME generations)."""
+    if schema is None:
+        return spark.read.option("mergeSchema", "true").parquet(*paths)
+    return (spark.read.schema(StructType.fromJson(json.loads(schema)))
+            .parquet(*paths))
 
 
 def _json_stat(v):
@@ -195,24 +248,26 @@ def _dir_file_entries(table_dir: str, rel_dir: str) -> list[dict]:
 
 def snapshot_file_entries(
     table_dir: str, version: int | None = None
-) -> list[dict]:
+) -> Manifest:
     """The file-level manifest of a snapshot: replayed from the log when
     commits carry file lists, expanded from dirs (footer reads) otherwise.
-    Paths are relative to ``table_dir``."""
+    Paths are relative to ``table_dir``; ``.schema`` is the snapshot's
+    physical schema (None if unknown)."""
     commits = read_log(table_dir)
     if not commits:
         raise FileNotFoundError(f"no versioned table at {table_dir!r}")
     if version is None:
         version = commits[-1].version
     chain = [c for c in commits if c.version <= version]
-    entries: list[dict] = []
+    entries = Manifest()
     for c in chain:
         batch = (list(c.files) if c.files is not None
                  else [e for d in c.dirs for e in _dir_file_entries(table_dir, d)])
         if c.mode == "overwrite":
-            entries = batch
+            entries[:] = batch
         else:
             entries.extend(batch)
+    entries.schema = chain[-1].schema if chain else None
     return entries
 
 
@@ -288,6 +343,14 @@ def write_table(
     files = None
     if carry_files is not None:
         files = tuple(list(carry_files) + new_entries)
+    # the new snapshot's physical schema: df's own when df is all of it;
+    # when it joins earlier files, the previous snapshot's — only if df
+    # matches it column for column, else the files disagree (unknown)
+    schema = _physical_schema(df.schema)
+    if (mode == "append" or carry_files) and commits:
+        prev = commits[-1].schema
+        schema = (prev if prev is not None
+                  and _columns(prev) == _columns(schema) else None)
     entry = Commit(
         version=version,
         timestamp_ms=int(time.time() * 1000) if timestamp_ms is None else timestamp_ms,
@@ -298,6 +361,7 @@ def write_table(
         stream_app_id=stream_app_id,
         cdc=cdc_rel,
         data_change=data_change,
+        schema=schema,
     )
     # O_EXCL: exactly one writer can create this version file.
     with open(_log_path(table_dir, version), "x") as f:
@@ -307,7 +371,8 @@ def write_table(
                    "stream_batch_id": entry.stream_batch_id,
                    "stream_app_id": entry.stream_app_id,
                    "cdc": entry.cdc,
-                   "data_change": entry.data_change},
+                   "data_change": entry.data_change,
+                   "schema": entry.schema},
                   f)
     # Mirror into the Delta-protocol-shaped public log (interop surface;
     # best-effort — the private commit above is the source of truth).
@@ -548,11 +613,12 @@ def restore(
         mode="overwrite",
         dirs=(),
         files=tuple(entries),
+        schema=entries.schema,
     )
     with open(_log_path(table_dir, version), "x") as f:
         json.dump({"version": entry.version, "timestamp_ms": entry.timestamp_ms,
                    "mode": entry.mode, "dirs": [],
-                   "files": list(entry.files)}, f)
+                   "files": list(entry.files), "schema": entry.schema}, f)
     from . import deltalog
 
     try:
@@ -605,11 +671,14 @@ def clone(
     commits = read_log(src_dir)
     patches: list[dict] = []
     cons: list[dict] = []
+    schema = None  # foreign sources: inferred on read
     if commits:
         resolved, _ = resolve_snapshot(src_dir, version, as_of_ms)
+        src_entries = snapshot_file_entries(src_dir, resolved)
+        schema = src_entries.schema
         entries = [
             dict(e, path=os.path.abspath(os.path.join(src_dir, e["path"])))
-            for e in snapshot_file_entries(src_dir, resolved)
+            for e in src_entries
         ]
         # schema-evolution ledger: ops issued at-or-before the cloned
         # version apply to the fork from its first version on
@@ -672,11 +741,12 @@ def clone(
         mode="overwrite",
         dirs=(),
         files=tuple(entries),
+        schema=schema,
     )
     with open(_log_path(dst_dir, 1), "x") as f:
         json.dump({"version": 1, "timestamp_ms": entry.timestamp_ms,
                    "mode": "overwrite", "dirs": [],
-                   "files": list(entry.files)}, f)
+                   "files": list(entry.files), "schema": entry.schema}, f)
     if patches:
         path = os.path.join(dst_dir, _LOG_DIR, _SCHEMA_PATCH_FILE)
         tmp = path + ".tmp"
@@ -712,6 +782,15 @@ def resolve_snapshot(
     ``version=None, as_of_ms=None`` → latest. ``as_of_ms`` picks the last
     commit at-or-before the timestamp (time travel by wall clock).
     """
+    resolved, paths, _ = _resolve(table_dir, version, as_of_ms)
+    return resolved, paths
+
+
+def _resolve(
+    table_dir: str, version: int | None, as_of_ms: int | None,
+) -> tuple[int, list[str], str | None]:
+    """``resolve_snapshot`` plus the snapshot's physical schema, from the
+    same log replay."""
     commits = read_log(table_dir)
     if not commits:
         raise FileNotFoundError(f"no versioned table at {table_dir!r}")
@@ -738,7 +817,8 @@ def resolve_snapshot(
             paths = batch
         else:
             paths.extend(batch)
-    return version, [os.path.join(table_dir, p) for p in paths]
+    return (version, [os.path.join(table_dir, p) for p in paths],
+            chosen[-1].schema)
 
 
 def read_table(
@@ -747,13 +827,14 @@ def read_table(
     version: int | None = None,
     as_of_ms: int | None = None,
 ) -> DataFrame:
-    """Read a snapshot as a DataFrame (schema merged across its data dirs,
-    so appends may evolve the schema additively). A directory with only a
-    FOREIGN table-format log (Delta ``_delta_log``, or Iceberg
+    """Read a snapshot as a DataFrame with the physical schema its log
+    entry records — or, when that is unknown, the schema merged across
+    its data dirs, so appends may evolve it additively. A directory with
+    only a FOREIGN table-format log (Delta ``_delta_log``, or Iceberg
     ``metadata/*.metadata.json`` — e.g. written by another engine) is read
     by replaying that format's log instead."""
     try:
-        resolved, dirs = resolve_snapshot(table_dir, version, as_of_ms)
+        resolved, dirs, schema = _resolve(table_dir, version, as_of_ms)
     except FileNotFoundError:
         from . import deltalog, hudilog, iceberglog
 
@@ -767,7 +848,7 @@ def read_table(
         if as_of_ms is not None:
             raise
         return deltalog.read_delta_table(spark, table_dir, version)
-    df = spark.read.option("mergeSchema", "true").parquet(*dirs)
+    df = read_files(spark, dirs, schema)
     # ALTER TABLE ledger (metadata-only schema evolution), filtered to
     # ops issued at or before the snapshot being read
     return apply_schema_patches(df, table_dir, version=resolved)
@@ -940,9 +1021,9 @@ def compact(
     carried = [e for e in entries if sizes[e["path"]] >= small_file_bytes]
     small_bytes = sum(sizes[e["path"]] for e in small)
     n_out = max(1, -(-small_bytes // target_file_bytes))  # ceil
-    df = spark.read.option("mergeSchema", "true").parquet(
-        *[os.path.join(table_dir, e["path"]) for e in small]
-    ).coalesce(n_out)
+    df = read_files(
+        spark, [os.path.join(table_dir, e["path"]) for e in small],
+        entries.schema).coalesce(n_out)
     entry = write_table(df, table_dir, mode="overwrite", carry_files=carried,
                         data_change=False)
     return {"rewritten_files": len(small), "carried_files": len(carried),

@@ -18,6 +18,11 @@ from duckdb_read_spark.queries import QUERIES
 
 from .golden import SF_DIR  # same fixture dir the rest of the oracle uses
 
+# the session ``engine`` fixture registers the fixture tables as views:
+# lifecycle runners (the CLONE and CDF ones) read ``customer`` by name,
+# so every test here must also pass when run alone
+pytestmark = pytest.mark.usefixtures("engine")
+
 
 def _oracle_pdf(duck, sql):
     return duck.execute(sql).fetchdf()

@@ -1817,6 +1817,33 @@ def test_match_bm25_conjunctive_spelling_and_view_reuse(spark, tmp_path):
     assert n_fts_views() == before      # reused, not leaked
 
 
+def test_match_bm25_memo_sees_rewritten_file(spark, tmp_path):
+    """The session-level scores memo is keyed by the backing path's
+    identity: overwriting the registered parquet dataset between two
+    Engines must give the new files' scores, not a memoized view whose
+    plan lists the old (deleted) files."""
+    from duckdb_read_spark import Engine
+
+    path = str(tmp_path / "fdocs")
+    q = ("SELECT doc_id, fts_main_fdocs.match_bm25(doc_id, 'alpha') AS s "
+         "FROM fdocs ORDER BY doc_id")
+
+    def scores(bodies, wh):
+        spark.createDataFrame(list(enumerate(bodies, 1)),
+                              "doc_id long, body string") \
+            .coalesce(1).write.mode("overwrite").parquet(path)
+        eng = Engine(spark=spark, warehouse_dir=str(tmp_path / wh))
+        eng.register_parquet("fdocs", path)
+        eng.sql("PRAGMA create_fts_index('fdocs', 'doc_id', 'body')")
+        return {r.doc_id: r.s for r in eng.sql(q, dialect="duckdb").collect()}
+
+    first = scores(["alpha beta", "gamma"], "wh1")
+    assert first[1] is not None and first[2] is None
+    second = scores(["gamma delta", "alpha alpha", "alpha"], "wh2")
+    assert second[1] is None
+    assert second[2] is not None and second[3] is not None
+
+
 def test_table_format_scan_tvfs(spark, tmp_path):
     """SQL-reachable foreign-format scans without registration:
     delta_scan/iceberg_scan (DuckDB extension shapes) + read_delta/

@@ -5,9 +5,10 @@ stats recorded in the log (the Iceberg-manifest idea over snapshots.py,
 /root/reference/metadata:1-17).
 
 Discovery is two-tier: a pure-metadata stats cut (prune_by_stats — no
-Spark job), then one exact column-pruned ``input_file_name()`` probe —
-so a one-row UPDATE on a 100 TB table costs one file rewrite plus a
-pushdown scan of the predicate column, not an O(table) rewrite.
+Spark job), then, when the candidates exceed a byte gate, one exact
+column-pruned ``input_file_name()`` probe — so a one-row UPDATE on a
+100 TB table costs one file rewrite plus a pushdown scan of the
+predicate column, not an O(table) rewrite.
 """
 
 from __future__ import annotations
@@ -389,3 +390,82 @@ def test_partial_update_after_rename_preserves_data(eng, spark, tmp_path):
     # no NULLed-out keys anywhere
     assert eng.sql("SELECT count(*) AS n FROM ren10 WHERE k IS NULL") \
         .first()["n"] == 0
+
+
+# --- probe byte gate -------------------------------------------------------
+
+def _probe_jobs(spark, eng, stmt):
+    """Run ``stmt`` in its own Spark job group and return how many of its
+    jobs are the exact file probe (the only ``collect`` an UPDATE/DELETE
+    runs). Counts jobs of the calling thread; the CDC sidecar's write
+    runs on its own thread and is not in the group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"dml-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, stmt)
+    try:
+        eng.sql(stmt)
+    finally:
+        for prop in ("spark.jobGroup.id", "spark.job.description"):
+            sc.setLocalProperty(prop, None)
+    st = sc.statusTracker()
+    n = 0
+    for j in st.getJobIdsForGroup(group):
+        info = st.getJobInfo(j)
+        stages = [st.getStageInfo(s) for s in (info.stageIds if info else [])]
+        if any(s is not None and s.name.startswith("collect at")
+               for s in stages):
+            n += 1
+    return n
+
+
+# k BETWEEN 95 AND 105 keeps two candidate files (k 0-99, k 100-199);
+# the residual conjunct is opaque to the stats cut and only k 95-99 match
+_TWO_CAND = "k BETWEEN 95 AND 105 AND k % 100 > 90"
+
+
+@pytest.mark.parametrize("stmt", [
+    f"DELETE FROM t20 WHERE {_TWO_CAND}",
+    f"UPDATE t20 SET v = -1 WHERE {_TWO_CAND}",
+])
+def test_gate_takes_candidates_without_probe(eng, spark, t20, stmt):
+    entries = snapshots.snapshot_file_entries(t20)
+    cand = {e["path"] for e in snapshots.prune_by_stats(entries, _TWO_CAND)}
+    assert len(cand) == 2
+    before = _paths(t20)
+    assert _probe_jobs(spark, eng, stmt) == 0
+    # every candidate rewritten, exactly the non-candidates carried
+    assert before & _paths(t20) == before - cand
+    got = {r.k: r.v for r in eng.sql(
+        "SELECT k, v FROM t20 WHERE k BETWEEN 90 AND 110").collect()}
+    if stmt.startswith("DELETE"):
+        want = {k: 2 * k for k in range(90, 111) if not 95 <= k <= 99}
+    else:
+        want = {k: -1 if 95 <= k <= 99 else 2 * k for k in range(90, 111)}
+    assert got == want
+    assert eng.sql("SELECT count(*) AS n FROM t20").first()["n"] == (
+        1995 if stmt.startswith("DELETE") else 2000)
+
+
+def test_gate_zero_probes_and_carries_hit_free_candidate(
+        eng, spark, t20, monkeypatch):
+    from duckdb_read_spark import engine as engine_mod
+
+    monkeypatch.setattr(engine_mod, "_DML_PROBE_SKIP_MAX_BYTES", 0)
+    before = _paths(t20)
+    assert _probe_jobs(spark, eng, f"DELETE FROM t20 WHERE {_TWO_CAND}") >= 1
+    # the k 100-199 candidate has no pred-TRUE row: the probe keeps it
+    assert len(before & _paths(t20)) == 19
+    assert eng.sql("SELECT count(*) AS n FROM t20").first()["n"] == 1995
+
+
+def test_gate_all_candidates_is_full_rewrite(eng, spark, t20):
+    before = _paths(t20)
+    # opaque to the stats cut: every file is a candidate, all under the gate
+    assert _probe_jobs(spark, eng, "UPDATE t20 SET v = 0 WHERE k % 7 = 0") == 0
+    last = snapshots.read_log(t20)[-1]
+    assert last.files is None              # a plain full overwrite
+    assert not before & _paths(t20)
+    assert eng.sql("SELECT count(*) AS n FROM t20 WHERE v = 0") \
+        .first()["n"] == len(range(0, 2000, 7))

@@ -263,3 +263,91 @@ def test_vacuum_preserves_stream_watermarks(spark, tmp_path):
     assert commit_stream_batch(df, 1, td, "appA") is False
     assert commit_stream_batch(df, 2, td, "appA") is True
     assert commit_stream_batch(df, 0, td, "appB") is True
+
+
+# --- physical schema recorded in the log -----------------------------------
+
+def _merge_read(spark, table_dir, version):
+    """The pre-recorded-schema read path: footer-merged schema."""
+    from duckdb_read_spark import snapshots
+
+    v, paths = snapshots.resolve_snapshot(table_dir, version=version)
+    df = spark.read.option("mergeSchema", "true").parquet(*paths)
+    return snapshots.apply_schema_patches(df, table_dir, version=v)
+
+
+def _assert_reads_equal(spark, table_dir):
+    from duckdb_read_spark import snapshots
+
+    for c in snapshots.read_log(table_dir):
+        known = read_table(spark, table_dir, version=c.version)
+        merged = _merge_read(spark, table_dir, c.version)
+        assert known.schema == merged.schema, c.version   # order + types
+        assert sorted(map(tuple, known.collect())) == \
+            sorted(map(tuple, merged.collect())), c.version
+
+
+def test_recorded_schema_reads_match_merge_schema(spark, tmp_path):
+    import json
+    import shutil
+
+    from duckdb_read_spark import snapshots
+    from duckdb_read_spark.engine import Engine
+
+    eng = Engine(spark=spark, warehouse_dir=str(tmp_path / "wh"))
+    eng.sql("CREATE TABLE ps AS SELECT id AS k, CAST(id * 1.5 AS DECIMAL(10,2))"
+            " AS d, CAST(id AS STRING) AS s, ARRAY(id, NULL) AS a "
+            "FROM range(0, 400) DISTRIBUTE BY k % 4", dialect="spark")
+    eng.sql("INSERT INTO ps SELECT id, 1.25, 'x', ARRAY(id) "
+            "FROM range(400, 450)", dialect="spark")
+    eng.sql("UPDATE ps SET s = 'u' WHERE k BETWEEN 10 AND 20")
+    eng.sql("DELETE FROM ps WHERE k = 420")
+    eng.sql("MERGE INTO ps USING (SELECT 5 AS k2) src ON ps.k = src.k2 "
+            "WHEN MATCHED THEN UPDATE SET s = 'm'")
+    eng.sql("OPTIMIZE ps")
+    td = eng._versioned["ps"]
+    log = snapshots.read_log(td)
+    assert all(c.schema is not None for c in log)        # all known so far
+    known_v = log[-1].version
+    eng.sql("ALTER TABLE ps ADD COLUMN extra INTEGER")
+    eng.sql("INSERT INTO ps VALUES (1000, 1.0, 'y', ARRAY(1), 7)")
+    eng.sql("ALTER TABLE ps RENAME COLUMN s TO s2")
+    eng.sql("UPDATE ps SET s2 = 'r' WHERE k = 1000")
+    assert snapshots.read_log(td)[-1].schema is None     # files disagree
+    eng.sql(f"RESTORE TABLE ps TO VERSION AS OF {known_v}")
+    restored = snapshots.read_log(td)[-1]
+    assert restored.schema == snapshots.read_log(td)[known_v - 1].schema
+    eng.sql(f"CREATE TABLE psc CLONE ps VERSION AS OF {known_v}")
+    cd = eng._versioned["psc"]
+    assert snapshots.read_log(cd)[0].schema == restored.schema
+    _assert_reads_equal(spark, td)
+    _assert_reads_equal(spark, cd)
+
+    # an append that adds a column records no schema (mergeSchema reads)
+    ev = str(tmp_path / "evolve")
+    write_table(spark.range(3), ev)
+    write_table(spark.range(3, 5).selectExpr("id", "id * 2 AS y"), ev,
+                mode="append")
+    assert snapshots.read_log(ev)[-1].schema is None
+    assert read_table(spark, ev).columns == ["id", "y"]
+    _assert_reads_equal(spark, ev)
+
+    # a log written without the schema key reads exactly as before
+    old = str(tmp_path / "old_log")
+    shutil.copytree(td, old)
+    log_dir = os.path.join(old, "_log")
+    for f in os.listdir(log_dir):
+        if f[:8].isdigit():
+            p = os.path.join(log_dir, f)
+            with open(p) as fh:
+                entry = json.load(fh)
+            entry.pop("schema", None)
+            with open(p, "w") as fh:
+                json.dump(entry, fh)
+    assert all(c.schema is None for c in snapshots.read_log(old))
+    for c in snapshots.read_log(td):
+        a = read_table(spark, td, version=c.version)
+        b = read_table(spark, old, version=c.version)
+        assert a.schema == b.schema
+        assert sorted(map(tuple, a.collect())) == \
+            sorted(map(tuple, b.collect()))
