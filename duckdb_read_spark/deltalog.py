@@ -370,16 +370,16 @@ def _load_dv_bytes(table_dir: str, dv: dict) -> bytes:
 
 
 
-# Deletion vectors whose TOTAL declared cardinality is at or below this
-# expand on the driver into a literal (path, pos) relation — the anti-
-# join side then plans as a LocalTableScan with no Python worker stage
-# (r13, guide §4: the mapInPandas hop cost ~0.3-0.5 s per read even for
-# a 4-position DV). 128k longs ≈ 2 MB — metadata-sized, and far under
-# any broadcast threshold. Larger (or cardinality-less) descriptors
-# keep the executor-side expansion so millions of deleted rows never
-# materialize on the driver.
-_DV_DRIVER_EXPAND_MAX = int(os.environ.get(
-    "DDBRS_DV_DRIVER_EXPAND_MAX", 128 * 1024))
+# Deletion vectors whose TOTAL cardinality is at or below this expand on
+# the driver into a literal (path, pos) relation — the anti-join side
+# then plans as a LocalTableScan with no Python worker stage (r13, guide
+# §4: the mapInPandas hop cost ~0.3-0.5 s per read even for a 4-position
+# DV). 128k longs ≈ 2 MB — metadata-sized, and far under any broadcast
+# threshold. The count is the bitmaps' own, taken without expanding
+# them; larger vectors, and descriptors whose declared cardinality
+# disagrees with their bitmap, keep the executor-side expansion so
+# millions of deleted rows never materialize on the driver.
+_DV_DRIVER_EXPAND_MAX = 128 * 1024
 
 
 def _dv_rows_df(spark, table_dir: str, dvs: dict[str, dict]):
@@ -388,21 +388,25 @@ def _dv_rows_df(spark, table_dir: str, dvs: dict[str, dict]):
     The driver touches only the COMPRESSED bitmaps (metadata-sized, one
     per file — the same class as the log actions themselves); expansion
     to row indexes happens executor-side in mapInPandas — UNLESS the
-    descriptors' declared total cardinality is small enough to expand
-    on the driver (``_DV_DRIVER_EXPAND_MAX``), which skips the Python
-    worker stage entirely. A table with millions of deleted rows never
-    materializes them on the driver either way."""
+    bitmaps' total cardinality is small enough to expand on the driver
+    (``_DV_DRIVER_EXPAND_MAX``) and matches every descriptor's declared
+    one, which skips the Python worker stage entirely. A table with
+    millions of deleted rows never materializes them on the driver
+    either way."""
     import pandas as pd
 
+    from . import roaring
+
+    items = sorted(dvs.items())
     rows = [
         (os.path.abspath(os.path.join(table_dir, rel)),
          bytearray(_load_dv_bytes(table_dir, dv)))
-        for rel, dv in sorted(dvs.items())
+        for rel, dv in items
     ]
-    cards = [dv.get("cardinality") for dv in dvs.values()]
-    if all(c is not None for c in cards) and sum(cards) <= _DV_DRIVER_EXPAND_MAX:
-        from . import roaring
-
+    cards = [roaring.bitmap_array_cardinality(bytes(data))
+             for _, data in rows]
+    if (sum(cards) <= _DV_DRIVER_EXPAND_MAX
+            and cards == [dv.get("cardinality") for _, dv in items]):
         flat = [(path, idx) for path, data in rows
                 for idx in roaring.deserialize_bitmap_array(bytes(data))]
         return spark.createDataFrame(flat, "path string, pos bigint")

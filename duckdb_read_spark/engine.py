@@ -24,7 +24,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 
 from .conf import BUILD_CONFS, RUNTIME_CONFS, TABLES, apply_runtime_confs
-from . import catalog, hudilog, iceberglog, snapshots
+from . import catalog, hudilog, iceberglog, snapshots, sqltext
 from .dialect import substitute_select_alias, to_spark_sql
 from .sources import sinks
 
@@ -46,10 +46,8 @@ _FTS_VIEW_SEQ = itertools.count(1)
 # total at most this many bytes, rewriting them all is cheaper than the
 # probe job, so they are taken as the hit set unprobed (a full rewrite
 # when they are every file). Bytes, not file/row/core counts, so the gate
-# scales with data; override for clusters whose write tasks are sized
-# differently.
-_DML_PROBE_SKIP_MAX_BYTES = int(os.environ.get(
-    "DDBRS_DML_PROBE_SKIP_MAX_BYTES", 32 * 1024 * 1024))
+# scales with data.
+_DML_PROBE_SKIP_MAX_BYTES = 32 * 1024 * 1024
 
 # INSTALL/FORCE INSTALL/LOAD statement shapes (LoadInfo.load_type analog,
 # /root/reference/duckdb:30-33).
@@ -412,6 +410,9 @@ _EXECUTE_RE = re.compile(
     r"^\s*EXECUTE\s+(?P<name>[A-Za-z_]\w*)\s*(?:\((?P<args>.*)\))?\s*;?\s*$",
     re.IGNORECASE | re.DOTALL,
 )
+# DuckDB's name-matching set operation (Spark SQL has no spelling of it).
+_UNION_BY_NAME_RE = re.compile(
+    r"\bUNION\s+(?P<all>ALL\s+)?BY\s+NAME\b", re.IGNORECASE)
 _DEALLOCATE_RE = re.compile(
     r"^\s*DEALLOCATE\s+(?:PREPARE\s+)?(?P<name>[A-Za-z_]\w*)\s*;?\s*$",
     re.IGNORECASE,
@@ -1075,17 +1076,9 @@ class Engine:
         body = self._prepared.get(name)
         if body is None:
             raise ValueError(f"EXECUTE: unknown prepared statement {name!r}")
-        vals = ([a.strip() for a in _split_top_commas(args)]
-                if args and args.strip() else [])
-
-        spans = [m.span() for m in re.finditer(r"'(?:[^']|'')*'|--[^\n]*", body)]
-
-        def outside(pos: int) -> bool:
-            return not any(a <= pos < b for a, b in spans)
+        vals = sqltext.split_top_commas(args or "")
 
         def dollar(m: re.Match) -> str:
-            if not outside(m.start()):
-                return m.group(0)
             i = int(m.group(1))
             if not 1 <= i <= len(vals):
                 raise ValueError(
@@ -1093,15 +1086,11 @@ class Engine:
                     f"(got {len(vals)})")
             return vals[i - 1]
 
-        out = re.sub(r"\$(\d+)", dollar, body)
+        out = sqltext.sub(r"\$(\d+)", dollar, body)
         if "?" in out:
-            spans2 = [m.span()
-                      for m in re.finditer(r"'(?:[^']|'')*'|--[^\n]*", out)]
             pos = {"i": 0}
 
             def qmark(m: re.Match) -> str:
-                if any(a <= m.start() < b for a, b in spans2):
-                    return m.group(0)
                 if pos["i"] >= len(vals):
                     raise ValueError(
                         f"EXECUTE {name}: more ? placeholders than "
@@ -1110,7 +1099,7 @@ class Engine:
                 pos["i"] += 1
                 return v
 
-            out = re.sub(r"\?", qmark, out)
+            out = sqltext.sub(r"\?", qmark, out)
         return self.sql(out, dialect=dialect)
 
     def _resolve_qualified(self, query: str) -> str:
@@ -1130,15 +1119,7 @@ class Engine:
                 view = tables.get(m.group("t"))
                 return view if view is not None else m.group(0)
 
-            spans = [m.span()
-                     for m in re.finditer(r"'(?:[^']|'')*'|--[^\n]*", out)]
-
-            def guarded(m: re.Match) -> str:
-                if any(a <= m.start() < b for a, b in spans):
-                    return m.group(0)
-                return repl(m)
-
-            out = pat.sub(guarded, out)
+            out = sqltext.sub(pat, repl, out)
         return out
 
     def table_history(self, name_or_dir: str) -> list[dict]:
@@ -1741,7 +1722,7 @@ class Engine:
         if name not in self._versioned:
             raise ValueError(f"UPDATE unknown table {name!r}")
         assignments: dict[str, str] = {}
-        for part in _split_top_commas(parts["sets"]):
+        for part in sqltext.split_top_commas(parts["sets"]):
             col, eq, expr = part.partition("=")
             if not eq:
                 raise ValueError(
@@ -2152,17 +2133,7 @@ class Engine:
         # comments — a matching pattern inside '...' or -- ... must stay
         # verbatim (ADVICE r2). The TIMESTAMP form's own quoted literal is
         # part of a match that starts outside, so it still rewrites.
-        spans = [
-            m.span()
-            for m in re.finditer(r"'(?:[^']|'')*'|--[^\n]*", query)
-        ]
-
-        def guarded(m: re.Match) -> str:
-            if any(s <= m.start() < e for s, e in spans):
-                return m.group(0)
-            return sub(m)
-
-        return pat.sub(guarded, query)
+        return sqltext.sub(pat, sub, query)
 
     def register_fixture_dir(self, sf_dir: str) -> None:
         """Register the standard fixture tables from a testdata directory."""
@@ -2411,8 +2382,8 @@ class Engine:
         fail loudly at analysis)."""
         if not re.search(r"\bCOLUMNS\s*\(", query, re.IGNORECASE):
             return query
-        sel = _find_top_level(query, "SELECT")
-        frm = _find_top_level(query, "FROM", sel + 6 if sel >= 0 else 0)
+        sel = sqltext.find_top_level(query, "SELECT")
+        frm = sqltext.find_top_level(query, "FROM", sel + 6 if sel >= 0 else 0)
         if sel < 0 or frm < 0:
             return query
         mtab = re.match(r"\s*([A-Za-z_][\w.]*)", query[frm + 4:])
@@ -2426,7 +2397,7 @@ class Engine:
         mdist = re.match(r"\s*(?:DISTINCT|ALL)\b", head, re.IGNORECASE)
         if mdist:
             body_off += mdist.end()
-        items = _split_top_commas(query[body_off:frm])
+        items = sqltext.split_top_commas(query[body_off:frm])
         call_re = re.compile(
             r"\bCOLUMNS\s*\(\s*(?:'(?P<re>[^']*)'|(?P<star>\*)"
             r"|(?P<lst>\[[^\]]*\])"
@@ -2529,15 +2500,9 @@ class Engine:
                     "is_nullable string"
         ).createOrReplaceTempView("information_schema__columns")
 
-        spans = [m.span()
-                 for m in re.finditer(r"'(?:[^']|'')*'|--[^\n]*", query)]
-
-        def sub(m: re.Match) -> str:
-            if any(a <= m.start() < b for a, b in spans):
-                return m.group(0)
-            return f"information_schema__{m.group('v').lower()}"
-
-        return _INFO_SCHEMA_RE.sub(sub, query)
+        return sqltext.sub(
+            _INFO_SCHEMA_RE,
+            lambda m: f"information_schema__{m.group('v').lower()}", query)
 
     def _rewrite_star_rename(self, query: str) -> str:
         """DuckDB ``* RENAME (col AS new, …)``: expand the star with the
@@ -2546,7 +2511,7 @@ class Engine:
         m = re.search(r"\*\s+RENAME\s*\(", query, re.IGNORECASE)
         if not m:
             return query
-        frm = _find_top_level(query, "FROM")
+        frm = sqltext.find_top_level(query, "FROM")
         if frm < 0:
             return query
         mtab = re.match(r"\s*([A-Za-z_][\w.]*)", query[frm + 4:])
@@ -2555,9 +2520,9 @@ class Engine:
         cols = self._columns_of(mtab.group(1))
         if cols is None:
             return query
-        close = _match_paren(query, m.end() - 1)
+        close = sqltext.match_paren(query, m.end() - 1)
         renames: dict[str, str] = {}
-        for part in _split_top_commas(query[m.end():close]):
+        for part in sqltext.split_top_commas(query[m.end():close]):
             mp = re.match(r"^\s*(?P<col>[A-Za-z_]\w*)\s+AS\s+"
                           r"(?P<new>[A-Za-z_]\w*)\s*$", part)
             if not mp:
@@ -2585,7 +2550,7 @@ class Engine:
             query, re.IGNORECASE)
         if not m:
             return query
-        frm = _find_top_level(query, "FROM")
+        frm = sqltext.find_top_level(query, "FROM")
         if frm < 0:
             return query
         src = "the FROM relation"
@@ -2597,7 +2562,7 @@ class Engine:
             # outright; otherwise one analysis-only pass resolves it
             # (combined EXCLUDE…REPLACE over a subquery, r12)
             sub_open = frm + 4 + lead
-            sub_close = _match_paren(query, sub_open)
+            sub_close = sqltext.match_paren(query, sub_open)
             mal = re.match(r"\s*(?:AS\s+)?[A-Za-z_]\w*\s*\(([^)]*)\)",
                            query[sub_close + 1:], re.IGNORECASE)
             if mal:
@@ -2619,9 +2584,9 @@ class Engine:
         exc = {c.strip().strip('"').lower()
                for c in (m.group("exc") or m.group("exc1") or "").split(",")
                if c.strip()}
-        close = _match_paren(query, m.end() - 1)
+        close = sqltext.match_paren(query, m.end() - 1)
         repls: dict[str, str] = {}
-        for part in _split_top_commas(query[m.end():close]):
+        for part in sqltext.split_top_commas(query[m.end():close]):
             mp = re.match(r"(?s)^\s*(?P<expr>.+?)\s+AS\s+(?P<col>[A-Za-z_]\w*)\s*$",
                           part)
             if not mp:
@@ -2896,12 +2861,7 @@ class Engine:
             return self._pragma_database_size()
         if _SEQ_FUNC_RE.search(query):
             query = self._resolve_sequence_functions(query)
-        mubn = [m for m in re.finditer(
-            r"\bUNION\s+(?:ALL\s+)?BY\s+NAME\b", query, re.IGNORECASE)
-            if not any(a <= m.start() < b for a, b in
-                       [x.span() for x in re.finditer(
-                           r"'(?:[^']|'')*'|--[^\n]*", query)])]
-        if mubn:
+        if next(sqltext.finditer(_UNION_BY_NAME_RE, query), None):
             return self._union_by_name(query, dialect)
         mti = _PRAGMA_TABLE_INFO_RE.match(query)
         if mti:
@@ -2921,7 +2881,7 @@ class Engine:
         if mmac:
             # top-level split: a `p := f(1,2)` default carries commas
             params = [p.strip()
-                      for p in _split_top_commas(mmac.group("params"))
+                      for p in sqltext.split_top_commas(mmac.group("params"))
                       if p.strip()]
             body = mmac.group("body").strip()
             # table macros (AS TABLE SELECT …) expand to a derived table;
@@ -3255,18 +3215,6 @@ class Engine:
 
         gran_fmt = {"hour": "%Y-%m-%d-%H", "day": "%Y-%m-%d", "month": "%Y-%m"}
 
-        def guarded_sub(pat: re.Pattern, repl, s: str) -> str:
-            # literal/comment spans recomputed per pass — earlier passes
-            # change offsets (the glob-span lesson, ADVICE r4)
-            spans = [m.span() for m in re.finditer(r"'(?:[^']|'')*'|--[^\n]*", s)]
-
-            def f(m: re.Match) -> str:
-                if any(a <= m.start() < b for a, b in spans):
-                    return m.group(0)
-                return repl(m)
-
-            return pat.sub(f, s)
-
         # tables actually referenced by THIS query (matched against the
         # original text — never against a prior pass's injected output)
         present = {
@@ -3348,8 +3296,10 @@ class Engine:
                 return (f"({m.group(0)} AND {m.group('pre')}{p_col} "
                         f"BETWEEN '{lo}' AND '{hi}')")
 
-            out = guarded_sub(btw_pat, bsub, out)
-            out = guarded_sub(cmp_pat, csub, out)
+            # sqltext.sub re-measures the literal spans on each pass: the
+            # first pass changes the offsets the second one sees
+            out = sqltext.sub(btw_pat, bsub, out)
+            out = sqltext.sub(cmp_pat, csub, out)
         return out
 
     # -- sequences (DuckDB CREATE SEQUENCE / nextval id-generation) -------
@@ -3498,14 +3448,7 @@ class Engine:
         monotonic counter — a serialization point by definition at
         scale — so ``nextval`` over a FROM-relation refuses with the
         window-function alternative spelled out."""
-        spans = [m.span() for m in
-                 re.finditer(r"'(?:[^']|'')*'|--[^\n]*", query)]
-
-        def in_literal(pos: int) -> bool:
-            return any(a <= pos < b for a, b in spans)
-
-        hits = [m for m in _SEQ_FUNC_RE.finditer(query)
-                if not in_literal(m.start())]
+        hits = list(sqltext.finditer(_SEQ_FUNC_RE, query))
         if not hits:
             return query
         # Relation-FROM analysis: a real scanned relation would need
@@ -3518,26 +3461,13 @@ class Engine:
         func_from = {"extract", "substring", "substr", "trim",
                      "position", "overlay"}
         rel_from: list[int] = []
-        for mf in re.finditer(r"\bFROM\b", query, re.IGNORECASE):
+        for mf in sqltext.finditer(r"\bFROM\b", query, re.IGNORECASE):
             p = mf.start()
-            if in_literal(p):
-                continue
             before = query[:p]
             if re.search(r"\bDISTINCT\s*$", before, re.IGNORECASE):
                 continue
             # innermost unmatched '(' before this FROM, and its call name
-            depth, opener = 0, None
-            for i2 in range(p - 1, -1, -1):
-                if in_literal(i2):
-                    continue
-                ch = query[i2]
-                if ch == ")":
-                    depth += 1
-                elif ch == "(":
-                    if depth == 0:
-                        opener = i2
-                        break
-                    depth -= 1
+            opener = sqltext.enclosing_bracket(query, p)
             if opener is not None:
                 mname = re.search(r"([A-Za-z_]\w*)\s*$", query[:opener])
                 if mname and mname.group(1).lower() in func_from:
@@ -3603,28 +3533,7 @@ class Engine:
                 "SELECT statements — a textual split inside "
                 "CREATE VIEW/WITH would silently change semantics "
                 "(first-leg-only view, lost CTE scope)")
-        spans = [m.span() for m in
-                 re.finditer(r"'(?:[^']|'')*'|--[^\n]*", query)]
-        depth, cuts = 0, []
-        i2 = 0
-        pat = re.compile(r"\bUNION\s+(?P<all>ALL\s+)?BY\s+NAME\b",
-                         re.IGNORECASE)
-        while i2 < len(query):
-            ch = query[i2]
-            if any(a <= i2 < b for a, b in spans):
-                i2 += 1
-                continue
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-            elif depth == 0:
-                m = pat.match(query, i2)
-                if m:
-                    cuts.append((i2, m.end(), bool(m.group("all"))))
-                    i2 = m.end()
-                    continue
-            i2 += 1
+        cuts = list(sqltext.top_level_finditer(query, _UNION_BY_NAME_RE))
         if not cuts:
             # BY NAME below top level (r9): materialize the innermost
             # enclosing parenthesized span as its own BY-NAME union (a
@@ -3632,43 +3541,14 @@ class Engine:
             # re-run. An outer-CTE reference inside the span fails
             # loudly at the inner run (unknown view) — same class as
             # the WITH refusal above, never a silent change.
-            m2 = None
-            for m3 in pat.finditer(query):
-                if not any(a <= m3.start() < b for a, b in spans):
-                    m2 = m3
-                    break
-            if m2 is None:
+            m2 = next(sqltext.finditer(_UNION_BY_NAME_RE, query), None)
+            open_i = (None if m2 is None
+                      else sqltext.enclosing_bracket(query, m2.start()))
+            if open_i is None:
                 raise NotImplementedError(
                     "UNION BY NAME inside a subquery is not supported — "
                     "hoist it to the top level or align the column lists")
-            stack: list[int] = []
-            open_i = None
-            for j in range(m2.start()):
-                if any(a <= j < b for a, b in spans):
-                    continue
-                if query[j] == "(":
-                    stack.append(j)
-                elif query[j] == ")":
-                    stack.pop()
-            if not stack:
-                raise NotImplementedError(
-                    "UNION BY NAME inside a subquery is not supported — "
-                    "hoist it to the top level or align the column lists")
-            open_i = stack[-1]
-            d3 = 0
-            close_i = None
-            for j in range(open_i, len(query)):
-                if any(a <= j < b for a, b in spans):
-                    continue
-                if query[j] == "(":
-                    d3 += 1
-                elif query[j] == ")":
-                    d3 -= 1
-                    if d3 == 0:
-                        close_i = j
-                        break
-            if close_i is None:
-                raise ValueError("UNION BY NAME: unbalanced parentheses")
+            close_i = sqltext.match_paren(query, open_i)
             inner_df = self._union_by_name(
                 query[open_i + 1:close_i], dialect)
             import uuid as _uuid
@@ -3679,33 +3559,19 @@ class Engine:
                 query[:open_i] + f"(SELECT * FROM {v2})"
                 + query[close_i + 1:], dialect=dialect)
         pieces, pos = [], 0
-        alls = []
-        for start, end, is_all in cuts:
-            pieces.append(query[pos:start])
-            alls.append(is_all)
-            pos = end
+        for m in cuts:
+            pieces.append(query[pos:m.start()])
+            pos = m.end()
         pieces.append(query[pos:])
+        alls = [bool(m.group("all")) for m in cuts]
         # a trailing top-level ORDER BY/LIMIT binds to the WHOLE union,
         # not the last side — split it off and re-apply over the result
+        # (word-bounded: rate_limit is not a LIMIT, review r6)
         last, tail = pieces[-1], ""
-        lspans = [m.span() for m in
-                  re.finditer(r"'(?:[^']|'')*'|--[^\n]*", last)]
-        d2 = 0
-        for j in range(len(last)):
-            if any(a <= j < b for a, b in lspans):
-                continue
-            if last[j] == "(":
-                d2 += 1
-            elif last[j] == ")":
-                d2 -= 1
-            elif d2 == 0 and re.compile(
-                    r"\b(?:ORDER\s+BY|LIMIT)\b",
-                    re.IGNORECASE).match(last, j):
-                # match(last, j), not match(last[j:]): a slice start
-                # counts as a word boundary, so rate_limit would split
-                # at its 'limit' (review r6)
-                last, tail = last[:j], last[j:]
-                break
+        mtail = next(sqltext.top_level_finditer(
+            last, r"\b(?:ORDER\s+BY|LIMIT)\b"), None)
+        if mtail is not None:
+            last, tail = last[:mtail.start()], last[mtail.start():]
         pieces[-1] = last
         out = self.sql(pieces[0], dialect=dialect)
         for body, is_all in zip(pieces[1:], alls):
@@ -3819,18 +3685,14 @@ class Engine:
                       "comment string")
             return self.spark.createDataFrame(rows, schema)
 
-        spans = [m.span() for m in
-                 re.finditer(r"'(?:[^']|'')*'|--[^\n]*", query)]
-
         def sub(m: re.Match) -> str:
-            if any(a <= m.start() < b for a, b in spans):
-                return m.group(0)   # the phrase inside a literal is data
             which = m.group("which").lower()
             view = f"__cat_{which}_{hashlib.md5(str(sorted(tbls)).encode()).hexdigest()[:8]}"
             build(which).createOrReplaceTempView(view)
             return view
 
-        return _CATALOG_TVF_RE.sub(sub, query)
+        # the phrase inside a literal is data
+        return sqltext.sub(_CATALOG_TVF_RE, sub, query)
 
     def _pragma_database_size(self) -> DataFrame:
         """DuckDB's PRAGMA database_size column shape, answered from the
@@ -3893,7 +3755,7 @@ class Engine:
         pins); DuckDB's default Porter stemmer and stopword list are NOT
         applied — an explicit ``stemmer := 'porter'`` warns rather than
         silently scoring differently."""
-        parts = _split_top_commas(argstr)
+        parts = sqltext.split_top_commas(argstr)
         pos: list[str] = []
         named: dict[str, str] = {}
         for p in parts:
@@ -3962,14 +3824,12 @@ class Engine:
         pat = re.compile(
             r"(?:fts_main_(?P<tbl>\w+)\s*\.\s*)?match_bm25\s*\(",
             re.IGNORECASE)
-        spans = [m.span()
-                 for m in re.finditer(r"'(?:[^']|'')*'|--[^\n]*", query)]
         out, pos = [], 0
-        for m in pat.finditer(query):
-            if m.start() < pos or any(a <= m.start() < b for a, b in spans):
+        for m in sqltext.finditer(pat, query):
+            if m.start() < pos:
                 continue
-            close = _match_paren(query, m.end() - 1)
-            args = _split_top_commas(query[m.end():close])
+            close = sqltext.match_paren(query, m.end() - 1)
+            args = sqltext.split_top_commas(query[m.end():close])
             if len(args) < 2:
                 raise ValueError(
                     "match_bm25 needs (id_expr, 'query'[, options])")
@@ -4072,14 +3932,11 @@ class Engine:
         # gate, ns-ts shim, CSV sniffing all included). Only positions
         # directly after FROM/JOIN are table positions; a FROM-looking
         # sequence INSIDE a string literal stays data (span guard).
-        pt_spans = [m.span() for m in
-                    re.finditer(r"'(?:[^']|'')*'|--[^\n]*", query)]
-        query = _PATH_TABLE_RE.sub(
-            lambda m: (m.group(0)
-                       if any(a <= m.start() < b for a, b in pt_spans)
-                       else f"{m.group('kw')} read_"
-                            f"{_PATH_READER[m.group('ext').lower()]}"
-                            f"('{m.group('path')}')"),
+        query = sqltext.sub(
+            _PATH_TABLE_RE,
+            lambda m: (f"{m.group('kw')} read_"
+                       f"{_PATH_READER[m.group('ext').lower()]}"
+                       f"('{m.group('path')}')"),
             query)
         if not (_READ_FUNC_RE.search(query) or _GLOB_FUNC_RE.search(query)
                 or _TABLE_CHANGES_RE.search(query)):
@@ -4152,28 +4009,10 @@ class Engine:
             df.createOrReplaceTempView(name)
             return name
 
-        # matches that START inside a string literal or comment stay
-        # verbatim (the call's own path literal starts after the match).
-        # Spans are recomputed per pass: the glob rewrite changes string
-        # lengths, so spans measured on the original text would misalign
-        # with offsets in the rewritten text.
-        def literal_spans(q: str) -> list[tuple[int, int]]:
-            return [m.span()
-                    for m in re.finditer(r"'(?:[^']|'')*'|--[^\n]*", q)]
-
-        spans = literal_spans(query)
-
-        def guarded(m: re.Match) -> str:
-            if any(s <= m.start() < e for s, e in spans):
-                return m.group(0)
-            return sub(m)
-
         def glob_sub(m: re.Match) -> str:
             import glob as globmod
             import hashlib
 
-            if any(s <= m.start() < e for s, e in spans):
-                return m.group(0)
             if not self._extensions_allowed:
                 raise PermissionError(
                     "glob() is disabled in safe mode "
@@ -4189,8 +4028,6 @@ class Engine:
         def cdf_sub(m: re.Match) -> str:
             import hashlib
 
-            if any(s <= m.start() < e for s, e in spans):
-                return m.group(0)
             name = m.group("name")
             a = int(m.group("a"))
             b = int(m.group("b")) if m.group("b") else None
@@ -4198,11 +4035,13 @@ class Engine:
             self.table_changes(name, a, b).createOrReplaceTempView(view)
             return view
 
-        query = _GLOB_FUNC_RE.sub(glob_sub, query)
-        spans = literal_spans(query)
-        query = _TABLE_CHANGES_RE.sub(cdf_sub, query)
-        spans = literal_spans(query)
-        return _READ_FUNC_RE.sub(guarded, query)
+        # matches that START inside a string literal or comment stay
+        # verbatim (the call's own path literal starts after the match);
+        # sqltext.sub re-measures the literal spans on each pass, since
+        # the glob rewrite changes string lengths
+        query = sqltext.sub(_GLOB_FUNC_RE, glob_sub, query)
+        query = sqltext.sub(_TABLE_CHANGES_RE, cdf_sub, query)
+        return sqltext.sub(_READ_FUNC_RE, sub, query)
 
     def _expand_macros(self, query: str) -> str:
         """Expand CREATE MACRO call sites textually (what DuckDB's binder
@@ -4221,23 +4060,13 @@ class Engine:
     def _expand_macros_once(self, s: str) -> str:
         for name, (params, body) in self._macros.items():
             pat = re.compile(rf"\b{re.escape(name)}\s*\(", re.IGNORECASE)
-            spans = [m.span()
-                     for m in re.finditer(r"'(?:[^']|'')*'|--[^\n]*", s)]
             out: list[str] = []
             i = 0
-            while True:
-                m = pat.search(s, i)
-                if not m:
-                    out.append(s[i:])
-                    break
-                if any(a <= m.start() < b for a, b in spans):
-                    out.append(s[i:m.end()])
-                    i = m.end()
-                    continue
-                close = _match_paren(s, m.end() - 1)
-                args = [a.strip()
-                        for a in _split_top_commas(s[m.end():close])
-                        if a.strip()]
+            for m in sqltext.finditer(pat, s):
+                if m.start() < i:
+                    continue  # nested in a call expanded below
+                close = sqltext.match_paren(s, m.end() - 1)
+                args = sqltext.split_top_commas(s[m.end():close])
                 # `p := default` parameters are NAMED with defaults
                 # [measured r12: md(a, b := 10) — md(1) takes the
                 # default, md(1, b := 2) overrides, md(1, 2) errors
@@ -4288,18 +4117,13 @@ class Engine:
                     "|".join(rf"\b{re.escape(p_)}\b"
                              for p_ in mapping),
                     re.IGNORECASE)
-                bspans = [bm.span() for bm in
-                          re.finditer(r"'(?:[^']|'')*'|--[^\n]*", body)]
-
-                def prepl(pm: re.Match) -> str:
-                    if any(a <= pm.start() < b for a, b in bspans):
-                        return pm.group(0)
-                    return f"({mapping[pm.group(0).lower()]})"
-
-                expansion = ppat.sub(prepl, body)
+                expansion = sqltext.sub(
+                    ppat, lambda pm: f"({mapping[pm.group(0).lower()]})",
+                    body)
                 out.append(s[i:m.start()])
                 out.append(f"({expansion})")
                 i = close + 1
+            out.append(s[i:])
             s = "".join(out)
         return s
 
@@ -4335,10 +4159,8 @@ class Engine:
             r"(?:\s*\(\s*(?P<colal>[A-Za-z_]\w*)\s*\))?)?",
             re.IGNORECASE,
         )
-        spans = [m.span() for m in re.finditer(r"'(?:[^']|'')*'|--[^\n]*", query)]
-
         def temporal_sub(m: re.Match) -> str | None:
-            args = _split_top_commas(m.group("args"))
+            args = sqltext.split_top_commas(m.group("args"))
             if len(args) != 3:
                 return None
             a, b, s = (x.strip() for x in args)
@@ -4369,8 +4191,6 @@ class Engine:
             return f"{m.group('kw')} ({inner}) {alias}"
 
         def sub(m: re.Match) -> str:
-            if any(a <= m.start() < b for a, b in spans):
-                return m.group(0)
             try:
                 args = [int(a.strip()) for a in m.group("args").split(",")]
             except ValueError:
@@ -4393,7 +4213,7 @@ class Engine:
             return (f"{m.group('kw')} (SELECT id AS {col} "
                     f"FROM range({a}, {b}, {s})) {alias}")
 
-        return pat.sub(sub, query)
+        return sqltext.sub(pat, sub, query)
 
     def _read_csv_with_opts(self, path: str, opts: dict) -> DataFrame:
         """read_csv with DuckDB-style named options mapped onto the Spark
@@ -4763,7 +4583,7 @@ class Engine:
         if key in self._load_enum_types():
             raise ValueError(f"CREATE TYPE: type {name!r} already exists")
         out: list[str] = []
-        for part in _split_top_commas(vals):
+        for part in sqltext.split_top_commas(vals):
             p = part.strip()
             if not (len(p) >= 2 and p.startswith("'") and p.endswith("'")):
                 raise ValueError(
@@ -4790,7 +4610,7 @@ class Engine:
         if not enums:
             return inner
         parts_out = []
-        for part in _split_top_commas(inner):
+        for part in sqltext.split_top_commas(inner):
             toks = part.strip().split(None, 2)
             if len(toks) >= 2 and toks[1].lower() in enums:
                 col = toks[0]
@@ -4994,25 +4814,9 @@ class Engine:
             return None
         name, cols_txt = m.group(1), m.group(2)
         open_pos = m.end() - 1
-        depth = 0
-        in_str = False
-        close = None
-        for i in range(open_pos, len(query)):
-            ch = query[i]
-            if in_str:
-                if ch == "'":
-                    in_str = False
-                continue
-            if ch == "'":
-                in_str = True
-            elif ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-                if depth == 0:
-                    close = i
-                    break
-        if close is None:
+        try:
+            close = sqltext.match_paren(query, open_pos)
+        except ValueError:
             return None
         body = query[open_pos + 1:close]
         tail = query[close + 1:]
@@ -5149,11 +4953,11 @@ class Engine:
                 raise NotImplementedError(
                     "RETURNING: unsupported UPDATE shape")
             name, rest = m.group("name"), m.group("rest")
-            wpos = _find_top_level(rest, "WHERE")
+            wpos = sqltext.find_top_level(rest, "WHERE")
             sets_txt = rest if wpos < 0 else rest[:wpos]
             pred = None if wpos < 0 else rest[wpos + 5:]
             sets: dict[str, str] = {}
-            for part in _split_top_commas(sets_txt):
+            for part in sqltext.split_top_commas(sets_txt):
                 col, eq, expr = part.partition("=")
                 if not eq:
                     raise NotImplementedError(
@@ -5262,7 +5066,7 @@ class Engine:
                                  "(use CREATE OR REPLACE / IF NOT EXISTS)")
             cons: list[dict] = []
             if rest.startswith("("):
-                close = _match_paren(rest, 0)
+                close = sqltext.match_paren(rest, 0)
                 inner, cons = _parse_constraints(
                     self._expand_enum_columns(rest[1:close]))
                 schema = _schema_to_spark_ddl(inner)
@@ -5574,7 +5378,7 @@ class Engine:
                 raise ValueError(f"UPDATE unknown table {name!r}")
             sets_text, pred = _split_where_top_level(m.group("rest"))
             assignments = {}
-            for part in _split_top_commas(sets_text):
+            for part in sqltext.split_top_commas(sets_text):
                 col, _, expr = part.partition("=")
                 if not _:
                     raise ValueError(f"UPDATE: cannot parse assignment {part!r}")
@@ -5761,7 +5565,7 @@ class Engine:
                              "only versioned tables accept DML")
         rest = m.group("rest").strip()
         if rest.startswith("("):
-            close = _match_paren(rest, 0)
+            close = sqltext.match_paren(rest, 0)
             source, tail = rest[:close + 1], rest[close + 1:]
         else:
             ms = re.match(r"^([A-Za-z_]\w*)", rest)
@@ -5779,7 +5583,7 @@ class Engine:
 
         def _parse_sets(text: str) -> dict[str, str]:
             sets: dict[str, str] = {}
-            for part in _split_top_commas(text):
+            for part in sqltext.split_top_commas(text):
                 col, eq, expr = part.partition("=")
                 if not eq:
                     raise ValueError(f"MERGE UPDATE: bad assignment {part!r}")
@@ -5832,7 +5636,7 @@ class Engine:
                             "WHEN NOT MATCHED THEN INSERT needs `*` or "
                             "`(cols) VALUES (exprs)`")
                     ins_cols = [x.strip() for x in mi.group("cols").split(",")]
-                    ins_vals = _split_top_commas(mi.group("vals"))
+                    ins_vals = sqltext.split_top_commas(mi.group("vals"))
                     if len(ins_cols) != len(ins_vals):
                         raise ValueError("INSERT column/value count mismatch")
             elif by:
@@ -6321,7 +6125,7 @@ def _rewrite_from_first(query: str) -> str:
     FROM; everything else (including subqueries) is untouched."""
     if query.lstrip()[:5].upper() not in ("FROM ", "FROM\t", "FROM\n"):
         return query
-    sel = _find_top_level(query, "SELECT")
+    sel = sqltext.find_top_level(query, "SELECT")
     if sel < 0:
         return "SELECT * " + query.lstrip()
     from_part = query[:sel].strip()
@@ -6329,41 +6133,12 @@ def _rewrite_from_first(query: str) -> str:
     # the select list ends at the first top-level clause keyword
     cut = len(rest)
     for kw in ("WHERE", "GROUP", "HAVING", "QUALIFY", "ORDER", "LIMIT"):
-        k = _find_top_level(rest, kw)
+        k = sqltext.find_top_level(rest, kw)
         if 0 <= k < cut:
             cut = k
-    return f"SELECT {rest[:cut].strip()} {from_part} {rest[cut:].strip()}".strip()
-
-
-def _find_top_level(s: str, word: str, start: int = 0) -> int:
-    """Index of the first word-boundary occurrence of ``word`` at paren
-    depth 0, skipping string literals. -1 when absent."""
-    depth, i, n = 0, start, len(s)
-    w, lw = word.upper(), len(word)
-    while i < n:
-        c = s[i]
-        if c == "'":
-            j = i + 1
-            while j < n:
-                if s[j] == "'":
-                    if j + 1 < n and s[j + 1] == "'":
-                        j += 2
-                        continue
-                    break
-                j += 1
-            i = j + 1
-            continue
-        if c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-        elif (depth == 0 and s[i:i + lw].upper() == w
-              and (i == 0 or not (s[i - 1].isalnum() or s[i - 1] == "_"))
-              and (i + lw >= n or not (s[i + lw].isalnum()
-                                       or s[i + lw] == "_"))):
-            return i
-        i += 1
-    return -1
+    # newline-joined: a piece may end in a -- comment
+    return (f"SELECT {rest[:cut].strip()}\n{from_part}\n"
+            f"{rest[cut:].strip()}").strip()
 
 
 def _looks_like_create_table(rest: str) -> bool:
@@ -6372,35 +6147,6 @@ def _looks_like_create_table(rest: str) -> bool:
     spark.sql untouched."""
     rest = rest.strip()
     return rest.startswith("(") or rest[:2].upper() == "AS"
-
-
-def _match_paren(text: str, open_idx: int) -> int:
-    """Index of the ')' matching the '(' at open_idx, skipping string
-    literals — DEFAULT/CHECK clauses legally put literals (including
-    parens like DEFAULT ')') inside definition lists."""
-    depth = 0
-    i, n = open_idx, len(text)
-    while i < n:
-        ch = text[i]
-        if ch == "'":
-            j = i + 1
-            while j < n:
-                if text[j] == "'":
-                    if j + 1 < n and text[j + 1] == "'":
-                        j += 2
-                        continue
-                    break
-                j += 1
-            i = j + 1
-            continue
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-            if depth == 0:
-                return i
-        i += 1
-    raise ValueError("unbalanced parentheses")
 
 
 def _qualify_bare_columns(expr: str, table: str, columns: set[str]) -> str:
@@ -6467,40 +6213,6 @@ def _pivot_value_literal(v) -> str:
     return str(v)
 
 
-def _split_top_commas(text: str) -> list[str]:
-    """Split on commas at paren depth 0, outside string literals — a
-    comma inside ``'a, b'`` (SQL '' escaping included) never splits."""
-    parts, depth, buf = [], 0, []
-    in_str = False
-    i, n = 0, len(text)
-    while i < n:
-        ch = text[i]
-        if in_str:
-            if ch == "'":
-                if i + 1 < n and text[i + 1] == "'":  # '' escape
-                    buf.append("''")
-                    i += 2
-                    continue
-                in_str = False
-            buf.append(ch)
-            i += 1
-            continue
-        if ch == "'":
-            in_str = True
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        if ch == "," and depth == 0:
-            parts.append("".join(buf))
-            buf = []
-        else:
-            buf.append(ch)
-        i += 1
-    parts.append("".join(buf))
-    return [p.strip() for p in parts if p.strip()]
-
-
 def _sniff_csv_delim(path: str, sample_bytes: int = 65536) -> str | None:
     """Detect the CSV delimiter from a prefix of the first file at
     ``path`` (DuckDB sniffer's core heuristic): among the candidate
@@ -6549,35 +6261,7 @@ def _parse_read_func_args(argstr: str) -> dict:
     lowercase-key dict. Values: quoted strings (unescaped), booleans,
     numbers, or a ``{...}`` struct kept as its raw text."""
     out: dict = {}
-    if not argstr.strip():
-        return out
-    # split top-level commas (quotes and braces protect inner commas)
-    parts, buf, depth, in_str = [], [], 0, False
-    for ch in argstr:
-        if in_str:
-            buf.append(ch)
-            if ch == "'":
-                in_str = False
-            continue
-        if ch == "'":
-            in_str = True
-            buf.append(ch)
-        elif ch in "{[":
-            depth += 1
-            buf.append(ch)
-        elif ch in "}]":
-            depth -= 1
-            buf.append(ch)
-        elif ch == "," and depth == 0:
-            parts.append("".join(buf))
-            buf = []
-        else:
-            buf.append(ch)
-    parts.append("".join(buf))
-    for part in parts:
-        part = part.strip()
-        if not part:
-            continue
+    for part in sqltext.split_top_commas(argstr):
         m = re.match(r"^(?P<key>[A-Za-z_]\w*)\s*:?=\s*(?P<val>.+)$", part,
                      re.DOTALL)
         if not m:
@@ -6589,9 +6273,8 @@ def _parse_read_func_args(argstr: str) -> dict:
         elif val.startswith("[") and val.endswith("]"):
             # list options (names=['a','b'], types=[…]) — quoted
             # string elements (r12)
-            out[key] = [e.strip()[1:-1].replace("''", "'")
-                        if e.strip().startswith("'") else e.strip()
-                        for e in val[1:-1].split(",") if e.strip()]
+            out[key] = [e[1:-1].replace("''", "'") if e.startswith("'")
+                        else e for e in sqltext.split_top_commas(val[1:-1])]
         elif val.lower() in ("true", "false"):
             out[key] = val.lower() == "true"
         elif re.fullmatch(r"-?\d+", val):
@@ -6649,18 +6332,18 @@ def _map_duck_type(typ: str) -> str | None:
     is unknown (callers decide whether that's an error)."""
     t = typ.strip()
     # DuckDB array suffixes: INT[] / VARCHAR[][] → ARRAY<…> wrapping
-    depth = 0
+    dims = 0
     while True:
         m_arr = re.search(r"\[\s*\]\s*$", t)
         if not m_arr:
             break
         t = t[:m_arr.start()].rstrip()
-        depth += 1
-    if depth:
+        dims += 1
+    if dims:
         inner = _map_duck_type(t)
         if inner is None:
             return None
-        for _ in range(depth):
+        for _ in range(dims):
             inner = f"ARRAY<{inner}>"
         return inner
     m = re.match(r"^([A-Za-z_][A-Za-z0-9_]*)"
@@ -6705,12 +6388,12 @@ def _parse_constraints(inner: str) -> tuple[str, list[dict]]:
     constraint text removed, constraint dicts)."""
     cons: list[dict] = []
     parts_out: list[str] = []
-    for part in _split_top_commas(inner):
+    for part in sqltext.split_top_commas(inner):
         p = part.strip()
         up = p.upper()
         m = re.match(r"^CHECK\s*\(", p, re.IGNORECASE)
         if m:  # table-level CHECK
-            close = _match_paren(p, m.end() - 1)
+            close = sqltext.match_paren(p, m.end() - 1)
             cons.append({"kind": "check", "expr": p[m.end():close]})
             continue
         m = re.match(r"^PRIMARY\s+KEY\s*\(\s*(?P<c>[^)]*)\)\s*$", p,
@@ -6728,7 +6411,7 @@ def _parse_constraints(inner: str) -> tuple[str, list[dict]]:
         name = p.split()[0] if p.split() else ""
         mck = re.search(r"\bCHECK\s*\(", p, re.IGNORECASE)
         if mck:
-            close = _match_paren(p, mck.end() - 1)
+            close = sqltext.match_paren(p, mck.end() - 1)
             cons.append({"kind": "check", "expr": p[mck.end():close]})
             p = (p[:mck.start()] + p[close + 1:]).strip()
         # DEFAULT expr extends to the next constraint keyword, not to the
@@ -6761,7 +6444,7 @@ def _schema_to_spark_ddl(inner: str) -> str:
     DATETIME, …) onto Spark spellings; drops NOT NULL (snapshot tables
     don't enforce constraints — same as parquet)."""
     cols = []
-    for part in _split_top_commas(inner):
+    for part in sqltext.split_top_commas(inner):
         part = re.sub(r"\s+NOT\s+NULL\b", "", part, flags=re.IGNORECASE)
 
         # map only the BASE TYPE token (first word after the column
@@ -6789,24 +6472,7 @@ def _parse_copy_options(opts: str | None) -> dict:
     '|', PARTITION_BY (a, b)``) into a lowercase-key dict. Splits on
     top-level commas only, so parenthesized value lists stay intact."""
     out: dict = {}
-    if not opts or not opts.strip():
-        return out
-    parts, depth, buf = [], 0, []
-    for ch in opts:
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        if ch == "," and depth == 0:
-            parts.append("".join(buf))
-            buf = []
-        else:
-            buf.append(ch)
-    parts.append("".join(buf))
-    for part in parts:
-        part = part.strip()
-        if not part:
-            continue
+    for part in sqltext.split_top_commas(opts or ""):
         m = re.match(r"^(\w+)\s*(.*)$", part, re.DOTALL)
         if not m:
             raise ValueError(f"COPY: cannot parse option {part!r}")

@@ -27,6 +27,8 @@ from __future__ import annotations
 
 import re
 
+from .. import sqltext
+
 _CACHED: list = []
 _VIEW_N = [0]
 
@@ -52,11 +54,8 @@ def _ref_positions(name: str, text: str):
     Rewriting those other occurrences corrupts valid queries (an
     ``e.lvl`` column ref sharing a CTE's name would become
     ``e.__rec_cte_1``)."""
-    skip = [mm.span() for mm in
-            re.finditer(r"'(?:[^']|'')*'|--[^\n]*", text)]
-    for mm in re.finditer(rf"\b{re.escape(name)}\b", text, re.IGNORECASE):
-        if any(a <= mm.start() < b for a, b in skip):
-            continue
+    for mm in sqltext.finditer(rf"\b{re.escape(name)}\b", text,
+                               re.IGNORECASE):
         pre = text[:mm.start()].rstrip()
         if pre.endswith(".") or re.search(r"\bAS$", pre, re.IGNORECASE):
             continue
@@ -65,25 +64,6 @@ def _ref_positions(name: str, text: str):
 
 def _refs(name: str, text: str) -> bool:
     return next(iter(_ref_positions(name, text)), None) is not None
-
-
-def _match_paren(text: str, open_idx: int) -> int:
-    depth, i, in_str = 0, open_idx, False
-    while i < len(text):
-        c = text[i]
-        if in_str:
-            if c == "'":
-                in_str = False
-        elif c == "'":
-            in_str = True
-        elif c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-            if depth == 0:
-                return i
-        i += 1
-    raise ValueError("unbalanced parentheses")
 
 
 def materialize_recursive_inputs(spark, query: str) -> str:
@@ -101,7 +81,7 @@ def materialize_recursive_inputs(spark, query: str) -> str:
             break
         open_idx = pos + mh.end() - 1
         try:
-            close = _match_paren(query, open_idx)
+            close = sqltext.match_paren(query, open_idx)
         except ValueError:
             return query
         ctes.append((mh.group(1), query[open_idx + 1:close]))

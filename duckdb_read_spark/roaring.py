@@ -113,9 +113,11 @@ def _serialize_roaring32(values: list[int]) -> bytes:
     return bytes(out)
 
 
-def _deserialize_roaring32(buf: bytes, pos: int) -> tuple[list[int], int]:
-    """Standard serialization at ``buf[pos:]`` → (sorted uint32 values,
-    next position). Accepts both cookies and all container types."""
+def _roaring32_headers(buf: bytes, pos: int
+                       ) -> tuple[list[tuple[int, int, bool]], int]:
+    """Standard serialization at ``buf[pos:]`` → ([(key, header
+    cardinality, is run container)], position of the first container
+    payload). Accepts both cookies."""
     cookie = struct.unpack_from("<i", buf, pos)[0]
     if (cookie & 0xFFFF) == _SERIAL_COOKIE_RUN:
         n = (cookie >> 16) + 1
@@ -135,13 +137,20 @@ def _deserialize_roaring32(buf: bytes, pos: int) -> tuple[list[int], int]:
     for i in range(n):
         k, cm1 = struct.unpack_from("<HH", buf, pos)
         pos += 4
-        headers.append((k, cm1 + 1))
+        headers.append((k, cm1 + 1,
+                        bool(run_flags[i // 8] & (1 << (i % 8)))))
     if has_offsets:
         pos += 4 * n   # offsets are redundant for sequential decode
+    return headers, pos
+
+
+def _deserialize_roaring32(buf: bytes, pos: int) -> tuple[list[int], int]:
+    """Standard serialization at ``buf[pos:]`` → (sorted uint32 values,
+    next position). Accepts both cookies and all container types."""
+    headers, pos = _roaring32_headers(buf, pos)
     values: list[int] = []
-    for i, (k, card) in enumerate(headers):
+    for k, card, is_run in headers:
         base = k << 16
-        is_run = bool(run_flags[i // 8] & (1 << (i % 8)))
         if is_run:
             n_runs = struct.unpack_from("<H", buf, pos)[0]
             pos += 2
@@ -164,6 +173,28 @@ def _deserialize_roaring32(buf: bytes, pos: int) -> tuple[list[int], int]:
     return values, pos
 
 
+def _roaring32_cardinality(buf: bytes, pos: int) -> tuple[int, int]:
+    """(number of values, next position) of the standard serialization
+    at ``buf[pos:]``, counted from the containers without expanding
+    them: array containers by their header, bitsets by popcount, runs
+    by their lengths. Work is linear in the serialized bytes."""
+    headers, pos = _roaring32_headers(buf, pos)
+    total = 0
+    for _k, card, is_run in headers:
+        if is_run:
+            n_runs = struct.unpack_from("<H", buf, pos)[0]
+            runs = struct.unpack_from(f"<{2 * n_runs}H", buf, pos + 2)
+            total += sum(runs[1::2]) + n_runs
+            pos += 2 + 4 * n_runs
+        elif card > 4096:
+            total += int.from_bytes(buf[pos:pos + 8192], "little").bit_count()
+            pos += 8192
+        else:
+            total += card
+            pos += 2 * card
+    return total, pos
+
+
 # --------------------------------------------- portable 64-bit array
 
 def serialize_bitmap_array(values: "list[int]") -> bytes:
@@ -179,20 +210,33 @@ def serialize_bitmap_array(values: "list[int]") -> bytes:
     return bytes(out)
 
 
-def deserialize_bitmap_array(data: bytes) -> list[int]:
-    """Delta portable RoaringBitmapArray bytes → sorted row indexes."""
+def _bitmap_array_parts(data: bytes, read32):
+    """Yield (key, ``read32(data, pos)[0]``) per 32-bit bitmap of Delta's
+    portable RoaringBitmapArray bytes."""
     magic, n = struct.unpack_from("<iq", data, 0)
     if magic != _PORTABLE_MAGIC:
         raise ValueError(
             f"not a portable RoaringBitmapArray (magic {magic})")
     pos = 12
-    values: list[int] = []
     for _ in range(n):
         key = struct.unpack_from("<i", data, pos)[0]
-        pos += 4
-        vals32, pos = _deserialize_roaring32(data, pos)
-        values.extend((key << 32) | v for v in vals32)
-    return values
+        part, pos = read32(data, pos + 4)
+        yield key, part
+
+
+def deserialize_bitmap_array(data: bytes) -> list[int]:
+    """Delta portable RoaringBitmapArray bytes → sorted row indexes."""
+    return [(key << 32) | v for key, vals32 in
+            _bitmap_array_parts(data, _deserialize_roaring32)
+            for v in vals32]
+
+
+def bitmap_array_cardinality(data: bytes) -> int:
+    """Number of row indexes in Delta portable RoaringBitmapArray bytes,
+    counted without expanding them (the bitmap's own count, whatever a
+    descriptor declares)."""
+    return sum(card for _, card in
+               _bitmap_array_parts(data, _roaring32_cardinality))
 
 
 # --------------------------------------------------- DV file framing

@@ -22,7 +22,8 @@ from ..conf import apply_runtime_confs
 # schema up front, and the batch read that provides it costs a driver
 # job (file listing + footer) of ~0.4 s per call. The schema is a pure
 # function of the file bytes, so memoize per (realpath, mtime, size) —
-# an overwritten file re-infers. Metadata only; no rows are cached.
+# an overwritten file re-infers and replaces its old entry, so the memo
+# holds one entry per path. Metadata only; no rows are cached.
 _SCHEMA_MEMO: dict[tuple, object] = {}
 
 
@@ -36,7 +37,10 @@ def _parquet_schema(spark: SparkSession, path: str):
     key = (real, st.st_mtime_ns, st.st_size)
     schema = _SCHEMA_MEMO.get(key)
     if schema is None:
-        schema = _SCHEMA_MEMO[key] = spark.read.parquet(path).schema
+        schema = spark.read.parquet(path).schema
+        for stale in [k for k in _SCHEMA_MEMO if k[0] == real]:
+            del _SCHEMA_MEMO[stale]
+        _SCHEMA_MEMO[key] = schema
     return schema
 
 

@@ -521,6 +521,47 @@ def test_dv_driver_expand_matches_executor_path(spark, tmp_path, monkeypatch):
     assert fast_rows == {r.k for r in slow.collect()}
 
 
+@pytest.mark.parametrize("n_deleted", [200_000, 100])
+def test_dv_declared_cardinality_mismatch_takes_executor_path(
+        spark, tmp_path, n_deleted):
+    """A descriptor declaring cardinality 1 over a larger bitmap must not
+    steer the expansion onto the driver: the gate counts the bitmap
+    itself, so both a 200k-entry bitmap (over the gate) and a 100-entry
+    one (under it, but disagreeing) take the executor path, and the
+    deleted rows still vanish."""
+    d = str(tmp_path / "dvm")
+    full = os.path.join(d, "f0")
+    (spark.range(0, n_deleted + 5).withColumnRenamed("id", "k")
+     .coalesce(1).sortWithinPartitions("k")
+     .write.mode("overwrite").parquet(full))
+    (f,) = [f for f in os.listdir(full) if f.endswith(".parquet")]
+    dv = _dv_descriptor(d, range(n_deleted))
+    dv["cardinality"] = 1
+    schema = {"type": "struct", "fields": [
+        {"name": "k", "type": "long", "nullable": True, "metadata": {}}]}
+    actions = [
+        {"protocol": {"minReaderVersion": 3, "minWriterVersion": 7,
+                      "readerFeatures": ["deletionVectors"],
+                      "writerFeatures": ["deletionVectors"]}},
+        {"metaData": {"id": "t", "format": {"provider": "parquet",
+                                            "options": {}},
+                      "schemaString": json.dumps(schema),
+                      "partitionColumns": [], "configuration": {},
+                      "createdTime": 0}},
+        {"add": {"path": f"f0/{f}", "partitionValues": {}, "size": 1,
+                 "modificationTime": 0, "dataChange": True,
+                 "deletionVector": dv}},
+    ]
+    os.makedirs(os.path.join(d, "_delta_log"))
+    with open(os.path.join(d, "_delta_log", f"{0:020d}.json"), "w") as fh:
+        fh.write("\n".join(json.dumps(a) for a in actions) + "\n")
+
+    df = deltalog.read_delta_table(spark, d)
+    assert "InPandas" in df._jdf.queryExecution().executedPlan().toString()
+    assert sorted(r.k for r in df.collect()) == list(
+        range(n_deleted, n_deleted + 5))
+
+
 def test_delta_dv_clone_guard_direct(spark, tmp_path):
     from duckdb_read_spark import deltalog, snapshots
 

@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import pytest
 
+from duckdb_read_spark import sqltext
 from duckdb_read_spark.dialect import convert_strftime_format, to_spark_sql
 from duckdb_read_spark.engine import split_statements
 
@@ -844,3 +845,43 @@ def test_regexp_flags_and_list_has_rewrites(engine, duck):
     got = tuple(engine.sql(q, dialect="duckdb").first())
     want = duck.execute(q).fetchone()
     assert got == want
+
+
+_SQLTEXT_CASES = [
+    # a '' escape stays inside its literal
+    ("quote_escape", "split_top_commas", ("'a'',b', c",), ["'a'',b'", "c"]),
+    ("quote_escape_spans", "literal_spans", ("x = 'it''s' AND y",),
+     [(4, 11)]),
+    # '--' inside a literal is data, not a comment
+    ("dash_literal", "split_top_commas", ("'--', x",), ["'--'", "x"]),
+    ("dash_literal_paren", "match_paren", ("f('--', (1))", 1), 11),
+    # a -- comment hides its brackets and commas and is dropped from pieces
+    ("comment_paren", "match_paren", ("f(a -- ), (\n)", 1), 12),
+    ("comment_comma", "split_top_commas", ("a -- x, (y)\n, b",), ["a", "b"]),
+    ("comment_word", "find_top_level", ("a -- FROM\nFROM t", "FROM"), 10),
+    ("comment_spans", "literal_spans", ("a -- it's\nb",), [(2, 9)]),
+    # ( [ { count as one depth
+    ("nested_split", "split_top_commas", ("[1, 2], {'k': (3, [4, 5])}, 6",),
+     ["[1, 2]", "{'k': (3, [4, 5])}", "6"]),
+    ("nested_paren", "match_paren", ("f([{1, (2)}], 3) + 1", 1), 15),
+    ("nested_word", "find_top_level", ("(SELECT [FROM]) FROM t", "FROM"),
+     16),
+    # whole words only: rate_limit holds no LIMIT
+    ("word_boundary", "find_top_level",
+     ("SELECT rate_limit FROM t LIMIT 5", "LIMIT"), 25),
+    ("word_absent", "find_top_level", ("SELECT rate_limit FROM t", "LIMIT"),
+     -1),
+    ("unbalanced", "match_paren", ("f(a, (b)", 1), ValueError),
+]
+
+
+@pytest.mark.parametrize("fn,args,want",
+                         [c[1:] for c in _SQLTEXT_CASES],
+                         ids=[c[0] for c in _SQLTEXT_CASES])
+def test_sqltext_lexical_rule(fn, args, want):
+    call = getattr(sqltext, fn)
+    if want is ValueError:
+        with pytest.raises(ValueError, match="^unbalanced parentheses$"):
+            call(*args)
+    else:
+        assert call(*args) == want

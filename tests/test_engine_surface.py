@@ -781,6 +781,58 @@ def test_attach_blocked_in_safe_mode(engine, tmp_path):
         eng.sql(f"ATTACH '{tmp_path}' AS x")
 
 
+# --- one lexical rule: literals, -- comments, ( [ { depth -----------------
+
+_LEXICAL_CASES = {
+    # a quoted ',' option value is not an option separator
+    "copy_quoted_comma": (
+        None, "COPY lex_t TO '{out}' (FORMAT csv, DELIMITER ',', HEADER)"),
+    # a '(' inside a comment opens no depth before the SELECT
+    "from_first_comment": (None, "FROM lex_t -- pick (\nSELECT a"),
+    # a ')' inside a comment closes no macro call
+    "macro_arg_comment": ("CREATE OR REPLACE MACRO lex_add1(x) AS x + 1",
+                          "SELECT lex_add1(a -- one )\n) AS r FROM lex_t"),
+    # a list literal's comma does not split macro arguments...
+    "macro_list_arg": ("CREATE OR REPLACE MACRO lex_first_el(l) AS l[1]",
+                       "SELECT lex_first_el([7,8]) AS r"),
+    # ...nor EXECUTE arguments
+    "execute_list_arg": ("PREPARE lex_s AS SELECT $1 AS l, $2 AS x",
+                         "EXECUTE lex_s([1,2], 3)"),
+    # a quoted ',' inside a read_* list option is one element
+    "read_csv_list_option": (
+        None, "SELECT c FROM read_csv('{csv}', names=['a,b', 'c'])"),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_LEXICAL_CASES))
+def test_front_end_lexical_rule_matches_duckdb(engine, duck, tmp_path, case):
+    """Statements whose literals, comments or list brackets the front end
+    once scanned by different rules give DuckDB's result."""
+    setup, stmt = _LEXICAL_CASES[case]
+    csv = tmp_path / "in.csv"
+    csv.write_text("p,q\n1,2\n3,4\n")
+    engine.spark.createDataFrame([(1,), (2,)], "a int") \
+        .createOrReplaceTempView("lex_t")
+    duck.execute("CREATE OR REPLACE TABLE lex_t AS "
+                 "SELECT * FROM (VALUES (1), (2)) v(a)")
+    if setup:
+        engine.sql(setup, dialect="duckdb")
+        duck.execute(setup)
+    if case.startswith("copy"):
+        engine.sql(stmt.format(out=tmp_path / "e.csv"), dialect="duckdb")
+        duck.execute(stmt.format(out=tmp_path / "d.csv"))
+        # typed by name: Spark also writes a header-only part file
+        got, want = (duck.execute(
+            f"SELECT CAST(a AS INTEGER) FROM read_csv('{p}', header=true)"
+        ).fetchall() for p in (tmp_path / "e.csv" / "*.csv",
+                               tmp_path / "d.csv"))
+    else:
+        stmt = stmt.format(csv=csv)
+        got = engine.sql(stmt, dialect="duckdb").collect()
+        want = duck.execute(stmt).fetchall()
+    assert normalize_rows(tuple(r) for r in got) == normalize_rows(want)
+
+
 # --- PREPARE / EXECUTE / DEALLOCATE ---------------------------------------
 
 def test_prepare_execute_deallocate(engine, duck):

@@ -401,3 +401,20 @@ def test_read_stream_table_refuses_orphan_dirs(spark, tmp_path):
     snapshots.vacuum(d, keep_last=1)
     eng._refresh_table("osrc")
     assert eng.read_stream("osrc").isStreaming
+
+
+def test_schema_memo_keeps_one_entry_per_overwritten_file(spark, tmp_path):
+    """Overwriting a stream source file re-infers its schema and replaces
+    the memo entry for that path rather than adding one per version."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from duckdb_read_spark.streaming import source
+
+    path = str(tmp_path / "src.parquet")
+    real = os.path.realpath(path)
+    for cols in (["a"], ["a", "b"], ["a", "b", "c"]):
+        pq.write_table(pa.table({c: [1, 2] for c in cols}), path)
+        assert source._parquet_schema(spark, path).fieldNames() == cols
+    assert [k for k in source._SCHEMA_MEMO if k[0] == real] == [
+        (real, os.stat(real).st_mtime_ns, os.stat(real).st_size)]
