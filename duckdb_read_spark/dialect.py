@@ -7,9 +7,12 @@ This module rewrites DuckDB-flavored SQL text into Spark SQL *before* it
 reaches ``spark.sql``, so Catalyst sees native Spark SQL and optimizes as
 usual (no custom Catalyst rules needed).
 
-Implementation: a small quote-aware tokenizer plus token-stream passes.
-Regex-on-raw-text would corrupt string literals; a full grammar would be
-overkill — the divergence list is finite and local.
+Implementation: token-stream passes over ``sqltext``'s tokenizer, the
+engine's one lexical rule (which text is a literal, quoted identifier,
+comment or bracket). Regex-on-raw-text would corrupt string literals; a
+full grammar would be overkill — the divergence list is finite and local.
+The passes call ``tokenize`` through this module's global, so a caller
+that patches ``dialect.tokenize`` sees every pass's call.
 
 Handled (SURVEY §2.4 item numbers):
   1. regexp_replace 'g' flag dropped (Spark is always-global)
@@ -49,88 +52,10 @@ DayTimeInterval comparison matches DuckDB.
 from __future__ import annotations
 
 import re
-from dataclasses import dataclass
 
-# --- tokenizer ------------------------------------------------------------
-
-_TOKEN_RE = re.compile(
-    r"""
-      (?P<ws>\s+)
-    | (?P<comment>--[^\n]*)
-    | (?P<str>'(?:[^']|'')*')
-    | (?P<dstr>\$([A-Za-z_]\w*|)\$[\s\S]*?\$\5\$)  # $tag$…$tag$ — \5 is
-                                                   # the tag group (count
-                                                   # groups if editing!)
-    | (?P<qid>"(?:[^"]|"")*")
-    | (?P<bqid>`(?:[^`]|``)*`)
-    | (?P<num>\d+(?:\.\d+)?(?:[eE][+-]?\d+)?)
-    | (?P<arrow2>->>)
-    | (?P<arrow>->)
-    | (?P<op><=|>=|<>|!=|=|<|>|\|\||[+\-*/%])
-    | (?P<punct>[(),;\[\].{}:])
-    | (?P<ident>[A-Za-z_][A-Za-z0-9_$]*)
-    """,
-    re.VERBOSE,
-)
-
-
-@dataclass
-class Tok:
-    kind: str
-    text: str
-
-
-def tokenize(sql: str) -> list[Tok]:
-    toks: list[Tok] = []
-    pos = 0
-    while pos < len(sql):
-        m = _TOKEN_RE.match(sql, pos)
-        if not m:
-            toks.append(Tok("other", sql[pos]))
-            pos += 1
-            continue
-        toks.append(Tok(m.lastgroup, m.group()))
-        pos = m.end()
-    return toks
-
-
-def detokenize(toks: list[Tok]) -> str:
-    return "".join(t.text for t in toks)
-
-
-def _sig(toks: list[Tok]) -> list[int]:
-    """Indices of non-whitespace/comment tokens."""
-    return [i for i, t in enumerate(toks) if t.kind not in ("ws", "comment")]
-
-
-def _find_close(toks: list[Tok], open_idx: int) -> int:
-    """Index of the ')' matching the '(' at open_idx."""
-    depth = 0
-    for i in range(open_idx, len(toks)):
-        if toks[i].text == "(":
-            depth += 1
-        elif toks[i].text == ")":
-            depth -= 1
-            if depth == 0:
-                return i
-    raise ValueError("unbalanced parentheses")
-
-
-def _split_args(toks: list[Tok], open_idx: int, close_idx: int) -> list[tuple[int, int]]:
-    """Top-level comma-separated arg spans (start, end_exclusive) inside a call."""
-    spans, depth, start = [], 0, open_idx + 1
-    for i in range(open_idx + 1, close_idx):
-        t = toks[i]
-        if t.text in ("(", "[", "{"):  # brackets/braces: list & struct
-            depth += 1                     # literals, subscripts
-        elif t.text in (")", "]", "}"):
-            depth -= 1
-        elif t.text == "," and depth == 0:
-            spans.append((start, i))
-            start = i + 1
-    if close_idx > open_idx + 1:
-        spans.append((start, close_idx))
-    return spans
+from .sqltext import (Tok, bracket_depths, detokenize, match_bracket,
+                      match_paren, significant, split_args, split_top_and,
+                      split_top_commas, tokenize)
 
 
 def _arg_text(toks: list[Tok], span: tuple[int, int]) -> str:
@@ -225,7 +150,7 @@ def _trailing_over(toks: list[Tok], close: int) -> tuple[str, int]:
         while op < len(toks) and toks[op].kind in ("ws", "comment"):
             op += 1
         if op < len(toks) and toks[op].text == "(":
-            oc = _find_close(toks, op)
+            oc = match_bracket(toks, op)
             return " OVER " + detokenize(toks[op:oc + 1]), oc
     return "", close
 
@@ -236,7 +161,7 @@ def _parse_order_keys(key_text: str) -> list[tuple[str, bool, bool]] | None:
     failure."""
     try:
         ktoks = tokenize("(" + key_text + ")")
-        spans = _split_args(ktoks, 0, len(ktoks) - 1)
+        spans = split_args(ktoks, 0, len(ktoks) - 1)
     except ValueError:
         return None
     out: list[tuple[str, bool, bool]] = []
@@ -290,7 +215,7 @@ def _trailing_filter_over(toks: list[Tok], close: int) -> tuple[str, int]:
         while op < len(toks) and toks[op].kind in ("ws", "comment"):
             op += 1
         if op < len(toks) and toks[op].text == "(":
-            oc = _find_close(toks, op)
+            oc = match_bracket(toks, op)
             extra += " FILTER " + detokenize(toks[op:oc + 1])
             end = oc
     over, end2 = _trailing_over(toks, end)
@@ -395,16 +320,10 @@ def _decimal_kind(expr: str,
     up = [t.upper() for t in texts]
     m = None
     if up[0] == "CAST" and len(sig) >= 8 and texts[1] == "(":
-        depth = 0
-        close_at_end = False
-        for j in range(1, len(sig)):
-            if texts[j] == "(":
-                depth += 1
-            elif texts[j] == ")":
-                depth -= 1
-                if depth == 0:
-                    close_at_end = j == len(sig) - 1
-                    break
+        try:
+            close_at_end = match_bracket(toks, sig[1]) == sig[-1]
+        except ValueError:
+            close_at_end = False
         if close_at_end:
             m = re.search(
                 r"(?is)\bAS\s+DECIMAL\s*\(\s*(\d+)\s*,\s*(\d+)\s*\)"
@@ -473,13 +392,13 @@ def _span_is_instant_typed(toks: list[Tok], span: tuple[int, int]) -> bool:
                      "__MAKE_TIMESTAMPTZ__", "__DUCK_INSTANT__")
             and len(sig) >= 3 and toks[sig[1]].text == "("):
         try:
-            close = _find_close(toks, sig[1])
+            close = match_bracket(toks, sig[1])
         except ValueError:
             return False
         if close == sig[-1]:
             if texts[0] != "TO_TIMESTAMP":
                 return True
-            return len(_split_args(toks, sig[1], close)) == 1
+            return len(split_args(toks, sig[1], close)) == 1
     return False
 
 
@@ -1181,7 +1100,7 @@ def _fold_blob_literals(sql: str) -> str:
         return "X'" + out.hex().upper() + "'"
 
     toks = tokenize(sql)
-    sig = _sig(toks)
+    sig = significant(toks)
     changed = False
     for k, ti in enumerate(sig):
         t = toks[ti]
@@ -1321,7 +1240,7 @@ def _rewrite_unsigned_casts(sql: str) -> str:
 
     while True:
         toks = tokenize(sql)
-        sig = _sig(toks)
+        sig = significant(toks)
         hit = False
         for p, ti in enumerate(sig):
             t = toks[ti]
@@ -1349,18 +1268,11 @@ def _rewrite_unsigned_casts(sql: str) -> str:
             if (p + 1 < len(sig) and toks[sig[p + 1]].text == ")"
                     and p >= 1 and toks[sig[p - 1]].kind == "ident"
                     and toks[sig[p - 1]].text.upper() == "AS"):
-                depth = 0
-                copen = None
-                for q in range(p - 2, -1, -1):
-                    tq = toks[sig[q]].text
-                    if tq == ")":
-                        depth += 1
-                    elif tq == "(":
-                        if depth == 0:
-                            copen = q
-                            break
-                        depth -= 1
-                if (copen is None or copen == 0
+                try:
+                    copen = sig.index(match_bracket(toks, sig[p + 1]))
+                except ValueError:
+                    continue
+                if (copen == 0
                         or toks[sig[copen - 1]].kind != "ident"
                         or toks[sig[copen - 1]].text.upper()
                         not in ("CAST", "TRY_CAST")):
@@ -1688,7 +1600,7 @@ def _expr_is_date(expr: str, column_kinds: dict[str, str] | None) -> bool:
     while e.startswith("(") and e.endswith(")"):
         toks0 = tokenize(e)
         try:
-            if _find_close(toks0, 0) == len(toks0) - 1:
+            if match_bracket(toks0, 0) == len(toks0) - 1:
                 e = e[1:-1].strip()
             else:
                 break
@@ -1727,7 +1639,7 @@ def _rewrite_date_interval_arith(
                      sql):
         return sql
     toks = tokenize(sql)
-    sig = _sig(toks)
+    sig = significant(toks)
     pos_of = {raw: p for p, raw in enumerate(sig)}
     edits: list[tuple[int, int]] = []  # raw-token [start, end] spans
 
@@ -1758,7 +1670,7 @@ def _rewrite_date_interval_arith(
         if (t.kind == "ident" and p + 1 < len(sig)
                 and toks[sig[p + 1]].text == "("):
             try:
-                close = _find_close(toks, sig[p + 1])
+                close = match_bracket(toks, sig[p + 1])
             except ValueError:
                 return None, None
             name = t.text.lower()
@@ -1789,7 +1701,7 @@ def _rewrite_date_interval_arith(
         form an interval primary, else None."""
         t = toks[sig[p]]
         if t.text == ")":
-            opener = _bracket_open_back(toks, sig[p])
+            opener = match_bracket(toks, sig[p])
             q = pos_of.get(opener)
             if (q is not None and q >= 1
                     and toks[sig[q - 1]].kind == "ident"
@@ -2315,8 +2227,8 @@ def _rewrite_calls(sql: str, column_kinds: dict[str, str] | None = None) -> str:
         while j < len(toks) and toks[j].kind in ("ws", "comment"):
             j += 1
         if j < len(toks) and toks[j].text == "(":
-            close = _find_close(toks, j)
-            return j, close, _split_args(toks, j, close)
+            close = match_bracket(toks, j)
+            return j, close, split_args(toks, j, close)
         return None
 
     while i < len(toks):
@@ -2514,10 +2426,10 @@ def _rewrite_calls(sql: str, column_kinds: dict[str, str] | None = None) -> str:
                         r"string_to_array|string_split|split|"
                         r"regexp_split_to_array)\s*\(", at):
                     tk2 = tokenize(at)
-                    sg2 = _sig(tk2)
+                    sg2 = significant(tk2)
                     try:
                         whole_list = (len(sg2) >= 3
-                                      and _find_close(tk2, sg2[1])
+                                      and match_bracket(tk2, sg2[1])
                                       == sg2[-1])
                     except (ValueError, IndexError):
                         whole_list = False
@@ -2748,7 +2660,7 @@ def _rewrite_calls(sql: str, column_kinds: dict[str, str] | None = None) -> str:
                     and toks[after[0]].text.upper() == "FILTER"
                     and len(after) > 1 and toks[after[1]].text == "("):
                 try:
-                    fclose = _find_close(toks, after[1])
+                    fclose = match_bracket(toks, after[1])
                 except ValueError:
                     fclose = None
                 if fclose is not None:
@@ -2763,7 +2675,7 @@ def _rewrite_calls(sql: str, column_kinds: dict[str, str] | None = None) -> str:
                 nxt = toks[after[1]]
                 if nxt.text == "(":
                     try:
-                        oclose = _find_close(toks, after[1])
+                        oclose = match_bracket(toks, after[1])
                         extra += " OVER " + detokenize(
                             toks[after[1]:oclose + 1])
                         end = oclose
@@ -2804,7 +2716,7 @@ def _rewrite_calls(sql: str, column_kinds: dict[str, str] | None = None) -> str:
                         and len(after) > 1
                         and toks[after[1]].text == "("):
                     try:
-                        fclose = _find_close(toks, after[1])
+                        fclose = match_bracket(toks, after[1])
                     except ValueError:
                         fclose = None
                     if fclose is not None:
@@ -2820,7 +2732,7 @@ def _rewrite_calls(sql: str, column_kinds: dict[str, str] | None = None) -> str:
                     nxt = toks[after[1]]
                     if nxt.text == "(":
                         try:
-                            oclose = _find_close(toks, after[1])
+                            oclose = match_bracket(toks, after[1])
                             extra += " OVER " + detokenize(
                                 toks[after[1]:oclose + 1])
                             end = oclose
@@ -2866,7 +2778,7 @@ def _rewrite_calls(sql: str, column_kinds: dict[str, str] | None = None) -> str:
                     and toks[after[0]].text.upper() == "FILTER"
                     and len(after) > 1 and toks[after[1]].text == "("):
                 try:
-                    fclose = _find_close(toks, after[1])
+                    fclose = match_bracket(toks, after[1])
                 except ValueError:
                     fclose = None
                 if fclose is not None:
@@ -2881,7 +2793,7 @@ def _rewrite_calls(sql: str, column_kinds: dict[str, str] | None = None) -> str:
                 nxt = toks[after[1]]
                 if nxt.text == "(":
                     try:
-                        oclose = _find_close(toks, after[1])
+                        oclose = match_bracket(toks, after[1])
                         extra += " OVER " + detokenize(
                             toks[after[1]:oclose + 1])
                         end = oclose
@@ -4196,7 +4108,7 @@ def _rewrite_calls(sql: str, column_kinds: dict[str, str] | None = None) -> str:
                 # VARCHAR[] overload → element-wise fan-out (review
                 # r9 #4 — the scalar route stringified the list)
                 lt = tokenize(pth)
-                lspans = _split_args(lt, 0, len(lt) - 1)
+                lspans = split_args(lt, 0, len(lt) - 1)
                 elems = [detokenize(lt[a:b]).strip() for a, b in lspans]
                 calls = ", ".join(
                     f"__json_extract_string__({j}, "
@@ -4229,7 +4141,7 @@ def _rewrite_calls(sql: str, column_kinds: dict[str, str] | None = None) -> str:
             # spellings re-match this branch and would wrap forever
             if pth.startswith("[") and pth.endswith("]"):
                 lt = tokenize(pth)
-                lspans = _split_args(lt, 0, len(lt) - 1)
+                lspans = split_args(lt, 0, len(lt) - 1)
                 elems = [detokenize(lt[a:b]).strip() for a, b in lspans]
                 calls = ", ".join(
                     f"{fn}({j}, CAST({p_} AS STRING))" for p_ in elems)
@@ -4354,25 +4266,7 @@ def _rewrite_calls(sql: str, column_kinds: dict[str, str] | None = None) -> str:
             if mob:
                 desc = (mob.group("dir") or "").upper() == "DESC"
                 key = mob.group("k").strip()
-                keys, depth, buf = [], 0, []
-                in_str = False
-                for ch in key:
-                    if in_str:
-                        buf.append(ch)
-                        in_str = ch != "'"
-                        continue
-                    if ch == "'":
-                        in_str = True
-                    elif ch in "([":
-                        depth += 1
-                    elif ch in ")]":
-                        depth -= 1
-                    elif ch == "," and depth == 0:
-                        keys.append("".join(buf))
-                        buf = []
-                        continue
-                    buf.append(ch)
-                keys.append("".join(buf))
+                keys = split_top_commas(key)
                 if len(keys) > 1 and (desc or re.search(
                         r"\b(ASC|DESC)\b", key, re.IGNORECASE)):
                     # per-key directions can't map onto one min_by/max_by
@@ -5921,7 +5815,7 @@ def _rewrite_calls(sql: str, column_kinds: dict[str, str] | None = None) -> str:
             lst = _arg_text(toks, spans[0])
             e = _arg_text(toks, spans[1])
             lt = tokenize(lst)
-            lspans = _split_args(lt, 0, len(lt) - 1)
+            lspans = split_args(lt, 0, len(lt) - 1)
             fields = [detokenize(lt[a:b]).strip() for a, b in lspans]
             items = []
             for f_ in fields:
@@ -6517,7 +6411,7 @@ def _rewrite_calls(sql: str, column_kinds: dict[str, str] | None = None) -> str:
                         and toks[after[0]].text.upper() == "FILTER"
                         and len(after) > 1 and toks[after[1]].text == "("):
                     try:
-                        fclose = _find_close(toks, after[1])
+                        fclose = match_bracket(toks, after[1])
                     except ValueError:
                         fclose = None
                     if fclose is not None:
@@ -6695,7 +6589,7 @@ def _rewrite_calls(sql: str, column_kinds: dict[str, str] | None = None) -> str:
                         nxt = toks[after_o[1]]
                         if nxt.text == "(":
                             try:
-                                oclose = _find_close(toks, after_o[1])
+                                oclose = match_bracket(toks, after_o[1])
                                 over = " OVER " + detokenize(
                                     toks[after_o[1]:oclose + 1])
                                 oend = oclose
@@ -6729,33 +6623,6 @@ def _rewrite_calls(sql: str, column_kinds: dict[str, str] | None = None) -> str:
     return _rewrite_calls(result, column_kinds) if changed else result
 
 
-def _bracket_close(toks: list[Tok], open_idx: int) -> int:
-    """Index of the closer matching the '(' or '[' at open_idx (tracks
-    both bracket kinds so mixed nesting stays balanced)."""
-    depth = 0
-    for i in range(open_idx, len(toks)):
-        if toks[i].text in ("(", "["):
-            depth += 1
-        elif toks[i].text in (")", "]"):
-            depth -= 1
-            if depth == 0:
-                return i
-    raise ValueError("unbalanced brackets")
-
-
-def _bracket_open_back(toks: list[Tok], close_idx: int) -> int:
-    """Index of the opener matching the ')' or ']' at close_idx."""
-    depth = 0
-    for i in range(close_idx, -1, -1):
-        if toks[i].text in (")", "]"):
-            depth += 1
-        elif toks[i].text in ("(", "["):
-            depth -= 1
-            if depth == 0:
-                return i
-    raise ValueError("unbalanced brackets")
-
-
 # identifiers after which a +/- sign must be UNARY (SELECT -2 ^ 2, the
 # sign belongs to the literal and binds tighter than the power operator)
 _UNARY_CONTEXT_KEYWORDS = frozenset({
@@ -6778,7 +6645,7 @@ def _primary_start_back(toks: list[Tok], sig: list[int],
     while True:
         t = toks[sig[k]]
         if t.text in (")", "]"):
-            opener = _bracket_open_back(toks, sig[k])
+            opener = match_bracket(toks, sig[k])
             k = pos_of[opener]
             if toks[sig[k]].text == "(" and k >= 1 \
                     and toks[sig[k - 1]].kind == "ident" \
@@ -6862,7 +6729,7 @@ def _strip_trailing_commas(sql: str) -> str:
     too and must stay loud. Spark rejects all of these
     (TRAILING_COMMA_IN_SELECT / parse errors)."""
     toks = tokenize(sql)
-    sig = _sig(toks)
+    sig = significant(toks)
     changed = False
 
     def _list_context(p: int) -> str | None:
@@ -6900,20 +6767,11 @@ def _strip_trailing_commas(sql: str) -> str:
                 _list_context(p) in ("SELECT", "GROUP")
         elif nxt.text == ")":
             # only IN-lists and VALUES tuples accept ", )" in DuckDB —
-            # find this group's opener (the scan starts INSIDE the
-            # group, so the enclosing '(' is reached at depth -1) and
-            # inspect what precedes it
-            depth = 0
-            opener = None
-            for q in range(p, -1, -1):
-                txt = toks[sig[q]].text
-                if txt == ")":
-                    depth += 1
-                elif txt == "(":
-                    depth -= 1
-                    if depth == -1:
-                        opener = q
-                        break
+            # find this group's opener and inspect what precedes it
+            try:
+                opener = sig.index(match_bracket(toks, sig[p + 1]))
+            except ValueError:
+                opener = None
             if opener is not None:
                 inside = (toks[sig[opener + 1]]
                           if opener + 1 < len(sig) else None)
@@ -7009,7 +6867,7 @@ def _rewrite_quantified_comparisons(sql: str) -> str:
             raise ValueError("quantified-comparison rewrite did not "
                              "converge")
         toks = tokenize(sql)
-        sig = _sig(toks)
+        sig = significant(toks)
         pos_of = {raw: p for p, raw in enumerate(sig)}
         site = None
         for p, ti in enumerate(sig):
@@ -7036,7 +6894,7 @@ def _rewrite_quantified_comparisons(sql: str) -> str:
                 "it: " + sql[:120])
 
         open_raw = sig[p + 1]
-        close_raw = _bracket_close(toks, open_raw)
+        close_raw = match_bracket(toks, open_raw)
         inner_sig = [k for k in range(open_raw + 1, close_raw)
                      if toks[k].kind not in ("ws", "comment")]
         if not inner_sig:
@@ -7145,7 +7003,7 @@ def _rewrite_value_position_in_subquery(sql: str) -> str:
         if guard > 100:
             return sql
         toks = tokenize(sql)
-        sig = _sig(toks)
+        sig = significant(toks)
         pos_of = {raw: p for p, raw in enumerate(sig)}
         done = True
         for p, ti in enumerate(sig):
@@ -7156,7 +7014,7 @@ def _rewrite_value_position_in_subquery(sql: str) -> str:
                 continue
             open_raw = sig[p + 1]
             try:
-                close_raw = _find_close(toks, open_raw)
+                close_raw = match_bracket(toks, open_raw)
             except ValueError:
                 continue
             inner_sig = [q for q in range(open_raw + 1, close_raw)
@@ -7250,7 +7108,7 @@ def _numeric_class(expr: str, column_kinds: dict[str, str] | None,
     while e.startswith("(") and e.endswith(")"):
         toks0 = tokenize(e)
         try:
-            if _find_close(toks0, 0) == len(toks0) - 1:
+            if match_bracket(toks0, 0) == len(toks0) - 1:
                 e = e[1:-1].strip()
             else:
                 break
@@ -7259,7 +7117,7 @@ def _numeric_class(expr: str, column_kinds: dict[str, str] | None,
     if not e:
         return None
     toks = tokenize(e)
-    sig = _sig(toks)
+    sig = significant(toks)
     if not sig:
         return None
     # split at top-level binary numeric operators
@@ -7351,7 +7209,7 @@ def _numeric_class(expr: str, column_kinds: dict[str, str] | None,
     if (first.kind == "ident" and len(sig) >= 3
             and toks[sig[1]].text == "("):
         try:
-            close = _find_close(toks, sig[1])
+            close = match_bracket(toks, sig[1])
         except ValueError:
             return None
         if close == sig[-1]:
@@ -7371,7 +7229,7 @@ def _numeric_class(expr: str, column_kinds: dict[str, str] | None,
             if fn in _FRAC_RESULT_FNS:
                 return "frac"
             if fn in _ARG_CLASS_FNS:
-                arg_spans = _split_args(toks, sig[1], close)
+                arg_spans = split_args(toks, sig[1], close)
                 cs = [_numeric_class(_arg_text(toks, sp), column_kinds,
                                      depth + 1) for sp in arg_spans]
                 if any(c == "frac" for c in cs):
@@ -7411,14 +7269,14 @@ def _expr_is_decimal(expr: str, column_kinds: dict[str, str] | None,
     while e.startswith("(") and e.endswith(")"):
         toks0 = tokenize(e)
         try:
-            if _find_close(toks0, 0) == len(toks0) - 1:
+            if match_bracket(toks0, 0) == len(toks0) - 1:
                 e = e[1:-1].strip()
             else:
                 break
         except ValueError:
             return False
     toks = tokenize(e)
-    sig = _sig(toks)
+    sig = significant(toks)
     if not sig:
         return False
     # top-level arithmetic chain: split like _numeric_class does
@@ -7480,11 +7338,11 @@ def _expr_is_decimal(expr: str, column_kinds: dict[str, str] | None,
             and toks[sig[1]].text == "("
             and first.text.lower() in _DEC_PRESERVING_FNS):
         try:
-            close = _find_close(toks, sig[1])
+            close = match_bracket(toks, sig[1])
         except ValueError:
             return False
         if close == sig[-1]:
-            arg_spans = _split_args(toks, sig[1], close)
+            arg_spans = split_args(toks, sig[1], close)
             any_dec = False
             for sp in arg_spans:
                 tx = _arg_text(toks, sp)
@@ -7530,14 +7388,14 @@ def _expr_is_double(expr: str, column_kinds: dict[str, str] | None,
     while e.startswith("(") and e.endswith(")"):
         toks0 = tokenize(e)
         try:
-            if _find_close(toks0, 0) == len(toks0) - 1:
+            if match_bracket(toks0, 0) == len(toks0) - 1:
                 e = e[1:-1].strip()
             else:
                 break
         except ValueError:
             return False
     toks = tokenize(e)
-    sig = _sig(toks)
+    sig = significant(toks)
     if not sig:
         return False
     # whole-expression CASE: DOUBLE iff every THEN/ELSE branch proves
@@ -7578,7 +7436,7 @@ def _expr_is_double(expr: str, column_kinds: dict[str, str] | None,
     if (toks[sig[0]].kind == "ident" and len(sig) >= 3
             and toks[sig[1]].text == "("):
         try:
-            wclose = _find_close(toks, sig[1])
+            wclose = match_bracket(toks, sig[1])
         except ValueError:
             return False
         if wclose != sig[-1]:
@@ -7587,7 +7445,7 @@ def _expr_is_double(expr: str, column_kinds: dict[str, str] | None,
                 fn = toks[sig[0]].text.lower()
                 if fn in _DOUBLE_RESULT_FNS:
                     return True
-                wargs = _split_args(toks, sig[1], wclose)
+                wargs = split_args(toks, sig[1], wclose)
                 if fn in ("sum", "min", "max", "first", "last",
                           "any_value", "abs") and wargs:
                     a0 = re.sub(r"(?is)^\s*(?:DISTINCT|ALL)\b", "",
@@ -7654,7 +7512,7 @@ def _expr_is_double(expr: str, column_kinds: dict[str, str] | None,
     if (first.kind == "ident" and len(sig) >= 3
             and toks[sig[1]].text == "("):
         try:
-            close = _find_close(toks, sig[1])
+            close = match_bracket(toks, sig[1])
         except ValueError:
             return False
         fn = first.text.lower()
@@ -7671,7 +7529,7 @@ def _expr_is_double(expr: str, column_kinds: dict[str, str] | None,
             # Spark-style was a silent divergence found while
             # declaring q157, r11); coalesce/least/greatest promote —
             # ANY double operand wins.
-            arg_spans = _split_args(toks, sig[1], close)
+            arg_spans = split_args(toks, sig[1], close)
             if fn in ("sum", "min", "max", "first", "last",
                       "any_value", "mode", "abs") and arg_spans:
                 a0 = re.sub(r"(?is)^\s*(?:DISTINCT|ALL)\b", "",
@@ -7763,23 +7621,10 @@ def _scan_right_primary(toks, sig, r: int) -> int | None:
     if r >= len(sig):
         return None
     t = toks[sig[r]]
-    if t.text == "(":
+    if t.text in ("(", "["):
         try:
-            rend_raw = _find_close(toks, sig[r])
+            rend_raw = match_bracket(toks, sig[r])
         except ValueError:
-            return None
-    elif t.text == "[":
-        dd = 0
-        rend_raw = None
-        for k in range(sig[r], len(toks)):
-            if toks[k].text == "[":
-                dd += 1
-            elif toks[k].text == "]":
-                dd -= 1
-                if dd == 0:
-                    rend_raw = k
-                    break
-        if rend_raw is None:
             return None
     elif t.kind in ("num", "str", "bqid"):
         rend_raw = sig[r]
@@ -7817,7 +7662,7 @@ def _scan_right_primary(toks, sig, r: int) -> int | None:
             if (nxt < len(sig) and toks[sig[nxt]].text == "("
                     and sig[nxt] == rend_raw + 1):
                 try:
-                    rend_raw = _find_close(toks, sig[nxt])
+                    rend_raw = match_bracket(toks, sig[nxt])
                 except ValueError:
                     return None
     else:
@@ -7841,31 +7686,22 @@ def _scan_right_primary(toks, sig, r: int) -> int | None:
             rend_raw = sig[p2]
             if p2 + 1 < len(sig) and toks[sig[p2 + 1]].text == "(":
                 try:
-                    rend_raw = _find_close(toks, sig[p2 + 1])
+                    rend_raw = match_bracket(toks, sig[p2 + 1])
                 except ValueError:
                     return None
                 while p2 + 1 < len(sig) and sig[p2 + 1] <= rend_raw:
                     p2 += 1
         elif nt.text == "[":
-            dd = 0
-            done = None
-            for k in range(sig[p2 + 1], len(toks)):
-                if toks[k].text == "[":
-                    dd += 1
-                elif toks[k].text == "]":
-                    dd -= 1
-                    if dd == 0:
-                        done = k
-                        break
-            if done is None:
+            try:
+                rend_raw = match_bracket(toks, sig[p2 + 1])
+            except ValueError:
                 return None
-            rend_raw = done
-            while p2 + 1 < len(sig) and sig[p2 + 1] <= done:
+            while p2 + 1 < len(sig) and sig[p2 + 1] <= rend_raw:
                 p2 += 1
         elif (nt.text == "(" and toks[sig[p2]].kind == "ident"
                 and sig[p2 + 1] == sig[p2] + 1):
             try:
-                rend_raw = _find_close(toks, sig[p2 + 1])
+                rend_raw = match_bracket(toks, sig[p2 + 1])
             except ValueError:
                 return None
             while p2 + 1 < len(sig) and sig[p2 + 1] <= rend_raw:
@@ -7887,7 +7723,7 @@ def _rewrite_floordiv_operator(sql: str) -> str:
         return sql
     for _ in range(200):  # fixpoint backstop
         toks = tokenize(sql)
-        sig = _sig(toks)
+        sig = significant(toks)
         hit = None
         for p in range(len(sig) - 1):
             i1, i2 = sig[p], sig[p + 1]
@@ -7939,7 +7775,7 @@ def _rewrite_collate(sql: str) -> str:
         changed = False
         guard += 1
         toks = tokenize(sql)
-        sig = _sig(toks)
+        sig = significant(toks)
         for p, raw in enumerate(sig):
             t = toks[raw]
             if not (t.kind == "ident" and t.text.upper() == "COLLATE"
@@ -7967,16 +7803,10 @@ def _rewrite_collate(sql: str) -> str:
             lp = p - 1
             tl = toks[sig[lp]]
             if tl.text in (")", "]"):
-                d = 0
-                while lp >= 0:
-                    tx = toks[sig[lp]].text
-                    if tx in (")", "]"):
-                        d += 1
-                    elif tx in ("(", "["):
-                        d -= 1
-                        if d == 0:
-                            break
-                    lp -= 1
+                try:
+                    lp = sig.index(match_bracket(toks, sig[lp]))
+                except ValueError:
+                    continue
                 if (lp >= 1 and toks[sig[lp - 1]].kind == "ident"
                         and toks[sig[lp - 1]].text.upper()
                         not in _CLAUSE_KEYWORDS):
@@ -8077,8 +7907,8 @@ def _rewrite_collate(sql: str) -> str:
             if (nxt is not None and nxt.kind == "ident"
                     and nxt.text.upper() == "IN"
                     and q + 2 < len(sig) and toks[sig[q + 2]].text == "("):
-                close2 = _find_close(toks, sig[q + 2])
-                espans = _split_args(toks, sig[q + 2], close2)
+                close2 = match_bracket(toks, sig[q + 2])
+                espans = split_args(toks, sig[q + 2], close2)
                 elems = [_norm(_arg_text(toks, sp)) for sp in espans]
                 repl = f"{_norm(lhs)} IN ({', '.join(elems)})"
                 sql = (detokenize(toks[:sig[lp]]) + repl
@@ -8144,7 +7974,7 @@ def _rewrite_null_safe_division(
         return sql
     for _ in range(500):
         toks = tokenize(sql)
-        sig = _sig(toks)
+        sig = significant(toks)
         hit = None
         for p, raw in enumerate(sig):
             t = toks[raw]
@@ -8212,23 +8042,10 @@ def _rewrite_null_safe_division(
         if r >= len(sig):
             return sql
         t = toks[sig[r]]
-        if t.text == "(":
+        if t.text in ("(", "["):
             try:
-                rend_raw = _find_close(toks, sig[r])
+                rend_raw = match_bracket(toks, sig[r])
             except ValueError:
-                return sql
-        elif t.text == "[":
-            dd = 0
-            rend_raw = None
-            for k in range(sig[r], len(toks)):
-                if toks[k].text == "[":
-                    dd += 1
-                elif toks[k].text == "]":
-                    dd -= 1
-                    if dd == 0:
-                        rend_raw = k
-                        break
-            if rend_raw is None:
                 return sql
         elif t.kind in ("num", "str", "bqid"):
             rend_raw = sig[r]
@@ -8266,7 +8083,7 @@ def _rewrite_null_safe_division(
                 if (nxt < len(sig) and toks[sig[nxt]].text == "("
                         and sig[nxt] == rend_raw + 1):
                     try:
-                        rend_raw = _find_close(toks, sig[nxt])
+                        rend_raw = match_bracket(toks, sig[nxt])
                     except ValueError:
                         return sql
         else:
@@ -8292,7 +8109,7 @@ def _rewrite_null_safe_division(
                 # clause inside the operand — sum(count(*)) OVER ()
                 # used to split, orphaning the OVER (r12)
                 try:
-                    rend_raw = _find_close(toks, sig[p2 + 2])
+                    rend_raw = match_bracket(toks, sig[p2 + 2])
                 except ValueError:
                     return sql
                 while p2 + 1 < len(sig) and sig[p2 + 1] <= rend_raw:
@@ -8315,26 +8132,17 @@ def _rewrite_null_safe_division(
                 rend_raw = sig[p2]
                 if p2 + 1 < len(sig) and toks[sig[p2 + 1]].text == "(":
                     try:
-                        rend_raw = _find_close(toks, sig[p2 + 1])
+                        rend_raw = match_bracket(toks, sig[p2 + 1])
                     except ValueError:
                         return sql
                     while p2 + 1 < len(sig) and sig[p2 + 1] <= rend_raw:
                         p2 += 1
             elif nt.text == "[":
-                dd = 0
-                done = None
-                for k in range(sig[p2 + 1], len(toks)):
-                    if toks[k].text == "[":
-                        dd += 1
-                    elif toks[k].text == "]":
-                        dd -= 1
-                        if dd == 0:
-                            done = k
-                            break
-                if done is None:
+                try:
+                    rend_raw = match_bracket(toks, sig[p2 + 1])
+                except ValueError:
                     return sql
-                rend_raw = done
-                while p2 + 1 < len(sig) and sig[p2 + 1] <= done:
+                while p2 + 1 < len(sig) and sig[p2 + 1] <= rend_raw:
                     p2 += 1
             else:
                 break
@@ -8389,7 +8197,7 @@ def _rewrite_pg_operator_spellings(
         changed = False
         guard += 1
         toks = tokenize(sql)
-        sig = _sig(toks)
+        sig = significant(toks)
 
         def _arith_stop(t, prev):
             if t.kind in ("arrow", "arrow2"):
@@ -8536,7 +8344,7 @@ def _rewrite_power_operator(sql: str) -> str:
         if guard > 500:
             raise ValueError("power-operator rewrite did not converge")
         toks = tokenize(sql)
-        sig = _sig(toks)
+        sig = significant(toks)
         pos_of = {raw: p for p, raw in enumerate(sig)}
         site = None  # (sig pos of op, raw op start, raw op end)
         for p, ti in enumerate(sig):
@@ -8596,7 +8404,7 @@ def _rewrite_power_operator(sql: str) -> str:
             _fail()
         t = toks[sig[j]]
         if t.text == "(":
-            j = pos_of[_bracket_close(toks, sig[j])]
+            j = pos_of[match_bracket(toks, sig[j])]
         elif t.kind in ("num", "str"):
             pass
         elif t.kind == "ident" and t.text.upper() == "CASE":
@@ -8624,13 +8432,13 @@ def _rewrite_power_operator(sql: str) -> str:
                     and toks[sig[j + 2]].kind == "ident":
                 j += 2
             if j + 1 < len(sig) and toks[sig[j + 1]].text == "(":
-                j = pos_of[_bracket_close(toks, sig[j + 1])]
+                j = pos_of[match_bracket(toks, sig[j + 1])]
         else:
             _fail()
         while True:
             # trailing subscripts and '::' casts extend the primary
             if j + 1 < len(sig) and toks[sig[j + 1]].text == "[":
-                j = pos_of[_bracket_close(toks, sig[j + 1])]
+                j = pos_of[match_bracket(toks, sig[j + 1])]
                 continue
             if j + 3 < len(sig) and toks[sig[j + 1]].text == ":" \
                     and toks[sig[j + 2]].text == ":" \
@@ -8638,7 +8446,7 @@ def _rewrite_power_operator(sql: str) -> str:
                     and toks[sig[j + 3]].kind == "ident":
                 j += 3
                 if j + 1 < len(sig) and toks[sig[j + 1]].text == "(":
-                    j = pos_of[_bracket_close(toks, sig[j + 1])]
+                    j = pos_of[match_bracket(toks, sig[j + 1])]
                 continue
             break
         rhs_end_raw = sig[j]
@@ -8701,7 +8509,7 @@ def _rewrite_cte_and_group_forms(sql: str) -> str:
       cast (WHEN <expr that is NULL> is already typed and unaffected).
     """
     toks = tokenize(sql)
-    sig = _sig(toks)
+    sig = significant(toks)
 
     def up(pos: int) -> str:
         t = toks[sig[pos]]
@@ -8865,7 +8673,7 @@ def _rewrite_json_arrow(sql: str) -> str:
     ``::TYPE`` postfix cast (the '::JSON' spelling — the keyword pass
     later renames the type)."""
     toks = tokenize(sql)
-    sig = _sig(toks)
+    sig = significant(toks)
     pos = 0
     while pos < len(sig):
         t = toks[sig[pos]]
@@ -8889,17 +8697,9 @@ def _rewrite_json_arrow(sql: str) -> str:
                 pos += 1
                 continue
         elif base.text == ")":
-            depth = 0
-            p_ = lhs_start
-            while p_ >= 0:
-                if toks[sig[p_]].text == ")":
-                    depth += 1
-                elif toks[sig[p_]].text == "(":
-                    depth -= 1
-                    if depth == 0:
-                        break
-                p_ -= 1
-            if p_ < 0:
+            try:
+                p_ = sig.index(match_bracket(toks, sig[lhs_start]))
+            except ValueError:
                 pos += 1
                 continue
             lhs_start = p_
@@ -8954,7 +8754,7 @@ def _rewrite_json_arrow(sql: str) -> str:
                 # 'c' — never a json operand (review r9 #3); a CALL
                 # result like coalesce(a, b) -> 'k' stays json
                 try:
-                    grp_close = _find_close(toks, sig[lhs_start])
+                    grp_close = match_bracket(toks, sig[lhs_start])
                 except ValueError:
                     grp_close = None
                 if grp_close is not None:
@@ -8967,22 +8767,13 @@ def _rewrite_json_arrow(sql: str) -> str:
                         continue
             if base.kind == "ident" and lhs_start >= 1 and \
                     toks[sig[lhs_start - 1]].text in ("(", ","):
-                depth2 = 0
-                p3 = lhs_start - 1
-                owner = None
-                while p3 >= 0:
-                    tx = toks[sig[p3]].text
-                    if tx == ")":
-                        depth2 += 1
-                    elif tx == "(":
-                        if depth2 == 0:
-                            if (p3 >= 1
-                                    and toks[sig[p3 - 1]].kind == "ident"):
-                                owner = toks[sig[p3 - 1]].text.lower()
-                            break
-                        depth2 -= 1
-                    p3 -= 1
-                if owner in _LAMBDA_HOF_NAMES:
+                try:
+                    p3 = sig.index(match_bracket(toks, sig[lhs_start]))
+                except ValueError:
+                    p3 = 0  # top level: no owning call
+                if (p3 >= 1 and toks[sig[p3 - 1]].kind == "ident"
+                        and toks[sig[p3 - 1]].text.lower()
+                        in _LAMBDA_HOF_NAMES):
                     pos += 1
                     continue
             end_sig = j - 1
@@ -8990,14 +8781,14 @@ def _rewrite_json_arrow(sql: str) -> str:
             repl = f"__json_extract__({lhs_text}, '${path}')"
             toks = (toks[:sig[lhs_start]] + [Tok("other", repl)]
                     + toks[sig[end_sig] + 1:])
-            sig = _sig(toks)
+            sig = significant(toks)
             pos = 0
             continue
         lhs_text = detokenize(toks[sig[lhs_start]:sig[pos]]).strip()
         repl = f"get_json_object({lhs_text}, '${path}')"
         toks = (toks[:sig[lhs_start]] + [Tok("other", repl)]
                 + toks[sig[end_sig] + 1:])
-        sig = _sig(toks)
+        sig = significant(toks)
         pos = 0  # rescan: chains can nest inside other expressions
     return detokenize(toks)
 
@@ -9048,7 +8839,7 @@ def _rewrite_slices(sql: str) -> str:
 def _rewrite_one_slice(sql: str) -> str | None:
     """Rewrite the LEFTMOST slice subscript; None when none remain."""
     toks = tokenize(sql)
-    sig = _sig(toks)
+    sig = significant(toks)
     for pos in range(len(sig)):
         a = sig[pos]
         if toks[a].text != "[" or pos == 0:
@@ -9200,7 +8991,7 @@ def _rewrite_star_exclude(sql: str) -> str:
     """DuckDB ``* EXCLUDE (cols)`` / ``* EXCLUDE col`` → Spark
     ``* EXCEPT (cols)``."""
     toks = tokenize(sql)
-    sig = _sig(toks)
+    sig = significant(toks)
     for pos in range(len(sig) - 1, 0, -1):
         t = toks[sig[pos]]
         if t.kind != "ident" or t.text.upper() != "EXCLUDE":
@@ -9226,40 +9017,6 @@ _LITERAL_CONTEXT_KEYWORDS = {
     "BY", "AND", "OR", "NOT", "IN", "AS", "RETURN", "VALUES", "SET",
     "DISTINCT", "ALL", "UNION", "EXCEPT", "INTERSECT", "BETWEEN",
 }
-
-
-def _split_brace_commas(text: str) -> list[str]:
-    """Split on commas outside (), [], {} and string literals."""
-    parts, buf = [], []
-    depth = 0
-    in_str = False
-    i, n = 0, len(text)
-    while i < n:
-        ch = text[i]
-        if in_str:
-            if ch == "'":
-                if i + 1 < n and text[i + 1] == "'":
-                    buf.append("''")
-                    i += 2
-                    continue
-                in_str = False
-            buf.append(ch)
-            i += 1
-            continue
-        if ch == "'":
-            in_str = True
-        elif ch in "([{":
-            depth += 1
-        elif ch in ")]}":
-            depth -= 1
-        if ch == "," and depth == 0:
-            parts.append("".join(buf))
-            buf = []
-        else:
-            buf.append(ch)
-        i += 1
-    parts.append("".join(buf))
-    return parts
 
 
 _STRUCT_KV_RE = re.compile(
@@ -9414,7 +9171,7 @@ def _rewrite_match_operators(sql: str) -> str:
     NOT prefixes ride along untouched (Spark supports NOT RLIKE).
     Non-literal patterns are left verbatim and fail loudly."""
     toks = tokenize(sql)
-    sig = _sig(toks)
+    sig = significant(toks)
     for pos in range(len(sig) - 1, -1, -1):
         i = sig[pos]
         t = toks[i]
@@ -9445,7 +9202,7 @@ def _rewrite_match_operators(sql: str) -> str:
                         + toks[sig[pos + 1] + 1:])
         else:
             continue
-        sig = _sig(toks)
+        sig = significant(toks)
     return detokenize(toks)
 
 
@@ -9461,17 +9218,9 @@ def _rewrite_struct_literals(sql: str) -> str:
         for i in range(len(toks) - 1, -1, -1):
             if toks[i].text != "{":
                 continue
-            depth = 0
-            close = None
-            for j in range(i, len(toks)):
-                if toks[j].text == "{":
-                    depth += 1
-                elif toks[j].text == "}":
-                    depth -= 1
-                    if depth == 0:
-                        close = j
-                        break
-            if close is None:
+            try:
+                close = match_bracket(toks, i)
+            except ValueError:
                 continue
             inner = detokenize(toks[i + 1:close])
             p_map = i - 1
@@ -9480,7 +9229,7 @@ def _rewrite_struct_literals(sql: str) -> str:
             is_map = (p_map >= 0 and toks[p_map].kind == "ident"
                       and toks[p_map].text.upper() == "MAP")
             kvs = []
-            for part in _split_brace_commas(inner):
+            for part in split_top_commas(inner):
                 m = _STRUCT_KV_RE.match(part)
                 if m:
                     key = m.group("key")
@@ -9586,7 +9335,7 @@ def _duck_type_to_spark_ddl(t: str) -> str:
     m = re.fullmatch(r"(?is)STRUCT\s*\((.*)\)", t)
     if m:
         fields = []
-        for part in _split_brace_commas(m.group(1)):
+        for part in split_top_commas(m.group(1)):
             part = part.strip()
             mf = re.match(r'(?s)^(?:"([^"]+)"|([A-Za-z_]\w*))\s+(.+)$',
                           part)
@@ -9599,7 +9348,7 @@ def _duck_type_to_spark_ddl(t: str) -> str:
         return "STRUCT<" + ", ".join(fields) + ">"
     m = re.fullmatch(r"(?is)MAP\s*\((.*)\)", t)
     if m:
-        kv = _split_brace_commas(m.group(1))
+        kv = split_top_commas(m.group(1))
         if len(kv) != 2:
             raise ValueError(f"MAP type: expected two parameters: {t!r}")
         return (f"MAP<{_duck_type_to_spark_ddl(kv[0])}, "
@@ -9626,7 +9375,7 @@ def _rewrite_nested_type_spellings(sql: str) -> str:
         return sql
     for _ in range(40):
         toks = tokenize(sql)
-        sig = _sig(toks)
+        sig = significant(toks)
         pos_of = {raw: p for p, raw in enumerate(sig)}
         done = True
         for p2, ti in enumerate(sig):
@@ -9637,27 +9386,17 @@ def _rewrite_nested_type_spellings(sql: str) -> str:
                     and toks[sig[p2 - 1]].kind == "ident"
                     and toks[sig[p2 - 1]].text.upper() == "AS"
                     and toks[sig[p2 + 1]].text == "("):
-                # confirm we are inside a CAST(… AS <type>) — scan back
-                d2 = 0
-                incast = False
-                for q2 in range(p2 - 2, -1, -1):
-                    tq = toks[sig[q2]]
-                    if tq.text == ")":
-                        d2 += 1
-                    elif tq.text == "(":
-                        if d2 == 0:
-                            prevf = (toks[sig[q2 - 1]]
-                                     if q2 >= 1 else None)
-                            incast = (prevf is not None
-                                      and prevf.kind == "ident"
-                                      and prevf.text.upper()
-                                      in ("CAST", "TRY_CAST"))
-                            break
-                        d2 -= 1
-                if not incast:
+                # confirm we are inside a CAST(… AS <type>)
+                try:
+                    q2 = sig.index(match_bracket(toks, sig[p2 - 1]))
+                except ValueError:
+                    continue
+                prevf = toks[sig[q2 - 1]] if q2 >= 1 else None
+                if not (prevf is not None and prevf.kind == "ident"
+                        and prevf.text.upper() in ("CAST", "TRY_CAST")):
                     continue
                 try:
-                    tclose = _find_close(toks, sig[p2 + 1])
+                    tclose = match_bracket(toks, sig[p2 + 1])
                 except ValueError:
                     continue
                 # absorb trailing [] array suffixes
@@ -9687,7 +9426,7 @@ def _rewrite_nested_type_spellings(sql: str) -> str:
                     and p2 + 3 < len(sig)
                     and toks[sig[p2 + 3]].text == "(" and p2 >= 1):
                 try:
-                    tclose = _find_close(toks, sig[p2 + 3])
+                    tclose = match_bracket(toks, sig[p2 + 3])
                 except ValueError:
                     continue
                 def _skip():
@@ -9721,7 +9460,7 @@ def _check_bc_temporal_literals(sql: str) -> None:
     if "(BC)" not in sql.upper() and "'0000-" not in sql:
         return
     toks = tokenize(sql)
-    sig = _sig(toks)
+    sig = significant(toks)
     for p2, ti in enumerate(sig):
         t = toks[ti]
         if t.kind != "str":
@@ -9760,7 +9499,7 @@ def _rewrite_timestamp_precision(sql: str) -> str:
         return sql
     for _ in range(40):
         toks = tokenize(sql)
-        sig = _sig(toks)
+        sig = significant(toks)
         done = True
         for p2, ti in enumerate(sig):
             t = toks[ti]
@@ -9780,7 +9519,7 @@ def _rewrite_timestamp_precision(sql: str) -> str:
                     and p2 + 1 < len(sig)
                     and toks[sig[p2 + 1]].text == "("):
                 try:
-                    close = _find_close(toks, sig[p2 + 1])
+                    close = match_bracket(toks, sig[p2 + 1])
                 except ValueError:
                     continue
                 inner = [q for q in range(p2 + 2, len(sig))
@@ -9858,7 +9597,7 @@ def _rewrite_postfix_numeric_casts(sql: str) -> str:
     targets = _INT_CAST_TARGETS | {"DECIMAL", "NUMERIC"}
     for _ in range(80):
         toks = tokenize(sql)
-        sig = _sig(toks)
+        sig = significant(toks)
         pos_of = {raw: p for p, raw in enumerate(sig)}
         done = True
         for p, ti in enumerate(sig):
@@ -9877,7 +9616,7 @@ def _rewrite_postfix_numeric_casts(sql: str) -> str:
                 if up2 not in ("DECIMAL", "NUMERIC"):
                     continue  # INT(…) is not a type parameter list
                 try:
-                    tend_raw = _find_close(toks, sig[tend + 1])
+                    tend_raw = match_bracket(toks, sig[tend + 1])
                 except ValueError:
                     continue
             elif (tend + 1 < len(sig)
@@ -9935,7 +9674,7 @@ def _rewrite_integer_cast_rounding(
     wrap forever; nesting is handled by recursing into the inner
     expression text instead."""
     toks = tokenize(sql)
-    sig = _sig(toks)
+    sig = significant(toks)
     pos_of = {raw: p for p, raw in enumerate(sig)}
     out: list[str] = []
     i = 0
@@ -9947,7 +9686,7 @@ def _rewrite_integer_cast_rounding(
             if p + 1 < len(sig) and toks[sig[p + 1]].text == "(":
                 open_i = sig[p + 1]
                 try:
-                    close_i = _find_close(toks, open_i)
+                    close_i = match_bracket(toks, open_i)
                 except ValueError:
                     close_i = None
                 if close_i is not None:
@@ -9955,17 +9694,12 @@ def _rewrite_integer_cast_rounding(
                     if len(inner_sig) >= 3:
                         ty = toks[inner_sig[-1]]
                         as_tok = toks[inner_sig[-2]]
-                        depth = 0
-                        for k in range(open_i, inner_sig[-2]):
-                            if toks[k].text in ("(", "["):
-                                depth += 1
-                            elif toks[k].text in (")", "]"):
-                                depth -= 1
                         if (ty.kind == "ident"
                                 and ty.text.upper() in _INT_CAST_TARGETS
                                 and as_tok.kind == "ident"
                                 and as_tok.text.upper() == "AS"
-                                and depth == 1):
+                                and match_bracket(toks, inner_sig[-2])
+                                == open_i):
                             fn = t.text.upper()
                             expr = _rewrite_integer_cast_rounding(
                                 detokenize(
@@ -10041,7 +9775,7 @@ def _rewrite_decimal_cast_truncation(
     first (only when the primary is a literal/bare column whose scale
     proves a downscale — everything else keeps Spark's native ``::``)."""
     toks = tokenize(sql)
-    sig0 = _sig(toks)
+    sig0 = significant(toks)
     # pre-pass: literal/column :: DECIMAL(p,s) downscale → CAST form
     # (pattern: prim : : DECIMAL ( p , s ) — 9 sig tokens)
     changed = False
@@ -10068,7 +9802,7 @@ def _rewrite_decimal_cast_truncation(
         changed = True
     if changed:
         toks = tokenize(detokenize(toks))
-    sig = _sig(toks)
+    sig = significant(toks)
     pos_of = {raw: p for p, raw in enumerate(sig)}
     out: list[str] = []
     i = 0
@@ -10080,7 +9814,7 @@ def _rewrite_decimal_cast_truncation(
             if p + 1 < len(sig) and toks[sig[p + 1]].text == "(":
                 open_i = sig[p + 1]
                 try:
-                    close_i = _find_close(toks, open_i)
+                    close_i = match_bracket(toks, open_i)
                 except ValueError:
                     close_i = None
                 hit = None
@@ -10097,13 +9831,7 @@ def _rewrite_decimal_cast_truncation(
                             and texts[-3] == ","
                             and texts[-2].isdigit()
                             and texts[-1] == ")"):
-                        depth = 0
-                        for k in range(open_i, inner_sig[-7]):
-                            if toks[k].text in ("(", "["):
-                                depth += 1
-                            elif toks[k].text in (")", "]"):
-                                depth -= 1
-                        if depth == 1:
+                        if match_bracket(toks, inner_sig[-7]) == open_i:
                             hit = (detokenize(
                                 toks[open_i + 1:inner_sig[-7]]).strip(),
                                 texts[-4], int(texts[-2]))
@@ -10136,7 +9864,7 @@ def _rewrite_filter_shorthand(sql: str) -> str:
     ')' of the aggregate call — the lowercase filter() HOF never follows
     a ')'."""
     toks = tokenize(sql)
-    sig = _sig(toks)
+    sig = significant(toks)
     out_parts: list[str] = []
     last = 0
     for p, ti in enumerate(sig):
@@ -10185,7 +9913,7 @@ def _rewrite_like_backslash(sql: str) -> str:
     Spark-escaped, so the token text goes 2x → 4x). An explicit ESCAPE
     clause replaces Spark's default and already matches DuckDB."""
     toks = tokenize(sql)
-    sig = _sig(toks)
+    sig = significant(toks)
     changed = False
     for p, ti in enumerate(sig):
         t = toks[ti]
@@ -10253,8 +9981,8 @@ def _rewrite_regexp_replacement(sql: str) -> str:
             while j < len(toks) and toks[j].kind in ("ws", "comment"):
                 j += 1
             if j < len(toks) and toks[j].text == "(":
-                close = _find_close(toks, j)
-                spans = _split_args(toks, j, close)
+                close = match_bracket(toks, j)
+                spans = split_args(toks, j, close)
                 if len(spans) >= 3:
                     rep_toks = [k for k in range(*spans[2])
                                 if toks[k].kind not in ("ws", "comment")]
@@ -10343,8 +10071,8 @@ def _rewrite_window_filter(sql: str) -> str:
             while j < len(toks) and toks[j].kind in ("ws", "comment"):
                 j += 1
             if j < len(toks) and toks[j].text == "(":
-                close = _find_close(toks, j)
-                spans = _split_args(toks, j, close)
+                close = match_bracket(toks, j)
+                spans = split_args(toks, j, close)
                 k = close + 1
                 while k < len(toks) and toks[k].kind in ("ws", "comment"):
                     k += 1
@@ -10356,7 +10084,7 @@ def _rewrite_window_filter(sql: str) -> str:
                             and toks[k2].kind in ("ws", "comment"):
                         k2 += 1
                     if k2 < len(toks) and toks[k2].text == "(":
-                        fclose = _find_close(toks, k2)
+                        fclose = match_bracket(toks, k2)
                         k3 = fclose + 1
                         while k3 < len(toks) \
                                 and toks[k3].kind in ("ws", "comment"):
@@ -10392,7 +10120,7 @@ def _rewrite_date_subtraction(sql: str,
     date - integer (same semantics both engines), date - INTERVAL,
     timestamp - timestamp (interval on both) — passes through."""
     toks = tokenize(sql)
-    sig = _sig(toks)
+    sig = significant(toks)
 
     def date_operand(pos, direction):
         """(start_sig, end_sig) of a provably-date operand adjacent to
@@ -10443,7 +10171,7 @@ def _rewrite_date_subtraction(sql: str,
         toks = (toks[:sig[left[0]]]
                 + [Tok("other", f"datediff({l_txt}, {r_txt})")]
                 + toks[sig[right[1]] + 1:])
-        sig = _sig(toks)
+        sig = significant(toks)
     return detokenize(toks)
 
 
@@ -10477,8 +10205,8 @@ def _rewrite_regexp_first_match(sql: str) -> str:
             while j < len(toks) and toks[j].kind in ("ws", "comment"):
                 j += 1
             if j < len(toks) and toks[j].text == "(":
-                close = _find_close(toks, j)
-                spans = _split_args(toks, j, close)
+                close = match_bracket(toks, j)
+                spans = split_args(toks, j, close)
                 if len(spans) == 3:
                     s_ = _rewrite_regexp_first_match(
                         _arg_text(toks, spans[0]))
@@ -10540,7 +10268,7 @@ def _rewrite_moment_aggs(sql: str) -> str:
             while j < len(toks) and toks[j].kind in ("ws", "comment"):
                 j += 1
             if j < len(toks) and toks[j].text == "(":
-                close = _find_close(toks, j)
+                close = match_bracket(toks, j)
                 e = detokenize(toks[j + 1:close]).strip()
                 # window form: skewness(x) OVER w — the OVER clause must
                 # attach to EVERY inner aggregate, not trail the CASE
@@ -10556,7 +10284,7 @@ def _rewrite_moment_aggs(sql: str) -> str:
                             ("ws", "comment"):
                         m2 += 1
                     if m2 < len(toks) and toks[m2].text == "(":
-                        spec_end = _find_close(toks, m2)
+                        spec_end = match_bracket(toks, m2)
                     elif m2 < len(toks) and toks[m2].kind == "ident":
                         spec_end = m2
                     else:
@@ -10652,7 +10380,7 @@ def _rewrite_list_literals(sql: str) -> str:
     significant token is NOT an identifier, ')' or ']'. Runs after the
     slice/index passes so subscripts are already consumed."""
     toks = tokenize(sql)
-    sig = _sig(toks)
+    sig = significant(toks)
     for pos in range(len(sig) - 1, -1, -1):
         i = sig[pos]
         if toks[i].text != "[":
@@ -10662,22 +10390,13 @@ def _rewrite_list_literals(sql: str) -> str:
             prev_kw = prev.kind == "ident" and prev.text.upper() in _LITERAL_CONTEXT_KEYWORDS
             if (prev.kind == "ident" and not prev_kw) or prev.text in (")", "]"):
                 continue
-        # find matching ]
-        depth = 0
-        close = None
-        for j in range(i, len(toks)):
-            if toks[j].text == "[":
-                depth += 1
-            elif toks[j].text == "]":
-                depth -= 1
-                if depth == 0:
-                    close = j
-                    break
-        if close is None:
+        try:
+            close = match_bracket(toks, i)
+        except ValueError:
             continue
         inner = detokenize(toks[i + 1:close])
         toks = toks[:i] + [Tok("other", f"array({inner})")] + toks[close + 1:]
-        sig = _sig(toks)
+        sig = significant(toks)
     return detokenize(toks)
 
 
@@ -10731,20 +10450,11 @@ def _subscript_base_start(toks: list[Tok], sig: list[int],
                     return sub
             return start_pos
         if t.text in (")", "]"):
-            closer, opener = t.text, "(" if t.text == ")" else "["
-            depth = 0
-            p = start_pos
-            while p >= 0:
-                if toks[sig[p]].text == closer:
-                    depth += 1
-                elif toks[sig[p]].text == opener:
-                    depth -= 1
-                    if depth == 0:
-                        break
-                p -= 1
-            if p < 0:
+            try:
+                p = sig.index(match_bracket(toks, sig[start_pos]))
+            except ValueError:
                 return None
-            if closer == ")":
+            if t.text == ")":
                 # include a call name before '(' — but never a keyword
                 if (p - 1 >= 0 and toks[sig[p - 1]].kind == "ident"
                         and toks[sig[p - 1]].text.upper()
@@ -10817,22 +10527,15 @@ def _rewrite_index_base(sql: str,
     every emission is bracket-free, so the loop terminates."""
     while True:
         toks = tokenize(sql)
-        sig = _sig(toks)
+        sig = significant(toks)
         replaced = False
         for pos in range(len(sig) - 1, -1, -1):
             if toks[sig[pos]].text != "[" or pos == 0:
                 continue
-            # bracket body up to the matching ']' at this nesting level
-            depth, j = 0, pos
-            while j < len(sig):
-                if toks[sig[j]].text == "[":
-                    depth += 1
-                elif toks[sig[j]].text == "]":
-                    depth -= 1
-                    if depth == 0:
-                        break
-                j += 1
-            if j >= len(sig):
+            # bracket body up to the matching ']'
+            try:
+                j = sig.index(match_bracket(toks, sig[pos]))
+            except ValueError:
                 continue
             body = toks[sig[pos] + 1:sig[j]]
             body_txt = detokenize(body).strip()
@@ -10889,24 +10592,13 @@ def _rewrite_window_clause(sql: str) -> str:
     if not m:
         return sql
 
-    def close_of(open_pos: int) -> int:
-        depth = 0
-        for i in range(open_pos, len(sql)):
-            if sql[i] == "(":
-                depth += 1
-            elif sql[i] == ")":
-                depth -= 1
-                if depth == 0:
-                    return i
-        raise ValueError("unbalanced parentheses in WINDOW clause")
-
     # Collect every comma-separated `name AS (spec)` in the clause.
     specs: dict[str, str] = {}
     name = m.group(1)
     open_pos = m.end() - 1
     end_pos = open_pos
     while True:
-        close_pos = close_of(open_pos)
+        close_pos = match_paren(sql, open_pos)
         specs[name] = sql[open_pos:close_pos + 1]
         end_pos = close_pos
         nxt = re.match(r"\s*,\s*([A-Za-z_][A-Za-z0-9_]*)\s+AS\s*\(",
@@ -10926,17 +10618,9 @@ def _rewrite_window_clause(sql: str) -> str:
             if not mr:
                 break
             op = without.index("(", mr.start())
-            depth2 = 0
-            cp = None
-            for i2 in range(op, len(without)):
-                if without[i2] == "(":
-                    depth2 += 1
-                elif without[i2] == ")":
-                    depth2 -= 1
-                    if depth2 == 0:
-                        cp = i2
-                        break
-            if cp is None:
+            try:
+                cp = match_paren(without, op)
+            except ValueError:
                 break
             rest = without[mr.end():cp].strip()
             without = (without[:mr.start()]
@@ -10949,7 +10633,7 @@ def _rewrite_window_clause(sql: str) -> str:
 
 def _rewrite_keywords(sql: str) -> str:
     toks = tokenize(sql)
-    sig = _sig(toks)
+    sig = significant(toks)
     for pos, ti in enumerate(sig):
         t = toks[ti]
         if t.kind != "ident":
@@ -11072,7 +10756,7 @@ def _rewrite_array_types(sql: str) -> str:
 
 def _rewrite_array_types_once(sql: str) -> str:
     toks = tokenize(sql)
-    sig = _sig(toks)
+    sig = significant(toks)
     for pos in range(len(sig) - 2, -1, -1):
         a, b, c = sig[pos], sig[pos + 1], sig[pos + 2] if pos + 2 < len(sig) else sig[-1]
         if (
@@ -11089,22 +10773,6 @@ def _rewrite_array_types_once(sql: str) -> str:
     return detokenize(toks)
 
 
-def _depths(toks: list[Tok]) -> list[int]:
-    """Paren depth at each token (depth of the token itself; '(' counts at
-    its outer depth, ')' at its inner)."""
-    out, d = [], 0
-    for t in toks:
-        if t.text == "(":
-            out.append(d)
-            d += 1
-        elif t.text == ")":
-            d -= 1
-            out.append(d)
-        else:
-            out.append(d)
-    return out
-
-
 def _rewrite_qualify(sql: str) -> str:
     """DuckDB ``QUALIFY pred`` (filter on window results; Spark has no such
     clause) → append ``(pred) AS __qualify`` to the select list, wrap, and
@@ -11116,7 +10784,7 @@ def _rewrite_qualify(sql: str) -> str:
     (appending a column would change the distinct key) — raises."""
     while True:
         toks = tokenize(sql)
-        depths = _depths(toks)
+        depths = bracket_depths(toks)
         qpos = next(
             (i for i, t in enumerate(toks)
              if t.kind == "ident" and t.text.upper() == "QUALIFY"),
@@ -11178,8 +10846,8 @@ def _rewrite_distinct_on(sql: str) -> str:
     statement form only; the ORDER BY should reference projected columns
     (true for the sane uses of DISTINCT ON)."""
     toks = tokenize(sql)
-    sig = _sig(toks)
-    depths = _depths(toks)
+    sig = significant(toks)
+    depths = bracket_depths(toks)
 
     def up(k: int) -> str:
         t = toks[sig[k]]
@@ -11199,7 +10867,7 @@ def _rewrite_distinct_on(sql: str) -> str:
         return sql
     if toks[sig[3]].text != "(":
         return sql
-    close = _find_close(toks, sig[3])
+    close = match_bracket(toks, sig[3])
     keys = detokenize(toks[sig[3] + 1:close]).strip()
     from_k = next(k for k in range(4, len(sig))
                   if up(k) == "FROM" and depths[sig[k]] == 0)
@@ -11235,7 +10903,7 @@ def _rewrite_distinct_on(sql: str) -> str:
             return x.strip()
 
     ktoks = tokenize("(" + keys + ")")
-    kspans = _split_args(ktoks, 0, len(ktoks) - 1)
+    kspans = split_args(ktoks, 0, len(ktoks) - 1)
     key_exprs = [_arg_text(ktoks, sp).strip() for sp in kspans]
     hidden: list[tuple[str, str]] = []  # (expr, alias)
     for ii, ke in enumerate(key_exprs):
@@ -11244,20 +10912,7 @@ def _rewrite_distinct_on(sql: str) -> str:
     extra_sel = "".join(f", ({e}) AS {a}" for e, a in hidden)
     except_cols = "__don_rn" + "".join(f", {a}" for _, a in hidden)
     if hidden and outer_order:
-        otoks = tokenize(order_list)
-        # split the outer order list on top-level commas
-        items = []
-        depth = 0
-        start = 0
-        for idx, t in enumerate(otoks):
-            if t.text in ("(", "["):
-                depth += 1
-            elif t.text in (")", "]"):
-                depth -= 1
-            elif t.text == "," and depth == 0:
-                items.append(detokenize(otoks[start:idx]))
-                start = idx + 1
-        items.append(detokenize(otoks[start:]))
+        items = split_top_commas(order_list)
         norm_of = {_norm(e): a for e, a in hidden}
         new_items = []
         for it in items:
@@ -11285,7 +10940,7 @@ def _reorder_alias_tablesample(sql: str) -> str:
         return sql
     for _ in range(20):
         toks = tokenize(sql)
-        sig = _sig(toks)
+        sig = significant(toks)
         done = True
         for p2, ti in enumerate(sig):
             t = toks[ti]
@@ -11308,7 +10963,7 @@ def _reorder_alias_tablesample(sql: str) -> str:
                              and before.text.upper() not in _clauses))):
                 continue
             try:
-                close = _find_close(toks, sig[p2 + 1])
+                close = match_bracket(toks, sig[p2 + 1])
             except ValueError:
                 continue
             clause = detokenize(toks[ti:close + 1]).strip()
@@ -11345,7 +11000,7 @@ def _rewrite_using_sample(sql: str) -> str:
         r"(\d+)\s+ROWS\s*\)(?:\s*REPEATABLE\s*\(\s*\d+\s*\))?",
         lambda m: f"TABLESAMPLE ({m.group(2)} ROWS)", sql)
     toks = tokenize(sql)
-    sig = _sig(toks)
+    sig = significant(toks)
     out: list[Tok] = []
     consumed = 0
     for pos, i in enumerate(sig):
@@ -11373,7 +11028,7 @@ def _rewrite_using_sample(sql: str) -> str:
             # specific by nature, so the seed drops (r10). The PERCENT
             # method forms stay loud (documented residue — reservoir %
             # is an exact fraction in DuckDB, approximate here).
-            close = _find_close(toks, sig[pos + 3])
+            close = match_bracket(toks, sig[pos + 3])
             inner = [k for k in range(sig[pos + 3] + 1, close)
                      if toks[k].kind not in ("ws", "comment")]
             ok_rows = (len(inner) == 2 and toks[inner[0]].kind == "num"
@@ -11392,7 +11047,7 @@ def _rewrite_using_sample(sql: str) -> str:
             if (q2 + 1 < len(sig) and toks[sig[q2]].kind == "ident"
                     and toks[sig[q2]].text.upper() == "REPEATABLE"
                     and toks[sig[q2 + 1]].text == "("):
-                end = _find_close(toks, sig[q2 + 1]) + 1
+                end = match_bracket(toks, sig[q2 + 1]) + 1
         elif toks[nums].kind != "num":
             out.append(t)
             consumed = i + 1
@@ -11410,7 +11065,7 @@ def _rewrite_using_sample(sql: str) -> str:
                 unit, end = toks[sig[j]].text.upper(), sig[j] + 1
                 j += 1
             if j < len(sig) and toks[sig[j]].text == "(":
-                end = _find_close(toks, sig[j]) + 1  # drop (bernoulli)
+                end = match_bracket(toks, sig[j]) + 1  # drop (bernoulli)
         # Spark requires TABLESAMPLE BEFORE the table alias (measured:
         # `FROM (…) x TABLESAMPLE (…)` is PARSE_SYNTAX_ERROR, judge
         # probe r7) — if `[AS] alias` directly precedes USING SAMPLE,
@@ -11467,8 +11122,8 @@ def _rewrite_pivot(sql: str) -> str:
     Spark's implicit group-by-all-remaining-columns is narrowed by an
     inner projection of (group cols, pivot col, agg column refs)."""
     toks = tokenize(sql)
-    depths = _depths(toks)
-    sig = _sig(toks)
+    depths = bracket_depths(toks)
+    sig = significant(toks)
     p = next((k for k, i in enumerate(sig)
               if toks[i].kind == "ident" and toks[i].text.upper() == "PIVOT"
               and depths[i] == 0), None)
@@ -11500,7 +11155,7 @@ def _rewrite_pivot(sql: str) -> str:
         )
     on_col = detokenize(toks[sig[on_k + 1]:sig[in_k]]).strip()
     in_open = sig[in_k + 1]
-    in_close = _find_close(toks, in_open)
+    in_close = match_bracket(toks, in_open)
     values = detokenize(toks[in_open:in_close + 1]).strip()
     group_k = next(
         (k2 for k2 in range(using_k + 1, len(sig))
@@ -11523,7 +11178,7 @@ def _rewrite_pivot(sql: str) -> str:
         if not re.fullmatch(r"(?is)count\s*\((?:[^()]*)\)", agg_):
             return None
         items = []
-        for v in _split_brace_commas(values.strip()[1:-1]):
+        for v in split_top_commas(values.strip()[1:-1]):
             v = v.strip()
             nm = v[1:-1].replace("''", "'") if (
                 v.startswith("'") and v.endswith("'")) else v
@@ -11558,7 +11213,7 @@ def _rewrite_pivot(sql: str) -> str:
     group_cols = detokenize(toks[sig[by_k + 1]:g_end]).strip()
     # columns the agg reads: idents not followed by '(' and not keywords
     agg_toks = tokenize(agg)
-    agg_sig = _sig(agg_toks)
+    agg_sig = significant(agg_toks)
     agg_cols: list[str] = []
     for k2, i2 in enumerate(agg_sig):
         t = agg_toks[i2]
@@ -11592,19 +11247,6 @@ _JOIN_COND_TERMINATORS = {
 _INEQ_OPS = {">=", "<=", ">", "<"}
 
 
-def _split_top_and(cond: str) -> list[str]:
-    """Split a predicate on top-level ANDs (token-aware)."""
-    toks = tokenize(cond)
-    depths = _depths(toks)
-    terms, start = [], 0
-    for i, t in enumerate(toks):
-        if t.kind == "ident" and t.text.upper() == "AND" and depths[i] == 0:
-            terms.append(detokenize(toks[start:i]).strip())
-            start = i + 1
-    terms.append(detokenize(toks[start:]).strip())
-    return [t for t in terms if t]
-
-
 def _colref_parts(expr: str) -> list[str] | None:
     """['a','ts'] for a plain dotted column ref, else None (calls, casts,
     arithmetic all disqualify — the as-of inequality must be a bare
@@ -11631,8 +11273,8 @@ def _rewrite_asof_join(sql: str) -> str:
     skip = 0
     while True:
         toks = tokenize(sql)
-        sig = _sig(toks)
-        depths = _depths(toks)
+        sig = significant(toks)
+        depths = bracket_depths(toks)
         candidates = [i for i in sig
                       if toks[i].kind == "ident" and toks[i].text.upper() == "ASOF"]
         if skip >= len(candidates):
@@ -11661,7 +11303,7 @@ def _rewrite_asof_join(sql: str) -> str:
         # right-side relation: parenthesized subquery or dotted ident chain
         r = j + 1
         if toks[sig[r]].text == "(":
-            close = _find_close(toks, sig[r])
+            close = match_bracket(toks, sig[r])
             ref_text = detokenize(toks[sig[r]:close + 1]).strip()
             r = next(p for p in range(r, len(sig)) if sig[p] > close) - 1 + 1
         else:
@@ -11700,7 +11342,7 @@ def _rewrite_asof_join(sql: str) -> str:
         # qualified by the right alias
         right_ts = None
         direction = None
-        for term in _split_top_and(cond):
+        for term in split_top_and(cond):
             ttoks = [t for t in tokenize(term) if t.kind not in ("ws", "comment")]
             op_i = next((i for i, t in enumerate(ttoks)
                          if t.kind == "op" and t.text in _INEQ_OPS), None)
@@ -11744,8 +11386,8 @@ def _rewrite_unpivot(sql: str) -> str:
     """DuckDB statement-form ``UNPIVOT t ON c1, c2 INTO NAME k VALUE v`` →
     Spark relation-form ``SELECT * FROM t UNPIVOT (v FOR k IN (c1, c2))``."""
     toks = tokenize(sql)
-    depths = _depths(toks)
-    sig = _sig(toks)
+    depths = bracket_depths(toks)
+    sig = significant(toks)
     if not sig or toks[sig[0]].kind != "ident" or toks[sig[0]].text.upper() != "UNPIVOT":
         return sql
 
@@ -11773,32 +11415,18 @@ def _win_excl_sites(out: str):
     sum/count/avg(<balanced expr>) OVER (<...>) call site."""
     for cand in _WIN_EXCL_FN_RE.finditer(out):
         a_open = cand.end() - 1
-        depth, a_close = 0, None
-        for j in range(a_open, len(out)):
-            if out[j] == "(":
-                depth += 1
-            elif out[j] == ")":
-                depth -= 1
-                if depth == 0:
-                    a_close = j
-                    break
-        if a_close is None:
+        try:
+            a_close = match_paren(out, a_open)
+        except ValueError:
             continue
         m_over = re.match(r"\s*OVER\s*\(", out[a_close + 1:],
                           re.IGNORECASE)
         if not m_over:
             continue
         o_open = a_close + 1 + m_over.end() - 1
-        depth, o_close = 0, None
-        for j in range(o_open, len(out)):
-            if out[j] == "(":
-                depth += 1
-            elif out[j] == ")":
-                depth -= 1
-                if depth == 0:
-                    o_close = j
-                    break
-        if o_close is None:
+        try:
+            o_close = match_paren(out, o_open)
+        except ValueError:
             continue
         yield (cand.group("fn").lower(),
                out[a_open + 1:a_close].strip(),
@@ -11869,27 +11497,12 @@ def _rewrite_window_exclude(sql: str) -> str:
         if mspec is None or not _frame_contains_current(spec):
             break  # ROWS / frameless / non-containing → the loud raise
         # peer partition = partition keys + direction-stripped order keys
-        def _split_keys(txt: str) -> list[str]:
-            ks, d, buf = [], 0, []
-            for ch in txt:
-                if ch in "([":
-                    d += 1
-                elif ch in ")]":
-                    d -= 1
-                elif ch == "," and d == 0:
-                    ks.append("".join(buf))
-                    buf = []
-                    continue
-                buf.append(ch)
-            ks.append("".join(buf))
-            return [k.strip() for k in ks if k.strip()]
-
         okeys = []
-        for k in _split_keys(mspec.group("o")):
+        for k in split_top_commas(mspec.group("o")):
             k = re.sub(r"(?is)\s+NULLS\s+(FIRST|LAST)\s*$", "", k)
             k = re.sub(r"(?is)\s+(ASC|DESC)\s*$", "", k)
             okeys.append(k.strip())
-        pkeys = (_split_keys(mspec.group("p"))
+        pkeys = (split_top_commas(mspec.group("p"))
                  if mspec.group("p") else [])
         pov = f"OVER (PARTITION BY {', '.join(pkeys + okeys)})"
         over = f"OVER ({spec})"
@@ -11973,7 +11586,7 @@ def _rewrite_struct_varchar_casts(sql: str) -> str:
         return sql
     for _ in range(20):
         toks = tokenize(sql)
-        sig = _sig(toks)
+        sig = significant(toks)
         done = True
         for p, ti in enumerate(sig):
             t = toks[ti]
@@ -11982,7 +11595,7 @@ def _rewrite_struct_varchar_casts(sql: str) -> str:
                     or p + 1 >= len(sig) or toks[sig[p + 1]].text != "("):
                 continue
             try:
-                close = _find_close(toks, sig[p + 1])
+                close = match_bracket(toks, sig[p + 1])
             except ValueError:
                 continue
             cpos = None
@@ -12059,7 +11672,7 @@ def _rewrite_posix_classes(sql: str) -> str:
     if "[:" not in sql:
         return sql
     toks = tokenize(sql)
-    sig = _sig(toks)
+    sig = significant(toks)
     changed = False
     for p2, ti in enumerate(sig):
         t = toks[ti]
@@ -12069,10 +11682,10 @@ def _rewrite_posix_classes(sql: str) -> str:
                 and toks[sig[p2 + 1]].text == "("):
             continue
         try:
-            close = _find_close(toks, sig[p2 + 1])
+            close = match_bracket(toks, sig[p2 + 1])
         except ValueError:
             continue
-        spans = _split_args(toks, sig[p2 + 1], close)
+        spans = split_args(toks, sig[p2 + 1], close)
         if len(spans) < 2:
             continue
         ptoks = [k for k in range(*spans[1])
@@ -12101,8 +11714,8 @@ def _rewrite_window_in_orderby(sql: str) -> str:
             or not re.search(r"(?i)\bOVER\b", sql):
         return sql
     toks = tokenize(sql)
-    sig = _sig(toks)
-    depths = _depths(toks)
+    sig = significant(toks)
+    depths = bracket_depths(toks)
 
     def up(k):
         t = toks[sig[k]]
@@ -12127,7 +11740,7 @@ def _rewrite_window_in_orderby(sql: str) -> str:
     keys_end = sig[tail_k] if tail_k is not None else len(toks)
     keys_txt = detokenize(
         toks[sig[order_k + 1] + 1:keys_end]).strip()
-    keys = _split_brace_commas(keys_txt)
+    keys = split_top_commas(keys_txt)
     hidden = []
     new_keys = []
     for key in keys:
@@ -12168,8 +11781,8 @@ def _rewrite_grouping_in_having(sql: str) -> str:
             or not re.search(r"(?i)\bgrouping(_id)?\s*\(", sql):
         return sql
     toks = tokenize(sql)
-    sig = _sig(toks)
-    depths = _depths(toks)
+    sig = significant(toks)
+    depths = bracket_depths(toks)
 
     def up(k):
         t = toks[sig[k]]
@@ -12195,7 +11808,7 @@ def _rewrite_grouping_in_having(sql: str) -> str:
     # grouping() calls inside the HAVING text
     calls: list[str] = []
     htoks = tokenize(having_txt)
-    hsig = _sig(htoks)
+    hsig = significant(htoks)
     for k2, ti2 in enumerate(hsig):
         t2 = htoks[ti2]
         if (t2.kind == "ident"
@@ -12203,7 +11816,7 @@ def _rewrite_grouping_in_having(sql: str) -> str:
                 and k2 + 1 < len(hsig)
                 and htoks[hsig[k2 + 1]].text == "("):
             try:
-                c2 = _find_close(htoks, hsig[k2 + 1])
+                c2 = match_bracket(htoks, hsig[k2 + 1])
             except ValueError:
                 return sql
             call = detokenize(htoks[ti2:c2 + 1]).strip()
@@ -12244,7 +11857,7 @@ def _rewrite_method_calls(sql: str) -> str:
         return sql
     for _ in range(60):
         toks = tokenize(sql)
-        sig = _sig(toks)
+        sig = significant(toks)
         pos_of = {raw: p for p, raw in enumerate(sig)}
         done = True
         for p2, ti in enumerate(sig):
@@ -12274,7 +11887,7 @@ def _rewrite_method_calls(sql: str) -> str:
                 continue
             fn = toks[sig[p2 + 1]].text
             try:
-                close = _find_close(toks, sig[p2 + 2])
+                close = match_bracket(toks, sig[p2 + 2])
             except ValueError:
                 continue
             def _skip():
@@ -12313,7 +11926,7 @@ def _fold_negative_zero_double(sql: str) -> str:
         return sql
     _fls = r"(?:DOUBLE|FLOAT8|FLOAT4?|REAL)"
     toks = tokenize(sql)
-    sig = _sig(toks)
+    sig = significant(toks)
     out = []
     consumed = 0
     for p2, ti in enumerate(sig):
@@ -12387,7 +12000,7 @@ def _rewrite_double_varchar_casts(
         return sql
     for _ in range(50):
         toks = tokenize(sql)
-        sig = _sig(toks)
+        sig = significant(toks)
         pos_of = {raw: p for p, raw in enumerate(sig)}
         done = True
         for p, ti in enumerate(sig):
@@ -12399,7 +12012,7 @@ def _rewrite_double_varchar_casts(
                     and p + 1 < len(sig)
                     and toks[sig[p + 1]].text == "("):
                 try:
-                    close = _find_close(toks, sig[p + 1])
+                    close = match_bracket(toks, sig[p + 1])
                 except ValueError:
                     continue
                 # the last top-level AS inside the parens
@@ -12521,7 +12134,7 @@ def _expr_is_timestamp(expr: str,
     while e.startswith("(") and e.endswith(")"):
         toks0 = tokenize(e)
         try:
-            if _find_close(toks0, 0) == len(toks0) - 1:
+            if match_bracket(toks0, 0) == len(toks0) - 1:
                 e = e[1:-1].strip()
             else:
                 break
@@ -12552,14 +12165,14 @@ def _expr_is_dt_interval(expr: str,
     while e.startswith("(") and e.endswith(")"):
         toks0 = tokenize(e)
         try:
-            if _find_close(toks0, 0) == len(toks0) - 1:
+            if match_bracket(toks0, 0) == len(toks0) - 1:
                 e = e[1:-1].strip()
             else:
                 break
         except ValueError:
             return False
     toks = tokenize(e)
-    sig = _sig(toks)
+    sig = significant(toks)
     d = 0
     minus_at = None
     for p in range(1, len(sig)):
@@ -12587,18 +12200,18 @@ def _expr_is_double_array(expr: str,
     ``[1e16]`` arrives as ``array(1e16)``)."""
     e = expr.strip()
     toks = tokenize(e)
-    sig = _sig(toks)
+    sig = significant(toks)
     if (len(sig) < 3 or toks[sig[0]].kind != "ident"
             or toks[sig[0]].text.lower() != "array"
             or toks[sig[1]].text != "("):
         return False
     try:
-        close = _find_close(toks, sig[1])
+        close = match_bracket(toks, sig[1])
     except ValueError:
         return False
     if close != sig[-1]:
         return False
-    spans = _split_args(toks, sig[1], close)
+    spans = split_args(toks, sig[1], close)
     if not spans:
         return False
     texts = [_arg_text(toks, sp) for sp in spans]
@@ -12638,9 +12251,9 @@ def _expr_is_map(expr: str, column_kinds: dict[str, str] | None) -> bool:
             return True
         return False
     toks = tokenize(e)
-    sig = _sig(toks)
+    sig = significant(toks)
     try:
-        return _find_close(toks, sig[1]) == sig[-1]
+        return match_bracket(toks, sig[1]) == sig[-1]
     except (ValueError, IndexError):
         return False
 
@@ -12670,7 +12283,7 @@ def _rewrite_interval_varchar_casts(
         return sql
     for _ in range(50):
         toks = tokenize(sql)
-        sig = _sig(toks)
+        sig = significant(toks)
         pos_of = {raw: p for p, raw in enumerate(sig)}
         done = True
         for p, ti in enumerate(sig):
@@ -12680,7 +12293,7 @@ def _rewrite_interval_varchar_casts(
                     and p + 1 < len(sig)
                     and toks[sig[p + 1]].text == "("):
                 try:
-                    close = _find_close(toks, sig[p + 1])
+                    close = match_bracket(toks, sig[p + 1])
                 except ValueError:
                     continue
                 d = 0
@@ -12849,7 +12462,7 @@ def substitute_select_alias(sql: str, name: str) -> str | None:
     (random/uuid) refuse entirely — a second evaluation would be a
     second independent draw."""
     toks = tokenize(sql)
-    sig = _sig(toks)
+    sig = significant(toks)
     target = name.lower()
     # every `AS name` definition position
     def_positions = [
@@ -12860,7 +12473,7 @@ def substitute_select_alias(sql: str, name: str) -> str | None:
             and toks[sig[p - 1]].text.upper() == "AS")]
     if not def_positions:
         return None
-    depths = _depths(toks)
+    depths = bracket_depths(toks)
     changed = False
     for def_pos in def_positions:
         d0 = depths[sig[def_pos]]
@@ -12897,7 +12510,7 @@ def substitute_select_alias(sql: str, name: str) -> str | None:
         if stack:
             lo = stack[-1]
             try:
-                hi = _find_close(toks, lo)
+                hi = match_bracket(toks, lo)
             except ValueError:
                 hi = len(toks) - 1
         # …further bounded by the def's own SELECT segment: set-
@@ -12928,7 +12541,7 @@ def substitute_select_alias(sql: str, name: str) -> str | None:
         while k < hi:
             if toks[k].text == "(":
                 try:
-                    close = _find_close(toks, k)
+                    close = match_bracket(toks, k)
                 except ValueError:
                     break
                 inner = next((toks[j] for j in range(k + 1, close)
@@ -12974,7 +12587,7 @@ def _rewrite_at_time_zone(sql: str) -> str:
         return sql
     for _ in range(20):
         toks = tokenize(sql)
-        sig = _sig(toks)
+        sig = significant(toks)
         hit = None
         for p in range(len(sig) - 3):
             if all(toks[sig[p + k]].kind == "ident"
@@ -12991,19 +12604,10 @@ def _rewrite_at_time_zone(sql: str) -> str:
         lstart = hit - 1
         t = toks[sig[lstart]]
         if t.text == ")":
-            d = 0
-            q = lstart
-            while q >= 0:
-                if toks[sig[q]].text == ")":
-                    d += 1
-                elif toks[sig[q]].text == "(":
-                    d -= 1
-                    if d == 0:
-                        break
-                q -= 1
-            if q < 0:
+            try:
+                lstart = sig.index(match_bracket(toks, sig[lstart]))
+            except ValueError:
                 return sql
-            lstart = q
             if (lstart - 1 >= 0 and toks[sig[lstart - 1]].kind == "ident"
                     and toks[sig[lstart - 1]].text.upper() not in
                     ("SELECT", "WHERE", "AND", "OR", "WHEN", "THEN",
@@ -13045,7 +12649,7 @@ def _rewrite_lateral_unnest(sql: str) -> str:
         return sql
     for _ in range(20):
         toks = tokenize(sql)
-        sig = _sig(toks)
+        sig = significant(toks)
         done = True
         for p, ti in enumerate(sig):
             t = toks[ti]
@@ -13063,7 +12667,7 @@ def _rewrite_lateral_unnest(sql: str) -> str:
                         "CROSS", "INNER"):
                 start = p - 2
             try:
-                close = _find_close(toks, sig[p + 1])
+                close = match_bracket(toks, sig[p + 1])
             except ValueError:
                 continue
             cpos = next((q for q in range(p + 1, len(sig))
@@ -13108,8 +12712,8 @@ def _rewrite_multi_unnest(sql: str) -> str:
         return sql
     for _ in range(20):  # fixpoint over nested SELECTs
         toks = tokenize(sql)
-        sig = _sig(toks)
-        depths = _depths(toks)
+        sig = significant(toks)
+        depths = bracket_depths(toks)
         # find every SELECT's list span; pick the INNERMOST (max depth)
         # multi-unnest one first so index math stays valid
         best = None  # (depth, sel_pos, list_start, list_end, from_end)
@@ -13162,8 +12766,8 @@ def _rewrite_multi_unnest(sql: str) -> str:
             return sql
         d0, p, end, from_pos = best
         toks = tokenize(sql)   # re-derive raw indexes
-        sig = _sig(toks)
-        depths = _depths(toks)
+        sig = significant(toks)
+        depths = bracket_depths(toks)
         sel_raw = sig[p]
         list_end_raw = sig[end] if end < len(sig) else len(toks)
         # refuse shapes where zip-through-a-derived-table is wrong
@@ -13181,7 +12785,7 @@ def _rewrite_multi_unnest(sql: str) -> str:
                     and q + 1 < len(sig)
                     and toks[sig[q + 1]].text == "("):
                 op = sig[q + 1]
-                close = _find_close(toks, op)
+                close = match_bracket(toks, op)
                 a = detokenize(toks[op + 1:close]).strip()
                 args.append(a)
                 repl.append((sig[q], close, a))
@@ -13268,7 +12872,7 @@ def _rewrite_scalar_subquery_first_row(sql: str) -> str:
     if "(" not in sql or not re.search(r"(?i)\bORDER\s+BY\b", sql):
         return sql
     toks = tokenize(sql)
-    sig = _sig(toks)
+    sig = significant(toks)
     changed = False
     for p, ti in enumerate(sig):
         if toks[ti].text != "(" or p == 0 or p + 1 >= len(sig):
@@ -13300,7 +12904,7 @@ def _rewrite_scalar_subquery_first_row(sql: str) -> str:
         if not ok:
             continue
         try:
-            close = _find_close(toks, ti)
+            close = match_bracket(toks, ti)
         except ValueError:
             continue
         depth = 0
@@ -13350,8 +12954,8 @@ def _inject_order_by_nulls(sql: str) -> str:
     if not re.search(r"(?i)\bORDER\b", sql):
         return sql
     toks = tokenize(sql)
-    sig = _sig(toks)
-    depths = _depths(toks)
+    sig = significant(toks)
+    depths = bracket_depths(toks)
     # token index → insert " NULLS LAST" after it
     inserts: set[int] = set()
     for p, ti in enumerate(sig):
@@ -13477,7 +13081,7 @@ def _values_column_kinds(sql: str) -> dict[str, str]:
             continue
         open_idx = sig[pi - 1]
         try:
-            close_idx = _find_close(toks, open_idx)
+            close_idx = match_bracket(toks, open_idx)
         except ValueError:
             continue
         # alias: ) [AS] ident ( col, col, … )
@@ -13496,10 +13100,10 @@ def _values_column_kinds(sql: str) -> dict[str, str]:
             continue
         col_open = rest[ri]
         try:
-            col_close = _find_close(toks, col_open)
+            col_close = match_bracket(toks, col_open)
         except ValueError:
             continue
-        col_spans = _split_args(toks, col_open, col_close)
+        col_spans = split_args(toks, col_open, col_close)
         cols = [_arg_text(toks, sp).strip() for sp in col_spans]
         if not all(re.fullmatch(r"[A-Za-z_]\w*", c) for c in cols):
             continue
@@ -13516,12 +13120,12 @@ def _values_column_kinds(sql: str) -> dict[str, str]:
                 ok = False
                 break
             try:
-                rc = _find_close(toks, j)
+                rc = match_bracket(toks, j)
             except ValueError:
                 ok = False
                 break
             rows.append([_arg_text(toks, sp)
-                         for sp in _split_args(toks, j, rc)])
+                         for sp in split_args(toks, j, rc)])
             j = rc + 1
         if not ok or not rows or any(len(r) != len(cols) for r in rows):
             continue
@@ -13575,7 +13179,7 @@ def _values_column_kinds(sql: str) -> dict[str, str]:
         if pi + 1 >= len(sig) or toks[sig[pi + 1]].text != "(":
             continue
         try:
-            cclose = _find_close(toks, sig[pi + 1])
+            cclose = match_bracket(toks, sig[pi + 1])
         except ValueError:
             continue
         cast_txt = detokenize(toks[k:cclose + 1])
@@ -13620,7 +13224,7 @@ def _values_column_kinds(sql: str) -> dict[str, str]:
                     and prev.text.upper() in ("SELECT", "DISTINCT"))):
             continue
         try:
-            bclose = _bracket_close(toks, k)
+            bclose = match_bracket(toks, k)
         except ValueError:
             continue
         rest = [q for q in sig if q > bclose]
@@ -13664,24 +13268,10 @@ def _values_column_kinds(sql: str) -> dict[str, str]:
         if pi + 1 >= len(sig):
             continue
         opener = toks[sig[pi + 1]].text
-        if opener == "(":
+        if opener in ("(", "{"):
             try:
-                mclose = _find_close(toks, sig[pi + 1])
+                mclose = match_bracket(toks, sig[pi + 1])
             except ValueError:
-                continue
-        elif opener == "{":
-            depth, j = 0, sig[pi + 1]
-            mclose = None
-            while j < len(toks):
-                if toks[j].text == "{":
-                    depth += 1
-                elif toks[j].text == "}":
-                    depth -= 1
-                    if depth == 0:
-                        mclose = j
-                        break
-                j += 1
-            if mclose is None:
                 continue
         else:
             continue
@@ -13719,7 +13309,7 @@ def _setop_item_class(expr: str,
     while e.startswith("(") and e.endswith(")"):
         toks0 = tokenize(e)
         try:
-            if _find_close(toks0, 0) == len(toks0) - 1:
+            if match_bracket(toks0, 0) == len(toks0) - 1:
                 e = e[1:-1].strip()
             else:
                 break
@@ -13728,7 +13318,7 @@ def _setop_item_class(expr: str,
     if re.fullmatch(r"(?is)NULL", e):
         return "null"
     toks = tokenize(e)
-    sig = _sig(toks)
+    sig = significant(toks)
     if len(sig) == 1:
         t = toks[sig[0]]
         if t.kind == "str":
@@ -13778,8 +13368,8 @@ def _rewrite_setop_varchar_unify(
         toks = tokenize(sql)
     except ValueError:
         return sql
-    sig = _sig(toks)
-    depths = _depths(toks)
+    sig = significant(toks)
+    depths = bracket_depths(toks)
     texts = [toks[k].text.upper() for k in sig]
 
     # set-op operator positions, grouped into chains by (depth, scope)
@@ -13936,7 +13526,7 @@ def _rewrite_percentile_disc(sql: str) -> str:
         return sql
     while True:
         toks = tokenize(sql)
-        sig = _sig(toks)
+        sig = significant(toks)
         hit = False
         for pi, k in enumerate(sig):
             t = toks[k]
@@ -13946,7 +13536,7 @@ def _rewrite_percentile_disc(sql: str) -> str:
                 continue
             fopen = sig[pi + 1]
             try:
-                fclose = _find_close(toks, fopen)
+                fclose = match_bracket(toks, fopen)
             except ValueError:
                 continue
             frac = detokenize(toks[fopen + 1:fclose]).strip()
@@ -13958,7 +13548,7 @@ def _rewrite_percentile_disc(sql: str) -> str:
                 continue
             gopen = rest[2]
             try:
-                gclose = _find_close(toks, gopen)
+                gclose = match_bracket(toks, gopen)
             except ValueError:
                 continue
             inner = detokenize(toks[gopen + 1:gclose]).strip()
@@ -14001,7 +13591,7 @@ def _rewrite_bare_integer_filters(sql: str) -> str:
     if not re.search(r"(?is)\b(where|having)\s+\d", sql):
         return sql
     toks = tokenize(sql)
-    sig = _sig(toks)
+    sig = significant(toks)
     changed = False
     for k, ti in enumerate(sig[:-1]):
         t = toks[ti]
@@ -14022,98 +13612,39 @@ def _rewrite_bare_integer_filters(sql: str) -> str:
     return detokenize(toks) if changed else sql
 
 
+_ESCAPE_RE = re.compile(
+    r"\\(?:x([0-9A-Fa-f]{1,2})|u([0-9A-Fa-f]{4})|U([0-9A-Fa-f]{8})"
+    r"|([0-7]{1,3})|([\s\S]))|''")
+_CONTROL_ESCAPES = {"n": "\n", "r": "\r", "t": "\t", "b": "\b", "f": "\f"}
+
+
+def _unescape(m: re.Match) -> str:
+    hx, u4, u8, octal, ch = m.groups()
+    if m.group() == "''":
+        return "'"
+    if hx or u4 or u8:
+        return chr(int(hx or u4 or u8, 16))
+    if octal:
+        return chr(int(octal, 8))
+    return _CONTROL_ESCAPES.get(ch, ch)
+
+
 def _rewrite_escape_strings(sql: str) -> str:
     """Postgres-style ``E'...'`` escape-string literals [measured r11 in
     DuckDB 1.0: \\n/\\t/\\r/\\b/\\f controls, \\xHH hex, \\ooo octal,
     \\uXXXX/\\UXXXXXXXX unicode, \\\\ backslash, both '' and \\'
     escape a quote, an UNKNOWN escape drops the backslash ('\\q'→'q')]
-    — Spark parses E'…' as an unsupported typed literal. Decoded
-    driver-side and re-emitted as a standard quoted literal."""
+    — Spark parses E'…' as an unsupported typed literal. Each ``estr``
+    token is decoded driver-side and re-emitted as a standard quoted
+    literal; an e'…' shape inside any other literal stays data."""
     if not re.search(r"(?i)(?<![\w'])e'", sql):
         return sql
-    out: list[str] = []
-    i = 0
-    n = len(sql)
-    while i < n:
-        c = sql[i]
-        if c == "'":  # ordinary string literal: copy verbatim
-            j = i + 1
-            while j < n:
-                if sql[j] == "'" and j + 1 < n and sql[j + 1] == "'":
-                    j += 2
-                    continue
-                if sql[j] == "'":
-                    break
-                j += 1
-            out.append(sql[i:j + 1])
-            i = j + 1
-            continue
-        if c == "$":  # dollar-quoted literal: RAW content, copy
-            # verbatim — an e'…' shape inside $$…$$ must survive
-            # untouched (ADVICE r11: this pass runs before the dollar
-            # rewrite and used to decode it)
-            md = re.match(r"\$([A-Za-z_]\w*)?\$", sql[i:])
-            if md:
-                tag = md.group(0)
-                end = sql.find(tag, i + len(tag))
-                if end != -1:
-                    out.append(sql[i:end + len(tag)])
-                    i = end + len(tag)
-                    continue
-        if (c in "eE" and i + 1 < n and sql[i + 1] == "'"
-                and (i == 0 or not (sql[i - 1].isalnum()
-                                    or sql[i - 1] in "_'\""))):
-            j = i + 2
-            body: list[str] = []
-            closed = False
-            while j < n:
-                ch = sql[j]
-                if ch == "\\" and j + 1 < n:
-                    nx = sql[j + 1]
-                    if nx in "nrtbf":
-                        body.append({"n": "\n", "r": "\r", "t": "\t",
-                                     "b": "\b", "f": "\f"}[nx])
-                        j += 2
-                        continue
-                    if nx == "x":
-                        m = re.match(r"[0-9A-Fa-f]{1,2}",
-                                     sql[j + 2:j + 4])
-                        if m:
-                            body.append(chr(int(m.group(0), 16)))
-                            j += 2 + len(m.group(0))
-                            continue
-                    if nx in "uU":
-                        w = 4 if nx == "u" else 8
-                        m = re.match(rf"[0-9A-Fa-f]{{{w}}}",
-                                     sql[j + 2:j + 2 + w])
-                        if m:
-                            body.append(chr(int(m.group(0), 16)))
-                            j += 2 + w
-                            continue
-                    if nx in "01234567":
-                        m = re.match(r"[0-7]{1,3}", sql[j + 1:j + 4])
-                        body.append(chr(int(m.group(0), 8)))
-                        j += 1 + len(m.group(0))
-                        continue
-                    body.append(nx)  # incl. \\ and \' and unknown
-                    j += 2
-                    continue
-                if ch == "'" and j + 1 < n and sql[j + 1] == "'":
-                    body.append("'")
-                    j += 2
-                    continue
-                if ch == "'":
-                    closed = True
-                    break
-                body.append(ch)
-                j += 1
-            if closed:
-                out.append("'" + _sql_quote("".join(body)) + "'")
-                i = j + 1
-                continue
-        out.append(c)
-        i += 1
-    return "".join(out)
+    toks = tokenize(sql)
+    for t in toks:
+        if t.kind == "estr":
+            body = _ESCAPE_RE.sub(_unescape, t.text[2:-1])
+            t.kind, t.text = "str", "'" + _sql_quote(body) + "'"
+    return detokenize(toks)
 
 
 def to_spark_sql(sql: str, column_kinds: dict[str, str] | None = None) -> str:

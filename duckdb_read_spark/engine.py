@@ -152,10 +152,8 @@ def _split_join_dml(query: str, kw: str) -> dict | None:
     regex split on the FIRST occurrence hijacked plain UPDATEs).
     Returns {name, sets?, src, pred} or None when the statement has no
     top-level kw (→ the plain DML paths own it)."""
-    from .dialect import _sig, tokenize
-
-    toks = tokenize(query)
-    sig = _sig(toks)
+    toks = sqltext.tokenize(query)
+    sig = sqltext.significant(toks)
 
     def up(pos: int) -> str:
         t = toks[sig[pos]]
@@ -207,26 +205,11 @@ def _split_where_top_level(rest: str) -> tuple[str, str | None]:
     """Split an UPDATE's post-SET text at the TOP-LEVEL WHERE. The old
     regex split on the first ' WHERE ' anywhere — a correlated
     subquery's inner WHERE or a string literal containing the word
-    truncated the SET list into garbage (review r7-3). Token-level:
-    string literals are single tokens and paren depth guards
-    subqueries."""
-    from .dialect import _sig, tokenize
-
-    toks = tokenize(rest)
-    sig = _sig(toks)
-    depth = 0
-    for pos, ti in enumerate(sig):
-        t = toks[ti]
-        if t.text == "(":
-            depth += 1
-        elif t.text == ")":
-            depth -= 1
-        elif depth == 0 and t.kind == "ident" \
-                and t.text.upper() == "WHERE":
-            sets = "".join(x.text for x in toks[:ti]).strip()
-            pred = "".join(
-                x.text for x in toks[ti + 1:]).strip().rstrip(";")
-            return sets, pred
+    truncated the SET list into garbage (review r7-3). The WHERE must
+    sit at depth 0 outside literals and comments (``sqltext``)."""
+    pos = sqltext.find_top_level(rest, "WHERE")
+    if pos >= 0:
+        return rest[:pos].strip(), rest[pos + 5:].strip().rstrip(";")
     return rest.strip().rstrip(";"), None
 
 
@@ -1793,14 +1776,12 @@ class Engine:
         only allows DEFAULT as a whole value), or NULL when the column
         has none. Token-level so string literals containing the word
         survive."""
-        from .dialect import _find_close, _split_args, detokenize, tokenize
-
         target = self.table(name).schema
         positions = ([c.strip() for c in cols_group.split(",")]
                      if cols_group
                      else [f.name for f in target.fields])
         defaults = self._column_defaults(name)
-        toks = tokenize(body)
+        toks = sqltext.tokenize(body)
         depth_entered = False
         i = 0
         while i < len(toks):
@@ -1810,8 +1791,8 @@ class Engine:
                 i += 1
                 continue
             if depth_entered and t.text == "(":
-                close = _find_close(toks, i)
-                spans = _split_args(toks, i, close)
+                close = sqltext.match_bracket(toks, i)
+                spans = sqltext.split_args(toks, i, close)
                 for idx, sp in enumerate(spans):
                     arg = [k for k in range(*sp)
                            if toks[k].kind not in ("ws", "comment")]
@@ -1825,7 +1806,7 @@ class Engine:
                 i = close + 1
                 continue
             i += 1
-        return detokenize(toks)
+        return sqltext.detokenize(toks)
 
     def _column_defaults(self, name: str) -> dict[str, str]:
         """Declared DEFAULT expressions for ``name``'s columns (filled
@@ -2883,7 +2864,11 @@ class Engine:
             params = [p.strip()
                       for p in sqltext.split_top_commas(mmac.group("params"))
                       if p.strip()]
-            body = mmac.group("body").strip()
+            # a trailing -- comment would swallow the ')' that the
+            # expansion wraps around the body
+            body = sqltext.detokenize(
+                [t for t in sqltext.tokenize(mmac.group("body"))
+                 if t.kind != "comment"]).strip()
             # table macros (AS TABLE SELECT …) expand to a derived table;
             # dropping the TABLE keyword makes the parenthesized expansion
             # a plain subquery in FROM position
@@ -3129,10 +3114,9 @@ class Engine:
         limit."""
         if "%" not in query or not re.search(r"(?i)\bLIMIT\b", query):
             return None
-        from .dialect import _sig, detokenize, tokenize
 
-        toks = tokenize(query)
-        sig = _sig(toks)
+        toks = sqltext.tokenize(query)
+        sig = sqltext.significant(toks)
         # drop a trailing ';'
         while sig and toks[sig[-1]].text == ";":
             sig = sig[:-1]
@@ -3165,9 +3149,9 @@ class Engine:
                 return None
         if lim_pos is None or lim_pos + 1 > end - 2:
             return None
-        pct_txt = detokenize(
+        pct_txt = sqltext.detokenize(
             toks[sig[lim_pos + 1]:sig[end - 2] + 1]).strip()
-        base = detokenize(toks[:sig[lim_pos]]).strip()
+        base = sqltext.detokenize(toks[:sig[lim_pos]]).strip()
         if not base:
             return None
         pct_row = self.sql(f"SELECT CAST(({pct_txt}) AS DOUBLE) AS p",
@@ -4353,11 +4337,9 @@ class Engine:
         so discover them here with one bounded DISTINCT scan (sorted, so
         column order matches DuckDB's sorted dynamic pivot), inject the IN
         list, and let the dialect rewriter compile the now-static form."""
-        from .dialect import _depths, _sig, tokenize
-
-        toks = tokenize(query)
-        sig = _sig(toks)
-        depths = _depths(toks)
+        toks = sqltext.tokenize(query)
+        sig = sqltext.significant(toks)
+        depths = sqltext.bracket_depths(toks)
 
         def up(k: int) -> str:
             t = toks[sig[k]]
@@ -4372,10 +4354,9 @@ class Engine:
             return query  # not the statement form; let the rewriter decide
         if any(up(k) == "IN" for k in range(on_k + 1, using_k)):
             return query  # static form — nothing to discover
-        from .dialect import detokenize
 
-        table = detokenize(toks[sig[1]:sig[on_k]]).strip()
-        on_col = detokenize(toks[sig[on_k + 1]:sig[using_k]]).strip()
+        table = sqltext.detokenize(toks[sig[1]:sig[on_k]]).strip()
+        on_col = sqltext.detokenize(toks[sig[on_k + 1]:sig[using_k]]).strip()
         vals_df = self.sql(
             f"SELECT DISTINCT {on_col} AS v FROM {table} "
             f"WHERE {on_col} IS NOT NULL ORDER BY v "
@@ -4388,8 +4369,8 @@ class Engine:
                 f"{self.PIVOT_MAX_VALUES} distinct values — pivot on a "
                 "lower-cardinality column or pass an explicit IN list")
         lits = ", ".join(_pivot_value_literal(v) for v in rows)
-        before = detokenize(toks[:sig[using_k]])
-        after = detokenize(toks[sig[using_k]:])
+        before = sqltext.detokenize(toks[:sig[using_k]])
+        after = sqltext.detokenize(toks[sig[using_k]:])
         return f"{before}IN ({lits}) {after}"
 
     # -- SET statement (pragma surface) ------------------------------------
@@ -4451,9 +4432,7 @@ class Engine:
         (token-level). Mirrors the SET pragma surface (D3): timezone and
         threads read back what SET wrote; unknown keys refuse like
         DuckB's unrecognized-setting error."""
-        from .dialect import tokenize
-
-        toks = tokenize(query)
+        toks = sqltext.tokenize(query)
         out: list[str] = []
         i = 0
         while i < len(toks):
@@ -4506,9 +4485,7 @@ class Engine:
         value as a typed literal (token-level, so occurrences inside
         string literals are untouched). An unset variable reads as NULL,
         matching DuckDB's getvariable behavior."""
-        from .dialect import detokenize, tokenize
-
-        toks = tokenize(query)
+        toks = sqltext.tokenize(query)
         out: list[str] = []
         i = 0
         while i < len(toks):
@@ -4823,11 +4800,9 @@ class Engine:
         if re.match(r"(?is)^\s*,", tail):
             return None  # further CTEs — out of scope, native path
         # top-level UNION (not ALL / BY NAME) inside the body
-        from .dialect import _depths, _sig, detokenize, tokenize
-
-        toks = tokenize(body)
-        sig = _sig(toks)
-        depths = _depths(toks)
+        toks = sqltext.tokenize(body)
+        sig = sqltext.significant(toks)
+        depths = sqltext.bracket_depths(toks)
         u = None
         for p, ti in enumerate(sig):
             t = toks[ti]
@@ -4841,8 +4816,8 @@ class Engine:
                 break
         if u is None:
             return None
-        anchor = detokenize(toks[:u[0]])
-        step = detokenize(toks[u[0] + 1:]).lstrip()
+        anchor = sqltext.detokenize(toks[:u[0]])
+        step = sqltext.detokenize(toks[u[0] + 1:]).lstrip()
         if step.upper().startswith("DISTINCT"):
             step = step[8:]
         from .plans.recursive import _ref_positions
@@ -4897,17 +4872,16 @@ class Engine:
         if not re.match(r"(?is)^\s*(INSERT|UPDATE|DELETE)\b", query) \
                 or not re.search(r"(?i)\bRETURNING\b", query):
             return None
-        from .dialect import _depths, _sig, detokenize, tokenize
 
-        toks = tokenize(query)
-        sig = _sig(toks)
-        depths = _depths(toks)
+        toks = sqltext.tokenize(query)
+        sig = sqltext.significant(toks)
+        depths = sqltext.bracket_depths(toks)
         for p in range(len(sig) - 1, -1, -1):
             t = toks[sig[p]]
             if (t.kind == "ident" and t.text.upper() == "RETURNING"
                     and depths[sig[p]] == 0):
-                stmt = detokenize(toks[:sig[p]]).rstrip()
-                rlist = (detokenize(toks[sig[p] + 1:])
+                stmt = sqltext.detokenize(toks[:sig[p]]).rstrip()
+                rlist = (sqltext.detokenize(toks[sig[p] + 1:])
                          .strip().rstrip(";").strip())
                 if rlist:
                     return stmt, rlist
@@ -6152,10 +6126,8 @@ def _looks_like_create_table(rest: str) -> bool:
 def _qualify_bare_columns(expr: str, table: str, columns: set[str]) -> str:
     """Prefix unqualified references to ``columns`` with ``table.`` —
     token-aware (skips qualified refs, function calls, string literals)."""
-    from .dialect import detokenize, tokenize
-
-    toks = tokenize(expr)
-    sig = [i for i, t in enumerate(toks) if t.kind not in ("ws", "comment")]
+    toks = sqltext.tokenize(expr)
+    sig = sqltext.significant(toks)
     for pos, i in enumerate(sig):
         t = toks[i]
         if t.kind != "ident" or t.text not in columns:
@@ -6165,7 +6137,7 @@ def _qualify_bare_columns(expr: str, table: str, columns: set[str]) -> str:
         if pos + 1 < len(sig) and toks[sig[pos + 1]].text in (".", "("):
             continue          # qualifier itself / function call
         toks[i] = type(t)("other", f"{table}.{t.text}")
-    return detokenize(toks)
+    return sqltext.detokenize(toks)
 
 
 def _variable_literal(v) -> str:

@@ -45,6 +45,8 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
+from . import sqltext
+
 _LOG_DIR = "_log"
 _DATA_DIR = "data"
 _CDC_DIR = "_change_data"
@@ -1151,49 +1153,6 @@ def _parse_lit(text: str):
     return float(text) if "." in text else int(text)
 
 
-def _split_top_and(pred: str) -> list[str] | None:
-    """Split on top-level AND (outside parens/strings); None if the
-    predicate contains a top-level OR/NOT (can't prune conjunct-wise)."""
-    parts, depth, buf = [], 0, []
-    in_str = False
-    between_depth: list[int] = []  # BETWEEN ... AND: that AND is not a split
-    toks = re.split(r"(\s+|\(|\)|')", pred)
-    i = 0
-    while i < len(toks):
-        t = toks[i]
-        if in_str:
-            buf.append(t)
-            if t == "'":
-                in_str = False
-            i += 1
-            continue
-        if t == "'":
-            in_str = True
-            buf.append(t)
-        elif t == "(":
-            depth += 1
-            buf.append(t)
-        elif t == ")":
-            depth -= 1
-            buf.append(t)
-        elif t.upper() == "BETWEEN":
-            between_depth.append(depth)
-            buf.append(t)
-        elif t.upper() == "AND" and between_depth and between_depth[-1] == depth:
-            between_depth.pop()
-            buf.append(t)
-        elif depth == 0 and t.upper() == "AND":
-            parts.append("".join(buf))
-            buf = []
-        elif depth == 0 and t.upper() in ("OR", "NOT"):
-            return None
-        else:
-            buf.append(t)
-        i += 1
-    parts.append("".join(buf))
-    return [p.strip() for p in parts if p.strip()]
-
-
 _ISO_T_RE = re.compile(r"^\d{4}-\d{2}-\d{2}T\d{2}:\d{2}")
 
 
@@ -1254,9 +1213,9 @@ def prune_by_stats(entries: list[dict], pred: str) -> list[dict]:
     pure-metadata candidate cut (no Spark job), the same skip a format's
     manifest gives a scan. Conservative: anything unparseable keeps the
     file."""
-    conjuncts = _split_top_and(pred)
-    if conjuncts is None:
-        return list(entries)
+    if any(sqltext.find_top_level(pred, w) >= 0 for w in ("OR", "NOT")):
+        return list(entries)  # not a conjunction: no per-conjunct cut
+    conjuncts = sqltext.split_top_and(pred)
     out = []
     for e in entries:
         stats = e.get("stats") or {}

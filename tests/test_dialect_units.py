@@ -872,6 +872,29 @@ _SQLTEXT_CASES = [
     ("word_absent", "find_top_level", ("SELECT rate_limit FROM t", "LIMIT"),
      -1),
     ("unbalanced", "match_paren", ("f(a, (b)", 1), ValueError),
+    # a ' inside any other atomic class opens no literal
+    ("quote_in_qid", "split_top_commas", ('"a\'b", (c), d',),
+     ['"a\'b"', "(c)", "d"]),
+    ("quote_in_bqid", "split_top_commas", ("`a'b`, (c), d",),
+     ["`a'b`", "(c)", "d"]),
+    ("quote_in_dollar", "split_top_commas", ("$$it's$$, (c), d",),
+     ["$$it's$$", "(c)", "d"]),
+    ("quote_in_tagged_dollar", "split_top_commas", ("$t$a'b$t$, (c), d",),
+     ["$t$a'b$t$", "(c)", "d"]),
+    ("quote_in_escape_string", "split_top_commas", ("E'it\\'s', (c), d",),
+     ["E'it\\'s'", "(c)", "d"]),
+    # the token matcher: forward from an opener, backward from a closer,
+    # across mixed ( [ {
+    ("tok_match_forward", "match_bracket",
+     (sqltext.tokenize("f([{1}, (2)], 3)"), 1), 15),
+    ("tok_match_backward", "match_bracket",
+     (sqltext.tokenize("f([{1}, (2)], 3)"), 11), 2),
+    # BETWEEN's AND is not a conjunct boundary; an AND in a literal is data
+    ("and_between", "split_top_and",
+     ("k BETWEEN 1 AND 5 AND s = 'x AND y'",),
+     ["k BETWEEN 1 AND 5", "s = 'x AND y'"]),
+    ("and_under_or", "split_top_and", ("a = 1 OR b = 2 AND c = 3",),
+     ["a = 1 OR b = 2", "c = 3"]),
 ]
 
 
@@ -885,3 +908,23 @@ def test_sqltext_lexical_rule(fn, args, want):
             call(*args)
     else:
         assert call(*args) == want
+
+
+def test_dialect_passes_call_tokenize_through_module_global(monkeypatch):
+    """The benchmark's ``dialect.tokenize.calls`` figure counts calls by
+    patching that module attribute, so the rewrite passes must look the
+    tokenizer up there rather than in ``sqltext``."""
+    from duckdb_read_spark import dialect
+    from duckdb_read_spark.queries import QUERIES
+
+    calls = []
+    real = dialect.tokenize
+
+    def counting(sql):
+        calls.append(sql)
+        return real(sql)
+
+    monkeypatch.setattr(dialect, "tokenize", counting)
+    spec = QUERIES["q05_pricing_summary"]
+    to_spark_sql(spec.duckdb or spec.spark)
+    assert calls

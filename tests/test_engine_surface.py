@@ -801,6 +801,23 @@ _LEXICAL_CASES = {
     # a quoted ',' inside a read_* list option is one element
     "read_csv_list_option": (
         None, "SELECT c FROM read_csv('{csv}', names=['a,b', 'c'])"),
+    # a ' inside a quoted identifier, a dollar-quoted string or an E'…'
+    # escape string opens no literal before UNION BY NAME or FROM-first
+    "union_by_name_quoted_ident": (
+        None, "SELECT 1 AS \"a'b\", 2 AS c UNION BY NAME "
+              "SELECT 3 AS c, 4 AS \"a'b\""),
+    "from_first_quoted_ident": (
+        None, "FROM (SELECT 1 AS \"a'b\", 'x' AS c) t SELECT c, \"a'b\""),
+    "union_by_name_dollar_string": (
+        None, "SELECT $$it's$$ AS s, 1 AS n UNION BY NAME "
+              "SELECT 2 AS n, 'x' AS s"),
+    "union_by_name_escape_string": (
+        None, "SELECT E'it\\'s' AS s, 1 AS n UNION BY NAME "
+              "SELECT 2 AS n, 'x' AS s"),
+    # a macro body's trailing comment does not swallow the call's ')'
+    "macro_body_comment": (
+        "CREATE OR REPLACE MACRO lex_m(x) AS x + 1 -- note",
+        "SELECT lex_m(a) AS r FROM lex_t WHERE a > 1"),
 }
 
 
