@@ -16,13 +16,17 @@ protocol (https://github.com/delta-io/delta/blob/master/PROTOCOL.md), so
 
 Action shapes written (one JSON object per line, spec §Actions):
 
-* ``{"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}}``
+* ``{"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}}``,
+  lifted to 3/7 with the ``deletionVectors`` feature by the first
+  deletion vector
 * ``{"metaData": {"id", "format": {"provider": "parquet", "options"},
   "schemaString", "partitionColumns", "configuration", "createdTime"}}``
 * ``{"add": {"path", "partitionValues", "size", "modificationTime",
-  "dataChange", "stats"}}`` — stats is the spec's JSON string with
-  ``numRecords`` / ``minValues`` / ``maxValues``.
-* ``{"remove": {"path", "deletionTimestamp", "dataChange"}}``
+  "dataChange", "stats", "deletionVector"?}}`` — stats is the spec's
+  JSON string with ``numRecords`` / ``minValues`` / ``maxValues``; the
+  deletion vector is the private manifest's ``dv`` descriptor.
+* ``{"remove": {"path", "deletionTimestamp", "dataChange",
+  "deletionVector"?}}``
 * ``{"commitInfo": {...}}`` (free-form provenance, first line)
 
 Commit files are ``{version:020d}.json`` (0-based like Delta; private log
@@ -92,18 +96,45 @@ def _add_action(table_dir: str, entry: dict, ts_ms: int,
         "modificationTime": mtime,
         "dataChange": data_change,
         "stats": _stats_str(entry),
+        **({"deletionVector": entry["dv"]} if entry.get("dv") else {}),
     }}
 
 
-def _existing_meta(table_dir: str) -> dict | None:
-    """The latest metaData action already in the delta log (carries the
-    stable table id)."""
+def _latest(table_dir: str) -> tuple[dict | None, dict]:
+    """The latest metaData action already in the delta log (it carries
+    the stable table id) and the latest protocol, from one pass."""
     meta = None
+    proto = {"minReaderVersion": 1, "minWriterVersion": 2}
     for v in _list_versions(table_dir):
         for a in _read_actions(table_dir, v):
             if "metaData" in a:
                 meta = a["metaData"]
-    return meta
+            if "protocol" in a:
+                proto = dict(a["protocol"])
+    return meta, proto
+
+
+def _lift_protocol(proto: dict, dv: bool, cdf: bool) -> dict:
+    """``proto`` with the deletionVectors (reader 3 / writer 7) and
+    change-data-feed (writer 4) features a commit needs. Features are
+    UNIONED, never dropped: overwriting would silently downgrade what a
+    foreign writer declared."""
+    out = dict(proto)
+    if cdf:
+        out["minWriterVersion"] = max(out.get("minWriterVersion", 2), 4)
+    if dv:
+        out["minReaderVersion"] = max(out.get("minReaderVersion", 1), 3)
+        out["minWriterVersion"] = max(out.get("minWriterVersion", 2), 7)
+        out["readerFeatures"] = sorted(
+            set(out.get("readerFeatures") or []) | {"deletionVectors"})
+        out["writerFeatures"] = sorted(
+            set(out.get("writerFeatures") or []) | {"deletionVectors"})
+    if cdf and out["minWriterVersion"] >= 7:
+        # feature-table protocols activate ONLY listed features —
+        # without the name, compliant clients treat CDF as off
+        out["writerFeatures"] = sorted(
+            set(out.get("writerFeatures") or []) | {"changeDataFeed"})
+    return out
 
 
 def _meta_at(table_dir: str, version: int | None = None) -> dict | None:
@@ -337,6 +368,20 @@ def delta_snapshot(table_dir: str, version: int | None = None
     return last0 + 1, files
 
 
+def _dv_file(table_dir: str, dv: dict) -> str:
+    """The file a 'u' (UUID-named under the table dir) or 'p' (path)
+    deletionVector descriptor lives in."""
+    from . import roaring
+
+    p = dv["pathOrInlineDv"]
+    if dv.get("storageType") == "p":
+        return p if os.path.isabs(p) else os.path.join(table_dir, p)
+    prefix, enc = p[:-20], p[-20:]   # optional random prefix
+    u = uuid.UUID(bytes=roaring.z85_decode(enc))
+    parts = [table_dir] + ([prefix] if prefix else [])
+    return os.path.join(*parts, f"deletion_vector_{u}.bin")
+
+
 def _load_dv_bytes(table_dir: str, dv: dict) -> bytes:
     """A deletionVector descriptor → its portable RoaringBitmapArray
     bytes (PROTOCOL.md storage types: 'i' inline Z85, 'u' UUID-named
@@ -349,18 +394,7 @@ def _load_dv_bytes(table_dir: str, dv: dict) -> bytes:
         data = roaring.z85_decode(dv["pathOrInlineDv"])
         return data[:size] if size else data   # Z85 pads to 4 bytes
     if st in ("u", "p"):
-        if st == "p":
-            p = dv["pathOrInlineDv"]
-            path = p if os.path.isabs(p) else os.path.join(table_dir, p)
-        else:
-            import uuid as _uuid
-
-            enc = dv["pathOrInlineDv"]
-            prefix, enc = enc[:-20], enc[-20:]   # optional random prefix
-            u = _uuid.UUID(bytes=roaring.z85_decode(enc))
-            parts = [table_dir] + ([prefix] if prefix else [])
-            path = os.path.join(*parts, f"deletion_vector_{u}.bin")
-        with open(path, "rb") as f:
+        with open(_dv_file(table_dir, dv), "rb") as f:
             buf = f.read()
         off = dv.get("offset")
         return roaring.unframe_dv(buf, 1 if off is None else off, size)
@@ -368,49 +402,99 @@ def _load_dv_bytes(table_dir: str, dv: dict) -> bytes:
         f"deletion vector storageType {st!r} not supported")
 
 
+def dv_positions(table_dir: str, dv: dict) -> list[int]:
+    """The row indexes a deletionVector descriptor marks deleted."""
+    from . import roaring
+
+    return roaring.deserialize_bitmap_array(_load_dv_bytes(table_dir, dv))
 
 
-# Deletion vectors whose TOTAL cardinality is at or below this expand on
-# the driver into a literal (path, pos) relation — the anti-join side
-# then plans as a LocalTableScan with no Python worker stage (r13, guide
-# §4: the mapInPandas hop cost ~0.3-0.5 s per read even for a 4-position
-# DV). 128k longs ≈ 2 MB — metadata-sized, and far under any broadcast
-# threshold. The count is the bitmaps' own, taken without expanding
-# them; larger vectors, and descriptors whose declared cardinality
-# disagrees with their bitmap, keep the executor-side expansion so
+def write_dv(table_dir: str, positions: "list[int]") -> dict:
+    """Write ``positions`` as a deletion-vector file at the table root
+    ('u' storage: version byte, then size/CRC framing) and return its
+    ``deletionVector`` descriptor."""
+    from . import roaring
+
+    positions = sorted(positions)
+    data = roaring.serialize_bitmap_array(positions)
+    u = uuid.uuid4()
+    with open(os.path.join(table_dir, f"deletion_vector_{u}.bin"),
+              "wb") as f:
+        f.write(b"\x01" + roaring.frame_dv(data))
+    return {"storageType": "u", "pathOrInlineDv": roaring.z85_encode(u.bytes),
+            "offset": 1, "sizeInBytes": len(data),
+            "cardinality": len(positions)}
+
+
+def absolute_dv(table_dir: str, dv: dict) -> dict:
+    """``dv`` as a descriptor that resolves from any table dir: file
+    storage becomes 'p' with an absolute path (a shallow clone
+    references the source's vectors this way)."""
+    if dv.get("storageType") not in ("u", "p"):
+        return dv
+    return dict(dv, storageType="p",
+                pathOrInlineDv=os.path.abspath(_dv_file(table_dir, dv)))
+
+
+# Deletion vectors whose TOTAL cardinality is at or below this apply as
+# a scan filter on the file's row index, with the positions expanded on
+# the driver (an executor-side expansion costs ~0.3-0.5 s per read even
+# for a 4-position DV). 128k longs ≈ 2 MB — metadata-sized.
+# The count is the bitmaps' own, taken without expanding them; larger
+# vectors, and descriptors whose declared cardinality disagrees with
+# their bitmap, keep the executor-side expansion and an anti-join, so
 # millions of deleted rows never materialize on the driver.
 _DV_DRIVER_EXPAND_MAX = 128 * 1024
 
+# The explicit (file, row index) columns a scan carries while DVs apply:
+# ``_metadata`` resolves only on the scan relation itself, not through a
+# temp view or a join.
+ROW_ID_COLS = ("__dv_file", "__dv_pos")
 
-def _dv_rows_df(spark, table_dir: str, dvs: dict[str, dict]):
-    """(file path, deleted row index) rows for every DV-carrying add.
 
-    The driver touches only the COMPRESSED bitmaps (metadata-sized, one
-    per file — the same class as the log actions themselves); expansion
-    to row indexes happens executor-side in mapInPandas — UNLESS the
-    bitmaps' total cardinality is small enough to expand on the driver
-    (``_DV_DRIVER_EXPAND_MAX``) and matches every descriptor's declared
-    one, which skips the Python worker stage entirely. A table with
-    millions of deleted rows never materializes them on the driver
-    either way."""
+def with_row_ids(df):
+    """A raw parquet scan plus its ``ROW_ID_COLS``; the file column is
+    the decoded absolute path (``pathnorm``), so it compares equal to
+    ``os.path.abspath`` of the manifest path."""
+    from .pathnorm import decoded_file_path_sql
+
+    return df.selectExpr(
+        "*", f"{decoded_file_path_sql('_metadata.file_path')} AS "
+        f"{ROW_ID_COLS[0]}",
+        f"_metadata.row_index AS {ROW_ID_COLS[1]}")
+
+
+def rows_at(table_dir: str, positions: dict[str, "list[int]"]) -> str | None:
+    """A SQL condition over a raw scan's ``_metadata`` true exactly on
+    the given row indexes of the given files (keys relative to
+    ``table_dir`` or absolute); None when no position is given. The row
+    index is tested first, so the file path is decoded only on
+    candidate rows."""
+    from .pathnorm import decoded_file_path_sql, sql_string
+
+    path_sql = decoded_file_path_sql("_metadata.file_path")
+    conds, every = [], set()
+    for rel, pos in sorted(positions.items()):
+        if not pos:
+            continue
+        every.update(pos)
+        path = sql_string(os.path.abspath(os.path.join(table_dir, rel)))
+        conds.append(f"({path_sql} = {path} AND "
+                     f"_metadata.row_index IN ({', '.join(map(str, pos))}))")
+    if not conds:
+        return None
+    return (f"(_metadata.row_index IN ({', '.join(map(str, sorted(every)))})"
+            f" AND ({' OR '.join(conds)}))")
+
+
+def _dv_rows_df(spark, rows: list[tuple[str, bytes]]):
+    """(file path, deleted row index) rows expanded executor-side in
+    mapInPandas from ``(abs path, bitmap bytes)`` pairs — the driver
+    touches only the COMPRESSED bitmaps."""
     import pandas as pd
 
-    from . import roaring
-
-    items = sorted(dvs.items())
-    rows = [
-        (os.path.abspath(os.path.join(table_dir, rel)),
-         bytearray(_load_dv_bytes(table_dir, dv)))
-        for rel, dv in items
-    ]
-    cards = [roaring.bitmap_array_cardinality(bytes(data))
-             for _, data in rows]
-    if (sum(cards) <= _DV_DRIVER_EXPAND_MAX
-            and cards == [dv.get("cardinality") for _, dv in items]):
-        flat = [(path, idx) for path, data in rows
-                for idx in roaring.deserialize_bitmap_array(bytes(data))]
-        return spark.createDataFrame(flat, "path string, pos bigint")
-    src = spark.createDataFrame(rows, "path string, dv binary")
+    src = spark.createDataFrame(
+        [(p, bytearray(d)) for p, d in rows], "path string, dv binary")
 
     def gen(batches):
         from . import roaring
@@ -427,27 +511,35 @@ def _dv_rows_df(spark, table_dir: str, dvs: dict[str, dict]):
     return src.mapInPandas(gen, "path string, pos bigint")
 
 
-def _apply_dvs(spark, df, table_dir: str, dvs: dict[str, dict]):
-    """Anti-join the deleted (file, row index) pairs out of a scan —
-    positions come from ``_metadata.row_index``, so this is a pure
-    projection on the scan side plus one equi-join (AQE broadcasts the
-    DV side when small, which it is by construction)."""
-    from pyspark.sql import functions as F
+def mask_rows(spark, df, table_dir: str, dvs: dict[str, dict],
+              row_ids: bool = False):
+    """Drop the rows the deletion vectors ``dvs`` ({file path relative to
+    ``table_dir`` or absolute: descriptor}) mark from ``df``, a raw
+    parquet scan; with ``row_ids`` the result carries ``ROW_ID_COLS``.
+    Small vectors become one filter on the scan; large ones an anti-join
+    against their executor-side expansion (AQE broadcasts the DV side
+    when small)."""
+    from . import roaring
 
-    from .pathnorm import decoded_file_path
-
-    cols = df.columns
-    norm = decoded_file_path(F.col("_metadata.file_path"))
-    base = df.select(
-        "*", norm.alias("__dv_path"),
-        F.col("_metadata.row_index").alias("__dv_pos"))
-    dvdf = _dv_rows_df(spark, table_dir, dvs)
+    items = sorted(dvs.items())
+    raw = [_load_dv_bytes(table_dir, dv) for _, dv in items]
+    cards = [roaring.bitmap_array_cardinality(data) for data in raw]
+    if (sum(cards) <= _DV_DRIVER_EXPAND_MAX
+            and cards == [dv.get("cardinality") for _, dv in items]):
+        cond = rows_at(table_dir, {
+            rel: roaring.deserialize_bitmap_array(data)
+            for (rel, _), data in zip(items, raw)})
+        if cond is not None:
+            df = df.filter(f"NOT {cond}")
+        return with_row_ids(df) if row_ids else df
+    base = with_row_ids(df)
+    dvdf = _dv_rows_df(spark, [
+        (os.path.abspath(os.path.join(table_dir, rel)), data)
+        for (rel, _), data in zip(items, raw)])
     out = base.join(
-        dvdf,
-        on=[base["__dv_path"] == dvdf["path"],
-            base["__dv_pos"] == dvdf["pos"]],
-        how="left_anti")
-    return out.select(*cols)
+        dvdf, on=[base[ROW_ID_COLS[0]] == dvdf["path"],
+                  base[ROW_ID_COLS[1]] == dvdf["pos"]], how="left_anti")
+    return out if row_ids else out.drop(*ROW_ID_COLS)
 
 
 def live_deletion_vectors(files: dict[str, dict]) -> dict[str, dict]:
@@ -472,10 +564,6 @@ def attach_deletion_vector(table_dir: str, rel_path: str,
     Refuses on tables with a private ``_log`` (their DML goes through
     the snapshots machinery; a mirror-only DV would silently diverge
     the two logs)."""
-    import uuid as _uuid
-
-    from . import roaring
-
     if os.path.isdir(os.path.join(table_dir, "_log")):
         raise ValueError(
             "attach_deletion_vector is for foreign _delta_log-only "
@@ -490,24 +578,11 @@ def attach_deletion_vector(table_dir: str, rel_path: str,
     # previously deleted rows (review r6); delta-spark's DELETE merges.
     old_dv = old_add.get("deletionVector")
     if old_dv and old_dv.get("cardinality", 1) != 0:
-        positions |= set(
-            roaring.deserialize_bitmap_array(
-                _load_dv_bytes(table_dir, old_dv)))
-    positions = sorted(positions)
-    data = roaring.serialize_bitmap_array(positions)
-    u = _uuid.uuid4()
-    with open(os.path.join(table_dir, f"deletion_vector_{u}.bin"),
-              "wb") as f:
-        f.write(b"\x01" + roaring.frame_dv(data))
+        positions |= set(dv_positions(table_dir, old_dv))
     add = dict(old_add)
     add["path"] = rel_path
     add["dataChange"] = True      # the visible rows change
-    add["deletionVector"] = {
-        "storageType": "u",
-        "pathOrInlineDv": roaring.z85_encode(u.bytes),
-        "offset": 1, "sizeInBytes": len(data),
-        "cardinality": len(positions),
-    }
+    add["deletionVector"] = write_dv(table_dir, sorted(positions))
     # spec reconciliation keys actions by (path, dv uniqueId): without a
     # remove for the OLD entry, external readers see TWO live entries
     # for the file and return every row twice (review r6)
@@ -516,19 +591,7 @@ def attach_deletion_vector(table_dir: str, rel_path: str,
               "dataChange": True}
     if old_dv:
         remove["deletionVector"] = old_dv
-    # UNION protocol features — overwriting would silently downgrade
-    # the foreign table's other writerFeatures (review r6)
-    proto = {"minReaderVersion": 1, "minWriterVersion": 2}
-    for v0 in _list_versions(table_dir):
-        for a in _read_actions(table_dir, v0):
-            if "protocol" in a:
-                proto = dict(a["protocol"])
-    proto["minReaderVersion"] = max(proto.get("minReaderVersion", 1), 3)
-    proto["minWriterVersion"] = max(proto.get("minWriterVersion", 2), 7)
-    proto["readerFeatures"] = sorted(
-        set(proto.get("readerFeatures") or []) | {"deletionVectors"})
-    proto["writerFeatures"] = sorted(
-        set(proto.get("writerFeatures") or []) | {"deletionVectors"})
+    proto = _lift_protocol(_latest(table_dir)[1], dv=True, cdf=False)
     v = _list_versions(table_dir)[-1] + 1
     actions = [{"protocol": proto}, {"remove": remove}, {"add": add}]
     path = _delta_path(table_dir, v)
@@ -656,7 +719,7 @@ def read_delta_table(spark, table_dir: str, version: int | None = None):
     if not files:
         raise FileNotFoundError(f"delta snapshot at {table_dir!r} is empty")
     dvs = live_deletion_vectors(files)
-    meta = _meta_at(table_dir, version) or _existing_meta(table_dir) or {}
+    meta = _meta_at(table_dir, version) or _latest(table_dir)[0] or {}
     cm_mode = column_mapping_mode(meta)
     cm_schema = None
     if cm_mode in ("name", "id"):
@@ -685,12 +748,13 @@ def read_delta_table(spark, table_dir: str, version: int | None = None):
             pcols = sorted(back.get(k, k) for k in pcols)
     # the scan side (paths, partitionValues keys) speaks PHYSICAL names
     ppcols = [phys_of.get(k, k) for k in pcols]
-    paths = [os.path.join(table_dir, p) for p in sorted(files)]
     if not pcols:
-        df = spark.read.option("mergeSchema", "true").parquet(*paths)
-        if dvs:
-            df = _apply_dvs(spark, df, table_dir, dvs)
-        return logical_view(df)
+        from . import snapshots
+
+        return logical_view(snapshots.read_files(
+            spark, table_dir,
+            [{"path": p, "dv": dvs.get(p)} for p in sorted(files)], None))
+    paths = [os.path.join(table_dir, p) for p in sorted(files)]
 
     from pyspark.sql import functions as F
     from pyspark.sql.types import StringType, StructType
@@ -727,7 +791,7 @@ def read_delta_table(spark, table_dir: str, version: int | None = None):
         df = (spark.read.option("basePath", table_dir)
               .option("mergeSchema", "true").parquet(*paths))
         if dvs:   # before the casts: _metadata needs the scan relation
-            df = _apply_dvs(spark, df, table_dir, dvs)
+            df = mask_rows(spark, df, table_dir, dvs)
         for k in ppcols:  # discovery infers types from dir strings — pin
             df = df.withColumn(
                 k, F.col(f"`{k}`").cast(ptypes.get(k, StringType())))
@@ -789,6 +853,14 @@ def mirror_commit(
     protocol to the CDF legacy version (4), never downgrading features a
     foreign writer already declared.
 
+    Entries carrying a ``dv`` (the private manifest's deletion vector)
+    mirror as adds with that ``deletionVector``; a carried file whose
+    vector changed is first removed under its old (path, DV) pair. The
+    first such commit lifts the protocol to reader 3 / writer 7 with
+    ``deletionVectors`` in both feature lists. A DELETE commits only
+    vectors, so its mirror has no ``cdc`` action: the feed is derived
+    from the vectors.
+
     Tables created before the mirror existed are backfilled first
     (:func:`backfill`), so the delta log always starts at version 0.
     """
@@ -805,7 +877,7 @@ def mirror_commit(
         "timestamp": ts, "operation": mode.upper(),
         "engineInfo": "duckdb_read_spark",
     }}]
-    meta = _existing_meta(table_dir)
+    meta, proto = _latest(table_dir)
     cdf_on = (meta or {}).get("configuration", {}).get(
         "delta.enableChangeDataFeed") == "true"
     if meta is None or (schema_json is not None
@@ -822,45 +894,42 @@ def mirror_commit(
             "configuration": conf,
             "createdTime": (meta or {}).get("createdTime", ts),
         }})
-    if version == 1:
-        actions.insert(1, {"protocol": {
-            "minReaderVersion": 1,
-            "minWriterVersion": 4 if cdc_entries else 2}})
-    elif cdc_entries and not cdf_on:
-        # lift to the CDF legacy writer version, preserving whatever a
-        # foreign writer already declared (same union rule the DV path
-        # follows)
-        proto = {"minReaderVersion": 1, "minWriterVersion": 2}
-        for v0 in _list_versions(table_dir):
-            for a in _read_actions(table_dir, v0):
-                if "protocol" in a:
-                    proto = dict(a["protocol"])
-        proto["minWriterVersion"] = max(proto.get("minWriterVersion", 2), 4)
-        if proto["minWriterVersion"] >= 7:
-            # feature-table protocols activate ONLY listed features —
-            # without the name, compliant clients treat CDF as off
-            # (review r6)
-            proto["writerFeatures"] = sorted(
-                set(proto.get("writerFeatures") or []) | {"changeDataFeed"})
-        actions.insert(1, {"protocol": proto})
+    # lift the protocol for the features this commit uses — the CDF
+    # legacy writer version, deletion vectors — keeping whatever a
+    # foreign writer already declared
+    lifted = _lift_protocol(
+        proto, dv=any(e.get("dv") for e in new_entries + carried_entries),
+        cdf=bool(cdc_entries) or cdf_on)
+    if version == 1 or lifted != proto:
+        actions.insert(1, {"protocol": lifted})
     for e in (cdc_entries or []):
         actions.append({"cdc": {
             "path": e["path"].replace(os.sep, "/"),
             "partitionValues": {}, "size": e["size"],
             "dataChange": False}})
+
+    def remove(p: str) -> dict:
+        rm = {"path": p, "deletionTimestamp": ts, "dataChange": data_change}
+        if prev[p].get("deletionVector"):
+            rm["deletionVector"] = prev[p]["deletionVector"]
+        return {"remove": rm}
+
     new_paths = {e["path"].replace(os.sep, "/") for e in new_entries}
     if mode == "overwrite":
-        keep = new_paths | {e["path"].replace(os.sep, "/")
-                            for e in carried_entries}
+        carried = {e["path"].replace(os.sep, "/"): e for e in carried_entries}
         # dataChange mirrors the private flag: OPTIMIZE/clustering
         # rewrites carry data_change=False, so external CDF readers
         # deriving a feed from add/remove see NO phantom changes
         # (review r6); with CDC sidecars present, spec readers use the
         # cdc actions exclusively for this commit anyway
-        for p in sorted(set(prev) - keep):
-            actions.append({"remove": {
-                "path": p, "deletionTimestamp": ts,
-                "dataChange": data_change}})
+        for p in sorted(set(prev) - new_paths - set(carried)):
+            actions.append(remove(p))
+        # a carried file whose deletion vector changed: spec readers key
+        # files by (path, DV), so the old pair is removed before the
+        # re-add or they would see both
+        for p, e in sorted(carried.items()):
+            if p in prev and prev[p].get("deletionVector") != e.get("dv"):
+                actions.append(remove(p))
         for e in carried_entries:
             actions.append(_add_action(table_dir, e, ts,
                                        data_change=data_change))
@@ -974,11 +1043,18 @@ def write_checkpoint(table_dir: str, version0: int) -> None:
                  _add_action(table_dir, e, ts_ms)["add"] for e in entries}
     except FileNotFoundError:
         _, files = delta_snapshot(table_dir, version0 + 1)
-    meta = _existing_meta(table_dir) or {}
+    meta, proto = _latest(table_dir)
+    meta = meta or {}
     str_map = pa.map_(pa.string(), pa.string())
+    dv_type = pa.struct([
+        ("storageType", pa.string()), ("pathOrInlineDv", pa.string()),
+        ("offset", pa.int32()), ("sizeInBytes", pa.int32()),
+        ("cardinality", pa.int64())])
     schema = pa.schema([
         ("protocol", pa.struct([("minReaderVersion", pa.int32()),
-                                ("minWriterVersion", pa.int32())])),
+                                ("minWriterVersion", pa.int32()),
+                                ("readerFeatures", pa.list_(pa.string())),
+                                ("writerFeatures", pa.list_(pa.string()))])),
         ("metaData", pa.struct([
             ("id", pa.string()),
             ("format", pa.struct([("provider", pa.string()),
@@ -995,6 +1071,7 @@ def write_checkpoint(table_dir: str, version0: int) -> None:
             ("modificationTime", pa.int64()),
             ("dataChange", pa.bool_()),
             ("stats", pa.string()),
+            ("deletionVector", dv_type),
         ])),
         ("remove", pa.struct([("path", pa.string()),
                               ("deletionTimestamp", pa.int64()),
@@ -1003,7 +1080,7 @@ def write_checkpoint(table_dir: str, version0: int) -> None:
                            ("version", pa.int64())])),
     ])
     rows: list[dict] = [
-        {"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}},
+        {"protocol": proto},
         {"metaData": {
             "id": meta.get("id", str(uuid.uuid4())),
             "format": {"provider": "parquet",
@@ -1021,7 +1098,7 @@ def write_checkpoint(table_dir: str, version0: int) -> None:
         a.setdefault("stats", None)
         rows.append({"add": {k: a.get(k) for k in (
             "path", "partitionValues", "size", "modificationTime",
-            "dataChange", "stats")}})
+            "dataChange", "stats", "deletionVector")}})
     table = pa.Table.from_pylist(rows, schema=schema)
     ckpt = os.path.join(table_dir, _DELTA_DIR,
                         f"{version0:020d}.checkpoint.parquet")
@@ -1044,7 +1121,7 @@ def truncate(table_dir: str, before_version: int) -> int:
     written for the surviving base (ADVICE r5: delta-spark/delta-rs reject
     a log whose lowest version is N>0 with no checkpoint — replay must be
     able to start at the base). Returns files removed."""
-    meta = _existing_meta(table_dir)  # capture BEFORE files disappear
+    meta, proto = _latest(table_dir)  # capture BEFORE files disappear
     n = 0
     for v in _list_versions(table_dir):
         if v < before_version - 1:
@@ -1064,8 +1141,7 @@ def truncate(table_dir: str, before_version: int) -> int:
         have = {k for a in actions for k in a}
         patch: list[dict] = []
         if "protocol" not in have:
-            patch.append({"protocol": {"minReaderVersion": 1,
-                                       "minWriterVersion": 2}})
+            patch.append({"protocol": proto})
         if "metaData" not in have and meta is not None:
             patch.append({"metaData": meta})
         if patch:

@@ -16,6 +16,8 @@ allowlist that mirrors safe mode (/root/reference/duckdb:122-125).
 
 from __future__ import annotations
 
+import contextlib
+import functools
 import importlib
 import os
 import re
@@ -24,7 +26,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 
 from .conf import BUILD_CONFS, RUNTIME_CONFS, TABLES, apply_runtime_confs
-from . import catalog, hudilog, iceberglog, snapshots, sqltext
+from . import catalog, deltalog, hudilog, iceberglog, snapshots, sqltext
 from .dialect import substitute_select_alias, to_spark_sql
 from .sources import sinks
 
@@ -38,16 +40,12 @@ from .sources import sinks
 import itertools
 import weakref
 
+# The private view a row-level DML statement reads its target's
+# candidate files (with row ids) through, aliased as the target.
+_DML_PROBE = "__dml_probe"
+
 _FTS_SCORES_BY_PATH: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
 _FTS_VIEW_SEQ = itertools.count(1)
-
-# File-level DML probe gate: the exact input_file_name() probe only
-# narrows the manifest stats cut's candidate files; when the candidates
-# total at most this many bytes, rewriting them all is cheaper than the
-# probe job, so they are taken as the hit set unprobed (a full rewrite
-# when they are every file). Bytes, not file/row/core counts, so the gate
-# scales with data.
-_DML_PROBE_SKIP_MAX_BYTES = 32 * 1024 * 1024
 
 # INSTALL/FORCE INSTALL/LOAD statement shapes (LoadInfo.load_type analog,
 # /root/reference/duckdb:30-33).
@@ -213,12 +211,6 @@ def _split_where_top_level(rest: str) -> tuple[str, str | None]:
     return rest.strip().rstrip(";"), None
 
 
-def _has_subquery(txt: str | None) -> bool:
-    """Word-match SELECT — used to DISABLE the file-level DML fast path
-    (a rebound subset view would mis-evaluate a self-referential
-    subquery); a false positive only skips an optimization."""
-    return bool(txt) and re.search(r"\bSELECT\b", txt,
-                                   re.IGNORECASE) is not None
 # MERGE is parsed in two steps: the head regex stops at USING, then the
 # source relation (possibly a parenthesized subquery with nested parens) is
 # extracted by paren matching, and the tail regex takes over.
@@ -367,6 +359,9 @@ _DML_TARGET_RE = re.compile(
 # Statement heads that cannot change any registered view's schema —
 # cached per-table fields all stay valid (the epoch still bumps so
 # name-list caches refresh where routes below add views).
+# row-level DML re-points its target's view and adds or drops no name
+_ROW_DML_RE = re.compile(r"^\s*(?:INSERT|UPDATE|DELETE|MERGE|TRUNCATE)\b",
+                         re.IGNORECASE)
 _SCHEMA_NEUTRAL_RE = re.compile(
     r"^\s*(?:SET|RESET|PRAGMA|INSTALL|LOAD|SHOW|DESCRIBE|DESC\b|SUMMARIZE"
     r"|CHECKPOINT|COMMENT|ANALYZE|VACUUM|EXPORT|PREPARE|DEALLOCATE|BEGIN"
@@ -938,9 +933,15 @@ class Engine:
                 if (stats.get("version") == cur and thr > 0
                         and stats.get("est_bytes", thr + 1) <= thr):
                     df = df.hint("broadcast")
+        # re-pointing a view that is already registered (every commit)
+        # keeps the name list; a new name invalidates it
+        cached = getattr(self, "_names_cache", None)
+        repoint = (cached is not None
+                   and cached[0] == getattr(self, "_names_epoch", 0)
+                   and name.lower() in {n.lower() for n in cached[1]})
         df.createOrReplaceTempView(name)
         self._versioned[name] = table_dir
-        self._bump_registration_epoch(name)
+        self._bump_registration_epoch(name, keep_names=repoint)
         return df
 
     # -- attached catalogs (ATTACH/DETACH; DuckDB multi-database surface,
@@ -1692,13 +1693,12 @@ class Engine:
         rows on multi-match sources (its documented caveat), while
         DuckDB updates each target row exactly once with an arbitrary
         matching source row (review r7-3 — the MERGE route was silent
-        table corruption). Shape: tag the target with a synthetic row
-        id, evaluate the SET expressions over the target × source join
-        (any SQL the dialect supports, source columns included), keep
-        ONE winner per row id (first = the same arbitrary-match
-        semantics), left-join back and CASE per assigned column. Two
-        shuffles bounded by the MATCH volume plus the rebuild — same
-        order as MERGE."""
+        table corruption). Shape: evaluate the SET expressions over the
+        target × source join (any SQL the dialect supports, source
+        columns included), keep ONE winner per target row id — its
+        (file, row index), stable across the plan's re-evaluations —
+        (first = the same arbitrary-match semantics), and commit the
+        winners as deletion vectors plus one file of their postimages."""
         from pyspark.sql import functions as F
 
         name = parts["name"]
@@ -1718,55 +1718,29 @@ class Engine:
         if unknown:
             raise ValueError(
                 f"UPDATE {name}: unknown column(s) {sorted(unknown)}")
-        # monotonically_increasing_id is NONDETERMINISTIC across plan
-        # re-evaluations (AQE re-coalescing, task retry, a shuffle in the
-        # source) and __rid is read by three independent branches below
-        # (the matched aggregate via the temp view, the left-join probe,
-        # and the separately-evaluated cdc preimage/postimage) — pin the
-        # ids by materializing ONCE before any branch reads them (ADVICE
-        # r7; _metadata.file_path/row_index would avoid the materialize
-        # but metadata columns don't resolve through temp views). The
-        # update already rewrites the whole table, so the checkpoint
-        # does not change the operation's O(table) cost class.
-        aug = self.table(name).withColumn(
-            "__rid", F.monotonically_increasing_id()).localCheckpoint()
-        aug.createOrReplaceTempView(name)
-        try:
+        ids = list(deltalog.ROW_ID_COLS)
+        entries = self._dml_entries(name)
+        with self._dml_probe(name, entries, entries):
             proj = ", ".join(
                 f"({expr}) AS __set_{i}"
                 for i, expr in enumerate(assignments.values()))
             matched = self.sql(
-                f"SELECT {name}.__rid AS __rid, {proj} "
-                f"FROM {name}, {parts['src']} WHERE {parts['pred']}",
-                dialect=dialect)
-            winners = (matched.groupBy("__rid").agg(
+                f"SELECT {name}.__dv_file, {name}.__dv_pos, {proj} "
+                f"FROM {_DML_PROBE} {name}, {parts['src']} "
+                f"WHERE {parts['pred']}", dialect=dialect)
+            winners = matched.groupBy(*ids).agg(
                 *[F.first(f"__set_{i}").alias(f"__set_{i}")
                   for i in range(len(assignments))])
-                .withColumn("__hit", F.lit(True)))
-            joined = aug.join(winners, "__rid", "left")
-            set_idx = {c: i for i, c in enumerate(assignments)}
-            cols = []
-            for f in target.fields:
-                if f.name in set_idx:
-                    cols.append(
-                        F.when(F.col("__hit").isNotNull(),
-                               F.col(f"__set_{set_idx[f.name]}")
-                               .cast(f.dataType))
-                        .otherwise(F.col(f.name)).alias(f.name))
-                else:
-                    cols.append(F.col(f.name))
-            updated = joined.select(*cols)
-            # change feed: pre/postimages of the hit rows only
-            hit = joined.where(F.col("__hit").isNotNull())
-            pre = hit.select(*[F.col(f.name) for f in target.fields]) \
-                .withColumn("_change_type", F.lit("update_preimage"))
-            post = hit.select(*cols).withColumn(
-                "_change_type", F.lit("update_postimage"))
-            snapshots.write_table(updated, self._versioned[name],
-                                  mode="overwrite",
-                                  cdc_df=pre.unionByName(post))
-        finally:
-            self._refresh_table(name)
+            # cached: the positions collect fills it, the two writes
+            # read the same winners
+            hit = self.table(_DML_PROBE).join(winners, ids).cache()
+            try:
+                positions = self._hit_positions(name, entries,
+                                                hit.select(*ids))
+                self._commit_update(name, entries, positions, hit, {
+                    c: f"__set_{i}" for i, c in enumerate(assignments)})
+            finally:
+                hit.unpersist()
         return self._empty()
 
     def _fill_values_defaults(self, name: str, cols_group: str | None,
@@ -1877,8 +1851,7 @@ class Engine:
             return full
         if not cand:
             return full.limit(0)
-        return self._read_file_subset(
-            name, {e["path"] for e in cand}, entries.schema).select(*kcols)
+        return self._read_aligned(name, cand, entries.schema).select(*kcols)
 
     def _check_unique_indexes(self, name: str, new_df: DataFrame) -> None:
         """Raise if appending ``new_df`` to table ``name`` would violate a
@@ -2128,12 +2101,12 @@ class Engine:
         self._bump_registration_epoch()
 
     def _registered_names(self) -> list[str]:
-        """Registered (non-internal) view names, cached per registration
-        epoch. SHOW TABLES, not catalog.listTables(): the latter fetches
-        full metadata per table over one py4j roundtrip each (measured
-        0.70 s for 10 tables); SHOW TABLES is one local-relation collect
-        (45 ms) returning exactly the names."""
-        epoch = getattr(self, "_reg_epoch", 0)
+        """Registered (non-internal) view names, cached until a statement
+        may add or drop a name. SHOW TABLES, not catalog.listTables():
+        the latter fetches full metadata per table over one py4j
+        roundtrip each (measured 0.70 s for 10 tables); SHOW TABLES is
+        one local-relation collect (45 ms) returning exactly the names."""
+        epoch = getattr(self, "_names_epoch", 0)
         cached = getattr(self, "_names_cache", None)
         if cached is not None and cached[0] == epoch:
             return cached[1]
@@ -2584,15 +2557,20 @@ class Engine:
         return query[:m.start()] + expanded + query[close + 1:]
 
     def _bump_registration_epoch(self, table: str | None = None, *,
-                                 keep_fields: bool = False) -> None:
+                                 keep_fields: bool = False,
+                                 keep_names: bool = False) -> None:
         """Invalidate schema caches. With ``table``, only that view's
-        cached fields are dropped (the name list and merged-kinds caches
-        still refresh — both are cheap to rebuild from per-table fields);
-        with ``keep_fields``, no per-table entry is dropped (the statement
+        cached fields are dropped (the merged-kinds cache still refreshes
+        — it is cheap to rebuild from per-table fields); with
+        ``keep_fields``, no per-table entry is dropped (the statement
         only ADDED views — attach/use aliases); without either, the whole
         per-table cache is cleared — the conservative path for statements
-        whose target can't be identified."""
+        whose target can't be identified. The name list (SHOW TABLES)
+        refreshes too unless ``keep_names``: the statement re-points
+        existing names only."""
         self._reg_epoch = getattr(self, "_reg_epoch", 0) + 1
+        if not keep_names:
+            self._names_epoch = getattr(self, "_names_epoch", 0) + 1
         cache = getattr(self, "_schema_fields", None)
         if cache is None:
             return
@@ -2638,7 +2616,9 @@ class Engine:
             # r7 q125/q131/q137 regression), full-clear otherwise
             mt = _DML_TARGET_RE.match(query)
             if mt:
-                self._bump_registration_epoch(mt.group("tbl"))
+                self._bump_registration_epoch(
+                    mt.group("tbl"),
+                    keep_names=_ROW_DML_RE.match(query) is not None)
             elif _SCHEMA_NEUTRAL_RE.match(query):
                 # statements that cannot change any view's schema keep
                 # every cached entry (epoch still bumps: name list may
@@ -4622,157 +4602,112 @@ class Engine:
             if view == name:
                 self.spark.table(view).createOrReplaceTempView(alias)
 
-    def _uri_to_rel(self, uri: str, table_dir: str) -> str:
-        import os
-        import urllib.parse
-
-        p = urllib.parse.unquote(urllib.parse.urlparse(uri).path or uri)
-        rel = os.path.relpath(os.path.abspath(p), os.path.abspath(table_dir))
-        if rel.startswith(".."):
-            # outside the table dir — CLONE manifests reference such
-            # files ABSOLUTELY, so return the same spelling or the
-            # hit-vs-carried comparison silently carries every file
-            # (duplicating rows on file-level DML)
-            return os.path.abspath(p)
-        return rel
-
-    def _file_level_targets(
-        self, name: str, pred: str, dialect: str
-    ) -> tuple[set[str], list[dict], str | None] | None:
-        """Which data files of versioned table ``name`` may contain
-        pred-TRUE rows — so DML rewrites only those and carries the rest
-        by reference (the table-format file-skipping idea,
-        /root/reference/metadata:1-17, re-expressed over the snapshot log).
-
-        1. manifest min/max stats cut (pure metadata, no Spark job);
-        2. when the candidates total more than
-           ``_DML_PROBE_SKIP_MAX_BYTES``, an exact probe over them:
-           ``SELECT DISTINCT input_file_name() WHERE pred`` — a
-           column-pruned, predicate-pushdown scan (what Delta's DELETE
-           does to find touched files). Below the gate the candidates
-           ARE the hit set: rewriting a candidate without pred-TRUE rows
-           keeps every row (DELETE keeps ``IS NOT TRUE``, UPDATE's CASE
-           falls through) and its CDC emits nothing.
-
-        Returns ``(hit_rel_paths, carried_entries, physical_schema)``;
-        None when the snapshot is single-file or every file is hit (plain
-        full rewrite is then strictly better — no manifest to carry)."""
-        import os
-
+    def _read_aligned(self, name: str, entries: list[dict],
+                      phys_schema: str | None,
+                      row_ids: bool = False) -> DataFrame:
+        """Manifest ``entries`` of versioned table ``name`` (deletion
+        vectors applied), aligned to the current table schema: carried
+        files may pre-date appended columns. ``phys_schema`` is the
+        snapshot's recorded physical schema (None → inferred from the
+        files' footers); ``row_ids`` keeps each row's (file, row index)
+        as two trailing columns."""
+        schema = self.table(name).schema
         table_dir = self._versioned[name]
+        df = snapshots.read_files(self.spark, table_dir, entries,
+                                  phys_schema, row_ids=row_ids)
+        # Apply the ALTER ledger BEFORE aligning to the table schema:
+        # a file written before a RENAME carries the old column name,
+        # and without the rename coalesce the select below would surface
+        # the renamed column as NULL — silently wrong UNIQUE probes and
+        # DML predicates that miss their rows.
+        df = snapshots.apply_schema_patches(df, table_dir)
+        data = [(f.name, f.dataType) for f in df.schema.fields
+                if f.name not in deltalog.ROW_ID_COLS]
+        if data == [(f.name, f.dataType) for f in schema.fields]:
+            return df                       # already the table's columns
+        have = {n for n, _ in data}
+        # one selectExpr: a Column per field costs py4j round trips each
+        return df.selectExpr(
+            *[f"CAST({_bq(f.name) if f.name in have else 'NULL'} AS "
+              f"{f.dataType.simpleString()}) AS {_bq(f.name)}"
+              for f in schema.fields],
+            *(deltalog.ROW_ID_COLS if row_ids else ()))
+
+    def _dml_entries(self, name: str) -> "snapshots.Manifest":
+        """The current manifest of DML target ``name``."""
         try:
-            entries = snapshots.snapshot_file_entries(table_dir)
+            return snapshots.snapshot_file_entries(self._versioned[name])
         except FileNotFoundError:
-            return None
-        if len(entries) <= 1:
-            return None
-        cand = snapshots.prune_by_stats(entries, pred)
-        try:
-            cand_bytes = sum(
-                os.path.getsize(os.path.join(table_dir, e["path"]))
-                for e in cand)
-        except OSError:
-            cand_bytes = None
-        if cand_bytes is not None and cand_bytes <= _DML_PROBE_SKIP_MAX_BYTES:
-            hit_rel = {e["path"] for e in cand}
-        else:
-            from pyspark.sql import functions as F
+            raise ValueError(
+                f"DML on {name!r}: the table has no engine log (a foreign "
+                f"Delta/Iceberg/Hudi dir) — CLONE it into an engine table "
+                f"first") from None
 
-            probe = snapshots.read_files(
-                self.spark, [os.path.join(table_dir, e["path"]) for e in cand],
-                entries.schema)
-            # Apply the ALTER ledger first: a pre-rename candidate file
-            # carries the OLD column name, and probing the new name as
-            # NULL would miss every pred-TRUE row in it — turning the
-            # whole UPDATE/DELETE into a silent no-op on those files.
-            probe = snapshots.apply_schema_patches(probe, table_dir)
-            # Align to the CURRENT table schema: the stats cut may leave
-            # only pre-evolution files that lack a column the predicate
-            # references; the file read can't invent it, so add it as
-            # NULL (matching _read_file_subset) or the probe would raise
-            # where the full-rewrite path succeeds.
-            schema = self.table(name).schema
-            probe = probe.select(
-                *[F.col(f.name).cast(f.dataType) if f.name in probe.columns
-                  else F.lit(None).cast(f.dataType).alias(f.name)
-                  for f in schema.fields])
-            view = "__dml_probe"
-            probe.createOrReplaceTempView(view)
-            try:
-                # alias the probe AS the table name so qualified column
-                # refs (t.col) in the predicate resolve
-                hit = self.sql(
-                    f"SELECT DISTINCT input_file_name() AS __f "
-                    f"FROM {view} {name} WHERE {pred}",
-                    dialect=dialect,
-                )
-                hit_rel = {self._uri_to_rel(r["__f"], table_dir)
-                           for r in hit.collect()}
-            finally:
-                self.spark.catalog.dropTempView(view)
-        if len(hit_rel) >= len(entries):
-            return None
-        carried = [e for e in entries if e["path"] not in hit_rel]
-        return hit_rel, carried, entries.schema
-
-    def _read_file_subset(self, name: str, rel_paths: set[str],
-                          phys_schema: str | None) -> DataFrame:
-        """The hit-file subset of a versioned table, aligned to the
-        current table schema (carried files may pre-date appended
-        columns). ``phys_schema`` is the snapshot's recorded physical
-        schema (None → inferred from the files' footers)."""
-        import os
-
+    @contextlib.contextmanager
+    def _dml_probe(self, name: str, entries: "snapshots.Manifest",
+                   candidates: list[dict]):
+        """Register ``candidates`` (manifest entries of ``name``) with
+        their row ids as the private view ``_DML_PROBE``, for the
+        statement to alias as the target. The target's own name stays
+        bound to the whole pre-statement table, so a subquery over it
+        sees every row."""
         from pyspark.sql import functions as F
 
-        schema = self.table(name).schema
-        if not rel_paths:
-            return self.table(name).limit(0)
-        table_dir = self._versioned[name]
-        df = snapshots.read_files(
-            self.spark, [os.path.join(table_dir, p) for p in sorted(rel_paths)],
-            phys_schema)
-        # Apply the ALTER ledger BEFORE aligning to the table schema:
-        # a hit file written before a RENAME carries the old column name,
-        # and without the rename coalesce the select below would surface
-        # the renamed column as NULL — silently wrong UNIQUE probes and,
-        # worse, NULLed-out data in partial UPDATE/MERGE rewrites.
-        df = snapshots.apply_schema_patches(df, table_dir)
-        return df.select(
-            *[F.col(f.name).cast(f.dataType) if f.name in df.columns
-              else F.lit(None).cast(f.dataType).alias(f.name)
-              for f in schema.fields])
-
-    def _merge_file_targets(
-        self, target: str, talias: str, source: str, salias: str,
-        on: str, dialect: str,
-    ) -> tuple[set[str], list[dict], str | None] | None:
-        """MERGE's touched-file discovery: target files containing at
-        least one ON-matching row, found with one join that scans only
-        the join-key columns (+ file name). Source rows can only match
-        rows in hit files, so the carried files are untouched by every
-        WHEN clause — including the NOT MATCHED anti-join."""
-        table_dir = self._versioned[target]
+        if candidates:
+            probe = self._read_aligned(name, candidates, entries.schema,
+                                       row_ids=True)
+        else:
+            file_col, pos_col = deltalog.ROW_ID_COLS
+            probe = self.table(name).limit(0).select(
+                "*", F.lit(None).cast("string").alias(file_col),
+                F.lit(None).cast("bigint").alias(pos_col))
+        probe.createOrReplaceTempView(_DML_PROBE)
         try:
-            entries = snapshots.snapshot_file_entries(table_dir)
-        except FileNotFoundError:
-            return None
-        if len(entries) <= 1:
-            return None
-        src_sql = (source if not source.startswith("(") and source == salias
-                   else f"{source} {salias}")
-        hit = self.sql(
-            f"SELECT DISTINCT {talias}.__dml_file AS __f FROM "
-            f"(SELECT *, input_file_name() AS __dml_file FROM {target}) "
-            f"{talias} JOIN {src_sql} ON {on}",
-            dialect=dialect,
-        )
-        hit_rel = {self._uri_to_rel(r["__f"], table_dir)
-                   for r in hit.collect()}
-        if len(hit_rel) >= len(entries):
-            return None
-        carried = [e for e in entries if e["path"] not in hit_rel]
-        return hit_rel, carried, entries.schema
+            yield
+        finally:
+            self.spark.catalog.dropTempView(_DML_PROBE)
+
+    def _hit_positions(self, name: str, entries: list[dict],
+                       rows: DataFrame) -> dict[str, list[int]]:
+        """{manifest path: [row index]} of the row ids in ``rows`` (two
+        columns, file then row index), collected in one job through
+        Arrow."""
+        table_dir = self._versioned[name]
+        rel_of = {os.path.abspath(os.path.join(table_dir, e["path"])):
+                  e["path"] for e in entries}
+        out: dict[str, list[int]] = {}
+        tbl = rows.toArrow()
+        for f, pos in zip(tbl.column(0).to_pylist(),
+                          tbl.column(1).to_pylist()):
+            if f not in rel_of:  # a row the vectors could not mark
+                raise RuntimeError(
+                    f"DML on {name!r}: scanned file {f!r} is not in the "
+                    f"snapshot manifest")
+            out.setdefault(rel_of[f], []).append(pos)
+        return out
+
+    def _commit_dml(self, name: str, entries: list[dict],
+                    positions: dict[str, list[int]],
+                    arriving: DataFrame | None = None,
+                    cdc: DataFrame | None = None) -> None:
+        """One row-level DML commit: deletion vectors mark ``positions``
+        (the rows that leave) and ``arriving`` (the rows that come in, if
+        any) becomes one new file; no hit file is rewritten."""
+        table_dir = self._versioned[name]
+        if arriving is not None:
+            arriving = arriving.coalesce(1)
+        try:
+            carried = snapshots.mark_deleted(table_dir, entries, positions)
+            if not carried and arriving is None:
+                # every row left: the empty overwrite an unconditional
+                # DELETE commits (keeps the schema, derived change feed)
+                snapshots.write_table(self.table(name).limit(0), table_dir,
+                                      mode="overwrite")
+            else:
+                snapshots.write_table(arriving, table_dir, mode="overwrite",
+                                      carry_files=carried, cdc_df=cdc)
+        finally:
+            self._refresh_table(name)
 
     _REC_UNION_N = [0]
 
@@ -5181,7 +5116,8 @@ class Engine:
                 return self._insert_on_conflict(
                     name, m.group("cols"), body, ", ".join(keys), act,
                     dialect)
-            if body.upper().startswith("VALUES"):
+            values = body.upper().startswith("VALUES")
+            if values:
                 body = f"SELECT * FROM {body}"
             df = self.sql(body, dialect=dialect)
             target = self.table(name).schema
@@ -5189,25 +5125,30 @@ class Engine:
                 given = [c.strip() for c in m.group("cols").split(",")]
                 missing = [f.name for f in target.fields if f.name not in given]
                 df = df.toDF(*given)
-                from pyspark.sql import functions as F
+                if missing:
+                    from pyspark.sql import functions as F
 
-                defaults = self._column_defaults(name)
-                df = df.select(
-                    *[_duck_value_cast(df, f) if f.name in given
-                      else self._default_fill_expr(df, f, defaults)
-                      for f in target.fields]
-                ) if missing else df.select(
-                    *[_duck_value_cast(df, f) for f in target.fields])
+                    defaults = self._column_defaults(name)
+                    casts = dict(zip(given, _duck_value_casts(
+                        df, [f for f in target.fields if f.name in given])))
+                    df = df.select(
+                        *[F.expr(casts[f.name]) if f.name in given
+                          else self._default_fill_expr(df, f, defaults)
+                          for f in target.fields])
+                else:
+                    df = df.selectExpr(*_duck_value_casts(df, target.fields))
             else:
                 if len(df.columns) != len(target.fields):
                     raise ValueError(
                         f"INSERT INTO {name}: {len(df.columns)} columns "
                         f"provided, table has {len(target.fields)}")
-                from pyspark.sql import functions as F
-
                 df = df.toDF(*[f.name for f in target.fields])
-                df = df.select(
-                    *[_duck_value_cast(df, f) for f in target.fields])
+                df = df.selectExpr(*_duck_value_casts(df, target.fields))
+            if values:
+                # a VALUES list is a handful of rows: one file, not one
+                # per row (every later stats cut and mirror add pays per
+                # file)
+                df = df.coalesce(1)
             if self._indexes:
                 self._check_unique_indexes(name, df)
             self._check_constraints(name, df)
@@ -5278,72 +5219,26 @@ class Engine:
             if name not in self._versioned:
                 raise ValueError(f"DELETE FROM unknown table {name!r}")
             pred = m.group("pred")
-            # a subquery in the predicate may reference the target table
-            # itself — the file-level path REBINDS the table view to the
-            # pruned file subset, which would re-evaluate that subquery
-            # over a fraction of the data (silent wrong answer, r7 DML
-            # probe on the UPDATE twin); fall back to the full rewrite
-            targets = (self._file_level_targets(name, pred, dialect)
-                       if pred is not None
-                       and not _has_subquery(pred) else None)
             if pred is None:
                 # full delete: no sidecar needed — table_changes derives
                 # the feed from the full-overwrite diff (all rows left)
-                kept = self.table(name).limit(0)
-            elif targets is not None:
-                # file-level rewrite: only hit files are re-written; the
-                # rest of the snapshot is carried by reference. The kept
-                # rewrite and the CDC sidecar both read the hit files —
-                # cache the subset so the sidecar write reuses the blocks
-                # the kept-write materialized instead of re-scanning
-                # parquet: ONE scan per DELETE (r13, guide §2.4/§6).
-                hit_rel, carried, phys = targets
-                sub = self._read_file_subset(name, hit_rel, phys).cache()
-                try:
-                    sub.createOrReplaceTempView(name)
-                    kept = self.sql(
-                        f"SELECT * FROM {name} WHERE ({pred}) IS NOT TRUE",
-                        dialect=dialect)
-                    # change feed: the removed rows, captured at DML time
-                    # (Delta _change_data design) — reads the cached subset
-                    cdc = self.sql(
-                        f"SELECT *, 'delete' AS _change_type FROM {name} "
-                        f"WHERE ({pred}) IS TRUE", dialect=dialect)
-                    snapshots.write_table(kept, self._versioned[name],
-                                          mode="overwrite",
-                                          carry_files=carried,
-                                          cdc_df=cdc)
-                finally:
-                    self._refresh_table(name)
-                    sub.unpersist()
+                snapshots.write_table(self.table(name).limit(0),
+                                      self._versioned[name],
+                                      mode="overwrite")
+                self._refresh_table(name)
                 return self._empty()
-            else:
-                # full rewrite: kept and the CDC sidecar both scan the
-                # snapshot — rebind the view to a cached copy so the pair
-                # of writes pays one scan (the cache materializes during
-                # the kept write; the sidecar reads the blocks). The full
-                # path already rewrites the whole table, so the cached
-                # copy is the same size class as the work itself.
-                src = self.table(name).cache()
-                try:
-                    src.createOrReplaceTempView(name)
-                    # keep rows where the predicate is FALSE or NULL (SQL
-                    # DELETE removes only pred-is-TRUE rows)
-                    kept = self.sql(
-                        f"SELECT * FROM {name} WHERE ({pred}) IS NOT TRUE",
-                        dialect=dialect)
-                    cdc = self.sql(
-                        f"SELECT *, 'delete' AS _change_type FROM {name} "
-                        f"WHERE ({pred}) IS TRUE", dialect=dialect)
-                    snapshots.write_table(kept, self._versioned[name],
-                                          mode="overwrite", cdc_df=cdc)
-                finally:
-                    self._refresh_table(name)
-                    src.unpersist()
-                return self._empty()
-            snapshots.write_table(kept, self._versioned[name],
-                                  mode="overwrite", cdc_df=None)
-            self._refresh_table(name)
+            # one pushdown scan of the stats-cut candidates' predicate
+            # columns finds the rows that leave; the commit only marks
+            # them. No sidecar: table_changes derives the feed from the
+            # deletion vectors.
+            entries = self._dml_entries(name)
+            with self._dml_probe(name, entries,
+                                 snapshots.prune_by_stats(entries, pred)):
+                positions = self._hit_positions(name, entries, self.sql(
+                    f"SELECT {name}.__dv_file, {name}.__dv_pos "
+                    f"FROM {_DML_PROBE} {name} WHERE {pred}",
+                    dialect=dialect))
+            self._commit_dml(name, entries, positions)
             return self._empty()
         m = _UPDATE_RE.match(query)
         if m:
@@ -5361,72 +5256,72 @@ class Engine:
             unknown = set(assignments) - {f.name for f in target.fields}
             if unknown:
                 raise ValueError(f"UPDATE {name}: unknown column(s) {sorted(unknown)}")
-            cols = []
-            for f in target.fields:
-                if f.name in assignments:
-                    cols.append(
-                        f"CAST(CASE WHEN ({pred or 'true'}) THEN ({assignments[f.name]}) "
-                        f"ELSE {f.name} END AS {f.dataType.simpleString()}) AS {f.name}"
-                    )
-                else:
-                    cols.append(f.name)
-            # same subquery-rebinding hazard as DELETE — and here the SET
-            # expressions can carry one too (UPDATE t SET v =
-            # (SELECT max(k) FROM t): over the rebound subset the max is
-            # computed from the hit files only — the r7 probe's silent
-            # no-op)
-            targets = (self._file_level_targets(name, pred, dialect)
-                       if pred is not None and not _has_subquery(pred)
-                       and not any(_has_subquery(x)
-                                   for x in assignments.values())
-                       else None)
-            # change feed: pre/postimages of the touched rows, captured at
-            # DML time (Delta _change_data design); the postimage reuses
-            # the same CASE projection restricted to predicate-true rows
-            cdc_sql = (
-                f"SELECT *, 'update_preimage' AS _change_type FROM {name} "
-                f"WHERE ({pred or 'true'}) IS TRUE "
-                f"UNION ALL "
-                f"SELECT * FROM (SELECT {', '.join(cols)}, "
-                f"'update_postimage' AS _change_type FROM {name} "
-                f"WHERE ({pred or 'true'}) IS TRUE)")
-            if targets is not None:
-                # cache the hit subset: the updated rewrite plus the CDC
-                # pre/post images are THREE reads of the same files —
-                # one parquet scan materializes the cache, the sidecar
-                # reads blocks (r13, guide §2.4/§6)
-                hit_rel, carried, phys = targets
-                sub = self._read_file_subset(name, hit_rel, phys).cache()
+            if pred is None:
+                # every row changes: a plain overwrite with the whole
+                # table's postimages, no row ids collected
+                cols = ", ".join(
+                    f"CAST(({assignments[f.name]}) AS "
+                    f"{f.dataType.simpleString()}) AS {f.name}"
+                    if f.name in assignments else f.name
+                    for f in target.fields)
                 try:
-                    sub.createOrReplaceTempView(name)
-                    updated = self.sql(
-                        f"SELECT {', '.join(cols)} FROM {name}",
-                        dialect=dialect)
-                    snapshots.write_table(updated, self._versioned[name],
-                                          mode="overwrite",
-                                          carry_files=carried,
-                                          cdc_df=self.sql(cdc_sql,
-                                                          dialect=dialect))
+                    snapshots.write_table(
+                        self.sql(f"SELECT {cols} FROM {name}",
+                                 dialect=dialect),
+                        self._versioned[name], mode="overwrite",
+                        cdc_df=self.sql(
+                            f"SELECT *, 'update_preimage' AS _change_type "
+                            f"FROM {name} UNION ALL SELECT {cols}, "
+                            f"'update_postimage' AS _change_type "
+                            f"FROM {name}", dialect=dialect))
                 finally:
                     self._refresh_table(name)
-                    sub.unpersist()
                 return self._empty()
-            # full rewrite: same one-scan fuse as DELETE — the rewrite
-            # materializes the cached snapshot, the pre/post sidecar
-            # reads it (3 scans → 1)
-            src = self.table(name).cache()
-            try:
-                src.createOrReplaceTempView(name)
-                updated = self.sql(
-                    f"SELECT {', '.join(cols)} FROM {name}", dialect=dialect)
-                snapshots.write_table(
-                    updated, self._versioned[name], mode="overwrite",
-                    cdc_df=self.sql(cdc_sql, dialect=dialect))
-            finally:
-                self._refresh_table(name)
-                src.unpersist()
+            sets = [(f, i) for i, f in enumerate(target.fields)
+                    if f.name in assignments]
+            entries = self._dml_entries(name)
+            with self._dml_probe(name, entries,
+                                 snapshots.prune_by_stats(entries, pred)):
+                # one scan: the hit rows with their row ids and the new
+                # values of the assigned columns (cached — the positions
+                # collect fills it, the two writes read it)
+                hit = self.sql(
+                    "SELECT *, " + ", ".join(
+                        f"({assignments[f.name]}) AS __set_{i}"
+                        for f, i in sets)
+                    + f" FROM {_DML_PROBE} {name} WHERE {pred}",
+                    dialect=dialect).cache()
+                try:
+                    positions = self._hit_positions(
+                        name, entries, hit.select(*deltalog.ROW_ID_COLS))
+                    self._commit_update(name, entries, positions, hit, {
+                        f.name: f"__set_{i}" for f, i in sets})
+                finally:
+                    hit.unpersist()
             return self._empty()
         return None
+
+    def _commit_update(self, name: str, entries: list[dict],
+                       positions: dict[str, list[int]], hit: DataFrame,
+                       new_cols: dict[str, str]) -> None:
+        """Commit an UPDATE from its hit rows: ``hit`` holds each row's
+        columns, row ids and, per assigned column, the column named in
+        ``new_cols`` with its new value (cast to the column's type here).
+        The postimages arrive as one file; the change feed holds the
+        pre- and postimages."""
+        fields = self.table(name).schema.fields
+        post = hit.selectExpr(*[
+            f"CAST({new_cols[f.name]} AS {f.dataType.simpleString()}) "
+            f"AS {_bq(f.name)}" if f.name in new_cols
+            else _bq(f.name) for f in fields])
+        pre = hit.selectExpr(*[_bq(f.name) for f in fields],
+                             "'update_preimage' AS _change_type")
+        self._commit_dml(
+            name, entries, positions,
+            post if positions else None,
+            pre.unionByName(post.selectExpr(
+                "*", "'update_postimage' AS _change_type"))
+            if positions else None)
 
     def _primary_key_cols(self, name: str) -> list[str]:
         """The table's single PK/UNIQUE constraint columns from the
@@ -5666,10 +5561,9 @@ class Engine:
         schema = self.table(target).schema
         names = [f.name for f in schema.fields]
         matched = f"coalesce({salias}.__m, false)"
-        # matched side: every target row, updated/deleted per the clauses
-        # (WHEN MATCHED acts on matched rows, WHEN NOT MATCHED BY SOURCE on
-        # unmatched ones — disjoint sets, so one CASE per column covers both)
-        proj = []
+        # WHEN MATCHED acts on matched rows, WHEN NOT MATCHED BY SOURCE on
+        # unmatched ones — disjoint sets, so one CASE per column covers both
+        post_exprs = []
         for f in schema.fields:
             branches = []
             if upd_sets and f.name in upd_sets:
@@ -5683,20 +5577,28 @@ class Engine:
                     bysrc_upd[f.name]))
             if branches:
                 whens = " ".join(f"WHEN {c} THEN ({e})" for c, e in branches)
-                proj.append(
+                post_exprs.append(
                     f"CAST(CASE {whens} ELSE {talias}.{f.name} END AS "
-                    f"{f.dataType.simpleString()}) AS {f.name}")
+                    f"{f.dataType.simpleString()})")
             else:
-                proj.append(f"{talias}.{f.name} AS {f.name}")
+                post_exprs.append(f"{talias}.{f.name}")
         src_marked = (
             f"(SELECT *, true AS __m FROM {source} "
             if not source.startswith("(")
             else f"(SELECT *, true AS __m FROM {source} __mrg_inner "
         ) + f") {salias}"
-        matched_sql = (
-            f"SELECT {', '.join(proj)} FROM {target} {talias} "
-            f"LEFT JOIN {src_marked} ON {on}"
-        )
+        # the target's candidate rows are the probe aliased as the
+        # target; the target's name stays the whole pre-statement table
+        join_from = (f"FROM {_DML_PROBE} {talias} "
+                     f"LEFT JOIN {src_marked} ON {on}")
+        upd_branches = []
+        if upd_sets is not None:
+            upd_branches.append(
+                matched + (f" AND ({upd_cond})" if upd_cond else ""))
+        if bysrc_upd is not None:
+            upd_branches.append(
+                f"NOT {matched}"
+                + (f" AND ({bysrc_upd_cond})" if bysrc_upd_cond else ""))
         del_filters = []
         if has_delete:
             del_filters.append(
@@ -5705,10 +5607,10 @@ class Engine:
             del_filters.append(
                 f"NOT {matched}"
                 + (f" AND ({bysrc_del_cond})" if bysrc_del_cond else ""))
-        if del_filters:
-            matched_sql += " WHERE " + " AND ".join(
-                f"NOT ({c})" for c in del_filters)
-        parts = [matched_sql]
+        upd_pred = " OR ".join(f"({b})" for b in upd_branches)
+        del_pred = " OR ".join(f"({c})" for c in del_filters)
+        touched = " OR ".join(f"({p})" for p in (upd_pred, del_pred) if p)
+        anti = None
         if ins_star or ins_cols:
             if ins_star:
                 ins_map = {n: f"{salias}.{n}" for n in names}
@@ -5728,70 +5630,58 @@ class Engine:
             )
             if ins_cond:
                 anti += f" WHERE {ins_cond}"
-            parts.append(anti)
-        full_sql = " UNION ALL ".join(f"SELECT * FROM ({p})" for p in parts)
-        # Change feed (Delta _change_data design): each clause family
-        # contributes its touched rows, computed from the SAME join under
-        # the SAME view binding as the main rewrite, so the feed mirrors
-        # exactly what the commit did. Preimages carry the raw target
-        # columns; postimages reuse the update CASE projection.
-        raw_cols = ", ".join(f"{talias}.{n} AS {n}" for n in names)
-        join_from = (f"FROM {target} {talias} "
-                     f"LEFT JOIN {src_marked} ON {on}")
-        upd_branches = []
-        if upd_sets is not None:
-            upd_branches.append(
-                matched + (f" AND ({upd_cond})" if upd_cond else ""))
-        if bysrc_upd is not None:
-            upd_branches.append(
-                f"NOT {matched}"
-                + (f" AND ({bysrc_upd_cond})" if bysrc_upd_cond else ""))
-        cdc_parts: list[str] = []
-        if upd_branches:
-            upd_pred = " OR ".join(f"({b})" for b in upd_branches)
-            cdc_parts.append(
-                f"SELECT {raw_cols}, 'update_preimage' AS _change_type "
-                f"{join_from} WHERE {upd_pred}")
-            cdc_parts.append(
-                f"SELECT * FROM (SELECT {', '.join(proj)}, "
-                f"'update_postimage' AS _change_type "
-                f"{join_from} WHERE {upd_pred})")
-        if del_filters:
-            del_pred = " OR ".join(f"({c})" for c in del_filters)
-            cdc_parts.append(
-                f"SELECT {raw_cols}, 'delete' AS _change_type "
-                f"{join_from} WHERE {del_pred}")
-        if len(parts) > 1:   # the WHEN NOT MATCHED INSERT leg
-            cdc_parts.append(
-                f"SELECT *, 'insert' AS _change_type FROM ({parts[1]})")
-        cdc_sql = " UNION ALL ".join(
-            f"SELECT * FROM ({p})" for p in cdc_parts)
-        # File-level rewrite carries UNMATCHED files untouched — exactly the
-        # rows BY SOURCE clauses modify — so those merges take the full
-        # rewrite path.
-        fl = None
-        if bysrc_upd is None and not bysrc_has_delete:
-            fl = self._merge_file_targets(target, talias, source, salias, on,
-                                          dialect)
-        if fl is not None:
-            hit_rel, carried, phys = fl
-            sub = self._read_file_subset(target, hit_rel, phys)
+        # The rows that leave are the touched target rows (marked by
+        # deletion vectors); the rows that arrive are the updated rows'
+        # postimages plus the inserts. Change feed (Delta _change_data
+        # design): preimages carry the raw target columns, postimages
+        # the update CASE projection.
+        entries = self._dml_entries(target)
+        with self._dml_probe(target, entries, entries if touched else []):
+            hit = None
+            arriving: list[DataFrame] = []
+            cdc: list[DataFrame] = []
+            positions = {}
             try:
-                sub.createOrReplaceTempView(target)
-                result = self.sql(full_sql, dialect=dialect)
-                cdc = (self.sql(cdc_sql, dialect=dialect)
-                       if cdc_parts else None)
-                snapshots.write_table(result, self._versioned[target],
-                                      mode="overwrite", carry_files=carried,
-                                      cdc_df=cdc)
+                if touched:
+                    # one join: the touched rows with their row ids, raw
+                    # and postimage columns and clause flag (cached — the
+                    # positions collect fills it, the writes read it)
+                    hit = self.sql(
+                        "SELECT " + ", ".join(
+                            [f"{talias}.{n} AS {n}" for n in names]
+                            + [f"{e} AS __post_{i}"
+                               for i, e in enumerate(post_exprs)])
+                        + f", ({upd_pred or 'false'}) IS TRUE AS __upd, "
+                        f"{talias}.__dv_file, {talias}.__dv_pos "
+                        f"{join_from} WHERE {touched}",
+                        dialect=dialect).cache()
+                    positions = self._hit_positions(
+                        target, entries, hit.select(*deltalog.ROW_ID_COLS))
+                    raw = [_bq(n) for n in names]
+                    if upd_pred and positions:
+                        upd = hit.where("__upd")
+                        post = upd.selectExpr(*[
+                            f"__post_{i} AS {c}" for i, c in enumerate(raw)])
+                        arriving.append(post)
+                        cdc.append(upd.selectExpr(
+                            *raw, "'update_preimage' AS _change_type"))
+                        cdc.append(post.selectExpr(
+                            "*", "'update_postimage' AS _change_type"))
+                    if del_pred and positions:
+                        cdc.append(hit.where("NOT __upd").selectExpr(
+                            *raw, "'delete' AS _change_type"))
+                if anti:
+                    ins = self.sql(anti, dialect=dialect)
+                    arriving.append(ins)
+                    cdc.append(ins.selectExpr(
+                        "*", "'insert' AS _change_type"))
+                self._commit_dml(
+                    target, entries, positions,
+                    *[functools.reduce(DataFrame.unionByName, parts)
+                      if parts else None for parts in (arriving, cdc)])
             finally:
-                self._refresh_table(target)
-            return self._empty()
-        result = self.sql(full_sql, dialect=dialect)
-        cdc = self.sql(cdc_sql, dialect=dialect) if cdc_parts else None
-        snapshots.write_table(result, self._versioned[target],
-                              mode="overwrite", cdc_df=cdc)
-        self._refresh_table(target)
+                if hit is not None:
+                    hit.unpersist()
         return self._empty()
 
     def _copy_to(self, src: str, path: str, opts: str | None, dialect: str) -> DataFrame:
@@ -6273,26 +6163,35 @@ _DUCK_TO_SPARK_TYPES = {
 }
 
 
-def _duck_value_cast(df, field):
-    """Cast one INSERT value column to the target field's type with
-    DuckDB's semantics: a DECIMAL→DECIMAL downscale TRUNCATES toward
-    zero [measured r9: INSERT 2.9999 into DECIMAL(9,3) stores 2.999;
-    Spark's cast would round to 3.000]; everything else is Spark's
-    plain (ANSI) cast."""
-    from pyspark.sql import functions as F
+def _bq(name: str) -> str:
+    """``name`` as a backquoted Spark SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _duck_value_casts(df, fields) -> list[str]:
+    """SQL expressions casting INSERT value columns to the target
+    ``fields`` with DuckDB's semantics: a DECIMAL→DECIMAL downscale
+    TRUNCATES toward zero [measured r9: INSERT 2.9999 into DECIMAL(9,3)
+    stores 2.999; Spark's cast would round to 3.000]; everything else
+    is Spark's plain (ANSI) cast. The source schema is read once and the
+    expressions are text, for one ``selectExpr``: a Column per field
+    costs py4j round trips each."""
     from pyspark.sql import types as T
 
-    st = dict(zip(df.columns,
-                  [f.dataType for f in df.schema.fields])).get(field.name)
-    dt = field.dataType
-    if (isinstance(st, T.DecimalType) and isinstance(dt, T.DecimalType)
-            and st.scale > dt.scale):
-        s_ = dt.scale
-        unit = "1" if s_ == 0 else "0." + "0" * (s_ - 1) + "1"
-        return F.expr(
-            f"CAST(`{field.name}` - (`{field.name}` % {unit}) "
-            f"AS DECIMAL({dt.precision},{dt.scale}))").alias(field.name)
-    return F.col(field.name).cast(dt)
+    src = {f.name: f.dataType for f in df.schema.fields}
+    out = []
+    for field in fields:
+        col = _bq(field.name)
+        st, dt = src.get(field.name), field.dataType
+        if (isinstance(st, T.DecimalType) and isinstance(dt, T.DecimalType)
+                and st.scale > dt.scale):
+            s_ = dt.scale
+            unit = "1" if s_ == 0 else "0." + "0" * (s_ - 1) + "1"
+            out.append(f"CAST({col} - ({col} % {unit}) AS "
+                       f"DECIMAL({dt.precision},{dt.scale})) AS {col}")
+        else:
+            out.append(f"CAST({col} AS {dt.simpleString()}) AS {col}")
+    return out
 
 
 def _map_duck_type(typ: str) -> str | None:
@@ -6468,55 +6367,12 @@ def _parse_copy_options(opts: str | None) -> dict:
 
 
 def split_statements(script: str) -> list[str]:
-    """Split a multi-statement SQL script on top-level semicolons
-    (quote- and comment-aware)."""
-    stmts, buf, i, n = [], [], 0, len(script)
-    in_s = in_d = in_line_comment = in_block_comment = False
-    while i < n:
-        ch = script[i]
-        if in_block_comment:
-            buf.append(ch)
-            if ch == "*" and i + 1 < n and script[i + 1] == "/":
-                buf.append("/")
-                i += 1
-                in_block_comment = False
-        elif in_line_comment:
-            if ch == "\n":
-                in_line_comment = False
-            buf.append(ch)
-        elif in_s:
-            buf.append(ch)
-            if ch == "'":
-                if i + 1 < n and script[i + 1] == "'":
-                    buf.append("'")
-                    i += 1
-                else:
-                    in_s = False
-        elif in_d:
-            buf.append(ch)
-            if ch == '"':
-                in_d = False
-        elif ch == "/" and i + 1 < n and script[i + 1] == "*":
-            in_block_comment = True
-            buf.append(ch)
-        elif ch == "-" and i + 1 < n and script[i + 1] == "-":
-            in_line_comment = True
-            buf.append(ch)
-        elif ch == "'":
-            in_s = True
-            buf.append(ch)
-        elif ch == '"':
-            in_d = True
-            buf.append(ch)
-        elif ch == ";":
-            stmt = "".join(buf).strip()
-            if stmt:
-                stmts.append(stmt)
-            buf = []
-        else:
-            buf.append(ch)
-        i += 1
-    tail = "".join(buf).strip()
-    if tail:
-        stmts.append(tail)
-    return stmts
+    """Split a multi-statement SQL script on its top-level semicolons
+    (``sqltext``'s rule: none inside a literal, quoted identifier or
+    comment)."""
+    stmts, last = [], 0
+    for m in sqltext.top_level_finditer(script, ";"):
+        stmts.append(script[last:m.start()])
+        last = m.end()
+    stmts.append(script[last:])
+    return [s for s in (x.strip() for x in stmts) if s]

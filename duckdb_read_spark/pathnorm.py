@@ -19,11 +19,25 @@ from __future__ import annotations
 from pyspark.sql import Column, functions as F
 
 _SCHEME_RE = r"^[a-zA-Z][a-zA-Z0-9+.-]*:/*"
+_PLUS_RE = r"\+"
 
 
 def decoded_file_path(col: Column) -> Column:
     """``_metadata.file_path`` (or any file URI column) → decoded bare
     absolute path, comparable to ``os.path.abspath`` output."""
     stripped = F.regexp_replace(col, _SCHEME_RE, "/")
-    protected = F.regexp_replace(stripped, r"\+", "%2B")
+    protected = F.regexp_replace(stripped, _PLUS_RE, "%2B")
     return F.url_decode(protected)
+
+
+def sql_string(s: str) -> str:
+    """``s`` as a Spark SQL string literal (backslash escapes)."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def decoded_file_path_sql(col: str) -> str:
+    """``decoded_file_path`` as SQL text over the column expression
+    ``col``, for filters built as one string."""
+    return (f"url_decode(regexp_replace(regexp_replace({col}, "
+            f"{sql_string(_SCHEME_RE)}, '/'), {sql_string(_PLUS_RE)}, "
+            f"'%2B'))")

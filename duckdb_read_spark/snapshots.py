@@ -15,6 +15,7 @@ This module is that idea in miniature, Spark-first and dependency-free
       <table_dir>/
         _log/00000001.json  00000002.json ...   (one entry per commit)
         data/v1-<uuid>/part-*.parquet           (normal Spark parquet writes)
+        deletion_vector_<uuid>.bin              (rows DML deleted from a file)
 
 * each log entry: ``{"version", "timestamp_ms", "mode": "overwrite"|
   "append", "dirs": [relative data dirs]}``. A snapshot at version N =
@@ -25,6 +26,11 @@ This module is that idea in miniature, Spark-first and dependency-free
 * reads list ONLY the dirs the chosen snapshot names — stale data files
   from overwritten versions stay on disk for older snapshots (vacuum is a
   policy decision, not implemented).
+
+Row-level DML is merge-on-read: DELETE, UPDATE and MERGE mark the rows
+that leave with a Delta-format deletion vector per hit file (positions
+by ``_metadata.row_index``) and write only the rows that arrive; every
+read applies the vectors (``read_files``).
 
 Scale shape: data writes are ordinary distributed ``df.write.parquet``;
 the log entry is one small driver-side JSON (same asymmetry as
@@ -59,8 +65,10 @@ class Commit:
     mode: str            # "overwrite" | "append"
     dirs: tuple[str, ...]  # data dirs relative to table_dir
     # file-level manifest (Iceberg-manifest analog): each entry is
-    # {"path": rel file path, "rows": int|None, "stats": {col: [min, max]}}.
-    # None → dir-granular commit (pre-file-level, or plain writes).
+    # {"path": rel file path, "rows": int|None, "stats": {col: [min, max]},
+    # "dv"?: Delta deletionVector descriptor of the rows deleted from the
+    # file}; ``rows`` is the file's physical count. None → dir-granular
+    # commit (pre-file-level, or plain writes).
     files: tuple[dict, ...] | None = None
     # streaming-sink idempotence (the Delta txn-action idea): the
     # micro-batch id that produced this commit and the app/checkpoint
@@ -147,16 +155,52 @@ def _columns(schema: str) -> list[tuple]:
     return [(f["name"], f["type"]) for f in json.loads(schema)["fields"]]
 
 
-def read_files(spark: SparkSession, paths: list[str],
-               schema: str | None) -> DataFrame:
-    """Read snapshot data files/dirs. With the log's recorded physical
-    schema Spark reads no footers up front; without one it falls back to
-    a ``mergeSchema`` footer scan (one Spark job), which also reconciles
-    files that disagree (additive appends, post-RENAME generations)."""
-    if schema is None:
-        return spark.read.option("mergeSchema", "true").parquet(*paths)
-    return (spark.read.schema(StructType.fromJson(json.loads(schema)))
-            .parquet(*paths))
+def read_files(spark: SparkSession, table_dir: str, entries: list[dict],
+               schema: str | None, row_ids: bool = False) -> DataFrame:
+    """Read manifest ``entries`` (paths relative to ``table_dir``, or
+    absolute) with their deletion vectors applied — the one reader of
+    snapshot data. With the log's recorded physical schema Spark reads no
+    footers up front; without one it falls back to a ``mergeSchema``
+    footer scan (one Spark job), which also reconciles files that
+    disagree (additive appends, post-RENAME generations). ``row_ids``
+    keeps ``deltalog.ROW_ID_COLS``, each row's (file, row index), as two
+    trailing columns."""
+    from . import deltalog
+
+    if not entries:
+        # every file of the snapshot was deleted
+        return spark.createDataFrame(
+            [], StructType.fromJson(json.loads(schema)))
+    reader = (spark.read.option("mergeSchema", "true") if schema is None
+              else spark.read.schema(StructType.fromJson(json.loads(schema))))
+    df = reader.parquet(*[os.path.join(table_dir, e["path"]) for e in entries])
+    dvs = {e["path"]: e["dv"] for e in entries if e.get("dv")}
+    if not (dvs or row_ids):
+        return df
+    return deltalog.mask_rows(spark, df, table_dir, dvs, row_ids)
+
+
+def mark_deleted(table_dir: str, entries: list[dict],
+                 positions: dict[str, "list[int]"]) -> list[dict]:
+    """``entries`` with the row indexes in ``positions`` ({path: [row
+    index]}) marked deleted: each hit file gets a deletion-vector file
+    (the union with the vector it already has), a file whose every row
+    is marked leaves the manifest, the rest are unchanged. No data file
+    is read or written."""
+    from . import deltalog
+
+    out = []
+    for e in entries:
+        pos = set(positions.get(e["path"]) or ())
+        if not pos:
+            out.append(e)
+            continue
+        if e.get("dv"):
+            pos.update(deltalog.dv_positions(table_dir, e["dv"]))
+        if e.get("rows") is not None and len(pos) >= e["rows"]:
+            continue
+        out.append(dict(e, dv=deltalog.write_dv(table_dir, sorted(pos))))
+    return out
 
 
 def _json_stat(v):
@@ -274,7 +318,7 @@ def snapshot_file_entries(
 
 
 def write_table(
-    df: DataFrame,
+    df: DataFrame | None,
     table_dir: str,
     mode: str = "overwrite",
     timestamp_ms: int | None = None,
@@ -291,7 +335,10 @@ def write_table(
     from the previous snapshot carried into this one BY REFERENCE — the
     commit then records an explicit file list (carried + newly written,
     with footer min/max stats), so an UPDATE that touches one file writes
-    one file, not the table. ``cdc_df`` (change data feed): the commit's
+    one file, not the table; carried entries may carry new deletion
+    vectors (``mark_deleted``). ``df=None`` writes no data file: the
+    commit only carries ``carry_files`` (a DELETE marks its rows that
+    way). ``cdc_df`` (change data feed): the commit's
     row-level changes — data columns plus ``_change_type`` — written as a
     ``_change_data/`` sidecar read back by ``table_changes()``; its plan
     is evaluated HERE, before the caller repoints any views, so it must
@@ -302,6 +349,8 @@ def write_table(
     if mode not in ("overwrite", "append"):
         raise ValueError(f"mode must be overwrite|append, got {mode!r}")
     os.makedirs(os.path.join(table_dir, _LOG_DIR), exist_ok=True)
+    if df is None and carry_files is None:
+        raise ValueError("a commit without data must carry files")
     commits = read_log(table_dir)
     version = (commits[-1].version + 1) if commits else 1
     rel = os.path.join(_DATA_DIR, f"v{version}-{uuid.uuid4().hex[:8]}")
@@ -332,7 +381,8 @@ def write_table(
         cdc_thread = threading.Thread(target=_write_cdc, daemon=True)
         cdc_thread.start()
     try:
-        df.write.mode("overwrite").parquet(os.path.join(table_dir, rel))
+        if df is not None:
+            df.write.mode("overwrite").parquet(os.path.join(table_dir, rel))
     finally:
         # join on the failure path too: an un-joined sidecar job racing
         # past the caller's cleanup (view repoint, cache unpersist) would
@@ -341,23 +391,26 @@ def write_table(
             cdc_thread.join()
     if cdc_thread is not None and cdc_err:
         raise cdc_err[0]
-    new_entries = _dir_file_entries(table_dir, rel)
+    new_entries = [] if df is None else _dir_file_entries(table_dir, rel)
     files = None
     if carry_files is not None:
         files = tuple(list(carry_files) + new_entries)
     # the new snapshot's physical schema: df's own when df is all of it;
     # when it joins earlier files, the previous snapshot's — only if df
     # matches it column for column, else the files disagree (unknown)
-    schema = _physical_schema(df.schema)
-    if (mode == "append" or carry_files) and commits:
-        prev = commits[-1].schema
-        schema = (prev if prev is not None
-                  and _columns(prev) == _columns(schema) else None)
+    prev = commits[-1].schema if commits else None
+    if df is None:
+        schema = prev
+    else:
+        schema = _physical_schema(df.schema)
+        if (mode == "append" or carry_files) and commits:
+            schema = (prev if prev is not None
+                      and _columns(prev) == _columns(schema) else None)
     entry = Commit(
         version=version,
         timestamp_ms=int(time.time() * 1000) if timestamp_ms is None else timestamp_ms,
         mode=mode,
-        dirs=(rel,),
+        dirs=() if df is None else (rel,),
         files=files,
         stream_batch_id=stream_batch_id,
         stream_app_id=stream_app_id,
@@ -392,7 +445,7 @@ def write_table(
             table_dir, version, mode,
             new_entries=new_entries,
             carried_entries=list(carry_files or []),
-            schema_json=df.schema.json(),
+            schema_json=None if df is None else df.schema.json(),
             timestamp_ms=entry.timestamp_ms,
             cdc_entries=cdc_entries,
             data_change=data_change,
@@ -663,13 +716,16 @@ def clone(
     enforcement. Fails if ``dst_dir`` already holds a table.
 
     Shallow-clone caveat (same as Delta's): the clone REFERENCES source
-    files, so dropping the source table or vacuuming away the cloned
-    snapshot's files breaks the clone's reads of pre-fork data. Post-fork
+    files, and their deletion vectors by absolute path, so dropping the
+    source table or vacuuming away the cloned snapshot's files breaks
+    the clone's reads of pre-fork data. Post-fork
     commits on the clone own their files and are unaffected; OPTIMIZE on
     the clone rewrites referenced data into clone-owned files if full
     independence is needed."""
     if read_log(dst_dir):
         raise ValueError(f"CLONE target {dst_dir!r} already holds a table")
+    from . import deltalog
+
     commits = read_log(src_dir)
     patches: list[dict] = []
     cons: list[dict] = []
@@ -679,7 +735,9 @@ def clone(
         src_entries = snapshot_file_entries(src_dir, resolved)
         schema = src_entries.schema
         entries = [
-            dict(e, path=os.path.abspath(os.path.join(src_dir, e["path"])))
+            dict(e, path=os.path.abspath(os.path.join(src_dir, e["path"])),
+                 **({"dv": deltalog.absolute_dv(src_dir, e["dv"])}
+                    if e.get("dv") else {}))
             for e in src_entries
         ]
         # schema-evolution ledger: ops issued at-or-before the cloned
@@ -692,7 +750,7 @@ def clone(
         # foreign source: a dir readable only through its Iceberg/Delta
         # log still clones zero-copy — the fork is how a foreign table
         # enters this engine's DML/time-travel surface without a rewrite
-        from . import deltalog, iceberglog
+        from . import iceberglog
 
         if iceberglog.is_iceberg_table(src_dir):
             flat, _n = iceberglog._renamed_field_ids(
@@ -757,8 +815,6 @@ def clone(
         os.replace(tmp, path)
     if cons:
         write_constraints(dst_dir, cons)
-    from . import deltalog
-
     try:
         deltalog.mirror_commit(
             dst_dir, 1, "overwrite",
@@ -779,20 +835,21 @@ def resolve_snapshot(
     version: int | None = None,
     as_of_ms: int | None = None,
 ) -> tuple[int, list[str]]:
-    """(version, absolute data dirs) for a snapshot.
+    """(version, absolute data paths) for a snapshot.
 
     ``version=None, as_of_ms=None`` → latest. ``as_of_ms`` picks the last
     commit at-or-before the timestamp (time travel by wall clock).
     """
-    resolved, paths, _ = _resolve(table_dir, version, as_of_ms)
-    return resolved, paths
+    resolved, entries, _ = _resolve(table_dir, version, as_of_ms)
+    return resolved, [os.path.join(table_dir, e["path"]) for e in entries]
 
 
 def _resolve(
     table_dir: str, version: int | None, as_of_ms: int | None,
-) -> tuple[int, list[str], str | None]:
-    """``resolve_snapshot`` plus the snapshot's physical schema, from the
-    same log replay."""
+) -> tuple[int, list[dict], str | None]:
+    """The snapshot's version, entries (file entries, or ``{"path":
+    dir}`` for dir-granular commits) and physical schema, from one log
+    replay."""
     commits = read_log(table_dir)
     if not commits:
         raise FileNotFoundError(f"no versioned table at {table_dir!r}")
@@ -811,16 +868,15 @@ def _resolve(
     if not chosen or chosen[-1].version != version:
         known = [c.version for c in commits]
         raise LookupError(f"version {version} not in log (have {known})")
-    paths: list[str] = []
+    entries: list[dict] = []
     for c in chosen:
-        batch = ([e["path"] for e in c.files] if c.files is not None
-                 else list(c.dirs))
+        batch = (list(c.files) if c.files is not None
+                 else [{"path": d} for d in c.dirs])
         if c.mode == "overwrite":
-            paths = batch
+            entries = batch
         else:
-            paths.extend(batch)
-    return (version, [os.path.join(table_dir, p) for p in paths],
-            chosen[-1].schema)
+            entries.extend(batch)
+    return version, entries, chosen[-1].schema
 
 
 def read_table(
@@ -831,12 +887,13 @@ def read_table(
 ) -> DataFrame:
     """Read a snapshot as a DataFrame with the physical schema its log
     entry records — or, when that is unknown, the schema merged across
-    its data dirs, so appends may evolve it additively. A directory with
-    only a FOREIGN table-format log (Delta ``_delta_log``, or Iceberg
-    ``metadata/*.metadata.json`` — e.g. written by another engine) is read
-    by replaying that format's log instead."""
+    its data dirs, so appends may evolve it additively — and its
+    deletion vectors applied. A directory with only a FOREIGN
+    table-format log (Delta ``_delta_log``, or Iceberg
+    ``metadata/*.metadata.json`` — e.g. written by another engine) is
+    read by replaying that format's log instead."""
     try:
-        resolved, dirs, schema = _resolve(table_dir, version, as_of_ms)
+        resolved, entries, schema = _resolve(table_dir, version, as_of_ms)
     except FileNotFoundError:
         from . import deltalog, hudilog, iceberglog
 
@@ -850,7 +907,7 @@ def read_table(
         if as_of_ms is not None:
             raise
         return deltalog.read_delta_table(spark, table_dir, version)
-    df = read_files(spark, dirs, schema)
+    df = read_files(spark, table_dir, entries, schema)
     # ALTER TABLE ledger (metadata-only schema evolution), filtered to
     # ops issued at or before the snapshot being read
     return apply_schema_patches(df, table_dir, version=resolved)
@@ -870,14 +927,16 @@ def table_changes(
     columns appended — the Delta CDF column contract.
 
     Sources per commit, cheapest first:
-    - a ``_change_data/`` sidecar written at DML time (UPDATE/DELETE/
-      MERGE — precise pre/postimages, no diffing);
+    - a ``_change_data/`` sidecar written at DML time (UPDATE/MERGE —
+      precise pre/postimages, no diffing);
     - append commits: the commit's own new files, read as inserts;
     - the table's first commit: all rows as inserts;
     - full (non-file-level) overwrites: previous snapshot as deletes +
       new snapshot as inserts — precise, since every prior row left;
-    - metadata-only carries (RESTORE): file-set diff vs the previous
-      snapshot — precise, since no rows were rewritten;
+    - commits that write no data (a DELETE's deletion vectors,
+      RESTORE): rows live before and not after are deletes, rows live
+      after and not before inserts — precise, since no row was
+      rewritten;
     - ``data_change=False`` commits (OPTIMIZE/clustering) emit nothing.
 
     A file-level rewrite commit from BEFORE CDC capture existed has no
@@ -946,17 +1005,13 @@ def table_changes(
             continue
         if not c.dirs or all(not _dir_has_files(table_dir, d)
                              for d in c.dirs):
-            # metadata-only carry (RESTORE): nothing rewritten, so the
-            # file-set diff IS the row-level change set
-            prev = {e["path"] for e in snapshot_file_entries(
-                table_dir, version=v - 1)}
-            cur = {e["path"] for e in snapshot_file_entries(
-                table_dir, version=v)}
-            for paths, ctype in ((sorted(prev - cur), "delete"),
-                                 (sorted(cur - prev), "insert")):
-                if paths:
-                    df = spark.read.option("mergeSchema", "true").parquet(
-                        *[os.path.join(table_dir, p) for p in paths])
+            # no data written (a DELETE's deletion vectors, RESTORE): the
+            # row-level change set is the live-row diff of the manifests
+            prev = snapshot_file_entries(table_dir, version=v - 1)
+            cur = snapshot_file_entries(table_dir, version=v)
+            for a, b, ctype in ((prev, cur, "delete"), (cur, prev, "insert")):
+                df = _rows_not_in(spark, table_dir, a, b)
+                if df is not None:
                     pieces.append(_tagged(
                         apply_schema_patches(df, table_dir, version=v),
                         ctype, c))
@@ -982,6 +1037,37 @@ def table_changes(
     return out.select(*data_cols, *meta)
 
 
+def _rows_not_in(spark: SparkSession, table_dir: str, a: Manifest,
+                 b: Manifest) -> DataFrame | None:
+    """The rows live in manifest ``a`` and not in manifest ``b``: every
+    live row of a file ``b`` lacks, plus the rows ``b``'s deletion vector
+    masks and ``a``'s does not. None when there are none."""
+    from . import deltalog
+
+    b_by = {e["path"]: e for e in b}
+    gone = [e for e in a if e["path"] not in b_by]
+    masked: dict[str, list[int]] = {}
+    for e in a:
+        dv_b = b_by.get(e["path"], {}).get("dv")
+        if dv_b and dv_b != e.get("dv"):
+            pos = set(deltalog.dv_positions(table_dir, dv_b))
+            if e.get("dv"):
+                pos -= set(deltalog.dv_positions(table_dir, e["dv"]))
+            if pos:
+                masked[e["path"]] = sorted(pos)
+    parts = []
+    if gone:
+        parts.append(read_files(spark, table_dir, gone, a.schema))
+    if masked:
+        parts.append(read_files(
+            spark, table_dir, [{"path": p} for p in masked], a.schema
+        ).filter(deltalog.rows_at(table_dir, masked)))
+    if not parts:
+        return None
+    return parts[0] if len(parts) == 1 else parts[0].unionByName(
+        parts[1], allowMissingColumns=True)
+
+
 def _dir_has_files(table_dir: str, rel: str) -> bool:
     """True iff the commit data dir holds at least one parquet part (an
     empty-DataFrame overwrite writes a dir with only _SUCCESS)."""
@@ -1000,9 +1086,10 @@ def compact(
     new snapshot (the OPTIMIZE statement of the table formats the
     reference's metadata notes study, /root/reference/metadata:1-17).
 
-    Only files below ``small_file_bytes`` (default: target/2) are
-    rewritten — right-sized files are carried BY REFERENCE, so the cost
-    is O(small files), not O(table). The commit is file-level (manifest
+    Only files below ``small_file_bytes`` (default: target/2), and
+    every file with a deletion vector, are rewritten — right-sized files
+    are carried BY REFERENCE, so the cost is O(small files), not
+    O(table), and the new snapshot carries no deletion vectors. The commit is file-level (manifest
     with footer stats), time travel replays the pre-compaction snapshot,
     and vacuum can later reclaim the replaced small files.
 
@@ -1016,16 +1103,16 @@ def compact(
         e["path"]: os.path.getsize(os.path.join(table_dir, e["path"]))
         for e in entries
     }
-    small = [e for e in entries if sizes[e["path"]] < small_file_bytes]
-    if len(small) <= 1:
+    small = [e for e in entries
+             if sizes[e["path"]] < small_file_bytes or e.get("dv")]
+    if len(small) <= 1 and not any(e.get("dv") for e in small):
         return {"rewritten_files": 0, "carried_files": len(entries),
                 "new_files": 0, "version": read_log(table_dir)[-1].version}
-    carried = [e for e in entries if sizes[e["path"]] >= small_file_bytes]
+    carried = [e for e in entries
+               if sizes[e["path"]] >= small_file_bytes and not e.get("dv")]
     small_bytes = sum(sizes[e["path"]] for e in small)
     n_out = max(1, -(-small_bytes // target_file_bytes))  # ceil
-    df = read_files(
-        spark, [os.path.join(table_dir, e["path"]) for e in small],
-        entries.schema).coalesce(n_out)
+    df = read_files(spark, table_dir, small, entries.schema).coalesce(n_out)
     entry = write_table(df, table_dir, mode="overwrite", carry_files=carried,
                         data_change=False)
     return {"rewritten_files": len(small), "carried_files": len(carried),
@@ -1034,8 +1121,8 @@ def compact(
 
 
 def vacuum(table_dir: str, keep_last: int = 1) -> dict:
-    """Physically delete data dirs unreachable from the newest ``keep_last``
-    snapshots, and truncate their log entries (the Delta VACUUM analog —
+    """Physically delete data dirs and deletion-vector files unreachable
+    from the newest ``keep_last`` snapshots, and truncate their log entries (the Delta VACUUM analog —
     the policy decision the module docstring deferred).
 
     A data dir is retained iff some kept snapshot's replay references it.
@@ -1068,14 +1155,20 @@ def vacuum(table_dir: str, keep_last: int = 1) -> dict:
     # kept snapshots may reference whole dirs OR individual files (file-
     # level DML carries) — a data dir survives iff any kept path is the
     # dir itself or lives inside it.
+    from . import deltalog
+
     data_root = os.path.abspath(os.path.join(table_dir, _DATA_DIR))
     keep_dirs: set[str] = set()
+    keep_dvs: set[str] = set()
     for c in commits[-keep_last:]:
-        _, paths = resolve_snapshot(table_dir, version=c.version)
-        for p in paths:
-            rel = os.path.relpath(os.path.abspath(p), data_root)
+        for e in _resolve(table_dir, c.version, None)[1]:
+            rel = os.path.relpath(
+                os.path.abspath(os.path.join(table_dir, e["path"])), data_root)
             if not rel.startswith(".."):
                 keep_dirs.add(rel.split(os.sep)[0])
+            if e.get("dv") and e["dv"].get("storageType") == "u":
+                keep_dvs.add(os.path.basename(
+                    deltalog._dv_file(table_dir, e["dv"])))
     removed_dirs = 0
     if os.path.isdir(data_root):
         for entry in sorted(os.listdir(data_root)):
@@ -1083,6 +1176,12 @@ def vacuum(table_dir: str, keep_last: int = 1) -> dict:
                 shutil.rmtree(os.path.join(data_root, entry),
                               ignore_errors=True)
                 removed_dirs += 1
+    # deletion-vector files no kept snapshot references — superseded by
+    # a union, or orphaned by a commit that lost its O_EXCL race
+    for fname in os.listdir(table_dir):
+        if (fname.startswith("deletion_vector_") and fname.endswith(".bin")
+                and fname not in keep_dvs):
+            os.remove(os.path.join(table_dir, fname))
     # truncated commits may carry the streaming sink's per-app batch-id
     # watermarks — fold them into the sidecar BEFORE deleting, or a
     # post-vacuum checkpoint-recovery replay would double-append

@@ -15,15 +15,16 @@ keyword or comment.
 * ``$tag$...$tag$`` dollar-quoted strings (the tag may be empty);
 * ``"..."`` and ```...``` quoted identifiers, a doubled quote escaping
   one;
-* ``--`` line comments, running to the end of the line.
+* ``--`` line comments, running to the end of the line, and ``/* */``
+  block comments.
 
 ``(``, ``[`` and ``{`` open one depth, ``)``, ``]`` and ``}`` close one.
 
 The rule has two views built from the same pieces: ``tokenize`` splits
 text into typed tokens for the token-level passes, and the char-level
 helpers (``literal_spans`` through ``split_top_commas``) skip the atomic
-classes over raw text. Block comments are not part of the rule. A quote
-with no closing quote is ordinary text.
+classes over raw text. A quote or ``/*`` with no closing partner is
+ordinary text.
 """
 
 from __future__ import annotations
@@ -34,7 +35,7 @@ from typing import Callable, Iterator
 
 # --- the atomic classes, each written once --------------------------------
 
-_COMMENT = r"--[^\n]*"
+_COMMENT = r"--[^\n]*|/\*[\s\S]*?\*/"
 _STR = r"'(?:[^']|'')*'"
 _ESTR = r"(?<![\w'\"])[eE]'(?:[^'\\]|\\[\s\S]|'')*'"
 _DSTR = r"\$(?P<tag>[A-Za-z_]\w*|)\$[\s\S]*?\$(?P=tag)\$"
@@ -180,7 +181,7 @@ def _tokens(text: str, start: int = 0) -> Iterator[tuple[re.Match, int]]:
 
 def literal_spans(text: str) -> list[tuple[int, int]]:
     """``(start, end)`` of every literal, quoted identifier and comment."""
-    if not any(c in text for c in ("'", '"', "`", "$", "--")):
+    if not any(c in text for c in ("'", '"', "`", "$", "--", "/*")):
         return []
     return [m.span() for m in _SCAN.finditer(text)
             if m.lastgroup == "skip"]

@@ -120,12 +120,13 @@ def test_cdf_vacuum_reaps_sidecars_and_range_errors(eng):
     eng.execute("""
 CREATE TABLE t (k INT, v STRING);
 INSERT INTO t VALUES (1,'a'),(2,'b');
-DELETE FROM t WHERE k = 1;
 UPDATE t SET v = 'B' WHERE k = 2;
+DELETE FROM t WHERE k = 1;
 """)
     d = eng._versioned["t"]
-    # v3 (the DELETE) is truncated by the vacuum: v4, the newest
-    # overwrite, becomes the replay base of the only kept snapshot
+    # v3 (the UPDATE, the only commit with a sidecar — a DELETE writes
+    # none) is truncated by the vacuum: v4, the newest overwrite, becomes
+    # the replay base of the only kept snapshot
     cdc_rel = next(c.cdc for c in snapshots.read_log(d) if c.cdc)
     assert os.path.isdir(os.path.join(d, cdc_rel))
     snapshots.vacuum(d, keep_last=1)
@@ -138,7 +139,7 @@ def test_cdf_pre_capture_commit_refuses(eng):
     eng.execute("""
 CREATE TABLE t (k INT, v STRING);
 INSERT INTO t VALUES (1,'a'),(2,'b');
-DELETE FROM t WHERE k = 1;
+UPDATE t SET v = 'A' WHERE k = 1;
 """)
     d = eng._versioned["t"]
     # simulate a legacy (pre-CDC) file-level commit: strip the sidecar ref

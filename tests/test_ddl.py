@@ -31,6 +31,51 @@ def test_create_schema_insert_values(eng):
     assert dict(eng.table("tt1").dtypes)["b"] == "string"
 
 
+@pytest.mark.parametrize("cols", ["", " (x)"])
+def test_insert_decimal_downscale_truncates_like_duckdb(eng, duck, cols):
+    """A DECIMAL value with more scale than its column truncates toward
+    zero, as DuckDB 1.0 stores it (Spark's cast would round)."""
+    stmt = f"INSERT INTO tdec{cols} VALUES (2.9999), (-2.9999)"
+    eng.sql("CREATE OR REPLACE TABLE tdec (x DECIMAL(9,3))", dialect="duckdb")
+    eng.sql(stmt, dialect="duckdb")
+    duck.execute("CREATE OR REPLACE TABLE tdec (x DECIMAL(9,3))")
+    duck.execute(stmt)
+    got = sorted(r.x for r in eng.sql("SELECT x FROM tdec").collect())
+    assert got == sorted(r[0] for r in duck.execute(
+        "SELECT x FROM tdec").fetchall())
+    duck.execute("DROP TABLE tdec")
+
+
+def test_commit_keeps_registered_name_list(eng, monkeypatch):
+    """A commit re-points its table's view; the session's name list
+    (one SHOW TABLES) survives it. A new name or a DROP invalidates."""
+    from pyspark.sql import SparkSession
+
+    runs = []
+    orig = SparkSession.sql
+
+    def counting(self, q, *a, **k):
+        if q.strip().upper() == "SHOW TABLES":
+            runs.append(q)
+        return orig(self, q, *a, **k)
+
+    eng.sql("CREATE TABLE tnames (a BIGINT)")
+    eng.sql("SELECT * FROM tnames", dialect="duckdb").collect()
+    monkeypatch.setattr(SparkSession, "sql", counting)
+    eng.sql("INSERT INTO tnames VALUES (1), (2)", dialect="duckdb")
+    eng.sql("DELETE FROM tnames WHERE a = 1", dialect="duckdb")
+    assert eng.sql("SELECT count(*) AS n FROM tnames",
+                   dialect="duckdb").first()["n"] == 1
+    assert runs == []
+    eng.sql("CREATE TABLE tnames2 (a BIGINT)")
+    eng.sql("SELECT * FROM tnames2", dialect="duckdb").collect()
+    assert len(runs) == 1
+    eng.sql("DROP TABLE tnames2")
+    with pytest.raises(Exception):
+        eng.sql("SELECT * FROM tnames2", dialect="duckdb").collect()
+    assert len(runs) == 2
+
+
 def test_insert_column_subset_null_fill(eng):
     eng.sql("CREATE TABLE tt2 (a BIGINT, b STRING, c DOUBLE)")
     eng.sql("INSERT INTO tt2 (c, a) VALUES (1.5, 7)")

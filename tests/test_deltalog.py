@@ -87,13 +87,29 @@ def test_action_shapes_match_delta_protocol(tbl):
         assert {"path", "deletionTimestamp", "dataChange"} <= set(rm)
 
 
-def test_delta_replay_matches_private_log_every_version(tbl):
+def test_delta_replay_matches_private_log_every_version(eng, spark, tbl):
+    # a DELETE and a MERGE on top: vectors on two files, one unioned
+    eng.sql("DELETE FROM tdl WHERE k BETWEEN 148 AND 152")
+    eng.sql("MERGE INTO tdl t USING (SELECT 500 AS k, CAST(7 AS LONG) AS v) s "
+            "ON t.k = s.k WHEN MATCHED THEN UPDATE SET v = s.v")
     for c in snapshots.read_log(tbl):
-        want = {e["path"].replace(os.sep, "/")
-                for e in snapshots.snapshot_file_entries(tbl, c.version)}
+        entries = snapshots.snapshot_file_entries(tbl, c.version)
+        want = {e["path"].replace(os.sep, "/"): e.get("dv") for e in entries}
         got_version, got = deltalog.delta_snapshot(tbl, c.version)
         assert got_version == c.version
-        assert set(got) == want
+        assert {p: a.get("deletionVector") for p, a in got.items()} == want
+        private = sorted(snapshots.read_table(spark, tbl, c.version)
+                         .collect())
+        assert sorted(deltalog.read_delta_table(spark, tbl, c.version)
+                      .collect()) == private
+    last = deltalog._read_actions(tbl, deltalog._list_versions(tbl)[-1])
+    proto = deltalog._latest(tbl)[1]
+    assert proto["minReaderVersion"] == 3 and proto["minWriterVersion"] == 7
+    assert "deletionVectors" in proto["readerFeatures"]
+    # the MERGE re-adds the file it masks only after removing the old
+    # (path, DV) pair
+    rm = [a["remove"] for a in last if "remove" in a]
+    assert len(rm) == 1 and "deletionVector" not in rm[0]
 
 
 def test_version_as_of_replays_from_delta_only(eng, spark, tbl, tmp_path):

@@ -818,6 +818,9 @@ _LEXICAL_CASES = {
     "macro_body_comment": (
         "CREATE OR REPLACE MACRO lex_m(x) AS x + 1 -- note",
         "SELECT lex_m(a) AS r FROM lex_t WHERE a > 1"),
+    # a ';' inside a dollar-quoted or escape string splits no script
+    "script_dollar_string": (None, "SELECT $$a;b$$ AS s; SELECT 2 AS n"),
+    "script_escape_string": (None, "SELECT E'a\\';b' AS s"),
 }
 
 
@@ -835,6 +838,14 @@ def test_front_end_lexical_rule_matches_duckdb(engine, duck, tmp_path, case):
     if setup:
         engine.sql(setup, dialect="duckdb")
         duck.execute(setup)
+    if case.startswith("script"):
+        # statement by statement, split the way DuckDB splits the script
+        got = [normalize_rows(tuple(r) for r in df.collect())
+               for df in engine.execute(stmt, dialect="duckdb")]
+        want = [normalize_rows(duck.execute(st.query).fetchall())
+                for st in duck.extract_statements(stmt)]
+        assert got == want
+        return
     if case.startswith("copy"):
         engine.sql(stmt.format(out=tmp_path / "e.csv"), dialect="duckdb")
         duck.execute(stmt.format(out=tmp_path / "d.csv"))

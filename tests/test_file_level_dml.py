@@ -1,14 +1,15 @@
-"""File-level DML (VERDICT r3 item 2): DELETE/UPDATE/MERGE rewrite only
-the data files that contain affected rows; the rest of the snapshot is
-carried into the new commit BY REFERENCE, with per-file min/max footer
-stats recorded in the log (the Iceberg-manifest idea over snapshots.py,
-/root/reference/metadata:1-17).
+"""Merge-on-read DML: DELETE/UPDATE/MERGE never rewrite a data file.
+The rows that leave are marked by a deletion vector (DV) on their file,
+keyed by ``_metadata.row_index``; the rows that arrive (UPDATE
+postimages, MERGE updates and inserts) become one new file; every other
+file is carried into the new commit BY REFERENCE, with per-file min/max
+footer stats recorded in the log (the Iceberg-manifest idea over
+snapshots.py).
 
-Discovery is two-tier: a pure-metadata stats cut (prune_by_stats — no
-Spark job), then, when the candidates exceed a byte gate, one exact
-column-pruned ``input_file_name()`` probe — so a one-row UPDATE on a
-100 TB table costs one file rewrite plus a pushdown scan of the
-predicate column, not an O(table) rewrite.
+Discovery is a pure-metadata stats cut (prune_by_stats — no Spark job)
+and then one column-pruned pushdown scan of the candidates that collects
+the hit rows' positions — so a one-row UPDATE on a 100 TB table costs
+that scan plus a one-row write, not an O(table) rewrite.
 """
 
 from __future__ import annotations
@@ -59,12 +60,23 @@ def test_manifest_stats_recorded_and_prune(t20):
     assert len(snapshots.prune_by_stats(entries, "k % 7 = 0")) == 20
 
 
+def _entries(d, version=None):
+    return {e["path"]: e for e in snapshots.snapshot_file_entries(d, version)}
+
+
+def _dv_cards(d, version=None):
+    return sorted(e["dv"]["cardinality"]
+                  for e in _entries(d, version).values() if e.get("dv"))
+
+
 def test_update_rewrites_exactly_one_file(eng, t20):
     before = _paths(t20)
     eng.sql("UPDATE t20 SET v = -1 WHERE k = 150")
-    after = _paths(t20)
-    assert len(before & after) == 19      # 19 carried by reference
-    assert len(after - before) >= 1       # one rewritten file (new dir)
+    after = _entries(t20)
+    assert before < set(after)            # all 20 carried by reference
+    assert _dv_cards(t20) == [1]          # the preimage row is masked
+    new = [e for p, e in after.items() if p not in before]
+    assert len(new) == 1 and new[0]["rows"] == 1   # one 1-row file
     assert eng.sql("SELECT v FROM t20 WHERE k = 150").first()["v"] == -1
     assert eng.sql("SELECT COUNT(*) AS n FROM t20").first()["n"] == 2000
     assert eng.sql("SELECT SUM(v) AS s FROM t20").first()["s"] == \
@@ -77,8 +89,8 @@ def test_update_rewrites_exactly_one_file(eng, t20):
 def test_delete_rewrites_only_hit_files(eng, t20):
     before = _paths(t20)
     eng.sql("DELETE FROM t20 WHERE k BETWEEN 95 AND 105")  # spans 2 files
-    after = _paths(t20)
-    assert len(before & after) == 18
+    assert _paths(t20) == before          # 20 carried, no new data file
+    assert _dv_cards(t20) == [5, 6]       # k 95-99 and k 100-105
     assert eng.sql("SELECT COUNT(*) AS n FROM t20").first()["n"] == 2000 - 11
     assert eng.sql(
         "SELECT COUNT(*) AS n FROM t20 WHERE k BETWEEN 95 AND 105"
@@ -104,8 +116,11 @@ ON t.k = s.k
 WHEN MATCHED THEN UPDATE SET v = s.v
 WHEN NOT MATCHED THEN INSERT (k, v) VALUES (s.k, s.v)
 """)
-    after = _paths(t20)
-    assert len(before & after) == 19      # only k=150's file rewritten
+    after = _entries(t20)
+    assert before < set(after)            # all 20 carried by reference
+    assert _dv_cards(t20) == [1]          # only k=150's row is masked
+    new = [e for p, e in after.items() if p not in before]
+    assert [e["rows"] for e in new] == [2]  # its postimage + the insert
     assert eng.sql("SELECT v FROM t20 WHERE k = 150").first()["v"] == -7
     assert eng.sql("SELECT v FROM t20 WHERE k = 2500").first()["v"] == 1
     assert eng.sql("SELECT COUNT(*) AS n FROM t20").first()["n"] == 2001
@@ -392,13 +407,12 @@ def test_partial_update_after_rename_preserves_data(eng, spark, tmp_path):
         .first()["n"] == 0
 
 
-# --- probe byte gate -------------------------------------------------------
+# --- one probe scan, deletion vectors only where rows leave ----------------
 
-def _probe_jobs(spark, eng, stmt):
-    """Run ``stmt`` in its own Spark job group and return how many of its
-    jobs are the exact file probe (the only ``collect`` an UPDATE/DELETE
-    runs). Counts jobs of the calling thread; the CDC sidecar's write
-    runs on its own thread and is not in the group."""
+def _jobs(spark, eng, stmt):
+    """Run ``stmt`` in its own Spark job group and return how many Spark
+    jobs it ran on the calling thread. The CDC sidecar's write runs on
+    its own thread and is not in the group."""
     import uuid
 
     sc = spark.sparkContext
@@ -409,15 +423,7 @@ def _probe_jobs(spark, eng, stmt):
     finally:
         for prop in ("spark.jobGroup.id", "spark.job.description"):
             sc.setLocalProperty(prop, None)
-    st = sc.statusTracker()
-    n = 0
-    for j in st.getJobIdsForGroup(group):
-        info = st.getJobInfo(j)
-        stages = [st.getStageInfo(s) for s in (info.stageIds if info else [])]
-        if any(s is not None and s.name.startswith("collect at")
-               for s in stages):
-            n += 1
-    return n
+    return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 # k BETWEEN 95 AND 105 keeps two candidate files (k 0-99, k 100-199);
@@ -434,9 +440,15 @@ def test_gate_takes_candidates_without_probe(eng, spark, t20, stmt):
     cand = {e["path"] for e in snapshots.prune_by_stats(entries, _TWO_CAND)}
     assert len(cand) == 2
     before = _paths(t20)
-    assert _probe_jobs(spark, eng, stmt) == 0
-    # every candidate rewritten, exactly the non-candidates carried
-    assert before & _paths(t20) == before - cand
+    # DELETE: the positions collect only; UPDATE: it plus the write of
+    # the postimages
+    assert _jobs(spark, eng, stmt) == (1 if stmt.startswith("DELETE") else 2)
+    after = _entries(t20)
+    assert before <= set(after)           # every file carried
+    # only the candidate holding k 95-99 gets a DV (5 rows); the
+    # hit-free candidate and the non-candidates get none
+    assert {p for p, e in after.items() if e.get("dv")} < cand
+    assert _dv_cards(t20) == [5]
     got = {r.k: r.v for r in eng.sql(
         "SELECT k, v FROM t20 WHERE k BETWEEN 90 AND 110").collect()}
     if stmt.startswith("DELETE"):
@@ -448,24 +460,202 @@ def test_gate_takes_candidates_without_probe(eng, spark, t20, stmt):
         1995 if stmt.startswith("DELETE") else 2000)
 
 
-def test_gate_zero_probes_and_carries_hit_free_candidate(
-        eng, spark, t20, monkeypatch):
-    from duckdb_read_spark import engine as engine_mod
-
-    monkeypatch.setattr(engine_mod, "_DML_PROBE_SKIP_MAX_BYTES", 0)
+def test_gate_zero_probes_and_carries_hit_free_candidate(eng, spark, t20):
     before = _paths(t20)
-    assert _probe_jobs(spark, eng, f"DELETE FROM t20 WHERE {_TWO_CAND}") >= 1
-    # the k 100-199 candidate has no pred-TRUE row: the probe keeps it
-    assert len(before & _paths(t20)) == 19
+    assert _jobs(spark, eng, f"DELETE FROM t20 WHERE {_TWO_CAND}") == 1
+    # the k 100-199 candidate has no pred-TRUE row: carried without a DV
+    after = _entries(t20)
+    assert set(after) == before
+    hit_free = [p for p, e in after.items()
+                if e["stats"]["k"] == [100, 199]]
+    assert len(hit_free) == 1 and "dv" not in after[hit_free[0]]
+    assert _dv_cards(t20) == [5]
     assert eng.sql("SELECT count(*) AS n FROM t20").first()["n"] == 1995
 
 
 def test_gate_all_candidates_is_full_rewrite(eng, spark, t20):
     before = _paths(t20)
-    # opaque to the stats cut: every file is a candidate, all under the gate
-    assert _probe_jobs(spark, eng, "UPDATE t20 SET v = 0 WHERE k % 7 = 0") == 0
-    last = snapshots.read_log(t20)[-1]
-    assert last.files is None              # a plain full overwrite
-    assert not before & _paths(t20)
+    # opaque to the stats cut: every file is a candidate and hit, yet no
+    # file is rewritten — 20 DVs and one file of the 286 postimages
+    assert _jobs(spark, eng, "UPDATE t20 SET v = 0 WHERE k % 7 = 0") == 2
+    after = _entries(t20)
+    assert before < set(after)
+    assert sum(_dv_cards(t20)) == len(range(0, 2000, 7))
+    assert len(_dv_cards(t20)) == 20
+    assert [e["rows"] for p, e in after.items() if p not in before] == \
+        [len(range(0, 2000, 7))]
     assert eng.sql("SELECT count(*) AS n FROM t20 WHERE v = 0") \
         .first()["n"] == len(range(0, 2000, 7))
+    assert eng.sql("SELECT count(*) AS n FROM t20").first()["n"] == 2000
+
+
+# --- deletion vectors across the table's life ------------------------------
+
+def _kv(eng, sql):
+    return {r.k: r.v for r in eng.sql(sql).collect()}
+
+
+def test_dv_history_replays_every_version(eng, t20):
+    """DELETE, UPDATE and MERGE stack deletion vectors (a second vector
+    on a file is the union with the first); every version reads back
+    exactly the rows it had."""
+    model = {1: {k: 2 * k for k in range(2000)}}
+    eng.sql("DELETE FROM t20 WHERE k BETWEEN 10 AND 14")
+    model[2] = {k: v for k, v in model[1].items() if not 10 <= k <= 14}
+    eng.sql("UPDATE t20 SET v = -v WHERE k BETWEEN 15 AND 16")
+    model[3] = {k: -v if k in (15, 16) else v for k, v in model[2].items()}
+    eng.sql("""
+MERGE INTO t20 t USING
+  (SELECT * FROM VALUES (17, CAST(0 AS LONG)), (4000, CAST(4 AS LONG)) AS x(k, v)) s
+ON t.k = s.k
+WHEN MATCHED THEN UPDATE SET v = s.v
+WHEN NOT MATCHED THEN INSERT (k, v) VALUES (s.k, s.v)
+""")
+    model[4] = {**model[3], 17: 0, 4000: 4}
+    eng.sql("DELETE FROM t20 WHERE k = 18 OR k = 4000")
+    model[5] = {k: v for k, v in model[4].items() if k not in (18, 4000)}
+    # one vector on the k 0-99 file, the union of four statements' nine
+    # rows, and one on the MERGE's file for k=4000
+    assert _dv_cards(t20) == [1, 9]
+    for v, want in model.items():
+        assert _kv(eng, f"SELECT k, v FROM t20 VERSION AS OF {v}") == want
+    assert _kv(eng, "SELECT k, v FROM t20") == model[5]
+
+
+def test_dv_fully_masked_file_leaves_manifest(eng, spark, tmp_path):
+    d = str(tmp_path / "t2f")
+    eng.write_versioned(spark.range(0, 20).withColumnRenamed("id", "k")
+                        .repartitionByRange(2, "k"), d)
+    eng.register_versioned("t2f", d)
+    eng.sql("DELETE FROM t2f WHERE k < 10")
+    assert len(_entries(d)) == 1 and _dv_cards(d) == []
+    # every row gone: the same empty overwrite an unconditional DELETE
+    # commits, and the table keeps its schema
+    eng.sql("DELETE FROM t2f WHERE k >= 10")
+    assert eng.table("t2f").columns == ["k"]
+    assert eng.sql("SELECT count(*) AS n FROM t2f").first()["n"] == 0
+    assert eng.sql("SELECT count(*) AS n FROM t2f VERSION AS OF 2"
+                   ).first()["n"] == 10
+
+
+def test_dv_change_feed_delete_and_restore(eng, t20):
+    """A DELETE writes no sidecar; its feed (and RESTORE's, across DV
+    states) is the live-row diff of the manifests."""
+    eng.sql("DELETE FROM t20 WHERE k BETWEEN 95 AND 105")
+    assert snapshots.read_log(t20)[-1].cdc is None
+
+    def feed(a, b):
+        return sorted((r._commit_version, r._change_type, r.k, r.v)
+                      for r in eng.table_changes("t20", a, b).collect())
+
+    assert feed(2, 2) == [(2, "delete", k, 2 * k) for k in range(95, 106)]
+    eng.sql("DELETE FROM t20 WHERE k = 150")
+    eng.sql("RESTORE TABLE t20 TO VERSION AS OF 2")
+    # v4 brings k=150 back, and only it
+    assert feed(4, 4) == [(4, "insert", 150, 300)]
+    eng.sql("RESTORE TABLE t20 TO VERSION AS OF 1")
+    assert feed(5, 5) == [(5, "insert", k, 2 * k) for k in range(95, 106)]
+    assert eng.sql("SELECT count(*) AS n FROM t20").first()["n"] == 2000
+
+
+def test_unique_insert_after_delete_of_key(eng, spark, tmp_path):
+    df = (spark.range(0, 2000).withColumnRenamed("id", "k")
+          .withColumn("v", F.col("k")).repartitionByRange(20, "k"))
+    d = str(tmp_path / "uqd")
+    eng.write_versioned(df, d)
+    eng.register_versioned("uqd", d)
+    eng.sql("CREATE UNIQUE INDEX uq_k ON uqd (k)")
+    with pytest.raises(ValueError, match="key already present"):
+        eng.sql("INSERT INTO uqd VALUES (150, 1)")
+    eng.sql("DELETE FROM uqd WHERE k = 150")
+    # the probe reads the candidate file through its deletion vector
+    eng.sql("INSERT INTO uqd VALUES (150, 1)")
+    assert _kv(eng, "SELECT k, v FROM uqd WHERE k = 150") == {150: 1}
+    with pytest.raises(ValueError, match="key already present"):
+        eng.sql("INSERT INTO uqd VALUES (151, 1)")
+
+
+def test_optimize_purges_deletion_vectors(eng, t20):
+    eng.sql("DELETE FROM t20 WHERE k BETWEEN 95 AND 105")
+    eng.sql("UPDATE t20 SET v = 0 WHERE k = 1500")
+    want = _kv(eng, "SELECT k, v FROM t20")
+    row = eng.sql("OPTIMIZE t20").first()
+    assert row["rewritten_files"] == 21
+    assert _dv_cards(t20) == []
+    assert _kv(eng, "SELECT k, v FROM t20") == want
+    # row-preserving: no change feed
+    v = snapshots.read_log(t20)[-1].version
+    assert eng.table_changes("t20", v, v).count() == 0
+
+
+def test_vacuum_reaps_deletion_vector_files(eng, t20):
+    import glob
+    import os
+
+    def dv_files():
+        return sorted(glob.glob(os.path.join(t20, "deletion_vector_*.bin")))
+
+    eng.sql("DELETE FROM t20 WHERE k = 5")
+    first = dv_files()
+    eng.sql("DELETE FROM t20 WHERE k = 6")   # union → a second file
+    assert len(dv_files()) == 2
+    # an orphan, as a commit that lost its O_EXCL race leaves behind
+    from duckdb_read_spark import deltalog
+
+    deltalog.write_dv(t20, [1, 2])
+    assert len(dv_files()) == 3
+    eng.vacuum_table("t20", keep_last=1)
+    kept = dv_files()
+    assert len(kept) == 1 and kept != first
+    assert eng.sql("SELECT count(*) AS n FROM t20").first()["n"] == 1998
+
+
+def test_clone_of_dv_table(eng, t20, tmp_path):
+    eng.sql("DELETE FROM t20 WHERE k BETWEEN 95 AND 105")
+    want = _kv(eng, "SELECT k, v FROM t20")
+    eng.sql("CREATE TABLE t20c CLONE t20")
+    assert _kv(eng, "SELECT k, v FROM t20c") == want
+    dvs = [e["dv"] for e in _entries(eng._versioned["t20c"]).values()
+           if e.get("dv")]
+    assert sorted(dv["storageType"] for dv in dvs) == ["p", "p"]
+    # a DML on the clone unions with the referenced source vector into
+    # a clone-owned one; the source is untouched
+    eng.sql("DELETE FROM t20c WHERE k = 94")
+    assert eng.sql("SELECT count(*) AS n FROM t20c").first()["n"] == 1988
+    assert _kv(eng, "SELECT k, v FROM t20") == want
+    assert sorted(e["dv"]["storageType"] for e in _entries(
+        eng._versioned["t20c"]).values() if e.get("dv")) == ["p", "u"]
+
+
+def test_subqueries_see_the_whole_target(eng, t20):
+    """The statement reads its candidate files through a private view;
+    the target's name still means the whole table inside a subquery."""
+    eng.sql("DELETE FROM t20 WHERE k = (SELECT max(k) FROM t20)")
+    assert eng.sql("SELECT max(k) AS m FROM t20").first()["m"] == 1998
+    eng.sql("UPDATE t20 SET v = (SELECT count(*) FROM t20) WHERE k = 5")
+    assert _kv(eng, "SELECT k, v FROM t20 WHERE k = 5") == {5: 1999}
+    eng.sql("DELETE FROM t20 WHERE k IN (SELECT k + 1 FROM t20 WHERE k = 5)")
+    assert eng.sql("SELECT count(*) AS n FROM t20").first()["n"] == 1998
+    assert _kv(eng, "SELECT k, v FROM t20 WHERE k BETWEEN 5 AND 7") == \
+        {5: 1999, 7: 14}
+
+
+def test_insert_values_commits_one_file(eng, t20):
+    before = _paths(t20)
+    eng.sql("INSERT INTO t20 VALUES (5000, 1), (5001, 2), (5002, 3)")
+    new = [e for p, e in _entries(t20).items() if p not in before]
+    assert [e["rows"] for e in new] == [3]
+
+
+def test_dv_table_path_with_space(eng, spark, tmp_path):
+    """Vectors are keyed by the decoded ``_metadata.file_path``: a table
+    dir whose path Spark percent-encodes still masks its rows."""
+    d = str(tmp_path / "with space+plus")
+    eng.write_versioned(spark.range(0, 100).withColumnRenamed("id", "k")
+                        .repartitionByRange(2, "k"), d)
+    eng.register_versioned("tsp", d)
+    eng.sql("DELETE FROM tsp WHERE k IN (3, 70)")
+    eng.sql("UPDATE tsp SET k = -k WHERE k = 4")
+    assert _dv_cards(d) == [1, 2]
+    got = {r.k for r in eng.sql("SELECT k FROM tsp").collect()}
+    assert got == (set(range(100)) - {3, 4, 70}) | {-4}

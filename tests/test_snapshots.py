@@ -268,11 +268,12 @@ def test_vacuum_preserves_stream_watermarks(spark, tmp_path):
 # --- physical schema recorded in the log -----------------------------------
 
 def _merge_read(spark, table_dir, version):
-    """The pre-recorded-schema read path: footer-merged schema."""
+    """The pre-recorded-schema read path: footer-merged schema (with the
+    snapshot's deletion vectors applied, as every snapshot read does)."""
     from duckdb_read_spark import snapshots
 
-    v, paths = snapshots.resolve_snapshot(table_dir, version=version)
-    df = spark.read.option("mergeSchema", "true").parquet(*paths)
+    v, entries, _ = snapshots._resolve(table_dir, version, None)
+    df = snapshots.read_files(spark, table_dir, entries, None)
     return snapshots.apply_schema_patches(df, table_dir, version=v)
 
 
