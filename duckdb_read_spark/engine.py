@@ -721,18 +721,17 @@ class Engine:
         reuses an existing materialization (idempotent)."""
         import os
 
-        raw = self.spark.read.parquet(path)
-        df = catalog.apply_schema_shims(raw, path)
+        df = catalog.read_parquet(self.spark, path)
         ts_col: str | None = None
         if isinstance(time_partition, str):
             ts_col = time_partition
         elif time_partition:
-            raw_types = {f.name: f.dataType.simpleString() for f in raw.schema.fields}
+            ns_cols = catalog.parquet_schema(self.spark, path).ns_columns
             ts_like = [f.name for f in df.schema.fields
                        if f.dataType.simpleString() == "timestamp"]
             # prefer ns-shimmed columns (the expression-computed ones that
             # motivated this path); else accept a single native ts column
-            shimmed = [c for c in ts_like if raw_types.get(c) == "bigint"]
+            shimmed = [c for c in ts_like if c in ns_cols]
             pick = shimmed or ts_like
             if len(pick) != 1:
                 raise ValueError(
@@ -3956,8 +3955,7 @@ class Engine:
                 if opts:
                     raise ValueError(
                         f"read_parquet: unrecognized option(s) {sorted(opts)}")
-                df = self.spark.read.parquet(path)
-                df = catalog.apply_schema_shims(df, path)
+                df = catalog.read_parquet(self.spark, path)
             elif kind in ("csv", "csv_auto"):
                 df = self._read_csv_with_opts(path, opts)
             else:
@@ -5830,7 +5828,7 @@ class Engine:
         if fmt == "parquet":
             if delimiter is not None:
                 raise ValueError("COPY FROM: DELIMITER only applies to FORMAT csv")
-            df = self.spark.read.parquet(path)
+            df = catalog.read_parquet(self.spark, path)
         elif fmt == "csv":
             reader = (self.spark.read
                       .option("header", str(bool(header)).lower())

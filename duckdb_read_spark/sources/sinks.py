@@ -84,6 +84,36 @@ def write_csv(
     if partition_by:
         w = w.partitionBy(*partition_by)
     w.csv(path)
+    if header and not partition_by:
+        _drop_header_only_part(path)
+
+
+def _drop_header_only_part(path: str) -> None:
+    """Delete the header-only part file Spark leaves when the first
+    partition is empty (task 0 always writes a file, so an empty result
+    still has one), so that a reader sniffing one file's types (DuckDB's
+    read_csv over ``path/*.csv``) sees a data row. Only local uncompressed,
+    gzip and bzip2 parts are inspected."""
+    import bz2
+    import glob
+    import gzip
+    import os
+
+    parts = sorted(glob.glob(os.path.join(path, "part-*")))
+    if len(parts) < 2:
+        return  # nothing written, or the one file of an empty result
+    first = parts[0]  # task 0's file
+    opener = {".csv": open, ".gz": gzip.open, ".bz2": bz2.open}.get(
+        os.path.splitext(first)[1])
+    if opener is None:
+        return
+    with opener(first, "rb") as f:
+        header_only = bool(f.readline()) and not f.readline()
+    if header_only:
+        os.remove(first)
+        crc = os.path.join(path, f".{os.path.basename(first)}.crc")
+        if os.path.exists(crc):
+            os.remove(crc)
 
 
 def write_json(

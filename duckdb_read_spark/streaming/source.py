@@ -1,11 +1,12 @@
 """Streaming sources: replay the events parquet as a file stream.
 
 A parquet file stream needs an explicit schema (streaming readers never
-infer), and the fixture ``events.ts`` is INT64 TIMESTAMP(NANOS) — the same
-ns→µs shim used for batch registration (catalog.apply_schema_shims) is
-applied on the streaming DataFrame, so batch and stream pipelines see the
-identical schema. That batch/stream schema equality is what makes the
-equivalence tests (tests/test_streaming.py) meaningful.
+infer); it comes from the session's parquet schema store
+(catalog.parquet_schema), and the same footer-driven ns→µs shim used for
+batch reads (catalog.shim_ns_timestamps) is applied on the streaming
+DataFrame, so batch and stream pipelines see the identical schema. That
+batch/stream schema equality is what makes the equivalence tests
+(tests/test_streaming.py) meaningful.
 """
 
 from __future__ import annotations
@@ -13,35 +14,9 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
+from .. import catalog
 from ..conf import apply_runtime_confs
-
-
-# Schema-inference memo (r13, guide §1.2): streaming sources need the
-# schema up front, and the batch read that provides it costs a driver
-# job (file listing + footer) of ~0.4 s per call. The schema is a pure
-# function of the file bytes, so memoize per (realpath, mtime, size) —
-# an overwritten file re-infers and replaces its old entry, so the memo
-# holds one entry per path. Metadata only; no rows are cached.
-_SCHEMA_MEMO: dict[tuple, object] = {}
-
-
-def _parquet_schema(spark: SparkSession, path: str):
-    real = os.path.realpath(path)
-    # memoize SINGLE FILES only: a directory's stat does not change when
-    # a contained file is modified in place, so its key would go stale
-    if not os.path.isfile(real):
-        return spark.read.parquet(path).schema  # dirs/globs — no memo
-    st = os.stat(real)
-    key = (real, st.st_mtime_ns, st.st_size)
-    schema = _SCHEMA_MEMO.get(key)
-    if schema is None:
-        schema = spark.read.parquet(path).schema
-        for stale in [k for k in _SCHEMA_MEMO if k[0] == real]:
-            del _SCHEMA_MEMO[stale]
-        _SCHEMA_MEMO[key] = schema
-    return schema
 
 
 def events_stream(
@@ -51,24 +26,22 @@ def events_stream(
 ) -> DataFrame:
     """``readStream`` over an events parquet file/directory.
 
-    ``path`` may be a single file, a directory, or a glob. ``ts`` arrives as
-    LongType nanoseconds (nanosAsLong) and is rebuilt as a µs timestamp.
+    ``path`` may be a single file, a directory, or a glob. INT64
+    TIMESTAMP(NANOS) columns arrive as LongType nanoseconds (nanosAsLong)
+    and are rebuilt as µs timestamps.
     """
     apply_runtime_confs(spark)
-    # Streaming sources need the schema up front; take it from a batch
-    # read (memoized per file identity).
-    schema = _parquet_schema(spark, path)
-    reader = spark.readStream.schema(schema)
+    # Streaming sources need the schema up front; take it from the
+    # session's parquet schema store (inferred once per file identity).
+    entry = catalog.parquet_schema(spark, path)
+    reader = spark.readStream.schema(entry.schema)
     if os.path.isfile(path):
         # FileStreamSource requires a directory (its basePath must be one);
         # expose a single file through a symlink in a scratch directory.
         path = _file_as_dir(path)
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    df = reader.parquet(path)
-    if dict((f.name, f.dataType.simpleString()) for f in df.schema.fields).get("ts") == "bigint":
-        df = df.withColumn("ts", F.expr("timestamp_micros(ts DIV 1000)"))
-    return df
+    return catalog.shim_ns_timestamps(reader.parquet(path), entry.ns_columns)
 
 
 def fixture_events_stream(spark: SparkSession, sf_dir: str, **kw) -> DataFrame:

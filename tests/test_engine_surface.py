@@ -630,6 +630,29 @@ def test_copy_statement_options(engine, tmp_path):
         engine.sql(f"COPY region TO '{tmp_path}/y' (FORMAT parquet, HEADER false)")
 
 
+def test_copy_csv_header_writes_no_header_only_part(engine, spark, tmp_path):
+    """COPY … TO csv with HEADER leaves no header-only part file for an
+    empty partition, so DuckDB's sniffer over ``dir/*.csv`` reads integer
+    columns rather than VARCHAR; an empty result keeps exactly one."""
+    import glob
+
+    import duckdb
+
+    rows = spark.sparkContext.parallelize([(1, 10), (2, 20)], 4)
+    spark.createDataFrame(rows, "a INT, b INT").createOrReplaceTempView("hdr2")
+    out = str(tmp_path / "two.csv")
+    engine.sql(f"COPY hdr2 TO '{out}' (FORMAT csv, HEADER)")
+    rel = duckdb.sql(f"SELECT * FROM read_csv('{out}/*.csv', header=true) ORDER BY a")
+    assert [str(t) for t in rel.types] == ["BIGINT", "BIGINT"]
+    assert rel.fetchall() == [(1, 10), (2, 20)]
+    empty = str(tmp_path / "none.csv")
+    engine.sql(f"COPY (SELECT * FROM hdr2 WHERE a > 5) TO '{empty}' (FORMAT csv, HEADER)")
+    parts = glob.glob(empty + "/part-*")
+    assert len(parts) == 1
+    with open(parts[0]) as f:
+        assert f.read().split() == ["a,b"]
+
+
 def test_explain_statement_and_analyze(engine):
     plan = engine.sql(
         "EXPLAIN SELECT l_orderkey FROM lineitem WHERE l_orderkey < 10"

@@ -405,16 +405,22 @@ def test_read_stream_table_refuses_orphan_dirs(spark, tmp_path):
 
 def test_schema_memo_keeps_one_entry_per_overwritten_file(spark, tmp_path):
     """Overwriting a stream source file re-infers its schema and replaces
-    the memo entry for that path rather than adding one per version."""
+    the session store's entry for that path rather than adding one per
+    version."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
+    from duckdb_read_spark import catalog
     from duckdb_read_spark.streaming import source
 
     path = str(tmp_path / "src.parquet")
     real = os.path.realpath(path)
+    store = catalog.session_state(spark).schemas
+    n_before = len(store)
     for cols in (["a"], ["a", "b"], ["a", "b", "c"]):
         pq.write_table(pa.table({c: [1, 2] for c in cols}), path)
-        assert source._parquet_schema(spark, path).fieldNames() == cols
-    assert [k for k in source._SCHEMA_MEMO if k[0] == real] == [
-        (real, os.stat(real).st_mtime_ns, os.stat(real).st_size)]
+        assert source.events_stream(spark, path).columns == cols
+        assert store[real].schema.fieldNames() == cols
+    st = os.stat(real)
+    assert len(store) == n_before + 1
+    assert store[real].key[:3] == (st.st_ino, st.st_mtime_ns, st.st_size)
