@@ -34,8 +34,14 @@ import threading
 import weakref
 from typing import NamedTuple
 
+# Imported with the package, on the importing thread: a first import
+# inside local_frame could run on any thread that builds a frame, and two
+# threads first-importing the same modules can each be handed the other's
+# half-initialized module.
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructType
 
 from .conf import TABLES, apply_runtime_confs
@@ -177,6 +183,27 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one fixture table as a DataFrame, with schema shims applied."""
     return read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
+
+
+def local_frame(spark: SparkSession, rows: list[tuple],
+                schema: StructType | str) -> DataFrame:
+    """``rows`` (tuples in ``schema``'s field order; a StructType or a DDL
+    string) as a DataFrame over a JVM LocalRelation. Fed a Python list,
+    ``createDataFrame`` scans a PythonRDD, so every read of the frame
+    starts a Spark job whose tasks pass through Python workers; a
+    LocalRelation is collected on the driver without a job. Values first
+    go through their field type's ``toInternal``, as on the list path, so
+    dates and timestamps convert exactly as they did there."""
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow = to_arrow_schema(schema)
+    columns = list(zip(*rows)) or [()] * len(schema.fields)
+    table = pa.Table.from_arrays(
+        [pa.array([f.dataType.toInternal(v) for v in col]
+                  if f.dataType.needConversion() else col, type=a.type)
+         for col, f, a in zip(columns, schema.fields, arrow)],
+        schema=arrow)
+    return spark.createDataFrame(table, schema=schema)
 
 
 def register_tables(spark: SparkSession, sf_dir: str, force: bool = False) -> None:

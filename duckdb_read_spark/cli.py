@@ -36,8 +36,8 @@ def run_statement(engine, stmt: str, dialect: str, limit: int) -> None:
     if s.startswith("."):
         parts = s.split()
         if parts[0] == ".tables":
-            for t in sorted(v.name for v in engine.spark.catalog.listTables()):
-                print(t)
+            for r in engine.sql("SHOW TABLES").collect():
+                print(r.name)
         elif parts[0] == ".schema" and len(parts) > 1:
             engine.table(parts[1]).printSchema()
         elif parts[0] == ".read" and len(parts) > 1:

@@ -493,8 +493,9 @@ def _dv_rows_df(spark, rows: list[tuple[str, bytes]]):
     touches only the COMPRESSED bitmaps."""
     import pandas as pd
 
-    src = spark.createDataFrame(
-        [(p, bytearray(d)) for p, d in rows], "path string, dv binary")
+    from .catalog import local_frame
+
+    src = local_frame(spark, rows, "path string, dv binary")
 
     def gen(batches):
         from . import roaring

@@ -42,6 +42,7 @@ import os
 import re
 
 from . import avroio
+from .catalog import local_frame
 
 _META_DIR = "metadata"
 
@@ -393,8 +394,8 @@ def _apply_row_deletes(spark, info: dict, meta: dict, table_dir: str):
                  re.sub(r"^[a-zA-Z][a-zA-Z0-9+.-]*:/*", "/", uri),
                  seq)
                 for p, uri, seq in info["data"]]
-    seq_df = spark.createDataFrame(
-        seq_rows, "__ib_path string, __ib_uri string, __ib_seq bigint")
+    seq_df = local_frame(
+        spark, seq_rows, "__ib_path string, __ib_uri string, __ib_seq bigint")
     base = base.join(F.broadcast(seq_df), "__ib_path", "left")
 
     if info["pos_deletes"]:

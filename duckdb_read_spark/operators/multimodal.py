@@ -35,6 +35,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..catalog import local_frame
+
 # Canonical asset schema: bytes + metadata. Large assets at 100 TB should
 # set ``content=NULL`` and use ``uri`` (bytes-in-parquet works to ~a few MB
 # per row; beyond that row groups bloat and scans slow down).
@@ -377,6 +379,14 @@ def make_wav(
             + b"data" + struct.pack("<I", len(data)) + data)
 
 
+def _asset_frame(spark, rows: list[tuple]) -> DataFrame:
+    """Demo asset rows as one partition: they total a few hundred KB, each
+    further partition is one more Python task in the decode that follows,
+    and a sort of one partition needs no range-sampling pass (which would
+    run that decode twice)."""
+    return local_frame(spark, rows, ASSET_SCHEMA).coalesce(1)
+
+
 def make_demo_audio(spark, n: int = 32) -> DataFrame:
     """Deterministic REAL WAV assets (varied rate/length/frequency) so
     decode_audio(strict=True) exercises the genuine parse path."""
@@ -387,7 +397,7 @@ def make_demo_audio(spark, n: int = 32) -> DataFrame:
         content = make_wav(length, rate, channels=1 + i % 2,
                            freq_hz=220.0 * (1 + i % 4), amplitude=0.25 + (i % 3) * 0.25)
         rows.append((i, "audio", bytearray(content), None, "audio/wav"))
-    return spark.createDataFrame(rows, ASSET_SCHEMA)
+    return _asset_frame(spark, rows)
 
 
 def sample_frames(
@@ -438,4 +448,4 @@ def make_demo_assets(spark, n: int = 64, fmt: str = "ppm") -> DataFrame:
         else:
             content = hashlib.sha256(f"asset-{i}".encode()).digest() * 4
             rows.append((i, "image", bytearray(content), None, "image/fake"))
-    return spark.createDataFrame(rows, ASSET_SCHEMA)
+    return _asset_frame(spark, rows)

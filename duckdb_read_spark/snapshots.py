@@ -165,12 +165,12 @@ def read_files(spark: SparkSession, table_dir: str, entries: list[dict],
     disagree (additive appends, post-RENAME generations). ``row_ids``
     keeps ``deltalog.ROW_ID_COLS``, each row's (file, row index), as two
     trailing columns."""
-    from . import deltalog
+    from . import catalog, deltalog
 
     if not entries:
         # every file of the snapshot was deleted
-        return spark.createDataFrame(
-            [], StructType.fromJson(json.loads(schema)))
+        return catalog.local_frame(
+            spark, [], StructType.fromJson(json.loads(schema)))
     reader = (spark.read.option("mergeSchema", "true") if schema is None
               else spark.read.schema(StructType.fromJson(json.loads(schema))))
     df = reader.parquet(*[os.path.join(table_dir, e["path"]) for e in entries])

@@ -25,6 +25,8 @@ from typing import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..catalog import local_frame
+
 
 def _files_of(path: str) -> list[str]:
     if os.path.isdir(path):
@@ -105,7 +107,7 @@ def parquet_metadata_df(spark: SparkSession, path: str) -> DataFrame:
                 rows, columns=[s.split()[0] for s in
                                _META_SCHEMA.split(", ")])
 
-    src = spark.createDataFrame([(f,) for f in files], "file string")
+    src = local_frame(spark, [(f,) for f in files], "file string")
     return src.mapInPandas(gen, _META_SCHEMA)
 
 
@@ -165,5 +167,5 @@ def parquet_schema_df(spark: SparkSession, path: str) -> DataFrame:
                     })
             yield pd.DataFrame(rows, columns=cols)
 
-    src = spark.createDataFrame([(f,) for f in files], "file string")
+    src = local_frame(spark, [(f,) for f in files], "file string")
     return src.mapInPandas(gen, _SCHEMA_SCHEMA)
