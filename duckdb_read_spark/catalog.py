@@ -74,20 +74,26 @@ class SchemaEntry(NamedTuple):
 
 
 class SessionState:
-    """Per-session catalog state: the parquet schema store (realpath →
-    SchemaEntry) with its hit/miss counters, and the fixture directory
-    ``register_tables`` last registered."""
+    """Everything the library memoizes per session: the parquet schema
+    store (realpath → SchemaEntry) with its hit/miss counters, the
+    fixture directory ``register_tables`` last registered, the session
+    UDFs ``udfs.register_fuzzy_udfs`` registered, the full-text score
+    views by indexed file (``Engine`` match_bm25), and the cached inputs
+    of the last recursive query (``plans.recursive``)."""
 
     def __init__(self) -> None:
         self.schemas: dict[str, SchemaEntry] = {}
         self.hits = 0
         self.misses = 0
         self.registered: str | None = None
+        self.udfs: dict | None = None
+        self.fts_views: dict[tuple, str] = {}
+        self.recursive_inputs: list = []
 
 
-# Keyed weakly on the Python session object (as udfs._FUZZY_REGISTERED):
-# a collected session takes its state with it, and a new session — even
-# one reusing the old one's id() — starts empty.
+# Keyed weakly on the Python session object: a collected session takes
+# its state with it, and a new session — even one reusing the old one's
+# id() — starts empty.
 _SESSIONS: "weakref.WeakKeyDictionary[SparkSession, SessionState]" = \
     weakref.WeakKeyDictionary()
 # Guards _SESSIONS and every SessionState: one session may be used from

@@ -2209,6 +2209,53 @@ def _temporal_series_emission(a: str, b: str, s: str,
         f"ELSE slice(array({ca}), 1, 0) END)")
 
 
+# Call-shaped rewrites, looked up by the lowercased DuckDB function name
+# (as DuckDB binds a call through its function catalog). A handler runs
+# as handler(toks, i, parts, column_kinds) for a call toks[i](…) with
+# parts = _call_parts(toks, i) and, when one was registered, that many
+# arguments. It returns (replacement text, index of the last token it
+# replaces), or None to pass the call on to the name's next handler.
+# Handlers for one name run in source order; only _rewrite_calls' loop
+# walks the tokens.
+_CALL_HANDLERS: dict[str, list[tuple]] = {}
+
+
+def _calls(*names, nargs=None):
+    """Register the decorated handler for calls to each of ``names``,
+    only with exactly ``nargs`` arguments when that is given."""
+    def register(handler):
+        for n in names:
+            _CALL_HANDLERS.setdefault(n, []).append((nargs, handler))
+        return handler
+    return register
+
+
+def _call_parts(toks, idx):
+    """If toks[idx] is IDENT immediately (mod ws) followed by '(', return
+    (open_idx, close_idx, arg_spans)."""
+    j = idx + 1
+    while j < len(toks) and toks[j].kind in ("ws", "comment"):
+        j += 1
+    if j < len(toks) and toks[j].text == "(":
+        close = match_bracket(toks, j)
+        return j, close, split_args(toks, j, close)
+    return None
+
+
+def _rewrite_call(toks, i, column_kinds):
+    """(text, last token index) from the first handler that takes the
+    call at toks[i], or None when none does or toks[i] is no call."""
+    parts = _call_parts(toks, i)
+    if parts is None:
+        return None
+    for nargs, handler in _CALL_HANDLERS[toks[i].text.lower()]:
+        if nargs is None or nargs == len(parts[2]):
+            hit = handler(toks, i, parts, column_kinds)
+            if hit is not None:
+                return hit
+    return None
+
+
 def _rewrite_calls(sql: str, column_kinds: dict[str, str] | None = None) -> str:
     """One pass of call-shaped rewrites; repeats until fixpoint for nesting.
 
@@ -2219,4408 +2266,4336 @@ def _rewrite_calls(sql: str, column_kinds: dict[str, str] | None = None) -> str:
     out: list[str] = []
     i = 0
     changed = False
-
-    def call_parts(idx):
-        """If toks[idx] is IDENT immediately (mod ws) followed by '(', return
-        (open_idx, close_idx, arg_spans)."""
-        j = idx + 1
-        while j < len(toks) and toks[j].kind in ("ws", "comment"):
-            j += 1
-        if j < len(toks) and toks[j].text == "(":
-            close = match_bracket(toks, j)
-            return j, close, split_args(toks, j, close)
-        return None
-
     while i < len(toks):
         t = toks[i]
         name = t.text.lower() if t.kind == "ident" else None
-        parts = call_parts(i) if name else None
-
-        if (name in ("cast", "try_cast") and parts
-                and len(parts[2]) == 1):
-            # CAST(<array> AS VARCHAR): Spark renders NULL elements
-            # lowercase ('[1, null, 3]'), DuckDB uppercase ('[1, NULL,
-            # 3]') — a silent hash mismatch in the declared-query
-            # contract. Rewrites only PROVABLY-array operands (list
-            # literal, array-kind column, array-returning call);
-            # everything else keeps the native cast.
-            body = _arg_text(toks, parts[2][0])
-            mvc = re.fullmatch(r"(?is)(.*)\s+AS\s+(?:VARCHAR|STRING|"
-                               r"TEXT)\s*", body)
-            if mvc:
-                x = mvc.group(1).strip()
-                is_arr = (
-                    (x.startswith("[") and x.endswith("]"))
-                    or (column_kinds or {}).get(x.lower()) == "array"
-                    or re.match(
-                        r"(?i)^(?:array|array_agg|collect_list|"
-                        r"collect_set|sort_array|sequence|"
-                        r"array_distinct|array_sort|list_sort|"
-                        r"list_distinct|string_split|split|"
-                        r"string_to_array|regexp_split_to_array|"
-                        r"flatten|slice|list_transform|list_filter|"
-                        r"array_transform)\s*\(", x))
-                if is_arr and _expr_is_double_array(
-                        f"array({x[1:-1]})" if x.startswith("[")
-                        else x, column_kinds):
-                    # DOUBLE elements render shortest-round-trip in
-                    # DuckDB ('[1e+16]'; CAST says '1.0E16') — a
-                    # struct-flagged render UDF (NULL elements merge
-                    # with NaN in a bare float64 Arrow block) (r10)
-                    out.append(
-                        f"__duck_double_array_varchar__(transform"
-                        f"(({x}), __da -> struct(CAST(__da AS DOUBLE) "
-                        f"AS v, __da IS NULL AS n)))")
-                    i = parts[1] + 1
-                    changed = True
-                    continue
-                if is_arr:
-                    if re.match(r"^\[\s*\[", x):
-                        # one nesting level of literal arrays: inner
-                        # NULLs must render uppercase too (review r9
-                        # #6; deeper nesting is documented residue)
-                        inner = (
-                            f"'[' || array_join(transform(__e, "
-                            f"__e2 -> coalesce(CAST(__e2 AS STRING), "
-                            f"'NULL')), ', ') || ']'")
-                        out.append(
-                            f"(CASE WHEN ({x}) IS NULL THEN "
-                            f"CAST(NULL AS STRING) ELSE '[' || "
-                            f"array_join(transform({x}, __e -> "
-                            f"CASE WHEN __e IS NULL THEN 'NULL' "
-                            f"ELSE {inner} END), ', ') || ']' END)")
-                    else:
-                        out.append(
-                            f"(CASE WHEN ({x}) IS NULL THEN "
-                            f"CAST(NULL AS STRING) ELSE '[' || "
-                            f"array_join(transform({x}, __e -> "
-                            f"coalesce(CAST(__e AS STRING), 'NULL')), "
-                            f"', ') || ']' END)")
-                    i = parts[1] + 1
-                    changed = True
-                    continue
-        if name == "__floordiv__" and parts and len(parts[2]) == 2:
-            # `//` marker (from _rewrite_floordiv_operator) — expand
-            # with the schema-resolved dispatch [measured]: int//int is
-            # TRUNCATING integer division with NULL on a zero divisor
-            # (-7//2 = -3, 7//0 = NULL); any DOUBLE/DECIMAL operand
-            # makes it PLAIN division (7.0//2 = 3.5). Unprovable
-            # operands default to the integer path (the dominant use;
-            # §2.4 documented divergence).
-            a = _arg_text(toks, parts[2][0])
-            b = _arg_text(toks, parts[2][1])
-            ca = _numeric_class(a, column_kinds)
-            cb = _numeric_class(b, column_kinds)
-            if ca == "frac" or cb == "frac":
-                out.append(f"try_divide({a}, {b})")
-            else:
-                out.append(f"(CASE WHEN ({b}) = 0 THEN NULL "
-                           f"ELSE ({a}) DIV ({b}) END)")
-            i = parts[1] + 1
-            changed = True
-            continue
-        if name in _ORDER_INSENSITIVE_AGGS and parts:
-            # DuckDB accepts an ORDER BY modifier inside EVERY aggregate
-            # (it only matters for order-sensitive ones like string_agg
-            # / array_agg / first, which have their own branches) —
-            # Spark parse-errors on e.g. min(x ORDER BY x). For
-            # order-INSENSITIVE aggregates the modifier is a semantic
-            # no-op [measured], so strip it and re-enter the fixpoint
-            # with the plain call.
-            open_i, close, _ = parts
-            cut = None
-            depth = 0
-            k = open_i + 1
-            while k < close:
-                tk = toks[k]
-                if tk.kind in ("ws", "comment"):
-                    k += 1
-                    continue
-                if tk.text in ("(", "["):
-                    depth += 1
-                elif tk.text in (")", "]"):
-                    depth -= 1
-                elif (depth == 0 and tk.kind == "ident"
-                        and tk.text.upper() == "ORDER"):
-                    k2 = k + 1
-                    while k2 < close and toks[k2].kind in (
-                            "ws", "comment"):
-                        k2 += 1
-                    if k2 < close and toks[k2].text.upper() == "BY":
-                        cut = k
-                        break
-                k += 1
-            if cut is not None:
-                inner = detokenize(toks[open_i + 1:cut]).strip()
-                out.append(f"{name}({inner})")
-                i = close + 1
-                changed = True
-                continue
-        if name in ("string_split", "str_split", "string_to_array",
-                    "split") and parts and len(parts[2]) == 2:
-            # DuckDB's split family takes a LITERAL separator; Spark's
-            # split() is REGEX — string_split('a|b', '|') silently split
-            # every character. Literal separators are regex-escaped at
-            # rewrite time; dynamic ones are \Q…\E-quoted. Emitted via
-            # the __regex_split__ marker (resolved to split by the final
-            # keyword pass) so the bare "split" name can own this branch.
-            _, close, spans = parts
-            sv = _arg_text(toks, spans[0])
-            sep_toks = [k for k in range(*spans[1])
-                        if toks[k].kind not in ("ws", "comment")]
-            if len(sep_toks) == 1 and toks[sep_toks[0]].kind == "str":
-                inner2 = toks[sep_toks[0]].text[1:-1]
-                raw = inner2.replace("\\\\", "\\")  # undo literal doubling
-                if raw == "":
-                    lit = "''"  # empty separator: per-char in both
-                else:
-                    lit = "'" + _embed_regex_literal(re.escape(raw)) + "'"
-                out.append(f"__regex_split__({sv}, {lit})")
-            else:
-                sep = _arg_text(toks, spans[1])
-                out.append(f"__regex_split__({sv}, "
-                           f"'\\\\Q' || ({sep}) || '\\\\E')")
-            i = close + 1
-            changed = True
-            continue
-        if name in ("len", "length") and parts and len(parts[2]) == 1:
-            # DuckDB len() covers BOTH list length and string length; Spark
-            # splits these into size() and length(). A bare (optionally
-            # qualified) column resolves by the registered tables' schemas
-            # when the Engine threads them in; anything else falls back to
-            # the textual heuristic: the argument is list-shaped if it
-            # contains a list-producing call or a subscript.
-            _, close, spans = parts
-            arg_toks_all = toks[parts[0] + 1:close]
-            arg = detokenize(arg_toks_all).lower()
-            arg_toks = [t for t in arg_toks_all
-                        if t.kind not in ("ws", "comment")]
-            bare = None
-            if len(arg_toks) == 1 and arg_toks[0].kind == "ident":
-                bare = arg_toks[0].text.lower()
-            elif (len(arg_toks) == 3 and arg_toks[0].kind == "ident"
-                    and arg_toks[1].text == "." and arg_toks[2].kind == "ident"):
-                bare = arg_toks[2].text.lower()
-            kind = (column_kinds or {}).get(bare) if bare else None
-            if kind in ("array", "map", "string"):
-                emitted = "length" if kind == "string" else "size"
-                out.append(emitted)
-                i += 1
-                # length()→length is a no-op — flagging it as a change
-                # would loop the fixpoint (r10)
-                changed = changed or emitted != name
-                continue
-            if name == "length":
-                # plain length() keeps Spark's string semantics unless
-                # the argument is ITSELF a list (whole-expression list
-                # literal or list-returning call — a containment
-                # heuristic misfired on string emissions that merely
-                # CONTAIN 'array(', r10): DuckDB's length() is a len()
-                # alias and counts list elements
-                at = arg.strip()
-                whole_list = at.startswith("[") and at.endswith("]")
-                if not whole_list and re.match(
-                        r"(?is)(array|collect_list|collect_set|"
-                        r"sequence|flatten|sort_array|array_distinct|"
-                        r"array_sort|list_sort|list_distinct|"
-                        r"string_to_array|string_split|split|"
-                        r"regexp_split_to_array)\s*\(", at):
-                    tk2 = tokenize(at)
-                    sg2 = significant(tk2)
-                    try:
-                        whole_list = (len(sg2) >= 3
-                                      and match_bracket(tk2, sg2[1])
-                                      == sg2[-1])
-                    except (ValueError, IndexError):
-                        whole_list = False
-                if whole_list:
-                    out.append("size")
-                    changed = True
-                else:
-                    out.append(t.text)  # Spark's own length()
-                i += 1
-                continue
-            listish = any(
-                k in arg
-                for k in ("split(", "array", "collect_list", "collect_set",
-                          "sequence(", "transform(", "list_", "[")
-            ) or any(h in arg for h in ARRAY_COLUMN_HINTS)
-            if bare is not None and not listish:
-                # Bare column with unknown type: the string assumption is a
-                # guess — fail loudly enough to be diagnosable (ADVICE r1).
-                import warnings
-
-                warnings.warn(
-                    f"dialect: len({arg}) rewritten to length() by heuristic; "
-                    "if the column is array-typed add it to ARRAY_COLUMN_HINTS",
-                    stacklevel=2,
-                )
-            out.append("size" if listish else "length")
+        hit = (_rewrite_call(toks, i, column_kinds)
+               if name in _CALL_HANDLERS else None)
+        if hit is None:
+            out.append(t.text)
             i += 1
-            changed = True
             continue
-        if name == "unnest" and parts and len(parts[2]) == 2:
-            # named-argument forms [measured r12]: recursive := true
-            # flattens nested LISTS fully ([[1,2],[3]] → 1,2,3 rows);
-            # max_depth := n unnests n list levels; recursive := false
-            # is the bare unnest. Depth comes from the literal's
-            # bracket nesting — non-literal nested args stay loud.
-            a0 = _arg_text(toks, parts[2][0]).strip()
-            a1 = _arg_text(toks, parts[2][1]).strip()
-            mrec = re.match(r"(?is)^recursive\s*:=\s*(true|false)$", a1)
-            mdep = re.match(r"(?is)^max_depth\s*:=\s*(\d+)$", a1)
-            if mrec or mdep:
-                if a0.lstrip().startswith("["):
-                    lead = a0.lstrip()
-                    d_ = 0
-                    for ch in lead:
-                        if ch == "[":
-                            d_ += 1
-                        elif not ch.isspace():
-                            break
-                    if mrec and mrec.group(1).lower() == "false":
-                        levels = 1
-                    elif mrec:
-                        levels = d_
-                    else:
-                        levels = min(int(mdep.group(1)), d_)
-                    inner0 = a0
-                    for _fl in range(max(levels - 1, 0)):
-                        inner0 = f"flatten({inner0})"
-                    out.append(f"explode({inner0})")
-                    i = parts[1] + 1
-                    changed = True
-                    continue
-                if mrec and re.match(r"(?is)^(\{|struct_pack\s*\(|"
-                                     r"row\s*\()", a0.lstrip()):
-                    # struct operand: recursive on a FLAT struct equals
-                    # the bare struct unnest (fields → columns)
-                    out.append(f"inline(array({a0}))")
-                    i = parts[1] + 1
-                    changed = True
-                    continue
-                raise ValueError(
-                    "unnest recursive/max_depth: the list depth is "
-                    "only provable for array literals — spell the "
-                    "flatten() calls explicitly for column operands")
-        if name == "generate_subscripts" and parts \
-                and len(parts[2]) == 2:
-            # subscripts along dimension 1 → 1..len rows; [] on NULL
-            # or empty [measured r12]; DuckDB itself refuses other
-            # dimensions for LISTs ('Not implemented')
-            a0 = _arg_text(toks, parts[2][0]).strip()
-            a1 = _arg_text(toks, parts[2][1]).strip()
-            if a1 != "1":
-                raise ValueError(
-                    "generate_subscripts: only dimension 1 exists for "
-                    "LISTs (same as DuckDB)")
-            out.append(
-                f"explode(CASE WHEN ({a0}) IS NULL OR size({a0}) = 0 "
-                f"THEN slice(array(1), 1, 0) "
-                f"ELSE sequence(1, size({a0})) END)")
-            i = parts[1] + 1
-            changed = True
-            continue
-        if (name == "unnest" and parts and len(parts[2]) == 1
-                and re.match(r"(?is)^(\{|struct_pack\s*\(|row\s*\()",
-                             _arg_text(toks, parts[2][0]).lstrip())):
-            # unnest(STRUCT) expands fields into COLUMNS in DuckDB
-            # [measured: unnest({'a':1,'b':2}) → columns a, b] —
-            # Spark's explode refuses structs; inline(array(s)) is the
-            # field-expanding generator
-            out.append(
-                f"inline(array({_arg_text(toks, parts[2][0])}))")
-            i = parts[1] + 1
-            changed = True
-            continue
-        if name == "unnest" and parts:
-            out.append("explode")
-            i += 1
-            changed = True
-            continue
-        if (name in ("count", "sum", "avg") and parts
-                and len(parts[2]) == 1
-                and re.match(r"(?is)^\s*DISTINCT\b",
-                             _arg_text(toks, parts[2][0]))
-                and _trailing_over(toks, parts[1])[0] != ""):
-            # DISTINCT aggregates as WINDOW functions — Spark refuses
-            # (DISTINCT_WINDOW_FUNCTION_UNSUPPORTED); DuckDB allows
-            # them [measured r9]. Rebuilt over a windowed collect_list
-            # → array_distinct (collect_list drops NULLs, matching the
-            # aggregates' NULL skipping); sum/avg fold in DOUBLE.
-            over, oc = _trailing_over(toks, parts[1])
-            a = re.sub(r"(?is)^\s*DISTINCT\b", "",
-                       _arg_text(toks, parts[2][0])).strip()
-            dl = f"array_distinct(collect_list({a}){over})"
-            if name == "count":
-                out.append(f"size({dl})")
-            else:
-                s_ = (f"aggregate({dl}, CAST(0 AS DOUBLE), "
-                      f"(__da__, __db__) -> __da__ + __db__)")
-                body = (s_ if name == "sum"
-                        else f"({s_} / size({dl}))")
-                out.append(f"(CASE WHEN size({dl}) = 0 THEN "
-                           f"CAST(NULL AS DOUBLE) ELSE {body} END)")
-            i = oc + 1
-            changed = True
-            continue
-        if (name in ("arg_max_null", "arg_min_null") and parts
-                and len(parts[2]) == 2):
-            # _null variants KEEP a NULL value at the winning key
-            # [measured r10: arg_max_null(d, k) over max-k row with
-            # NULL d → NULL] — exactly Spark's raw max_by/min_by
-            # (NULL keys still skip); marker dodges the NULL-skip wrap
-            v_ = _arg_text(toks, parts[2][0])
-            k_ = _arg_text(toks, parts[2][1])
-            fn2 = "max_by" if "max" in name else "min_by"
-            out.append(f"__duck_{fn2}__({v_}, {k_})")
-            i = parts[1] + 1
-            changed = True
-            continue
-        if name == "map" and parts and not parts[2]:
-            # zero-arg map() is the empty map [measured] — the marker
-            # dodges both the map→map_from_arrays rewrite and this
-            # branch's own fixpoint re-entry
-            out.append("__duck_map0__()")
-            i = parts[1] + 1
-            changed = True
-            continue
-        if (name in ("left_grapheme", "right_grapheme") and parts
-                and len(parts[2]) == 2):
-            # grapheme-cluster left/right via substring_grapheme
-            # [measured r10: right_grapheme('héllo', 9) = whole string,
-            # left_grapheme(s, 0) = '']
-            s_ = _arg_text(toks, parts[2][0])
-            n_ = _arg_text(toks, parts[2][1])
-            if name == "left_grapheme":
-                out.append(f"substring_grapheme({s_}, 1, {n_})")
-            else:
-                out.append(
-                    f"substring_grapheme({s_}, greatest(1, "
-                    f"length_grapheme({s_}) - ({n_}) + 1), ({n_}))")
-            i = parts[1] + 1
-            changed = True
-            continue
-        if name == "count_star" and parts and not parts[2]:
-            out.append("count(*)")  # zero-arg spelling [measured]
-            i = parts[1] + 1
-            changed = True
-            continue
-        if name == "sem" and parts and len(parts[2]) == 1:
-            # standard error of the mean — DuckDB computes it from the
-            # POPULATION stddev [measured: sem({2.5,1.5}) = 0.35355 =
-            # stddev_pop/sqrt(n), not the textbook samp form 0.5]. A
-            # trailing OVER hoists onto each sub-aggregate (r11).
-            a_ = _arg_text(toks, parts[2][0])
-            over, end = _trailing_filter_over(toks, parts[1])
-            out.append(f"(stddev_pop({a_}){over} "
-                       f"/ sqrt(count({a_}){over}))")
-            i = end + 1
-            changed = True
-            continue
-        if (name in ("arg_max", "arg_min", "max_by", "min_by")
-                and parts and len(parts[2]) == 2
-                and not re.search(
-                    r"(?is)\bORDER\s+BY\b|\bDISTINCT\b",
-                    detokenize(toks[parts[0]:parts[1] + 1]))):
-            # DuckDB's arg_max/arg_min/max_by/min_by skip rows where
-            # EITHER argument is NULL [measured r10: arg_min(v, k)
-            # over ('a',1),(NULL,0) → 'a'; NULL keys skipped too].
-            # Spark's min_by ignores NULL keys but RETURNS a NULL
-            # value sitting at the winning key — nullify the key when
-            # the value is NULL so those rows drop out. Marker dodges
-            # the fixpoint re-entry; ordered/DISTINCT forms keep their
-            # dedicated handling.
-            v_ = _arg_text(toks, parts[2][0])
-            k_ = _arg_text(toks, parts[2][1])
-            fn2 = "max_by" if "max" in name else "min_by"
-            out.append(
-                f"__duck_{fn2}__({v_}, CASE WHEN ({v_}) IS NULL "
-                f"THEN NULL ELSE {k_} END)")
-            i = parts[1] + 1
-            changed = True
-            continue
-        if name in ("avg", "mean") and parts and len(parts[2]) == 1:
-            # avg is DOUBLE in DuckDB for EVERY accepted input —
-            # int/decimal/float all → DOUBLE, and non-numerics
-            # (interval/timestamp/varchar) are Binder Errors [measured
-            # r10], so an unconditional cast is faithful (Spark keeps
-            # DECIMAL(p+4,s+4), rendering '2.00000' vs '2.0'; VALUES-
-            # derived decimal columns aren't provable via
-            # column_kinds, so a conditional wrap missed them). Wraps
-            # the whole aggregate — including a trailing FILTER (…)
-            # and OVER (…). __decavg__ dodges the fixpoint re-entry;
-            # _rewrite_keywords renames it back to avg (Spark's mean
-            # is an avg alias, so one marker serves both spellings).
-            end = parts[1]
-            extra = ""
-            after = [k for k in range(end + 1, len(toks))
-                     if toks[k].kind not in ("ws", "comment")]
-            if (after and toks[after[0]].kind == "ident"
-                    and toks[after[0]].text.upper() == "FILTER"
-                    and len(after) > 1 and toks[after[1]].text == "("):
-                try:
-                    fclose = match_bracket(toks, after[1])
-                except ValueError:
-                    fclose = None
-                if fclose is not None:
-                    extra += " FILTER " + detokenize(
-                        toks[after[1]:fclose + 1])
-                    end = fclose
-                    after = [k for k in range(end + 1, len(toks))
-                             if toks[k].kind not in ("ws", "comment")]
-            if (after and toks[after[0]].kind == "ident"
-                    and toks[after[0]].text.upper() == "OVER"
-                    and len(after) > 1):
-                nxt = toks[after[1]]
-                if nxt.text == "(":
-                    try:
-                        oclose = match_bracket(toks, after[1])
-                        extra += " OVER " + detokenize(
-                            toks[after[1]:oclose + 1])
-                        end = oclose
-                    except ValueError:
-                        pass
-                elif nxt.kind == "ident":
-                    extra += f" OVER {nxt.text}"
-                    end = after[1]
-            args_txt = detokenize(toks[parts[0]:parts[1] + 1])
-            out.append(f"CAST(__decavg__{args_txt}{extra} AS DOUBLE)")
-            i = end + 1
-            changed = True
-            continue
-        if name == "sum" and parts and len(parts[2]) == 1:
-            # sum(DECIMAL(p,s)) is DECIMAL(38,s) in DuckDB for ANY p
-            # [measured r11: sum(DECIMAL(4,1)) → DECIMAL(38,1), same
-            # for DISTINCT and OVER () forms]; Spark uses p+10 →
-            # DECIMAL(14,1) — schema mismatch on every plain decimal
-            # sum, and premature overflow at p+10 digits. Fires only
-            # when the operand is PROVABLY decimal with a provable
-            # scale (literal / decimal-kind column / decimal cast);
-            # int operands keep the pinned sum(BIGINT)→HUGEINT
-            # overflow fence, doubles already agree. Wraps the whole
-            # aggregate incl. trailing FILTER (…) / OVER (…);
-            # __decsum__ dodges the fixpoint re-entry.
-            arg0 = _arg_text(toks, parts[2][0]).strip()
-            bare = re.sub(r"(?is)^\s*(?:DISTINCT|ALL)\b", "",
-                          arg0).strip()
-            sc = (_known_decimal_scale(bare, column_kinds)
-                  if _expr_is_decimal(bare, column_kinds) else None)
-            if sc is not None:
-                end = parts[1]
-                extra = ""
-                after = [k for k in range(end + 1, len(toks))
-                         if toks[k].kind not in ("ws", "comment")]
-                if (after and toks[after[0]].kind == "ident"
-                        and toks[after[0]].text.upper() == "FILTER"
-                        and len(after) > 1
-                        and toks[after[1]].text == "("):
-                    try:
-                        fclose = match_bracket(toks, after[1])
-                    except ValueError:
-                        fclose = None
-                    if fclose is not None:
-                        extra += " FILTER " + detokenize(
-                            toks[after[1]:fclose + 1])
-                        end = fclose
-                        after = [k for k in range(end + 1, len(toks))
-                                 if toks[k].kind not in ("ws",
-                                                         "comment")]
-                if (after and toks[after[0]].kind == "ident"
-                        and toks[after[0]].text.upper() == "OVER"
-                        and len(after) > 1):
-                    nxt = toks[after[1]]
-                    if nxt.text == "(":
-                        try:
-                            oclose = match_bracket(toks, after[1])
-                            extra += " OVER " + detokenize(
-                                toks[after[1]:oclose + 1])
-                            end = oclose
-                        except ValueError:
-                            pass
-                    elif nxt.kind == "ident":
-                        extra += f" OVER {nxt.text}"
-                        end = after[1]
-                # upcast the operand to DECIMAL(38,s) (lossless: same
-                # scale, max precision) so Spark accumulates at
-                # min(38, 38+10) = 38 digits — otherwise a source
-                # DECIMAL(p,s) overflows at p+10 digits where DuckDB
-                # keeps going to 38
-                kw = re.match(r"(?is)^\s*(DISTINCT|ALL)\b", arg0)
-                pre = (kw.group(1).upper() + " ") if kw else ""
-                out.append(f"CAST(__decsum__({pre}CAST(({bare}) AS "
-                           f"DECIMAL(38,{sc}))){extra} "
-                           f"AS DECIMAL(38,{sc}))")
-                i = end + 1
-                changed = True
-                continue
-        if name == "corr" and parts and len(parts[2]) == 2:
-            # corr() over zero-variance input: DuckDB → NULL [measured:
-            # constant x, or a single row]; Spark's corr divides by the
-            # moment product and throws DIVIDE_BY_ZERO under ANSI — a
-            # loud failure for a legal answer. Rebuilt as try_divide(
-            # covar_samp, stddev*stddev): mathematically Pearson's r,
-            # NULL when either stddev is 0/NULL. (covar_samp/
-            # regr_slope/regr_r2 need no guard — probed: both engines
-            # already return NULL/1.0 alike on degenerate input.)
-            # Last-ulp rendering vs DuckDB's one-pass kernel is
-            # documented float residue — DuckDB's own corr differs in
-            # the last ulp from this identity too. Trailing FILTER/
-            # OVER clauses are carried onto every sub-aggregate.
-            _, close, spans = parts
-            a = _arg_text(toks, spans[0])
-            b = _arg_text(toks, spans[1])
-            end = close
-            extra = ""
-            after = [k for k in range(end + 1, len(toks))
-                     if toks[k].kind not in ("ws", "comment")]
-            if (after and toks[after[0]].kind == "ident"
-                    and toks[after[0]].text.upper() == "FILTER"
-                    and len(after) > 1 and toks[after[1]].text == "("):
-                try:
-                    fclose = match_bracket(toks, after[1])
-                except ValueError:
-                    fclose = None
-                if fclose is not None:
-                    extra += " FILTER " + detokenize(
-                        toks[after[1]:fclose + 1])
-                    end = fclose
-                    after = [k for k in range(end + 1, len(toks))
-                             if toks[k].kind not in ("ws", "comment")]
-            if (after and toks[after[0]].kind == "ident"
-                    and toks[after[0]].text.upper() == "OVER"
-                    and len(after) > 1):
-                nxt = toks[after[1]]
-                if nxt.text == "(":
-                    try:
-                        oclose = match_bracket(toks, after[1])
-                        extra += " OVER " + detokenize(
-                            toks[after[1]:oclose + 1])
-                        end = oclose
-                    except ValueError:
-                        pass
-                elif nxt.kind == "ident":
-                    extra += f" OVER {nxt.text}"
-                    end = after[1]
-            # pairwise NULL skipping: corr drops a row when EITHER side
-            # is NULL, so each marginal stddev sees the masked operand
-            ax = (f"(CASE WHEN ({a}) IS NULL OR ({b}) IS NULL "
-                  f"THEN NULL ELSE ({a}) END)")
-            bx = (f"(CASE WHEN ({a}) IS NULL OR ({b}) IS NULL "
-                  f"THEN NULL ELSE ({b}) END)")
-            out.append(
-                f"try_divide(covar_samp({ax}, {bx}){extra}, "
-                f"stddev_samp({ax}){extra} * stddev_samp({bx}){extra})")
-            i = end + 1
-            changed = True
-            continue
-        if (name in ("row_number", "rank", "dense_rank", "ntile",
-                     "percent_rank", "cume_dist", "lag", "lead")
-                and parts):
-            # DuckDB allows these without a window ORDER BY (row order
-            # = scan order); Spark refuses — append an ORDER BY over
-            # monotonically_increasing_id() (scan order, zero shuffle)
-            over, oc = _trailing_over(toks, parts[1])
-            if (over and not re.search(r"(?is)\bORDER\s+BY\b", over)
-                    and "monotonically_increasing_id" not in over):
-                call_txt = detokenize(toks[i:parts[1] + 1])
-                inner = over.strip()[5:].strip()  # drop leading OVER
-                spec = inner[1:-1].strip()  # drop parens
-                sep = " " if spec else ""
-                out.append(
-                    f"{call_txt} OVER ({spec}{sep}ORDER BY "
-                    f"monotonically_increasing_id())")
-                i = oc + 1
-                changed = True
-                continue
-        _tn_guard = False
-        if name == "typeof" and parts:
-            k_ = i - 1
-            while k_ >= 0 and toks[k_].kind == "ws":
-                k_ -= 1
-            if k_ >= 1 and toks[k_].text == "(":
-                k2_ = k_ - 1
-                while k2_ >= 0 and toks[k2_].kind == "ws":
-                    k2_ -= 1
-                _tn_guard = (toks[k2_].kind == "ident" and
-                             toks[k2_].text == "__duck_typename__")
-        if (name == "typeof" and parts and len(parts[2]) == 1
-                and not _tn_guard):
-            # DuckDB type spellings (INTEGER/VARCHAR/INTEGER[]/
-            # STRUCT(a INTEGER)/'"NULL"'), not Spark's lowercase DDL —
-            # converted by the __duck_typename__ session UDF over
-            # Spark's own typeof string [measured r9]
-            a = _arg_text(toks, parts[2][0])
-            out.append(f"__duck_typename__(typeof({a}))")
-            i = parts[1] + 1
-            changed = True
-            continue
-        if name == "version" and parts and not parts[2]:
-            # the engine's DuckDB-compat surface version — the oracle's
-            # DuckDB (1.0.0); Spark's version() returns the Spark build
-            out.append("'v1.0.0'")
-            i = parts[1] + 1
-            changed = True
-            continue
-        if name == "setseed" and parts and len(parts[2]) == 1:
-            # duck setseed(x) seeds random() and returns NULL; Spark
-            # random seeds per-expression — the seeding itself cannot
-            # carry over (random() values never cross-compare anyway,
-            # like hash()); NULL return preserved
-            out.append("CAST(NULL AS BOOLEAN)")
-            i = parts[1] + 1
-            changed = True
-            continue
-        if name == "txid_current" and parts and not parts[2]:
-            # a transaction ordinal — engine-specific VALUE by design
-            # (documented like hash()); typed BIGINT so comparisons run
-            out.append("CAST(1 AS BIGINT)")
-            i = parts[1] + 1
-            changed = True
-            continue
-        if (name in ("list_slice", "array_slice") and parts
-                and len(parts[2]) == 4):
-            # 4-arg step form → the bracket step-slice machinery
-            # (l[a:b:s], r8) owns the semantics; runs later in the
-            # pipeline
-            _, close, spans = parts
-            l_ = _arg_text(toks, spans[0])
-            a_ = _arg_text(toks, spans[1])
-            b_ = _arg_text(toks, spans[2])
-            s_ = _arg_text(toks, spans[3])
-            out.append(f"({l_})[{a_}:{b_}:{s_}]")
-            i = close + 1
-            changed = True
-            continue
-        if (name == "regexp_extract" and parts and len(parts[2]) == 3
-                and _arg_text(toks, parts[2][2]).strip().startswith("[")):
-            # NAME-LIST form → STRUCT of the capture groups [measured
-            # r9: no match → struct of empty strings, same as the
-            # scalar form's '' default]
-            _, close, spans = parts
-            s_ = _arg_text(toks, spans[0])
-            p_ = _arg_text(toks, spans[1])
-            names = re.findall(r"'((?:[^']|'')*)'",
-                               _arg_text(toks, spans[2]))
-            if names:
-                fields = ", ".join(
-                    f"'{n}', regexp_extract({s_}, {p_}, {k + 1})"
-                    for k, n in enumerate(names))
-                out.append(f"named_struct({fields})")
-                i = close + 1
-                changed = True
-                continue
-        if (name == "alias" and parts and len(parts[2]) == 1
-                and re.fullmatch(r"[A-Za-z_]\w*",
-                                 _arg_text(toks, parts[2][0]).strip())):
-            # alias(col) → the OUTPUT column's name as text [measured
-            # r9: a trailing AS x rebinds it — alias(n) AS a = 'a'];
-            # expression args render engine-specific and stay loud
-            nm_out = _arg_text(toks, parts[2][0]).strip()
-            close_ = parts[1]
-            k_ = close_ + 1
-            while k_ < len(toks) and toks[k_].kind == "ws":
-                k_ += 1
-            if (k_ + 1 < len(toks) and toks[k_].kind == "ident"
-                    and toks[k_].text.upper() == "AS"):
-                k2_ = k_ + 1
-                while k2_ < len(toks) and toks[k2_].kind == "ws":
-                    k2_ += 1
-                if toks[k2_].kind in ("ident", "bqid"):
-                    nm_out = toks[k2_].text.strip("`")
-            elif (k_ < len(toks) and toks[k_].kind in ("ident", "bqid")
-                    and toks[k_].text.upper() not in (
-                        "FROM", "WHERE", "GROUP", "ORDER", "HAVING",
-                        "LIMIT", "UNION", "INTERSECT", "EXCEPT",
-                        "WINDOW", "QUALIFY", "AND", "OR", "AS")):
-                # bare trailing alias rebinds too [measured r11:
-                # alias(n) a = 'a' like the AS form]
-                nm_out = toks[k_].text.strip("`")
-            out.append(f"'{nm_out}'")
-            i = close_ + 1
-            changed = True
-            continue
-        if (name == "list_median" and parts and len(parts[2]) == 1):
-            # exact median of the non-NULL elements as DOUBLE
-            # [measured r9: [1,2,3] → 2.0, [1,2,3,4] → 2.5, NULLs skip,
-            # empty/all-NULL → NULL]
-            a = _arg_text(toks, parts[2][0])
-            s_ = f"array_sort(filter({a}, __lm__ -> __lm__ IS NOT NULL))"
-            n_ = f"size({s_})"
-            out.append(
-                f"(CASE WHEN {s_} IS NULL OR {n_} = 0 THEN "
-                f"CAST(NULL AS DOUBLE) WHEN {n_} % 2 = 1 THEN "
-                f"CAST(element_at({s_}, CAST(({n_} + 1) / 2 AS INT)) "
-                f"AS DOUBLE) "
-                f"ELSE (CAST(element_at({s_}, "
-                f"CAST({n_} / 2 AS INT)) AS DOUBLE) + "
-                f"CAST(element_at({s_}, CAST({n_} / 2 AS INT) + 1) "
-                f"AS DOUBLE)) / 2 END)")
-            i = parts[1] + 1
-            changed = True
-            continue
-        if (name == "list_any_value" and parts and len(parts[2]) == 1):
-            # first non-NULL element, NULL when none [measured r9]
-            a = _arg_text(toks, parts[2][0])
-            out.append(f"get(filter({a}, __lv__ -> __lv__ IS NOT NULL), "
-                       f"0)")
-            i = parts[1] + 1
-            changed = True
-            continue
-        if (name in ("round_even", "roundbankers") and parts
-                and len(parts[2]) in (1, 2)):
-            # half-even rounding ≡ Spark bround on every measured probe
-            # [r9: 2.5→2, 3.5→4, DECIMAL 2.345@2 → 2.34 (exact decimal
-            # tie → even), DOUBLE 2.675@2 → 2.68 — DuckDB's round_even,
-            # like bround, rounds the shortest DECIMAL repr, unlike its
-            # own format '{:.Nf}' which rounds the exact binary value]
-            _, close, spans = parts
-            a = _arg_text(toks, spans[0])
-            p_ = _arg_text(toks, spans[1]) if len(spans) == 2 else "0"
-            out.append(f"bround({a}, {p_})")
-            i = close + 1
-            changed = True
-            continue
-        if (name == "mode" and parts and len(parts[2]) == 1
-                and not re.match(r"(?is)^\s*DISTINCT\b",
-                                 _arg_text(toks, parts[2][0]))
-                and not re.search(r"(?is)\bORDER\s+BY\b",
-                                  _arg_text(toks, parts[2][0]))
-                and "collect_list" not in _arg_text(toks, parts[2][0])):
-            # DuckDB mode() breaks count ties by FIRST APPEARANCE in
-            # scan order [measured r9: mode over (1,3,1,3) = 1, over
-            # (3,1,3,1) = 3] while Spark's mode picks arbitrarily.
-            # Emitted as most-frequent-then-lowest-first-index over an
-            # order-preserving collect_list (identical aggregate
-            # expressions share one buffer, so the three spellings
-            # below cost ONE collect). O(n·distinct) per group — fine
-            # for the oracle scale; mode(x ORDER BY …)/DISTINCT forms
-            # stay verbatim per the _ORDER_INSENSITIVE_AGGS note.
-            # window form: a trailing OVER (…) hoists onto the inner
-            # collect_list aggregates (r9: the windowed tie at sf0.001
-            # diverged; the three spellings still share one buffer)
-            over, oc = _trailing_over(toks, parts[1])
-            a = _arg_text(toks, parts[2][0])
-            lst = f"collect_list({a}){over}"
-            out.append(
-                f"(array_max(transform(array_distinct({lst}), "
-                f"__mv__ -> struct("
-                f"size(filter({lst}, __my__ -> __my__ = __mv__)) AS c, "
-                f"-array_position({lst}, __mv__) AS np, "
-                f"__mv__ AS v))).v)")
-            i = (oc if over else parts[1]) + 1
-            changed = True
-            continue
-        if name in ("first_value", "last_value", "nth_value",
-                    "lag", "lead") and parts:
-            # DuckDB spells the null-skipping modifier INSIDE the call
-            # parens — first_value(x IGNORE NULLS) OVER … — where Spark
-            # wants it between ')' and OVER. Move it out (RESPECT NULLS
-            # is the default on both and is simply dropped). The
-            # emission's inner args no longer carry the modifier, so the
-            # fixpoint doesn't re-fire. LOCF/gap-fill queries use this
-            # constantly (judge probe r6: parse error before this).
-            _, close, spans = parts
-            inner_iv = detokenize(toks[parts[0] + 1:close])
-            m_iv = re.match(
-                r"^(?P<args>.*?)\s+(?P<kind>IGNORE|RESPECT)\s+NULLS\s*$",
-                inner_iv, re.IGNORECASE | re.DOTALL)
-            if m_iv:
-                suffix = (" IGNORE NULLS"
-                          if m_iv.group("kind").upper() == "IGNORE"
-                          else "")
-                out.append(f"{name}({m_iv.group('args')}){suffix}")
-                i = close + 1
-                changed = True
-                continue
-        if (name in ("list_contains", "list_position", "array_contains",
-                     "array_position", "list_has", "array_has",
-                     "list_indexof")
-                and parts and len(parts[2]) == 2
-                and (_arg_text(toks, parts[2][1]).strip().upper()
-                     == "NULL"
-                     or _arg_text(toks, parts[2][0]).strip().upper()
-                     == "NULL")):
-            # a NULL needle is NULL in DuckDB [measured: list_contains(
-            # [1,2], NULL) → NULL, list_position([1,2], NULL) → NULL],
-            # while Spark's array_contains REJECTS a NULL-typed argument
-            # (DATATYPE_MISMATCH.NULL_TYPE — judge probe r7). The
-            # element type is unknowable here, so fold the constant.
-            is_bool = "contains" in name or name == "list_has"
-            out.append(f"CAST(NULL AS {'BOOLEAN' if is_bool else 'INT'})")
-            i = parts[1] + 1
-            changed = True
-            continue
-        if (name in ("list_contains", "array_contains", "list_has",
-                     "array_has") and parts and len(parts[2]) == 2):
-            # DuckDB contains is FALSE when the needle is absent even
-            # with NULL elements present [measured r10: list_contains(
-            # [1,NULL], 3) → FALSE]; Spark's three-valued array_contains
-            # says NULL there. NULL list or NULL needle stay NULL
-            # (runtime nulls — the literal-NULL needle folded above,
-            # Spark rejects a NULL-typed argument). Marker dodges the
-            # fixpoint re-entry.
-            a_ = _arg_text(toks, parts[2][0])
-            x_ = _arg_text(toks, parts[2][1])
-            out.append(
-                f"(CASE WHEN ({a_}) IS NULL OR ({x_}) IS NULL "
-                f"THEN CAST(NULL AS BOOLEAN) "
-                f"ELSE coalesce(__duck_array_contains__({a_}, {x_}), "
-                f"FALSE) END)")
-            i = parts[1] + 1
-            changed = True
-            continue
-        if (name in ("list_intersect", "array_intersect") and parts
-                and len(parts[2]) == 2):
-            # DuckDB intersect DROPS NULL elements ([1,2,NULL] ∩
-            # [NULL,2,3] = [2]; [NULL] ∩ [NULL] = []) [measured r9];
-            # Spark's array_intersect keeps a shared NULL. The inner
-            # call spells through a marker so the fixpoint terminates.
-            a_ = _arg_text(toks, parts[2][0])
-            b_ = _arg_text(toks, parts[2][1])
-            out.append(f"filter(__array_intersect__({a_}, {b_}), "
-                       f"__li__ -> __li__ IS NOT NULL)")
-            i = parts[1] + 1
-            changed = True
-            continue
-        if name == "era" and parts and len(parts[2]) == 1:
-            # era(d) = 1 for every representable (CE) date [measured
-            # r9 — BC dates have no carrier here]
-            a_ = _arg_text(toks, parts[2][0])
-            out.append(f"(CASE WHEN ({a_}) IS NULL THEN NULL "
-                       f"ELSE 1 END)")
-            i = parts[1] + 1
-            changed = True
-            continue
-        if name in ("list_intersect",
-                    "list_contains", "list_position") and parts:
-            # list_position: both engines return 0 for a missing element
-            # (measured against DuckDB 1.x) — plain rename is exact
-            out.append("array_" + name[5:])
-            i += 1
-            changed = True
-            continue
-        if name in ("array_distinct", "list_distinct") and parts \
-                and len(parts[2]) == 1 \
-                and re.search(r"->\s*\w+\s+IS\s+NOT\s+NULL\s*\)$",
-                              _arg_text(toks, parts[2][0]),
-                              re.IGNORECASE):
-            # argument already ends in a null-dropping filter (this
-            # branch's own emission — fixpoint loop otherwise — or the
-            # list_unique/array_unique emissions): skip the wrap, but
-            # list_distinct must still RENAME (review r7: the guard
-            # skip left an undefined function)
-            out.append("array_distinct")
-            i += 1
-            changed = changed or name == "list_distinct"
-            continue
-        if name in ("array_distinct", "list_distinct") and parts \
-                and len(parts[2]) == 1:
-            # DuckDB list_distinct/array_distinct DROPS NULL elements
-            # [measured: [1,1,NULL,NULL,2] → 2 elements]; Spark's
-            # array_distinct keeps one NULL — silent wrong answer
-            # (judge probe r6). Element ORDER of the result is
-            # arbitrary in DuckDB (hash order — the same probe returned
-            # [2,1]) and first-occurrence in Spark; documented §2.4,
-            # compare through list_sort. The guard skips arguments that
-            # already end in a null-dropping filter — this branch's own
-            # emission (fixpoint loop otherwise) and the list_unique /
-            # array_unique emissions (pointless double filter).
-            _, close, spans = parts
-            e = _arg_text(toks, spans[0])
-            out.append(f"array_distinct(filter({e}, "
-                       f"__dd -> __dd IS NOT NULL))")
-            i = close + 1
-            changed = True
-            continue
-        if name == "list_concat" and parts:
-            # Spark flatten(array(a, b, …)) concatenates lists without
-            # spelling "concat" — which is now the STRING rewrite below
-            # (DuckDB concat stringifies even list arguments)
-            # DuckDB SKIPS NULL list arguments but gives NULL when ALL
-            # are NULL [measured: list_concat(NULL, [1,2]) = [1,2],
-            # list_concat(NULL, NULL) = NULL] — flatten alone would
-            # NULL-propagate (third review)
-            _, close, spans = parts
-            args = ", ".join(_arg_text(toks, sp) for sp in spans)
-            # __fl__ lambda var so the flatten NULL-sub-list branch
-            # doesn't re-wrap this already-NULL-free emission (r9)
-            flt = f"filter(array({args}), __fl__ -> __fl__ IS NOT NULL)"
-            out.append(f"(CASE WHEN size({flt}) = 0 THEN NULL "
-                       f"ELSE flatten({flt}) END)")
-            i = close + 1
-            changed = True
-            continue
-        if name == "concat" and parts and parts[2]:
-            # DuckDB concat is STRING concatenation that casts every
-            # argument and SKIPS NULLs [measured: concat('a', NULL, 'b')
-            # = 'ab', concat(NULL, NULL) = '', concat(1, 2.5, DATE …)
-            # stringifies] — Spark's concat is NULL-propagating and
-            # array-polymorphic, a silent wrong answer on NULLs.
-            # concat_ws('') reproduces the NULL-skip; per-arg CAST
-            # reproduces the stringify.
-            _, close, spans = parts
-            args = ", ".join(f"CAST({_arg_text(toks, sp)} AS STRING)"
-                             for sp in spans)
-            out.append(f"concat_ws('', {args})")
-            i = close + 1
-            changed = True
-            continue
-        if (name in ("current_schema", "current_database",
-                     "current_catalog") and parts and not parts[2]):
-            # DuckDB's fresh-session identifiers [measured: 'main' /
-            # 'memory' / 'memory']; Spark would answer 'default'/
-            # 'spark_catalog' — a silent divergence. Post-USE sessions
-            # keep the fresh-session answer (documented residue; the
-            # engine's USE is a search-path alias layer, not a catalog
-            # switch).
-            out.append("'main'" if name == "current_schema"
-                       else "'memory'")
-            i = parts[1] + 1
-            changed = True
-            continue
-        if (name == "json_group_array" and parts and len(parts[2]) == 1
-                and not re.match(r"(?is)^\s*DISTINCT\b",
-                                 _arg_text(toks, parts[2][0]))
-                and not re.search(r"(?is)\bORDER\s+BY\b",
-                                  _arg_text(toks, parts[2][0]))):
-            # JSON aggregate [measured: keeps NULL elements as json
-            # null, empty group → NULL] — to_json over the NULL-keeping
-            # array_agg rewrite (the emitted array_agg re-enters the
-            # fixpoint and picks up the struct-wrap). DISTINCT/ORDER BY
-            # modifiers and OVER (…) are a DuckDB Catalog Error (macro,
-            # not aggregate — measured r9) and stay verbatim/loud.
-            a = _arg_text(toks, parts[2][0])
-            if _trailing_over(toks, parts[1])[0] == "":
-                out.append(f"CASE WHEN count(1) = 0 THEN "
-                           f"CAST(NULL AS STRING) ELSE "
-                           f"__to_json__(array_agg({a})) END")
-                i = parts[1] + 1
-                changed = True
-                continue
-        if (name in ("json_transform", "from_json") and parts
-                and len(parts[2]) == 2):
-            # DuckDB json_transform(j, 'structure') (from_json is its
-            # alias) casts the document onto the structure, failed
-            # casts → NULL fields [measured r9] — Spark's from_json in
-            # PERMISSIVE mode does the same given the equivalent DDL
-            # schema. LITERAL structures only; a scalar root structure
-            # ('"DATE"') casts the unquoted root instead.
-            st = _arg_text(toks, parts[2][1]).strip()
-            j_ = _arg_text(toks, parts[2][0])
-            ddl = (_json_transform_expr(j_, st[1:-1])
-                   if st.startswith("'") and st.endswith("'") else None)
-            if ddl is not None:
-                out.append(ddl)
-                i = parts[1] + 1
-                changed = True
-                continue
-        if (name in ("to_json", "json_quote") and parts
-                and len(parts[2]) == 1
-                and "__to_json__" not in _arg_text(toks, parts[2][0])):
-            # DuckDB to_json/json_quote accept ANY value (scalars
-            # included: to_json('abc') = '"abc"') where Spark's to_json
-            # wants a container — wrap in a 1-element array, render,
-            # strip the brackets. NULL in → NULL out [measured].
-            # (A value already of JSON type re-quotes here — edge
-            # divergence, documented; the JSON carrier is VARCHAR.)
-            a = _arg_text(toks, parts[2][0])
-            arr = f"__to_json__(array({a}))"
-            # FROM/FOR substring spelling — the stable OUTPUT form of
-            # the duck-substr rewrite, so it doesn't re-wrap this
-            out.append(f"(CASE WHEN ({a}) IS NULL THEN NULL ELSE "
-                       f"substring({arr} FROM 2 FOR length({arr}) - 2)"
-                       f" END)")
-            i = parts[1] + 1
-            changed = True
-            continue
-        if name == "json_merge_patch" and parts and len(parts[2]) > 2:
-            # DuckDB's json_merge_patch is VARIADIC (review r8-3 #7) —
-            # fold left into the 2-arg session UDF; each pass reduces
-            # the arity by one, so the fixpoint converges
-            args = [_arg_text(toks, sp) for sp in parts[2]]
-            out.append(f"json_merge_patch(json_merge_patch({args[0]}, "
-                       f"{args[1]}), {', '.join(args[2:])})")
-            i = parts[1] + 1
-            changed = True
-            continue
-        if (name == "json_group_object" and parts and len(parts[2]) == 2
-                and _trailing_over(toks, parts[1])[0] == ""):
-            # [measured: NULL values keep their key as json null;
-            # empty group → NULL; OVER (…) is a DuckDB Catalog Error
-            # (macro) — stays verbatim/loud]
-            k_ = _arg_text(toks, parts[2][0])
-            v_ = _arg_text(toks, parts[2][1])
-            out.append(
-                f"CASE WHEN count(1) = 0 THEN CAST(NULL AS STRING) "
-                f"ELSE __to_json__(map_from_entries(collect_list("
-                f"struct({k_}, {v_})))) END")
-            i = parts[1] + 1
-            changed = True
-            continue
-        if (name in ("timezone_hour", "timezone_minute") and parts
-                and len(parts[2]) == 1):
-            # session-zone offset of a naive timestamp — both engines
-            # pin the session to UTC (D3), so the offset is 0 at every
-            # instant [measured: timezone_hour(TIMESTAMP '2024-07-01')
-            # = 0 in a UTC DuckDB session]; Spark has no such function.
-            # NULL inputs stay NULL (review r8 #3) and the argument
-            # still evaluates, so its errors aren't swallowed. DATE and
-            # INTERVAL operands ERROR in DuckDB (review r8-3 #6) —
-            # provable ones stay verbatim and fail loudly.
-            a = _arg_text(toks, parts[2][0])
-            if not re.match(r"(?is)^\s*(DATE\b|INTERVAL\b)", a):
-                out.append(f"CAST(CASE WHEN ({a}) IS NULL THEN NULL "
-                           f"ELSE 0 END AS BIGINT)")
-                i = parts[1] + 1
-                changed = True
-                continue
-        if (name in _TO_INTERVAL_FNS and parts and len(parts[2]) == 1):
-            # DuckDB's to_years/to_days/… interval constructors → Spark
-            # make_ym_interval / make_dt_interval [measured: to_days(3)
-            # + DATE x = TIMESTAMP, same in Spark]
-            kind, expr_t = _TO_INTERVAL_FNS[name]
-            a = _arg_text(toks, parts[2][0])
-            out.append(f"{kind}({expr_t.format(n=a)})")
-            i = parts[1] + 1
-            changed = True
-            continue
-        if name == "regexp_split_to_table" and parts \
-                and len(parts[2]) == 2:
-            # set-returning split → explode over the regex-split array
-            # (the regexp_split_to_array machinery owns the split
-            # semantics; one extra fixpoint pass renames it)
-            a = _arg_text(toks, parts[2][0])
-            b_ = _arg_text(toks, parts[2][1])
-            out.append(f"explode(regexp_split_to_array({a}, {b_}))")
-            i = parts[1] + 1
-            changed = True
-            continue
-        if name == "date_add" and parts and len(parts[2]) == 2 \
-                and re.match(r"(?is)^\s*(INTERVAL\b|to_\w+\s*\()",
-                             _arg_text(toks, parts[2][1])):
-            # DuckDB date_add(d, INTERVAL) returns TIMESTAMP even for
-            # DATE inputs [measured: date_add(DATE '2024-01-31',
-            # INTERVAL 1 MONTH) → TIMESTAMP '2024-02-29 00:00:00'];
-            # Spark's date_add is (date, int_days) and its + operator
-            # keeps DATE for ym-intervals — the CAST makes both the
-            # type and the month-clamping match
-            a = _arg_text(toks, parts[2][0])
-            iv = _arg_text(toks, parts[2][1])
-            out.append(f"(CAST({a} AS TIMESTAMP) + {iv})")
-            i = parts[1] + 1
-            changed = True
-            continue
-        if (name in ("hour", "minute", "second", "millisecond",
-                     "microsecond", "epoch") and parts
-                and len(parts[2]) == 1):
-            # function-form fields over a TIME literal constant-fold
-            # (Spark: UNSUPPORTED_TIME_TYPE on hour(TIME '…'))
-            tconst = _try_time_field(
-                name, _arg_text(toks, parts[2][0]))
-            if tconst is not None:
-                out.append(tconst)
-                i = parts[1] + 1
-                changed = True
-                continue
-        if name == "mad" and parts and len(parts[2]) == 1:
-            # median absolute deviation [measured in DuckDB 1.0.0]:
-            # interpolating median of |x - median(x)| — INTERPOLATING
-            # even over DECIMAL inputs (mad of (1.0,2.0,9.0,10.0)
-            # DECIMAL = 4.0 from median 5.5), with the RESULT truncated
-            # toward zero to the operand scale (0.005 → 0.00, 0.015 →
-            # 0.01); numeric inputs → DOUBLE. Spark has no mad().
-            # DECIMAL path stays in exact decimal arithmetic by working
-            # in a doubled domain: D_i = |2·x_i − (m1+m2)| (scale s),
-            # mad = trunc_s((D_j + D_k) · 0.25).
-            _, close, spans = parts
-            e = _arg_text(toks, spans[0])
-            mdec = _decimal_kind(e, column_kinds)
-
-            def _mid(arr: str, off: int) -> str:
-                return (f"element_at({arr}, "
-                        f"CAST((size({arr}) + {off}) DIV 2 AS INT))")
-
-            if mdec:
-                p_, s_ = mdec
-                dec = f"DECIMAL({p_},{s_})"
-                unit = ("1" if s_ == 0 else "0." + "0" * (s_ - 1) + "1")
-                dev = (f"abs(2 * __v - ({_mid('__arr', 1)} "
-                       f"+ {_mid('__arr', 2)}))")
-                val = f"(({_mid('__a2', 1)} + {_mid('__a2', 2)}) * 0.25)"
-                inner = (
-                    f"element_at(transform(array(sort_array(transform("
-                    f"__arr, __v -> {dev}))), __a2 -> "
-                    f"CAST({val} - ({val} % {unit}) AS {dec})), 1)")
-                null_t = dec
-                src = f"collect_list({e})"
-            else:
-                dev = (f"abs(__v - ({_mid('__arr', 1)} "
-                       f"+ {_mid('__arr', 2)}) / 2)")
-                inner = (
-                    f"element_at(transform(array(sort_array(transform("
-                    f"__arr, __v -> {dev}))), __a2 -> "
-                    f"({_mid('__a2', 1)} + {_mid('__a2', 2)}) / 2), 1)")
-                null_t = "DOUBLE"
-                src = f"collect_list(CAST({e} AS DOUBLE))"
-            # a trailing OVER (…) attaches to the INNER collect_list
-            # (mad IS a valid window aggregate in DuckDB — measured r9)
-            over, close = _trailing_over(toks, close)
-            out.append(
-                f"element_at(transform(array(sort_array({src}{over})), "
-                f"__arr -> CASE WHEN size(__arr) = 0 THEN "
-                f"CAST(NULL AS {null_t}) ELSE {inner} END), 1)")
-            i = close + 1
-            changed = True
-            continue
-        if name == "bitstring_agg" and parts and len(parts[2]) == 3:
-            # bitstring_agg(x, lo, hi) [measured]: a (hi-lo+1)-char
-            # '0'/'1' string, bit v-lo set per distinct value; NULLs
-            # skipped; a value outside [lo, hi] ERRORS; empty/all-NULL
-            # group → NULL. (The 1-arg form needs table statistics and
-            # errors in DuckDB for plain queries — left loud.)
-            _, close, spans = parts
-            x = _arg_text(toks, spans[0])
-            lo = _arg_text(toks, spans[1])
-            hi = _arg_text(toks, spans[2])
-            # trailing OVER (…) hoists onto the inner collect_set
-            # (valid window aggregate in DuckDB — measured r9)
-            over, close = _trailing_over(toks, close)
-            out.append(
-                f"element_at(transform(array(collect_set({x}){over}), __s -> "
-                f"CASE WHEN size(__s) = 0 THEN CAST(NULL AS STRING) "
-                f"WHEN exists(__s, __v -> __v < ({lo}) OR __v > ({hi})) "
-                f"THEN raise_error('bitstring_agg: value outside of "
-                f"provided min and max range') "
-                f"ELSE concat_ws('', transform(sequence({lo}, {hi}), "
-                f"__p -> if(array_contains(__s, __p), '1', '0'))) "
-                f"END), 1)")
-            i = close + 1
-            changed = True
-            continue
-        if name in ("quantile_cont", "median") and parts:
-            # DOUBLE/integer inputs: Spark's exact interpolating
-            # percentile()/median() match DuckDB exactly. DECIMAL inputs
-            # silently diverge [measured in DuckDB 1.0.0, judge probe
-            # r7]: quantile_cont returns a DECIMAL TRUNCATED TOWARD ZERO
-            # to the operand scale (1.625→1.62, -1.015→-1.01,
-            # 1.035→1.03 — not half-even), and median does NOT
-            # interpolate at all (lower-middle element: median of
-            # (1.0, 2.0) = 1.0, of (-1.0, -2.0) = -2.0). Reproduced
-            # via a sorted collect_list with a transform()-let binding —
-            # same buffering cost class as Spark's exact percentile.
-            # Schema-aware only for a bare decimal-kind column (the
-            # len()-dispatch convention); empty/all-NULL group → NULL
-            # in both engines.
-            _, close, spans = parts
-            first = _arg_text(toks, spans[0])
-            mdec = _decimal_kind(first, column_kinds)
-            qtext = (_arg_text(toks, spans[1])
-                     if len(spans) == 2 else None)
-            q_ok = (name == "median" and len(spans) == 1) or (
-                qtext is not None
-                and (re.fullmatch(r"[0-9.]+", qtext)
-                     or (qtext.startswith("[")
-                         and re.fullmatch(r"\[[0-9., ]+\]", qtext))))
-            if mdec and q_ok:
-                p, s = mdec
-                dec = f"DECIMAL({p},{s})"
-                unit = ("1" if s == 0 else "0." + "0" * (s - 1) + "1")
-
-                def _cont(q: str) -> str:
-                    pos = f"(CAST(size(__arr) - 1 AS DECIMAL(20,0)) * {q})"
-                    lo = f"element_at(__arr, CAST(floor({pos}) AS INT) + 1)"
-                    hi = (f"element_at(__arr, CAST(ceiling({pos}) AS INT)"
-                          f" + 1)")
-                    val = f"({lo} + ({hi} - {lo}) * ({pos} - floor({pos})))"
-                    # truncate toward zero: decimal % keeps the sign of
-                    # the dividend, so val - val % unit chops the tail
-                    return (f"CAST({val} - ({val} % {unit}) AS {dec})")
-
-                if name == "median":
-                    inner = ("element_at(__arr, "
-                             "CAST((size(__arr) + 1) DIV 2 AS INT))")
-                elif qtext.startswith("["):
-                    qs = f"array({qtext[1:-1]})"
-                    inner = f"transform({qs}, __q -> {_cont('__q')})"
-                else:
-                    inner = _cont(qtext)
-                null_t = (f"ARRAY<{dec}>" if (name != "median"
-                          and qtext.startswith("[")) else dec)
-                # trailing FILTER (…) / OVER (…) must attach to the
-                # INNER aggregate (collect_list), not the element_at
-                # wrapper — otherwise Spark sees a non-window call and
-                # demands GROUP BY (or refuses FILTER on element_at)
-                over, close = _trailing_filter_over(toks, close)
-                out.append(
-                    f"element_at(transform(array(sort_array("
-                    f"collect_list({first}){over})), __arr -> "
-                    f"CASE WHEN size(__arr) = 0 THEN "
-                    f"CAST(NULL AS {null_t}) ELSE {inner} END), 1)")
-                i = close + 1
-                changed = True
-                continue
-            if name == "quantile_cont":
-                out.append("percentile")  # exact interpolated percentile
-                i += 1
-                changed = True
-                continue
-            if (name == "median" and len(parts[2]) == 1
-                    and _trailing_over(toks, parts[1])[0] != ""
-                    and re.search(r"(?is)\bORDER\s+BY\b",
-                                  _trailing_over(toks, parts[1])[0])):
-                # windowed median with ORDER BY / an explicit frame:
-                # Spark's median refuses window frames
-                # (INVALID_WINDOW_SPEC_FOR_AGGREGATION_FUNC) where
-                # DuckDB computes them [r10 verdict] — Spark's
-                # percentile(x, 0.5) is the same exact interpolating
-                # median and supports every frame; the OVER clause
-                # stays in place after the call
-                out.append(
-                    f"percentile({_arg_text(toks, parts[2][0])}, 0.5)")
-                i = parts[1] + 1
-                changed = True
-                continue
-            # non-decimal median: Spark's own median() is identical
-        if (name in ("list_transform", "array_transform", "apply",
-                     "list_apply", "array_apply", "list_filter",
-                     "array_filter", "filter") and parts
-                and len(parts[2]) == 2):
-            # Spark transform()/filter() HOFs — plus DuckDB's alias fan
-            # (apply/array_apply/array_transform/array_filter/bare
-            # filter). Indexed two-parameter lambdas are 1-BASED in
-            # DuckDB and 0-based in Spark [measured: list_transform(
-            # [10,20,30], (x,i) -> x+i) → [11,22,33]; list_filter(
-            # [10,15,20,25], (x,i) -> i%2=0) → [15,25]] — a silent
-            # off-by-one (judge probe r7), fixed by substituting the
-            # index parameter with (i + 1) in the body (token-level;
-            # shadowing nested lambdas refuse loudly).
-            target = "filter" if "filter" in name else "transform"
-            _, close, spans = parts
-            lam = _arg_text(toks, spans[1])
-            lp = _lambda_parts(lam)
-            if lp is not None and len(lp[0]) == 2:
-                lst = _arg_text(toks, spans[0])
-                p1, p2 = lp[0]
-                body = _substitute_lambda_ident(lp[1], p2, f"({p2} + 1)")
-                # __hof_filter__ marker, not "filter": bare filter is a
-                # TRIGGER of this very branch and emitting it re-enters
-                # the fixpoint forever (the sign()→CAST(sign()) class);
-                # the keyword pass renames the marker at the end
-                emit = "__hof_filter__" if target == "filter" else target
-                out.append(f"{emit}({lst}, ({p1}, {p2}) -> {body})")
-                i = close + 1
-                changed = True
-                continue
-            if name in ("list_transform", "list_filter", "array_transform",
-                        "array_filter", "apply", "list_apply",
-                        "array_apply") and lp is not None:
-                out.append(target)  # 1-param lambda: plain rename
-                i += 1
-                changed = True
-                continue
-            # bare filter() with a 1-param lambda (or a non-lambda
-            # second argument) is already Spark-native — leave verbatim
-        if name in ("union_value", "union_extract", "union_tag") and parts:
-            # DuckDB UNION (sum) types have no Spark analog — refuse
-            # with guidance instead of a ':=' parse error (r11)
-            raise ValueError(
-                f"{name}: DuckDB UNION types are not supported — "
-                f"model the variant as a STRUCT of nullable fields "
-                f"and tag with a separate column")
-        if name == "struct_insert" and parts and len(parts[2]) >= 2:
-            # struct_insert(s, k := v, …) appends fields [measured:
-            # struct_insert({'a': 1}, b := 2) = {'a': 1, 'b': 2}];
-            # Spark has no := syntax and no generic field-append, so
-            # only LITERAL struct first arguments rewrite (brace
-            # literal → merged brace literal for the later struct
-            # pass; named_struct → extended named_struct); non-literal
-            # structs refuse loudly instead of PARSE_SYNTAX_ERROR.
-            _, close, spans = parts
-            base = _arg_text(toks, spans[0]).strip()
-            adds = []
-            ok_add = True
-            for sp in spans[1:]:
-                ma = re.match(r"(?is)^\s*([A-Za-z_]\w*)\s*:\s*=\s*(.+)$",
-                              _arg_text(toks, sp))
-                if ma is None:
-                    ok_add = False
-                    break
-                adds.append((ma.group(1), ma.group(2).strip()))
-            if ok_add and base.startswith("{") and base.endswith("}"):
-                inner = base[1:-1].strip()
-                pairs = ", ".join(f"'{k}': ({v})" for k, v in adds)
-                out.append("{" + (inner + ", " if inner else "")
-                           + pairs + "}")
-                i = close + 1
-                changed = True
-                continue
-            if ok_add and re.match(r"(?is)^named_struct\s*\(", base) \
-                    and base.endswith(")"):
-                inner = base[base.index("(") + 1:-1].strip()
-                pairs = ", ".join(f"'{k}', ({v})" for k, v in adds)
-                out.append("named_struct(" + (inner + ", " if inner
-                           else "") + pairs + ")")
-                i = close + 1
-                changed = True
-                continue
-            if ok_add:
-                raise ValueError(
-                    "struct_insert on a non-literal struct is not "
-                    "supported — Spark SQL has no generic field "
-                    "append; rebuild the struct with named_struct")
-        if name == "grouping" and parts and len(parts[2]) >= 2:
-            # multi-arg grouping(a, b) returns the combined BITMASK in
-            # DuckDB [measured r12: CUBE rows → 0/1/2/3, b is the LSB];
-            # Spark's grouping() is strictly 1-arg — grouping_id(a, b)
-            # is the exact equivalent (same bit order)
-            out.append("grouping_id")
-            i += 1
-            changed = True
-            continue
-        if name == "map" and parts:
-            # DuckDB map([keys], [values]) — Spark's two-array constructor
-            # is map_from_arrays (Spark's own map() takes interleaved args;
-            # the two-list form is the only call-shaped map() in DuckDB)
-            out.append("map_from_arrays")
-            i += 1
-            changed = True
-            continue
-        if name == "map_extract" and parts:
-            # DuckDB map_extract returns a one-element LIST, so idiomatic
-            # DuckDB unwraps with [1]; Spark element_at returns the value
-            # directly — rename and swallow the unwrapping subscript.
-            _, close, spans = parts
-            inner = detokenize(toks[parts[0] + 1:close])
-            j = close + 1
-            while j < len(toks) and toks[j].kind in ("ws", "comment"):
-                j += 1
-            sub = [k for k in range(j, min(j + 3, len(toks)))]
-            if (len(sub) == 3 and toks[sub[0]].text == "["
-                    and toks[sub[1]].kind == "num" and toks[sub[1]].text == "1"
-                    and toks[sub[2]].text == "]"):
-                # try_element_at: a missing key is NULL in DuckDB's
-                # map_extract(m,k)[1] ([] subscripted), where ANSI
-                # element_at would throw; it also keeps the element_at
-                # map rewrite below from re-firing on this emission
-                out.append(f"try_element_at({inner})")
-                i = sub[2] + 1
-            elif len(spans) == 2:
-                # No [1] unwrap: preserve DuckDB's one-element-LIST shape
-                out.append(_map_list_lookup(_arg_text(toks, spans[0]),
-                                            _arg_text(toks, spans[1])))
-                i = close + 1
-            else:
-                out.append(f"map_extract({inner})")  # wrong arity → loud
-                i = close + 1
-            changed = True
-            continue
-        if name == "element_at" and parts and len(parts[2]) == 2:
-            # DuckDB element_at is a map_extract ALIAS: it returns a
-            # one-element LIST, [] on a missing key — not Spark's scalar
-            # (judge probe r6: element_at(m, missing) was NULL, DuckDB
-            # []). Rewritten only when the first argument is provably a
-            # MAP — a registered map-kind column or a map-constructor
-            # call — because Spark-dialect element_at-on-array text must
-            # keep Spark's scalar semantics. The emission uses
-            # try_element_at, so this branch never re-fires on itself
-            # (the old fixpoint-loop risk with map_extract's emission is
-            # gone for the same reason).
-            _, close, spans = parts
-            mp = _arg_text(toks, spans[0])
-            ky = _arg_text(toks, spans[1])
-            base = mp.strip().lower()
-            is_map = ((column_kinds or {}).get(base) == "map"
-                      or (column_kinds or {}).get(
-                          base.rsplit(".", 1)[-1]) == "map"
-                      or _MAP_CONSTRUCTOR_RE.match(base) is not None)
-            if is_map:
-                out.append(_map_list_lookup(mp, ky))
-                i = close + 1
-                changed = True
-                continue
-        if name == "struct_pack" and parts:
-            # DuckDB struct_pack(a := x, b := y) → named_struct('a', x,
-            # 'b', y). Only the fully keyword-form call rewrites; anything
-            # else passes through and fails loudly in Spark analysis.
-            _, close, spans = parts
-            kv = []
-            for sp in spans:
-                m = re.match(r"\s*([A-Za-z_][A-Za-z0-9_]*)\s*:=\s*(.+)$",
-                             _arg_text(toks, sp), re.S)
-                if not m:
-                    kv = None
-                    break
-                kv.append(f"'{m.group(1)}', {m.group(2).strip()}")
-            if kv:
-                out.append(f"named_struct({', '.join(kv)})")
-                i = close + 1
-                changed = True
-                continue
-        if name == "struct_extract" and parts:
-            # struct_extract(s, 'name') → (s).`name` — Spark's field
-            # access on a parenthesized expression (measured to parse for
-            # nested/backticked fields). Non-literal field names have no
-            # Spark equivalent and pass through loudly.
-            _, close, spans = parts
-            if len(spans) == 2:
-                m = re.fullmatch(r"'([^'`]*)'", _arg_text(toks, spans[1]))
-                if m:
-                    out.append(
-                        f"({_arg_text(toks, spans[0])}).`{m.group(1)}`")
-                    i = close + 1
-                    changed = True
-                    continue
-                # positional form (UNNAMED structs only in DuckDB —
-                # row(7,8)): the engine's row() builds Spark col1…
-                # auto-names, so 1-based position n is field `coln`;
-                # named structs fail loudly on the missing field (r9)
-                mi = re.fullmatch(r"(\d+)", _arg_text(toks,
-                                                      spans[1]).strip())
-                if mi:
-                    out.append(f"({_arg_text(toks, spans[0])})"
-                               f".`col{mi.group(1)}`")
-                    i = close + 1
-                    changed = True
-                    continue
-        if (name == "flatten" and parts and len(parts[2]) == 1
-                and _arg_text(toks, parts[2][0]).strip() in
-                ("array()", "[]")):
-            # flatten([]) → [] in DuckDB; Spark's flatten rejects the
-            # untyped empty array (array<void> is not array<array>) (r9)
-            out.append("array()")
-            i = parts[1] + 1
-            changed = True
-            continue
-        if (name in ("__duck_upper__", "__duck_lower__") and parts
-                and len(parts[2]) == 1):
-            # DuckDB cases per-codepoint (utf8proc SIMPLE maps) vs the
-            # JVM's FULL maps — upper('straße') = 'STRAẞE' vs
-            # 'STRASSE', lower('ΑΣ') = 'ασ' vs final-sigma 'ας'
-            # [measured r9 over U+0020..U+2FFFF: 172/71 divergent
-            # codepoints, every DuckDB target single-codepoint].
-            # Inline translate sandwich: divergent sources swap to
-            # case-stable plane-16 private-use placeholders, the JVM
-            # cases the rest, placeholders map to DuckDB's target.
-            # Inlined (not a SQL temp function) because Spark forbids
-            # SQL UDFs inside Sort — ORDER BY lower(x) must work.
-            from .functions.casetables import (
-                LOWER_PUA, LOWER_SRC, LOWER_TGT,
-                UPPER_PUA, UPPER_SRC, UPPER_TGT)
-
-            a = _arg_text(toks, parts[2][0])
-            base, src, pua, tgt = (
-                ("__jvm_upper__", UPPER_SRC, UPPER_PUA, UPPER_TGT)
-                if name == "__duck_upper__"
-                else ("__jvm_lower__", LOWER_SRC, LOWER_PUA, LOWER_TGT))
-            out.append(f"translate({base}(translate({a}, '{src}', "
-                       f"'{pua}')), '{pua}', '{tgt}')")
-            i = parts[1] + 1
-            changed = True
-            continue
-        if (name == "flatten" and parts and len(parts[2]) == 1
-                and "__fl__" not in _arg_text(toks, parts[2][0])):
-            # DuckDB flatten SKIPS NULL sub-lists ([[1,2],NULL,[3]] →
-            # [1,2,3]) while Spark's is NULL-poisoning [measured r9:
-            # flatten(NULL)=NULL, flatten([NULL])=[], element NULLs
-            # inside sub-lists survive] — drop NULL sub-lists first
-            a = _arg_text(toks, parts[2][0])
-            out.append(
-                f"flatten(filter({a}, __fl__ -> __fl__ IS NOT NULL))")
-            i = parts[1] + 1
-            changed = True
-            continue
-        if name == "regexp_matches" and parts and len(parts[2]) == 3:
-            # 3-arg form carries DuckDB option flags; Spark regexp_like
-            # is 2-arg, so fold supported flags into the pattern as
-            # inline modifiers ((?i) etc). Unknown flags pass through
-            # and fail loudly in Spark analysis (3-arg regexp_like).
-            _, close, spans = parts
-            subj = _arg_text(toks, spans[0])
-            pat = _arg_text(toks, spans[1])
-            flags = _arg_text(toks, spans[2]).strip()
-            m = re.fullmatch(r"'([ismnp]+)'", flags)
-            if m:
-                # 'm'/'n'/'p' do NOT change ^$/. behavior in DuckDB
-                # 1.0 [measured r12: '^b$' with 'm' over 'a\nb' stays
-                # FALSE] — only i/s fold as inline modifiers
-                eff = "".join(c for c in m.group(1) if c in "is")
-                if eff:
-                    out.append(
-                        f"regexp_like({subj}, '(?{eff})' || {pat})")
-                else:
-                    out.append(f"regexp_like({subj}, {pat})")
-                i = close + 1
-                changed = True
-                continue
-        if name == "list_prepend" and parts and len(parts[2]) == 2:
-            # DuckDB list_prepend(elem, list) ↔ Spark array_prepend(list,
-            # elem) — swapped argument order
-            _, close, spans = parts
-            el = _arg_text(toks, spans[0])
-            lst = _arg_text(toks, spans[1])
-            out.append(f"array_prepend({lst}, {el})")
-            i = close + 1
-            changed = True
-            continue
-        if name == "log" and parts and len(parts[2]) == 1:
-            # DuckDB 1-arg log() is LOG10; Spark's is ln — a silent
-            # wrong answer without the rewrite [measured log(100)=2].
-            # The 2-arg log(base, x) agrees and passes through.
-            _, close, spans = parts
-            out.append(f"log10({_arg_text(toks, spans[0])})")
-            i = close + 1
-            changed = True
-            continue
-        if name == "sign" and parts and len(parts[2]) == 1:
-            # DuckDB sign() returns INTEGER even for doubles [measured];
-            # Spark returns DOUBLE — cast for stringify parity. signum
-            # (Spark's alias) keeps the rewritten text from re-matching
-            # this rule on the fixpoint pass.
-            _, close, spans = parts
-            out.append(
-                f"CAST(signum({_arg_text(toks, spans[0])}) AS INT)")
-            i = close + 1
-            changed = True
-            continue
-        if name in ("dayofweek", "weekday") and parts \
-                and len(parts[2]) == 1:
-            # BOTH are 0-based-Sunday in DuckDB [measured: Thu=4, Sun=0].
-            # Spark's same-named builtins silently differ (dayofweek is
-            # 1-based Sunday, weekday 0-based MONDAY) — emitted via
-            # extract(DAYOFWEEK), which is not a rewrite trigger
-            _, close, spans = parts
-            e = _arg_text(toks, spans[0])
-            out.append(f"(extract(DAYOFWEEK FROM {e}) - 1)")
-            i = close + 1
-            changed = True
-            continue
-        if name == "yearweek" and parts and len(parts[2]) == 1:
-            # ISO year * 100 + ISO week [measured: 2024-12-30 -> 202501]
-            _, close, spans = parts
-            e = _arg_text(toks, spans[0])
-            out.append(f"(extract(YEAROFWEEK FROM {e}) * 100 + "
-                       f"extract(WEEK FROM {e}))")
-            i = close + 1
-            changed = True
-            continue
-        if name == "isoyear" and parts and len(parts[2]) == 1:
-            _, close, spans = parts
-            e = _arg_text(toks, spans[0])
-            out.append(f"extract(YEAROFWEEK FROM {e})")
-            i = close + 1
-            changed = True
-            continue
-        if name in ("epoch_ns", "epoch_us") and parts \
-                and len(parts[2]) == 1:
-            # DATE args need the TIMESTAMP cast (r10: unix_micros(DATE)
-            # is a type mismatch; DuckDB accepts DATE for the whole
-            # epoch_* family)
-            _, close, spans = parts
-            e = _arg_text(toks, spans[0])
-            mul = " * 1000" if name == "epoch_ns" else ""
-            out.append(f"(unix_micros(CAST({e} AS TIMESTAMP)){mul})")
-            i = close + 1
-            changed = True
-            continue
-        if name == "julian" and parts and len(parts[2]) == 1:
-            # Julian Day, midnight-based [measured: DATE 2024-01-01 ->
-            # 2460311.0, noon -> +0.5] = days since epoch + 2440588
-            _, close, spans = parts
-            e = _arg_text(toks, spans[0])
-            # unix_micros keeps fractional seconds (third review:
-            # unix_timestamp truncated to whole seconds)
-            out.append(f"(CAST(unix_micros(CAST({e} AS TIMESTAMP)) "
-                       f"AS DOUBLE) / 86400000000.0 + 2440588.0)")
-            i = close + 1
-            changed = True
-            continue
-        if name in ("decade", "millennium") and parts \
-                and len(parts[2]) == 1:
-            # decade = floor(year/10) [1999 -> 199]; millennium =
-            # ceil(year/1000) [999 -> 1, 2024 -> 3] — note the mixed
-            # floor/ceil, both measured
-            _, close, spans = parts
-            e = _arg_text(toks, spans[0])
-            if name == "decade":
-                out.append(f"CAST(floor(year({e}) / 10.0) AS BIGINT)")
-            else:
-                out.append(f"CAST(ceil(year({e}) / 1000.0) AS BIGINT)")
-            i = close + 1
-            changed = True
-            continue
-        if name == "age" and parts and len(parts[2]) == 1:
-            # DuckDB 1-arg age(ts) measures from current_timestamp
-            # [measured: the result carries the wall-clock time, not
-            # midnight]. The 2-arg form passes through to the session
-            # 'age' pandas UDF (functions/udfs.py) — 2 args, so this
-            # branch doesn't re-fire on its own emission.
-            _, close, spans = parts
-            e = _arg_text(toks, spans[0])
-            out.append(f"age(current_timestamp(), {e})")
-            i = close + 1
-            changed = True
-            continue
-        if name == "century" and parts and len(parts[2]) == 1:
-            # measured: 2000 → 20, 2001/2024 → 21 (ceil of year/100)
-            _, close, spans = parts
-            e = _arg_text(toks, spans[0])
-            out.append(f"CAST(ceil(year({e}) / 100.0) AS BIGINT)")
-            i = close + 1
-            changed = True
-            continue
-        if name == "to_base" and parts and len(parts[2]) == 3:
-            # 3-arg form zero-pads LEFT to the given length [measured
-            # r12: to_base(10, 2, 8) = '00001010']
-            _, close, spans = parts
-            x = _arg_text(toks, spans[0])
-            b = _arg_text(toks, spans[1])
-            ln = _arg_text(toks, spans[2])
-            out.append(
-                f"lpad((CASE WHEN ({x}) < 0 THEN raise_error('to_base:"
-                f" number must be greater than or equal to 0') "
-                f"ELSE conv({x}, 10, {b}) END), {ln}, '0')")
-            i = close + 1
-            changed = True
-            continue
-        if name == "to_base" and parts and len(parts[2]) == 2:
-            # conv() matches DuckDB's uppercase digits [measured 'FF'];
-            # DuckDB REFUSES negatives where conv would silently return
-            # two's-complement digits (review r6) — keep the refusal
-            _, close, spans = parts
-            x = _arg_text(toks, spans[0])
-            b = _arg_text(toks, spans[1])
-            out.append(
-                f"(CASE WHEN ({x}) < 0 THEN raise_error('to_base: "
-                f"number must be greater than or equal to 0') "
-                f"ELSE conv({x}, 10, {b}) END)")
-            i = close + 1
-            changed = True
-            continue
-        if name in ("ord", "unicode") and parts and len(parts[2]) == 1:
-            # full codepoint on both (ord('€')=8364), but DuckDB returns
-            # -1 on the EMPTY string where Spark ascii gives 0 (review r6)
-            _, close, spans = parts
-            s_ = _arg_text(toks, spans[0])
-            out.append(f"(CASE WHEN ({s_}) = '' THEN -1 "
-                       f"ELSE ascii({s_}) END)")
-            i = close + 1
-            changed = True
-            continue
-        if name == "epoch_ms" and parts and len(parts[2]) == 1:
-            # overloaded in DuckDB: TIMESTAMP → BIGINT ms, BIGINT ms →
-            # TIMESTAMP (review r6). An integer-literal/arithmetic arg
-            # takes the reverse direction; else the timestamp form.
-            _, close, spans = parts
-            e_ = _arg_text(toks, spans[0]).strip()
-            if re.fullmatch(r"[\d\s+\-*/%()]+", e_):
-                out.append(f"timestamp_millis({e_})")
-            else:
-                out.append(f"unix_millis(CAST({e_} AS TIMESTAMP))")
-            i = close + 1
-            changed = True
-            continue
-        if name in ("isfinite", "isinf") and parts and len(parts[2]) == 1:
-            _, close, spans = parts
-            e = _arg_text(toks, spans[0])
-            # DATE/TIMESTAMP args: DuckDB has ±infinity dates, which
-            # the engine cannot represent (parquet can't store them) —
-            # every representable temporal is finite, so isfinite is
-            # TRUE / isinf FALSE with NULL-in → NULL-out [measured r9]
-            e_strip = e.strip()
-            is_temporal = bool(
-                re.match(r"(?is)^(?:DATE|TIMESTAMP(?:TZ)?)\s*'", e_strip)
-                or re.search(r"(?is)::\s*(?:DATE|TIMESTAMP(?:TZ)?)\s*$",
-                             e_strip)
-                or (re.fullmatch(r"[A-Za-z_]\w*", e_strip)
-                    and (column_kinds or {}).get(e_strip.lower())
-                    in ("date", "timestamp")))
-            if is_temporal:
-                val = "FALSE" if name == "isinf" else "TRUE"
-                out.append(f"(CASE WHEN {e} IS NULL THEN NULL "
-                           f"ELSE {val} END)")
-                i = close + 1
-                changed = True
-                continue
-            d = f"CAST({e} AS DOUBLE)"
-            inf = f"(isnan({d}) OR abs({d}) = CAST('inf' AS DOUBLE))"
-            body = (f"(abs({d}) = CAST('inf' AS DOUBLE))"
-                    if name == "isinf" else f"(NOT {inf})")
-            # NULL in → NULL out on both engines [measured]
-            out.append(f"(CASE WHEN {e} IS NULL THEN NULL "
-                       f"ELSE {body} END)")
-            i = close + 1
-            changed = True
-            continue
-        if name in ("dayname", "monthname") and parts and len(parts[2]) == 1:
-            _, close, spans = parts
-            e = _arg_text(toks, spans[0])
-            fmt = "EEEE" if name == "dayname" else "MMMM"
-            out.append(f"date_format({e}, '{fmt}')")
-            i = close + 1
-            changed = True
-            continue
-        if name == "date_sub" and parts and len(parts[2]) == 3:
-            # DuckDB date_sub(part, a, b) = COMPLETE parts in the
-            # interval [measured: ('hour', 00:00, 05:30) = 5] — true
-            # elapsed-time division, unlike date_diff's boundary count.
-            # Spark's own 2-arg date_sub(date, n) is untouched.
-            _, close, spans = parts
-            unit = _arg_text(toks, spans[0]).strip().strip("'").lower()
-            a = _arg_text(toks, spans[1])
-            b = _arg_text(toks, spans[2])
-            per = {"second": 1, "minute": 60, "hour": 3600,
-                   "day": 86400, "week": 604800}.get(unit)
-            months_per = {"month": 1, "quarter": 3, "year": 12,
-                          "decade": 120, "century": 1200,
-                          "millennium": 12000}.get(unit)
-            if per is None and months_per is not None:
-                # calendar-variable parts (r9) [measured: ('month',
-                # 01-31, 02-29) = 1 — day-clamped completeness;
-                # ('year', 2020-06-01, 2024-05-31) = 3; reversed = -1,
-                # truncation toward zero]: Spark's months_between
-                # shares the clamped/last-day rule, CAST truncates
-                mb = (f"months_between(CAST({b} AS TIMESTAMP), "
-                      f"CAST({a} AS TIMESTAMP))")
-                if months_per == 1:
-                    out.append(f"CAST({mb} AS BIGINT)")
-                else:
-                    out.append(
-                        f"(CAST({mb} AS BIGINT) DIV {months_per})")
-                i = close + 1
-                changed = True
-                continue
-            if per is None:
-                raise NotImplementedError(
-                    f"date_sub({unit!r}, ...): unknown part")
-            # CAST truncates toward zero, matching DuckDB's complete-
-            # parts rule for reversed intervals (measured -5, not
-            # floor's -6 — review r6)
-            out.append(
-                f"CAST((unix_micros(CAST({b} AS TIMESTAMP)) - "
-                f"unix_micros(CAST({a} AS TIMESTAMP))) / "
-                f"({per} * 1000000.0) AS BIGINT)")
-            i = close + 1
-            changed = True
-            continue
-        if name == "array_slice" and parts and len(parts[2]) == 3:
-            # function form of [a:b] — same 1-based inclusive bounds,
-            # negatives from the end, 0 start clamps, 0 end empties;
-            # bounds may be runtime expressions here, so the arithmetic
-            # is emitted unconditionally
-            _, close, spans = parts
-            l_ = _arg_text(toks, spans[0])
-            a = _arg_text(toks, spans[1])
-            b = _arg_text(toks, spans[2])
-            lt = l_.strip()
-            if (lt.startswith("'") and lt.endswith("'")) or \
-                    (column_kinds or {}).get(lt.lower()) == "string":
-                # STRING slicing [measured: ('hello',2,3) → 'el',
-                # (-3,-1) → 'llo', NULL bound → NULL] — substr with the
-                # same 1-based inclusive arithmetic; size() on a string
-                # would fail analysis
-                s = (f"(CASE WHEN ({a}) < 0 THEN "
-                     f"greatest(length({l_}) + ({a}) + 1, 1) "
-                     f"WHEN ({a}) = 0 THEN 1 ELSE ({a}) END)")
-                en = (f"(CASE WHEN ({b}) < 0 THEN "
-                      f"length({l_}) + ({b}) + 1 ELSE ({b}) END)")
-                # keyword form dodges the substr phantom-position
-                # rewrite (the clamped start is never 0 anyway); a NULL
-                # bound is NULL in DuckDB where greatest(NULL, 0) would
-                # silently empty the result (r7 probe)
-                out.append(f"(CASE WHEN ({a}) IS NULL OR ({b}) IS NULL "
-                           f"THEN NULL ELSE substring({l_} FROM {s} "
-                           f"FOR greatest({en} - {s} + 1, 0)) END)")
-                i = close + 1
-                changed = True
-                continue
-            s = (f"(CASE WHEN ({a}) < 0 THEN "
-                 f"greatest(size({l_}) + ({a}) + 1, 1) "
-                 f"WHEN ({a}) = 0 THEN 1 ELSE ({a}) END)")
-            en = (f"(CASE WHEN ({b}) < 0 THEN size({l_}) + ({b}) + 1 "
-                  f"ELSE ({b}) END)")
-            # NULL bound → NULL [measured], not the empty list that
-            # greatest(NULL, 0) = 0 would silently produce (r7 probe)
-            out.append(
-                f"(CASE WHEN ({a}) IS NULL OR ({b}) IS NULL THEN NULL "
-                f"ELSE slice({l_}, {s}, greatest({en} - {s} + 1, 0)) "
-                f"END)")
-            i = close + 1
-            changed = True
-            continue
-        if name == "list_select" and parts and len(parts[2]) == 2:
-            # index 0, negative and out-of-range all yield NULL in
-            # DuckDB [measured]; ANSI element_at would throw on 0 and
-            # wrap on negatives (review r6)
-            _, close, spans = parts
-            l_ = _arg_text(toks, spans[0])
-            idx = _arg_text(toks, spans[1])
-            out.append(
-                f"transform({idx}, __li -> CASE WHEN __li IS NULL "
-                f"OR __li <= 0 THEN NULL "
-                f"ELSE try_element_at({l_}, __li) END)")
-            i = close + 1
-            changed = True
-            continue
-        if name == "list_where" and parts and len(parts[2]) == 2:
-            _, close, spans = parts
-            l_ = _arg_text(toks, spans[0])
-            mk = _arg_text(toks, spans[1])
-            out.append(
-                f"transform(filter(zip_with({l_}, {mk}, "
-                f"(__lv, __lm) -> named_struct('v', __lv, 'm', __lm)), "
-                f"__lp -> __lp.m), __lp -> __lp.v)")
-            i = close + 1
-            changed = True
-            continue
-        if name == "list_grade_up" and parts and len(parts[2]) == 1:
-            # indices that would sort the list ascending; ties keep
-            # original order [measured [30,10,20,10] → [2,4,3,1]] —
-            # struct sort on (null-flag, value, index): DuckDB sorts
-            # NULL VALUES LAST [measured [30,NULL,10] → [3,1,2]] while
-            # Spark's struct compare would put null fields first
-            # (review r6), so an explicit flag leads the key
-            _, close, spans = parts
-            l_ = _arg_text(toks, spans[0])
-            out.append(
-                f"transform(array_sort(zip_with({l_}, "
-                f"sequence(1, size({l_})), "
-                f"(__gv, __gi) -> named_struct("
-                f"'n', CASE WHEN __gv IS NULL THEN 1 ELSE 0 END, "
-                f"'v', __gv, 'i', __gi))), "
-                f"__gp -> __gp.i)")
-            i = close + 1
-            changed = True
-            continue
-        if (name in ("json_extract_string", "json_extract_path_text")
-                and parts and len(parts[2]) == 2):
-            # raw (unquoted) scalar extraction — get_json_object for
-            # the common literal-'$'-path case [measured: '$.c.d' →
-            # 'x', numbers stringify, missing → NULL]; every other
-            # path form (bare key, integer index, '/a/b' pointer, a
-            # non-literal path expression — get_json_object requires a
-            # foldable '$' path) routes through the session UDF that
-            # implements DuckDB's full path grammar (r9).
-            _, close, spans = parts
-            j = _arg_text(toks, spans[0])
-            pth = _arg_text(toks, spans[1])
-            if pth.startswith("[") and pth.endswith("]"):
-                # VARCHAR[] overload → element-wise fan-out (review
-                # r9 #4 — the scalar route stringified the list)
-                lt = tokenize(pth)
-                lspans = split_args(lt, 0, len(lt) - 1)
-                elems = [detokenize(lt[a:b]).strip() for a, b in lspans]
-                calls = ", ".join(
-                    f"__json_extract_string__({j}, "
-                    f"CAST({p_} AS STRING))" for p_ in elems)
-                out.append(f"array({calls})")
-            elif re.fullmatch(r"'\$(?:[^']|'')*'", pth) \
-                    and "[*]" in pth:
-                # '$…[*]…' wildcard returns a LIST of nodes (r12)
-                out.append(f"__json_extract_string_wild__({j}, {pth})")
-            elif re.fullmatch(r"'\$(?:[^']|'')*'", pth):
-                out.append(f"get_json_object({j}, {pth})")
-            else:
-                out.append(f"__json_extract_string__({j}, "
-                           f"CAST({pth} AS STRING))")
-            i = close + 1
-            changed = True
-            continue
-        if (name in ("json_extract", "json_type", "json_extract_path")
-                and parts and len(parts[2]) == 2):
-            # quote-KEEPING extraction / node typing — session UDFs
-            # with DuckDB's measured path grammar and yyjson number
-            # re-rendering (functions/udfs.py). A list-of-paths literal
-            # second argument fans out to array(...) like DuckDB's
-            # VARCHAR[] overload.
-            _, close, spans = parts
-            j = _arg_text(toks, spans[0])
-            pth = _arg_text(toks, spans[1])
-            fn = ("__json_type__" if name == "json_type"
-                  else "__json_extract__")  # dunder names: the public
-            # spellings re-match this branch and would wrap forever
-            if pth.startswith("[") and pth.endswith("]"):
-                lt = tokenize(pth)
-                lspans = split_args(lt, 0, len(lt) - 1)
-                elems = [detokenize(lt[a:b]).strip() for a, b in lspans]
-                calls = ", ".join(
-                    f"{fn}({j}, CAST({p_} AS STRING))" for p_ in elems)
-                out.append(f"array({calls})")
-            elif (fn == "__json_extract__" and "[*]" in pth
-                    and pth.startswith("'") and pth.endswith("'")):
-                # '$…[*]…' wildcard returns a LIST of nodes (r12)
-                out.append(f"__json_extract_wild__({j}, {pth})")
-            else:
-                out.append(f"{fn}({j}, CAST({pth} AS STRING))")
-            i = close + 1
-            changed = True
-            continue
-        if name == "json_type" and parts and len(parts[2]) == 1:
-            # 1-arg form types the whole document — same as path '$'
-            # [measured]
-            _, close, spans = parts
-            j = _arg_text(toks, spans[0])
-            out.append(f"__json_type__({j}, '$')")
-            i = close + 1
-            changed = True
-            continue
-        if name == "json_array_length" and parts and len(parts[2]) == 2:
-            # DuckDB's 2-arg (json, path) form — Spark's takes only the
-            # array text, so extract first
-            _, close, spans = parts
-            j = _arg_text(toks, spans[0])
-            pth = _arg_text(toks, spans[1])
-            out.append(
-                f"json_array_length(get_json_object({j}, {pth}))")
-            i = close + 1
-            changed = True
-            continue
-        if name == "json_object" and parts and len(parts[2]) % 2 == 0 \
-                and parts[2]:
-            # key/value pairs → to_json(named_struct(...)) [measured
-            # output shape {\"k\":7,\"s\":\"x\"}]
-            _, close, spans = parts
-            args = [_arg_text(toks, s) for s in parts[2]]
-            out.append(f"__to_json__(named_struct({', '.join(args)}))")
-            i = close + 1
-            changed = True
-            continue
-        if name == "json_array" and parts and parts[2]:
-            # per-ELEMENT json conversion (r10): Spark arrays are
-            # typed, so the old array()-based emission was a loud
-            # analysis error on mixed args where DuckDB coerces each
-            # element independently [measured: json_array(1, 'a') →
-            # '[1,"a"]', NULL args → literal null]
-            _, close, spans = parts
-            args = [_arg_text(toks, s) for s in parts[2]]
-            # json_quote re-enters the fixpoint and picks up the
-            # scalar-accepting to_json wrap for each element
-            elems = ", ".join(
-                f"coalesce(json_quote({a}), 'null')" for a in args)
-            out.append(f"concat('[', concat_ws(',', {elems}), ']')")
-            i = close + 1
-            changed = True
-            continue
-        if name == "json_array" and parts and not parts[2]:
-            out.append("'[]'")  # zero-arg form [measured]
-            i = parts[1] + 1
-            changed = True
-            continue
-        if name == "json_valid" and parts and len(parts[2]) == 1:
-            # measured: 'null' and bare scalars are VALID json; NULL in
-            # → NULL out. get_json_object(j, '$') is NULL for both
-            # invalid json AND the json literal null — disambiguate the
-            # latter with a trimmed-text check.
-            _, close, spans = parts
-            j = _arg_text(toks, spans[0])
-            out.append(
-                f"(CASE WHEN {j} IS NULL THEN NULL "
-                f"WHEN trim({j}) = 'null' THEN true "
-                f"ELSE get_json_object({j}, '$') IS NOT NULL END)")
-            i = close + 1
-            changed = True
-            continue
-        if name == "regexp_extract_all" and parts and len(parts[2]) == 2:
-            # Spark requires the group index; DuckDB defaults to 0
-            _, close, spans = parts
-            s = _arg_text(toks, spans[0])
-            r = _arg_text(toks, spans[1])
-            out.append(f"regexp_extract_all({s}, {r}, 0)")
-            i = close + 1
-            changed = True
-            continue
-        if name == "product" and parts and len(parts[2]) == 1:
-            # exact fold over the group (exp/sum(ln) would break on zeros
-            # and negatives); collect_list drops NULLs like DuckDB's agg;
-            # empty/all-NULL group is NULL in DuckDB, not the seed
-            # (review r6). A trailing OVER hoists onto the inner
-            # collect_list (r11: the windowed form parse-errored).
-            _, close, spans = parts
-            x = _arg_text(toks, spans[0])
-            over, close = _trailing_filter_over(toks, close)
-            cl = f"collect_list(CAST({x} AS DOUBLE)){over}"
-            out.append(
-                f"(CASE WHEN size({cl}) = 0 THEN NULL ELSE "
-                f"aggregate({cl}, CAST(1.0 AS DOUBLE), "
-                f"(acc, v) -> acc * v) END)")
-            i = close + 1
-            changed = True
-            continue
-        if name in ("first", "last", "any_value") and parts and parts[2]:
-            # ordered first/last: first(x ORDER BY y) is the x of the
-            # minimum y — exactly min_by/max_by [measured]; DESC flips.
-            # any_value rides the same shape but SKIPS NULL values
-            # [measured r12: any_value(v ORDER BY k DESC) over
-            # ((1,7),(2,NULL),(4,9)) → 9] — a value-null flag leads
-            # its sort struct so NULL values always lose.
-            # The plain (unordered) forms pass through — arbitrary-order
-            # in both engines. Trailing FILTER clauses stay outside
-            # (valid on min_by/max_by). NOTE: the whole inner text, not
-            # arg spans — a multi-key ORDER BY's commas split the spans.
-            _, close, spans = parts
-            inner = detokenize(toks[parts[0] + 1:close]).strip()
-            mob = re.match(
-                r"^(?P<e>.+?)\s+ORDER\s+BY\s+(?P<k>.+?)"
-                r"(?:\s+(?P<dir>ASC|DESC))?\s*$",
-                inner, re.IGNORECASE | re.DOTALL)
-            if mob:
-                desc = (mob.group("dir") or "").upper() == "DESC"
-                key = mob.group("k").strip()
-                keys = split_top_commas(key)
-                if len(keys) > 1 and (desc or re.search(
-                        r"\b(ASC|DESC)\b", key, re.IGNORECASE)):
-                    # per-key directions can't map onto one min_by/max_by
-                    # struct (third review: a trailing DESC silently
-                    # inverted the PRIMARY key) — refuse loudly
-                    raise ValueError(
-                        f"{name}(… ORDER BY <multiple keys with "
-                        f"directions>) is not rewritable — use a single "
-                        f"key or uniform ASC: {key!r}")
-                # NULLS LAST is DuckDB's default for BOTH directions, but
-                # Spark min_by/max_by IGNORE NULL ordering keys (third
-                # review: last() must be able to pick a NULL-keyed row).
-                # A null flag rides in front of each key inside the
-                # struct; DESC flips which extreme carries the flag.
-                def _flagged(flag_when_null: str) -> str:
-                    parts_k = []
-                    for k in keys:
-                        k = k.strip()
-                        parts_k.append(f"(CASE WHEN ({k}) IS NULL THEN "
-                                       f"{flag_when_null} ELSE "
-                                       f"{1 - int(flag_when_null)} END)")
-                        parts_k.append(k)
-                    return "struct(" + ", ".join(parts_k) + ")"
-
-                e = mob.group("e").strip()
-                if not desc:
-                    sk = _flagged("1")  # NULLs sort AFTER non-NULLs
-                    fn = "min_by" if name != "last" else "max_by"
-                else:
-                    sk = _flagged("0")  # flag 0 so max=non-NULL extreme
-                    fn = "max_by" if name != "last" else "min_by"
-                if name == "any_value":
-                    vf = "1" if not desc else "0"
-                    sk = (f"struct((CASE WHEN ({e}) IS NULL THEN {vf} "
-                          f"ELSE {1 - int(vf)} END), "
-                          + sk[len("struct("):])
-                # marker spelling: ordered first/last must KEEP a NULL
-                # value at the winning key (r10: the arg_max NULL-skip
-                # wrap would re-capture a plain min_by emission)
-                out.append(f"__duck_{fn}__({e}, {sk})")
-                i = close + 1
-                changed = True
-                continue
-        if name == "any_value" and parts and len(parts[2]) == 1:
-            # bare any_value SKIPS NULLs in DuckDB [measured r12:
-            # any_value(v) over ((NULL),(7)) → 7]; Spark's 1-arg form
-            # keeps the first value, NULL included — a silent wrong
-            # value on an everyday aggregate (VERDICT r11 #2). Spark's
-            # 2-arg any_value(x, true) is the exact semantic; DISTINCT
-            # is a no-op for "pick any non-NULL" and is stripped.
-            _, close, spans = parts
-            inner = detokenize(toks[parts[0] + 1:close]).strip()
-            inner = re.sub(r"(?is)^DISTINCT\s+", "", inner)
-            out.append(f"any_value(({inner}), true)")
-            i = close + 1
-            changed = True
-            continue
-        if name in ("fsum", "favg", "kahan_sum", "sumkahan") and parts \
-                and len(parts[2]) == 1:
-            # Kahan-compensated float aggregates: the compensation is an
-            # accuracy detail — DOUBLE sum/avg is the semantic
-            _, close, spans = parts
-            e = _arg_text(toks, spans[0])
-            fn = "avg" if name == "favg" else "sum"
-            out.append(f"{fn}(CAST({e} AS DOUBLE))")
-            i = close + 1
-            changed = True
-            continue
-        if name in ("left", "right") and parts and len(parts[2]) == 2:
-            # NEGATIVE counts mean "all but n from the other end" in
-            # DuckDB [measured: left('abcde', -2) = 'abc',
-            # right('abcde', -2) = 'cde'] — Spark returns '' there.
-            # substring-only emissions (left/right would re-trigger).
-            _, close, spans = parts
-            s = _arg_text(toks, spans[0])
-            n = _arg_text(toks, spans[1])
-            if name == "left":
-                body = (f"(CASE WHEN ({n}) < 0 THEN substring({s} FROM 1 "
-                        f"FOR greatest(length({s}) + ({n}), 0)) "
-                        f"ELSE substring({s} FROM 1 FOR {n}) END)")
-            else:
-                body = (f"(CASE WHEN ({n}) < 0 THEN "
-                        f"substring({s} FROM 1 - ({n})) "
-                        f"ELSE substring({s} FROM "
-                        f"greatest(length({s}) - ({n}) + 1, 1)) END)")
-            out.append(body)
-            i = close + 1
-            changed = True
-            continue
-        if name in ("substr", "substring") and parts \
-                and len(parts[2]) == 3:
-            # DuckDB's 3-arg substr works on a POSITION LINE [measured
-            # matrix r12]: a negative start means len(s)+start+1, then
-            # the window is [p, p+L) for L >= 0 and [p+L, p) for L < 0
-            # (negative length extends LEFT of start — substr('hello',
-            # 2, -1) = 'h', (3,-2) = 'he', (6,-3) = 'llo'), clipped to
-            # the string; start 0 counts the nonexistent position 0
-            # against the length (substr('abcde',0,3) = 'ab'). Spark
-            # returns '' for any negative length and treats start 0 as
-            # 1 — silent wrong values (VERDICT r11 #3). Literal
-            # start >= 1 with literal length >= 0 agrees and stays
-            # native; everything else takes the windowed form.
-            _, close, spans = parts
-            s = _arg_text(toks, spans[0])
-            st = _arg_text(toks, spans[1]).strip()
-            ln = _arg_text(toks, spans[2]).strip()
-            lit_st = re.fullmatch(r"[+-]?\d+", st)
-            lit_ln = re.fullmatch(r"[+-]?\d+", ln)
-            if lit_st and lit_ln and int(st) >= 1 and int(ln) >= 0:
-                body = f"substring({s} FROM {st} FOR {ln})"
-            else:
-                p = (f"(CASE WHEN ({st}) < 0 THEN length({s}) + ({st})"
-                     f" + 1 ELSE ({st}) END)")
-                a = (f"greatest(CASE WHEN ({ln}) >= 0 THEN {p} "
-                     f"ELSE {p} + ({ln}) END, 1)")
-                b = (f"least(CASE WHEN ({ln}) >= 0 THEN {p} + ({ln}) "
-                     f"- 1 ELSE {p} - 1 END, length({s}))")
-                # explicit NULL guard: greatest/least IGNORE NULL args,
-                # so a NULL start/length would otherwise clamp to 1/end
-                body = (f"(CASE WHEN ({st}) IS NULL OR ({ln}) IS NULL "
-                        f"THEN CAST(NULL AS STRING) "
-                        f"WHEN ({b}) < ({a}) THEN '' ELSE "
-                        f"substring({s} FROM {a} FOR ({b}) - ({a}) "
-                        f"+ 1) END)")
-            out.append(body)
-            # FROM/FOR keyword form everywhere above: a comma'd 3-arg
-            # substring emission would re-enter this very rewrite
-            i = close + 1
-            changed = True
-            continue
-        if name == "split_part" and parts and len(parts[2]) == 3:
-            # DuckDB's split_part NULL/zero matrix [measured r12]:
-            # NULL separator → the WHOLE string; NULL string, NULL or
-            # 0 index, and any out-of-range index (either sign) → ''
-            # — it never returns NULL and never errors. Spark's
-            # split_part NULLs on NULL input and THROWS
-            # INVALID_INDEX_OF_ZERO on 0. Emitted over split() +
-            # try_element_at (no split_part in the output — this very
-            # branch would re-trigger); \Q…\E quotes the separator so
-            # a dynamic one stays literal.
-            _, close, spans = parts
-            s = _arg_text(toks, spans[0])
-            sep = _arg_text(toks, spans[1])
-            ix = _arg_text(toks, spans[2])
-            out.append(
-                f"(CASE WHEN ({sep}) IS NULL THEN ({s}) "
-                f"WHEN ({s}) IS NULL OR ({ix}) IS NULL "
-                f"OR ({ix}) = 0 THEN '' "
-                f"ELSE coalesce(try_element_at(split({s}, "
-                f"concat('\\\\Q', {sep}, '\\\\E'), -1), "
-                f"CAST(({ix}) AS INT)), '') END)")
-            i = close + 1
-            changed = True
-            continue
-        if name in ("ltrim", "rtrim", "trim") and parts \
-                and len(parts[2]) == 2:
-            # 2-arg trim family: DuckDB is (string, trim_chars) but
-            # Spark's 2-arg forms are (trim_chars, string) — REVERSED;
-            # passing through silently trims the wrong operand
-            # (ltrim('xxaxx','x') returned '' instead of 'axx'). Emitted
-            # as the TRIM(LEADING … FROM …) keyword form — a swapped
-            # 2-arg emission would re-trigger this rewrite forever.
-            _, close, spans = parts
-            s = _arg_text(toks, spans[0])
-            chars = _arg_text(toks, spans[1])
-            side = {"ltrim": "LEADING", "rtrim": "TRAILING",
-                    "trim": "BOTH"}[name]
-            out.append(f"TRIM({side} {chars} FROM {s})")
-            i = close + 1
-            changed = True
-            continue
-        # NOTE element_at on a provably-MAP argument now rewrites to the
-        # one-element-LIST form above (r7); on anything else it keeps
-        # Spark's scalar semantics — the unresolvable-expression residue
-        # is documented in SURVEY §2.4.
-        if name == "constant_or_null" and parts and len(parts[2]) == 2:
-            # returns arg1 unless arg2 is NULL [measured]
-            _, close, spans = parts
-            a = _arg_text(toks, spans[0])
-            b = _arg_text(toks, spans[1])
-            out.append(f"(CASE WHEN ({b}) IS NULL THEN NULL "
-                       f"ELSE ({a}) END)")
-            i = close + 1
-            changed = True
-            continue
-        if name in ("multiply", "subtract", "add") and parts \
-                and len(parts[2]) == 2:
-            # operator-function spellings (type-safe, unlike divide()
-            # whose //-semantics depend on operand types — left loud)
-            _, close, spans = parts
-            a = _arg_text(toks, spans[0])
-            b = _arg_text(toks, spans[1])
-            op = {"multiply": "*", "subtract": "-", "add": "+"}[name]
-            out.append(f"(({a}) {op} ({b}))")
-            i = close + 1
-            changed = True
-            continue
-        if name == "fmod" and parts and len(parts[2]) == 2:
-            # FLOORED modulo [measured: fmod(-7.5, 2.0) = 0.5 where C
-            # fmod and Spark % give -1.5]; result DOUBLE
-            _, close, spans = parts
-            a = _arg_text(toks, spans[0])
-            b = _arg_text(toks, spans[1])
-            out.append(f"CAST(CASE WHEN ({b}) = 0 THEN NULL ELSE "
-                       f"((({a}) % ({b})) + ({b})) % ({b}) END "
-                       f"AS DOUBLE)")
-            i = close + 1
-            changed = True
-            continue
-        if name == "fdiv" and parts and len(parts[2]) == 2:
-            # floored division, DOUBLE result [measured:
-            # fdiv(-7.5, 2.0) = -4.0]
-            _, close, spans = parts
-            a = _arg_text(toks, spans[0])
-            b = _arg_text(toks, spans[1])
-            # zero divisor → NULL [measured r12: fdiv(5.0, 0.0) is
-            # NULL, not inf — DuckDB floors a NULL-safe division]
-            out.append(f"CAST(CASE WHEN ({b}) = 0 THEN NULL ELSE "
-                       f"floor(({a}) / ({b})) END AS DOUBLE)")
-            i = close + 1
-            changed = True
-            continue
-        if name in ("quantile_disc", "quantile") and parts \
-                and len(parts[2]) == 2 \
-                and _arg_text(toks, parts[2][1]).lstrip().startswith("["):
-            # bare quantile() is DuckDB's quantile_disc ALIAS [measured]
-            # array-of-quantiles form: same ceil(n*q) index rule applied
-            # per element via transform — Spark allows the aggregate
-            # inside the lambda since the lambda maps a literal array
-            _, close, spans = parts
-            x = _arg_text(toks, spans[0])
-            qq = _arg_text(toks, spans[1])
-            over, close = _trailing_filter_over(toks, close)
-            cl = f"collect_list({x}){over}"
-            out.append(
-                f"transform({qq}, __q -> try_element_at(array_sort({cl}), "
-                f"greatest(CAST(ceil(size({cl}) * __q) AS INT), 1)))")
-            i = close + 1
-            changed = True
-            continue
-        if name in ("quantile_disc", "quantile") and parts \
-                and len(parts[2]) == 2:
-            # DuckDB discrete quantile: the element at index ceil(n*q),
-            # clamped to >= 1, of the sorted group [measured across
-            # n=3..11 x q=0.1..0.9 — floor((n-1)q)+1 diverges at e.g.
-            # n=7 q=0.75; fuzz seed 269 caught it]. Empty/all-NULL
-            # group: clamped index 1 on [] → try_element_at NULL,
-            # matching DuckDB; ANSI mode rejects index 0 outright.
-            _, close, spans = parts
-            x = _arg_text(toks, spans[0])
-            qq = _arg_text(toks, spans[1])
-            over, close = _trailing_filter_over(toks, close)
-            cl = f"collect_list({x}){over}"
-            out.append(
-                f"try_element_at(array_sort({cl}), greatest("
-                f"CAST(ceil(size({cl}) * ({qq})) AS INT), 1))")
-            i = close + 1
-            changed = True
-            continue
-        if name == "entropy" and parts and len(parts[2]) == 1:
-            # Shannon entropy (log2) of the group's value distribution
-            # [measured: (1,1,2,3) → 1.5]; NULLs ignored by both
-            _, close, spans = parts
-            x = _arg_text(toks, spans[0])
-            over, close = _trailing_filter_over(toks, close)
-            cl = f"collect_list({x}){over}"
-            n = f"CAST(size({cl}) AS DOUBLE)"
-            out.append(
-                f"aggregate(transform(array_distinct({cl}), "
-                f"__ev -> CAST(size(filter({cl}, __ey -> __ey = __ev)) "
-                f"AS DOUBLE)), CAST(0.0 AS DOUBLE), "
-                f"(__acc, __c) -> __acc - (__c / {n}) * log2(__c / {n}))")
-            i = close + 1
-            changed = True
-            continue
-        if name == "histogram" and parts and len(parts[2]) == 1:
-            # DuckDB histogram(x) → MAP(value → count), keys sorted
-            # [measured]; counts BIGINT-cast for stable stringify;
-            # empty/all-NULL group is NULL, not {} (review r6)
-            _, close, spans = parts
-            x = _arg_text(toks, spans[0])
-            over, close = _trailing_filter_over(toks, close)
-            cl = f"collect_list({x}){over}"
-            out.append(
-                f"(CASE WHEN size({cl}) = 0 THEN NULL ELSE "
-                f"map_from_entries(transform(array_sort("
-                f"array_distinct({cl})), __hv -> struct(__hv, "
-                f"CAST(size(filter({cl}, __hy -> __hy = __hv)) "
-                f"AS BIGINT)))) END)")
-            i = close + 1
-            changed = True
-            continue
-        if name == "list_histogram" and parts and len(parts[2]) == 1:
-            # list variant of histogram [measured r11: NULL elements
-            # skip, keys sorted, empty/NULL list → NULL]
-            _, close, spans = parts
-            lraw = _arg_text(toks, spans[0])
-            lst = f"filter({lraw}, __hn -> __hn IS NOT NULL)"
-            out.append(
-                f"(CASE WHEN ({lraw}) IS NULL OR size({lst}) = 0 "
-                f"THEN NULL ELSE "
-                f"map_from_entries(transform(array_sort("
-                f"array_distinct({lst})), __hv -> struct(__hv, "
-                f"CAST(size(filter({lst}, __hy -> __hy = __hv)) "
-                f"AS BIGINT)))) END)")
-            i = close + 1
-            changed = True
-            continue
-        if name == "time_bucket" and parts and len(parts[2]) in (2, 3):
-            rewritten = _time_bucket_expr(toks, parts, column_kinds)
-            if rewritten is not None:
-                out.append(rewritten)
-                i = parts[1] + 1
-                changed = True
-                continue
-        if name == "list_unique" and parts and len(parts[2]) == 1:
-            # DuckDB: COUNT of distinct non-null elements [measured]:
-            # [1,NULL,NULL,2] → 2, NULL list → NULL, [] → 0
-            _, close, spans = parts
-            lst = _arg_text(toks, spans[0])
-            out.append(
-                f"CAST(size(array_distinct(filter({lst}, "
-                f"__lu -> __lu IS NOT NULL))) AS BIGINT)")
-            i = close + 1
-            changed = True
-            continue
-        if (name in ("list_reduce", "array_reduce", "reduce") and parts
-                and len(parts[2]) == 2):
-            # DuckDB list_reduce(L, (acc, x) -> …) seeds the accumulator
-            # with the FIRST element (no init value). Spark's aggregate()
-            # needs an init: seed with element_at(L, 1) and fold the tail.
-            # Empty list: BOTH engines error (DuckDB "cannot perform
-            # list_reduce on an empty input list"; ANSI Spark
-            # INVALID_ARRAY_INDEX_IN_ELEMENT_AT on the seed — review r6
-            # corrected an earlier fail-soft claim). NULL list → NULL in
-            # both [measured]. Spark's own reduce() takes 3+ args, so the
-            # 2-arg gate keeps Spark-spelled reduce(l, init, lam) intact.
-            # The 3-PARAM lambda form (a, b, i) passes the 1-based
-            # ITERATION number [measured: list_reduce([1,2,3,4],
-            # (a,b,i) -> a + b*i) = 21 → i is 1,2,3 per fold step, i.e.
-            # (position of b) - 1]: fold over the tail POSITIONS and
-            # substitute b → element_at(L, pos), i → pos - 1.
-            _, close, spans = parts
-            lst = _arg_text(toks, spans[0])
-            lam = _arg_text(toks, spans[1])
-            lp = _lambda_parts(lam)
-            if lp is not None and len(lp[0]) == 3:
-                acc, elt, idx = lp[0]
-                # substitution order matters (review r8): idx and acc
-                # rename BEFORE elt, because the elt substitution
-                # inserts {lst} — whose text may legitimately contain a
-                # column named like idx or, worse, like acc (list_
-                # reduce(a, (a,b,i) -> …) would otherwise capture the
-                # accumulator where DuckDB reads the column)
-                body = _substitute_lambda_ident(lp[1], idx, "(__pos - 1)")
-                body = _substitute_lambda_ident(body, acc, "__acc")
-                body = _substitute_lambda_ident(
-                    body, elt, f"element_at({lst}, __pos)")
-                out.append(
-                    f"aggregate(slice(sequence(1, size({lst})), 2, "
-                    f"greatest(size({lst}) - 1, 0)), "
-                    f"element_at({lst}, 1), (__acc, __pos) -> {body})")
-            else:
-                out.append(
-                    f"aggregate(slice({lst}, 2, "
-                    f"greatest(size({lst}) - 1, 0)), "
-                    f"element_at({lst}, 1), {lam})")
-            i = close + 1
-            changed = True
-            continue
-        if (name in ("greatest", "least") and parts
-                and len(parts[2]) == 1):
-            # 1-arg form is the identity in DuckDB [measured:
-            # greatest(7) = 7]; Spark requires two args
-            out.append(f"({_arg_text(toks, parts[2][0])})")
-            i = parts[1] + 1
-            changed = True
-            continue
-        if (name in ("greatest", "least") and parts
-                and len(parts[2]) >= 2):
-            # mixed string-literal + numeric/date args: DuckDB casts
-            # the STRING to the other side's type [measured r11:
-            # least(1,'2') = 1 BIGINT (not varchar comparison — '05'
-            # orders as 5); greatest(DATE…, '2023-06-01') = DATE];
-            # Spark's least/greatest refuse mixed types. Only literal
-            # strings rewrite; anything unprovable stays loud.
-            _, close, spans = parts
-            args = [_arg_text(toks, sp).strip() for sp in spans]
-            is_str = [a.startswith("'") and a.endswith("'")
-                      for a in args]
-            if any(is_str) and not all(is_str):
-                others = [a for a, s in zip(args, is_str) if not s]
-                ncls = [_numeric_class(a, column_kinds)
-                        for a in others]
-                if all(c is not None for c in ncls):
-                    tgt = ("DOUBLE" if any(c == "frac" for c in ncls)
-                           else "BIGINT")
-                elif all(_expr_is_date(a, column_kinds)
-                         for a in others):
-                    tgt = "DATE"
-                else:
-                    tgt = None
-                if tgt is not None:
-                    new_args = [
-                        f"CAST({a} AS {tgt})" if s else a
-                        for a, s in zip(args, is_str)]
-                    out.append(f"{name}(" + ", ".join(new_args) + ")")
-                    i = close + 1
-                    changed = True
-                    continue
-        if (name == "format" and parts and len(parts[2]) == 1
-                and _arg_text(toks, parts[2][0]).strip().startswith("'")
-                and "{" not in _arg_text(toks, parts[2][0]).replace(
-                    "{{", "").replace("}}", "")):
-            # 1-arg form: no placeholders — the template IS the result
-            # with doubled braces unescaped [measured: format('{{}}') →
-            # '{}']
-            lit = _arg_text(toks, parts[2][0]).strip()
-            body = lit[1:-1].replace("{{", "{").replace("}}", "}")
-            out.append("'" + body + "'")
-            i = parts[1] + 1
-            changed = True
-            continue
-        if name == "to_binary" and parts and len(parts[2]) == 1:
-            # DuckDB to_binary(VARCHAR) is the VARCHAR→BIT cast: the
-            # UTF-8 BYTES as a 0/1 text [measured: 'abc' →
-            # '011000010110001001100011']; Spark's to_binary is a
-            # hex/base64 decoder — silent wrong answer
-            out.append(
-                f"__duck_to_bit__({_arg_text(toks, parts[2][0])})")
-            i = parts[1] + 1
-            changed = True
-            continue
-        if (name == "current_schemas" and parts
-                and len(parts[2]) == 1
-                and _arg_text(toks, parts[2][0]).strip().lower()
-                in ("true", "false")):
-            # search-path introspection [measured: true → ['main',
-            # 'main', 'main', 'pg_catalog'], false → []]
-            if _arg_text(toks, parts[2][0]).strip().lower() == "true":
-                out.append("array('main', 'main', 'main', "
-                           "'pg_catalog')")
-            else:
-                out.append("array()")
-            i = parts[1] + 1
-            changed = True
-            continue
-        if name == "format" and parts and len(parts[2]) >= 2:
-            # DuckDB format() is fmt-style ('{} {:.2f} {:>8}'); Spark's
-            # format_string is printf-style. Translate a LITERAL format
-            # string's {} / {:spec} placeholders — including fill/align/
-            # width specs ('{:>8}' / '{:*<6}' / '{:^7}'), which printf
-            # can't express and become lpad/rpad wrappers around the
-            # argument (r7: judge probe found '{:>8}' refusing).
-            # Anything fancier (positional {0}, named {x}) raises
-            # rather than mangling.
-            _, close, spans = parts
-            fmt_txt = _arg_text(toks, spans[0]).strip()
-            if (fmt_txt.startswith("'") and fmt_txt.endswith("'")
-                    and len(fmt_txt) >= 2):
-                body = fmt_txt[1:-1]
-                # {{ / }} are fmt-escaped literal braces
-                pct = (body.replace("{{", "\x00").replace("}}", "\x01")
-                       .replace("%", "%%"))
-                convs: list[object] = []
-                arg_idx: list[int | None] = []  # {N} positional (r9)
-
-                def _fmt_spec(m: "re.Match[str]") -> str:
-                    arg_idx.append(
-                        int(m.group(1)) if m.group(1) is not None
-                        else None)
-                    spec = m.group(2)
-                    if spec is None or spec == "":
-                        convs.append("s")
-                        return "%s"
-                    if re.fullmatch(r",d?", spec):
-                        # thousands separators [measured r12: DuckDB
-                        # '{:,}'/'{:,d}' group integers; floats error]
-                        # — Java printf's ',' flag is the same grouping
-                        convs.append(",d")
-                        return "%,d"
-                    mr = re.fullmatch(
-                        r"(?P<sign>[+ ]?)(?P<alt>#?)(?P<type>[bxXo])",
-                        spec)
-                    if mr:
-                        # widthless radix specs are sign-aware [measured
-                        # r12: '{:x}' of -255 → '-ff', '{:#x}' → '-0xff',
-                        # '{:+x}' → '+ff'] — Java %x would print the
-                        # two's complement; binary has no Java spec at
-                        # all, so all four radixes emit sign ||
-                        # prefix || magnitude driver-side
-                        convs.append(("radix", mr.group("sign"),
-                                      bool(mr.group("alt")),
-                                      mr.group("type")))
-                        return "%s"
-                    mg2 = re.fullmatch(
-                        r"(?P<sign>[+ ]?)(?P<prec>(?:\.\d+)?)"
-                        r"(?P<type>[gG])", spec)
-                    if mg2:
-                        # fmt 'g' strips trailing mantissa zeros (C
-                        # style: '{:g}' of 100.0 → '100'); Java %g
-                        # keeps them — post-strip per argument
-                        convs.append(("gstrip", mg2.group("sign"),
-                                      mg2.group("prec"),
-                                      mg2.group("type")))
-                        return "%s"
-                    if re.fullmatch(r"[0-9.]*[dfsxX]", spec):
-                        convs.append(spec)  # full spec (precision for f)
-                        return "%" + spec
-                    if re.fullmatch(r"[+ ]?#?0?\d*(?:\.\d+)?[dfsxXoeE]",
-                                    spec):
-                        # sign/alternate/zero-pad/width/precision pass
-                        # straight through — Java printf speaks the
-                        # same flags for these conversions [measured
-                        # r12: '{:+d}' '+5', '{: d}' ' 5', '{:#x}'
-                        # '0xff', '{:08d}' '-0000042', '{:e}'
-                        # '1.234568e+04' all agree]
-                        convs.append(spec)
-                        return "%" + spec
-                    ma = re.fullmatch(
-                        r"(?P<fill>.)?(?P<align>[<>^])(?P<width>\d+)"
-                        r"(?P<rest>(?:\.\d+)?[dfsxX]?)", spec)
-                    if ma:
-                        convs.append(("align", ma.group("fill") or " ",
-                                      ma.group("align"),
-                                      int(ma.group("width")),
-                                      ma.group("rest")))
-                        return "%s"
-                    raise ValueError(
-                        f"format(): unsupported fmt spec {{{spec}}} — "
-                        f"only {{}}, {{:d}}, {{:f}}, {{:s}}, {{:x}} and "
-                        f"fill/align/width shapes translate")
-
-                translated = re.sub(r"\{(?:(\d+))?(?::([^{}]*))?\}",
-                                    _fmt_spec, pct)
-                if "{" in translated or "}" in translated:
-                    raise ValueError(
-                        "format(): positional/named fmt placeholders "
-                        "({0}, {name}) are not supported — use {} or "
-                        "{:spec}")
-                translated = (translated.replace("\x00", "{")
-                              .replace("\x01", "}"))
-                # JVM printf is type-strict (%f rejects Decimal, %d
-                # rejects INT32-typed literals' narrower types) — cast
-                # each argument to the conversion's carrier type
-                casts = {"f": "DOUBLE", "d": "BIGINT",
-                         "x": "BIGINT", "X": "BIGINT",
-                         "o": "BIGINT", "e": "DOUBLE", "E": "DOUBLE"}
-                args = [_arg_text(toks, s) for s in parts[2][1:]]
-                if any(ix is not None for ix in arg_idx):
-                    # positional {N} form: every placeholder must carry
-                    # an index (fmt forbids mixing); args may repeat
-                    if any(ix is None for ix in arg_idx):
-                        raise ValueError(
-                            "format(): cannot mix {} and {N} "
-                            "placeholders (same as fmt)")
-                    if max(arg_idx) >= len(args):
-                        raise ValueError(
-                            f"format(): placeholder {{{max(arg_idx)}}} "
-                            f"but only {len(args)} argument(s)")
-                    args = [args[ix] for ix in arg_idx]
-                elif len(convs) != len(args):
-                    raise ValueError(
-                        f"format(): {len(convs)} placeholder(s) but "
-                        f"{len(args)} argument(s)")
-
-                def _one_arg(a: str, cv) -> str:
-                    if isinstance(cv, tuple) and cv[0] == "radix":
-                        # sign || prefix || magnitude [measured r12]
-                        _, sgn, alt, typ = cv
-                        v = f"CAST({a} AS BIGINT)"
-                        mag = {"x": f"lower(hex(abs({v})))",
-                               "X": f"hex(abs({v}))",
-                               "o": f"format_string('%o', abs({v}))",
-                               "b": f"bin(abs({v}))"}[typ]
-                        pre = ({"x": "0x", "X": "0X",
-                                "o": "0", "b": "0b"}[typ] if alt else "")
-                        pos = f"'{sgn}'" if sgn else "''"
-                        return (f"concat(CASE WHEN {v} < 0 THEN '-' "
-                                f"ELSE {pos} END, '{pre}', {mag})")
-                    if isinstance(cv, tuple) and cv[0] == "gstrip":
-                        # Java %g then strip trailing mantissa zeros
-                        # (and a bare trailing '.') — C/fmt semantics
-                        _, sgn, prec, typ = cv
-                        p_ = prec or ".6"
-                        inner = (f"format_string('%{sgn}{p_}{typ}', "
-                                 f"CAST({a} AS DOUBLE))")
-                        s1 = (f"__java_regexp_replace__({inner}, "
-                              f"'(\\\\.\\\\d*?)0+([eE]|$)', '$1$2')")
-                        return (f"__java_regexp_replace__({s1}, "
-                                f"'\\\\.([eE]|$)', '$1')")
-                    if isinstance(cv, tuple):  # fill/align/width wrap
-                        _, fill, align, width, rest_s = cv
-                        fl = fill.replace("'", "''")
-                        if rest_s and rest_s[-1] in casts:
-                            inner = (f"format_string('%{rest_s}', "
-                                     f"CAST({a} AS {casts[rest_s[-1]]}))")
-                        elif rest_s:
-                            inner = f"format_string('%{rest_s}', {a})"
-                        else:
-                            inner = f"CAST({a} AS STRING)"
-                        if align == ">":
-                            pad = f"lpad({inner}, {width}, '{fl}')"
-                        elif align == "<":
-                            pad = f"rpad({inner}, {width}, '{fl}')"
-                        else:  # '^' centers, extra space on the right
-                            pad = (f"rpad(lpad({inner}, length({inner})"
-                                   f" + CAST(floor(({width} - "
-                                   f"length({inner})) / 2) AS INT), "
-                                   f"'{fl}'), {width}, '{fl}')")
-                        # fmt never truncates an over-width value;
-                        # lpad/rpad would
-                        return (f"(CASE WHEN length({inner}) >= {width} "
-                                f"THEN {inner} ELSE {pad} END)")
-                    if cv.endswith("f"):
-                        # fmt rounds HALF-EVEN on the exact binary
-                        # value ('{:.1f}' of 2.25 → '2.2', of 2.345 →
-                        # '2.3' because 2.345 stores ABOVE the tie);
-                        # JVM printf is HALF_UP on the same exact value
-                        # — they differ ONLY on dyadic exact ties, and
-                        # bround differs elsewhere (it rounds the
-                        # shortest STRING repr). So: nudge exact ties
-                        # to the even candidate, keep printf for the
-                        # rest [measured r9]
-                        prec = re.search(r"\.(\d+)f$", cv)
-                        p_ = int(prec.group(1)) if prec else 6
-                        pw = 10 ** p_
-                        d_ = f"CAST({a} AS DOUBLE)"
-                        sc = f"({d_} * {pw})"
-                        fl = f"floor{sc}"
-                        ev = (f"(CASE WHEN pmod(CAST({fl} AS BIGINT), 2)"
-                              f" = 0 THEN {fl} ELSE {fl} + 1 END)")
-                        return (f"(CASE WHEN abs({d_}) < 1e15 AND "
-                                f"{sc} = {fl} + 0.5D "
-                                f"THEN {ev} / {pw}.0D ELSE {d_} END)")
-                    if cv[-1] in casts:
-                        return f"CAST({a} AS {casts[cv[-1]]})"
-                    return a
-
-                rest = "".join(f", {_one_arg(a, cv)}"
-                               for a, cv in zip(args, convs))
-                # DuckDB format() is NULL when ANY argument is NULL
-                # [measured]; JVM printf would print the string "null"
-                nullg = " OR ".join(f"({a}) IS NULL" for a in args)
-                out.append(
-                    f"(CASE WHEN {nullg} THEN NULL "
-                    f"ELSE format_string('{translated}'{rest}) END)")
-                i = close + 1
-                changed = True
-                continue
-        if name == "printf" and parts and len(parts[2]) >= 1:
-            # printf → format_string, but JVM printf is type-strict the
-            # other way: %f rejects the DECIMAL that a '3.14159' literal
-            # is, %d/%x reject narrow INT32 types (judge probe r7:
-            # printf('%5.2f', 3.14159) errored). With a LITERAL format
-            # string, cast each argument to its conversion's carrier
-            # type; DuckDB printf is NULL on any NULL argument
-            # [measured] where JVM prints 'null' — guard. Non-literal
-            # formats fall through to the plain rename. DuckDB is
-            # type-strict too ('%f' on an int errors there but succeeds
-            # here post-cast — a loud-vs-value residue, not a silent
-            # wrong answer).
-            _, close, spans = parts
-            fmt_txt = _arg_text(toks, spans[0]).strip()
-            if (fmt_txt.startswith("'") and fmt_txt.endswith("'")
-                    and len(fmt_txt) >= 2):
-                body = fmt_txt[1:-1]
-                args = [_arg_text(toks, s) for s in spans[1:]]
-                # C '*' takes width/precision from the NEXT argument;
-                # Java has no '*' — fold LITERAL star operands into the
-                # spec text [measured r12: printf('%*d', 6, 42) →
-                # '    42']. Non-literal stars fall through (loud).
-                if "*" in body:
-                    folded, kept, q2, ok2 = [], [], list(args), True
-                    last = 0
-                    for ms in re.finditer(
-                            r"%[-+ #0]*(\*|\d+)?(?:\.(\*|\d+))?"
-                            r"[a-zA-Z%]", body):
-                        if ms.group(0) == "%%":
-                            continue
-                        txt = ms.group(0)
-                        for g in (1, 2):
-                            if ms.group(g) == "*":
-                                if not (q2 and re.fullmatch(
-                                        r"[+-]?\d+", q2[0].strip())):
-                                    ok2 = False
-                                    break
-                                w = q2.pop(0).strip()
-                                txt = txt.replace("*", w, 1)
-                        if not ok2:
-                            break
-                        folded.append(body[last:ms.start()] + txt)
-                        last = ms.end()
-                        if txt[-1] != "%":
-                            kept.append(q2.pop(0) if q2 else None)
-                    if ok2 and None not in kept:
-                        body = "".join(folded) + body[last:]
-                        args = kept + q2  # leftovers keep arity loud
-                # C ignores the 0 flag on %s (pads with SPACES);
-                # Java rejects it [measured r12: '%08s' → '      ab']
-                body = re.sub(r"%0(\d+)s", r"%\1s", body)
-                # C aliases Java lacks [measured r12: %i and %u both
-                # print like %d in DuckDB] — scanned spec-by-spec,
-                # skipping %% escapes (review r12: a raw re.sub
-                # matched '% i' inside literal text after '%%')
-                nb3, pos3 = [], 0
-                for ms3 in re.finditer(
-                        r"%[-+ #0]*\d*(?:\.\d+)?[a-zA-Z%]", body):
-                    if ms3.group(0) == "%%":
-                        continue
-                    if ms3.group(0)[-1] in "iu":
-                        nb3.append(body[pos3:ms3.start()]
-                                   + ms3.group(0)[:-1] + "d")
-                        pos3 = ms3.end()
-                if nb3:
-                    body = "".join(nb3) + body[pos3:]
-                sm = list(re.finditer(
-                    r"%[-+ #0]*\d*(?:\.\d+)?([a-zA-Z%])", body))
-                specs = [m.group(1) for m in sm if m.group(1) != "%"]
-                casts = {"f": "DOUBLE", "e": "DOUBLE", "g": "DOUBLE",
-                         "E": "DOUBLE", "G": "DOUBLE", "a": "DOUBLE",
-                         "A": "DOUBLE",
-                         "d": "BIGINT", "x": "BIGINT", "X": "BIGINT",
-                         "o": "BIGINT"}
-                if len(specs) == len(args):
-                    # widthless %g/%G strip trailing mantissa zeros in
-                    # C (DuckDB '1.2345e-05'; Java keeps '1.23450e-05')
-                    # and %a/%A exponents carry an explicit '+' in C
-                    # ('0x1.8p+0' vs Java '0x1.8p0') — both repair
-                    # per-argument, spliced back as %s [measured r12]
-                    newb, pos2, ai = [], 0, 0
-                    nargs = list(args)
-                    for m2 in sm:
-                        if m2.group(1) == "%":
-                            continue
-                        st = m2.group(0)
-                        if re.fullmatch(r"%(?:\.\d+)?[gG]", st):
-                            p_ = re.search(r"\.\d+", st)
-                            inner = (f"format_string('%{(p_.group(0) if p_ else '.6')}"
-                                     f"{m2.group(1)}', "
-                                     f"CAST({args[ai]} AS DOUBLE))")
-                            s1 = (f"__java_regexp_replace__({inner}, "
-                                  f"'(\\\\.\\\\d*?)0+([eE]|$)', "
-                                  f"'$1$2')")
-                            nargs[ai] = (f"__java_regexp_replace__({s1}, "
-                                         f"'\\\\.([eE]|$)', '$1')")
-                            specs[ai] = "s"
-                            newb.append(body[pos2:m2.start()] + "%s")
-                            pos2 = m2.end()
-                        elif re.fullmatch(r"%[aA]", st):
-                            inner = (f"format_string('{st}', "
-                                     f"CAST({args[ai]} AS DOUBLE))")
-                            nargs[ai] = (f"__java_regexp_replace__({inner}, "
-                                         f"'([pP])(\\\\d)', '$1+$2')")
-                            specs[ai] = "s"
-                            newb.append(body[pos2:m2.start()] + "%s")
-                            pos2 = m2.end()
-                        ai += 1
-                    if newb:
-                        body = "".join(newb) + body[pos2:]
-                    fmt_txt = f"'{body}'"
-                    rest = "".join(
-                        f", CAST({a} AS {casts[cv]})" if cv in casts
-                        else f", {a}"
-                        for a, cv in zip(nargs, specs))
-                    if args:
-                        nullg = " OR ".join(f"({a}) IS NULL"
-                                            for a in args)
-                        out.append(
-                            f"(CASE WHEN {nullg} THEN NULL "
-                            f"ELSE format_string({fmt_txt}{rest}) END)")
-                    else:
-                        out.append(f"format_string({fmt_txt})")
-                    i = close + 1
-                    changed = True
-                    continue
-        if (name in ("list_has_any", "array_has_any") and parts
-                and len(parts[2]) == 2):
-            # NULL semantics [measured]: DuckDB yields NULL only when a
-            # LIST itself is NULL; null ELEMENTS never match (false).
-            # Spark arrays_overlap returns NULL when no common non-null
-            # exists but either side holds a null element — coalesce
-            # that tri-valued case back to DuckDB's false.
-            _, close, spans = parts
-            a = _arg_text(toks, spans[0])
-            b = _arg_text(toks, spans[1])
-            out.append(
-                f"(CASE WHEN {a} IS NULL OR {b} IS NULL THEN NULL "
-                f"ELSE COALESCE(arrays_overlap({a}, {b}), false) END)")
-            i = close + 1
-            changed = True
-            continue
-        if (name in ("list_has_all", "array_has_all") and parts
-                and len(parts[2]) == 2):
-            # true iff every NON-NULL element of the SECOND list is in
-            # the first (DuckDB ignores null needles [measured]); NULL
-            # when either list is NULL.
-            _, close, spans = parts
-            lst = _arg_text(toks, spans[0])
-            sub = _arg_text(toks, spans[1])
-            out.append(
-                f"(CASE WHEN {lst} IS NULL OR {sub} IS NULL THEN NULL "
-                f"ELSE size(array_except(filter({sub}, "
-                f"__lha -> __lha IS NOT NULL), {lst})) = 0 END)")
-            i = close + 1
-            changed = True
-            continue
-        if (name == "array_length" and parts and len(parts[2]) == 2
-                and _arg_text(toks, parts[2][1]).strip() == "1"):
-            # 2-arg dimension form: only dim 1 exists for LISTs in
-            # DuckDB [measured: other dims 'not implemented'] — the
-            # dim-1 spelling is len(); other dims stay loud (must
-            # precede the 1-arg rename table)
-            _, close, spans = parts
-            out.append(f"size({_arg_text(toks, spans[0])})")
-            i = close + 1
-            changed = True
-            continue
-        if name in _SIMPLE_RENAMES and parts:
-            out.append(_SIMPLE_RENAMES[name])
-            i += 1
-            changed = True
-            continue
-        if name == "epoch" and parts and len(parts[2]) == 1:
-            # DuckDB epoch(ts) → DOUBLE seconds incl. the sub-second
-            # fraction [measured]; unix_timestamp would truncate to
-            # whole seconds. Session-TZ caveat: Spark interprets the
-            # instant in spark.sql.session.timeZone (UTC here), DuckDB
-            # treats the naive timestamp as UTC — identical until a SET
-            # timezone diverges them (documented on the D3 surface).
-            _, close, spans = parts
-            e = _arg_text(toks, spans[0])
-            const = _try_interval_epoch(e)  # epoch(INTERVAL …) literal
-            out.append(const if const is not None else
-                       f"(CAST(unix_micros(CAST({e} AS TIMESTAMP)) "
-                       f"AS DOUBLE) / 1000000.0D)")
-            i = close + 1
-            changed = True
-            continue
-        if name in ("date_part", "datepart") and parts \
-                and len(parts[2]) == 2:
-            # Spark's date_part exists but three fields diverge
-            # [measured 2024-03-04, a Monday]: DuckDB dow is 0..6
-            # Sunday-based (Spark's is 1..7), isodow (1..7 Monday-based)
-            # and epoch don't exist in Spark at all. Other fields (doy,
-            # week, quarter, year, ...) agree and pass through.
-            _, close, spans = parts
-            field = _arg_text(toks, spans[0]).strip().strip("'").lower()
-            expr = _arg_text(toks, spans[1])
-            mapped = _DATE_PART_DIVERGENT(field, expr)
-            if mapped is not None:
-                out.append(mapped)
-                i = close + 1
-                changed = True
-                continue
-        if name == "extract" and parts and len(parts[2]) == 1:
-            # EXTRACT(DOW/ISODOW/EPOCH/MICROSECONDS/… FROM x) — same
-            # divergent fields as date_part; everything else passes
-            # through to Spark's own EXTRACT. DuckDB also accepts a
-            # QUOTED field name (extract('century' FROM d)) — strip the
-            # quotes first (r9; Spark parse-errors on them).
-            _, close, spans = parts
-            arg0 = _arg_text(toks, spans[0]).strip()
-            mq_ = re.match(r"(?is)^'([a-z_]+)'(\s+from\s+.+)$", arg0)
-            if mq_:
-                arg0 = mq_.group(1) + mq_.group(2)
-                out.append(f"extract({arg0})")
-                i = close + 1
-                changed = True
-                continue
-            m = re.match(r"(?is)^([a-z_]+)\s+from\s+(.+)$", arg0)
-            if m:
-                mapped = _DATE_PART_DIVERGENT(m.group(1).lower(),
-                                              m.group(2).strip())
-                if mapped is not None:
-                    out.append(mapped)
-                    i = close + 1
-                    changed = True
-                    continue
-        if (name in ("year", "month", "day", "hour", "minute",
-                     "second", "millisecond", "microsecond", "decade",
-                     "century", "millennium", "quarter")
-                and parts and len(parts[2]) == 1):
-            # field FUNCTIONS over interval LITERALS fold on the same
-            # three-field model as extract (hour(INTERVAL '26:30:00')
-            # = 26 in DuckDB; Spark's hour() refuses the interval) —
-            # timestamp/date operands return None here and pass through
-            iconst = _try_interval_field(
-                name, _arg_text(toks, parts[2][0]))
-            if iconst is not None:
-                out.append(iconst)
-                i = parts[1] + 1
-                changed = True
-                continue
-        if name == "timezone" and parts and len(parts[2]) == 2:
-            # DuckDB timezone(tz, ts) is DIRECTIONAL on the input type
-            # [measured in DuckDB 1.0.0]:
-            #   naive TIMESTAMP  → interprets ts as wall clock IN tz,
-            #     returns the instant (TIMESTAMPTZ): timezone('America/
-            #     New_York', TIMESTAMP '2024-06-05 07:08:09') →
-            #     11:08:09+00 — Spark's to_utc_timestamp (args flipped).
-            #   TIMESTAMPTZ      → converts the instant to wall clock in
-            #     tz, returns naive TIMESTAMP: timezone('America/
-            #     New_York', TIMESTAMPTZ '2024-06-05 07:08:09+00') →
-            #     03:08:09 — Spark's from_utc_timestamp (ADVICE r7: the
-            #     TIMESTAMPTZ literal/cast erasure made this spelling
-            #     reachable and the unconditional to_utc emission
-            #     silently returned the opposite conversion).
-            # The instant-typed shapes are detected BEFORE the keyword
-            # pass erases TIMESTAMPTZ→TIMESTAMP (this pass runs first):
-            # TIMESTAMPTZ '…' literals, TIMESTAMP WITH TIME ZONE '…',
-            # ::TIMESTAMPTZ postfix casts, CAST(… AS TIMESTAMPTZ), and
-            # the now()/current_timestamp family (TIMESTAMPTZ-returning
-            # in DuckDB; their session-UTC naive carrier is the instant).
-            # Known stringification divergence (SURVEY §2.4): DuckDB
-            # renders TIMESTAMPTZ results with a '+00' suffix.
-            _, close, spans = parts
-            tz = _arg_text(toks, spans[0])
-            ts = _arg_text(toks, spans[1])
-            if _span_is_instant_typed(toks, spans[1]):
-                # instant → wall clock: naive TIMESTAMP out (no marker)
-                out.append(f"from_utc_timestamp({ts}, {tz})")
-            else:
-                # wall clock → instant: TIMESTAMPTZ out — the marker
-                # makes a ::VARCHAR render carry DuckDB's '+00' (r11)
-                out.append(
-                    f"__duck_instant__(to_utc_timestamp({ts}, {tz}))")
-            i = close + 1
-            changed = True
-            continue
-        if name == "chr" and parts and len(parts[2]) == 1:
-            # Spark's chr/char wraps the codepoint mod 256 (chr(8364) →
-            # '¬', silent mojibake); DuckDB decodes the full Unicode
-            # codepoint ('€'). Build the UTF-8 byte sequence with
-            # integer arithmetic and decode it JVM-side — no UDF.
-            # DuckDB errors on negatives, surrogates and > 0x10FFFF
-            # [measured "Invalid UTF8 Codepoint"] — raise_error matches
-            # loudly. hex() needs the lpad only in the 1-byte arm
-            # (leading zero for cp < 16); multi-byte values always have
-            # the high bit set, so their hex length is even.
-            _, close, spans = parts
-            e = f"({_arg_text(toks, spans[0])})"
-            out.append(
-                f"(CASE WHEN {e} IS NULL THEN CAST(NULL AS STRING) "
-                f"WHEN {e} < 0 OR {e} > 1114111 "
-                f"OR ({e} >= 55296 AND {e} <= 57343) "
-                f"THEN CAST(raise_error(concat('chr: invalid UTF8 "
-                f"codepoint ', CAST({e} AS STRING))) AS STRING) "
-                f"WHEN {e} < 128 THEN "
-                f"decode(unhex(lpad(hex({e}), 2, '0')), 'UTF-8') "
-                f"WHEN {e} < 2048 THEN decode(unhex(hex("
-                f"(192 + {e} div 64) * 256 + 128 + {e} % 64)), 'UTF-8') "
-                f"WHEN {e} < 65536 THEN decode(unhex(hex("
-                f"(224 + {e} div 4096) * 65536 "
-                f"+ (128 + ({e} div 64) % 64) * 256 "
-                f"+ 128 + {e} % 64)), 'UTF-8') "
-                f"ELSE decode(unhex(hex("
-                f"(240 + {e} div 262144) * 16777216 "
-                f"+ (128 + ({e} div 4096) % 64) * 65536 "
-                f"+ (128 + ({e} div 64) % 64) * 256 "
-                f"+ 128 + {e} % 64)), 'UTF-8') END)")
-            i = close + 1
-            changed = True
-            continue
-        if name in ("cast", "try_cast") and parts and len(parts[2]) == 1:
-            # CAST('[1,2]' AS INTEGER[]) parses list syntax from text in
-            # DuckDB; Spark cannot cast STRING → ARRAY. from_json covers
-            # the provably-string shapes (literal or string-kind column;
-            # the ARRAY<…> spelling is already normalized by the earlier
-            # type pass). Malformed text is NULL here where plain CAST
-            # errors in DuckDB — a loud-vs-NULL residue on bad input.
-            _, close, spans = parts
-            mc = re.match(r"(?is)^(.+?)\s+AS\s+(ARRAY\s*<\s*"
-                          r"(?:INT|INTEGER|BIGINT|SMALLINT|TINYINT|"
-                          r"LONG|DOUBLE|FLOAT|REAL|BOOLEAN|"
-                          r"DECIMAL[^>]*)\s*>)\s*$",
-                          _arg_text(toks, spans[0]))
-            if mc:
-                # numeric/boolean element types only: DuckDB's list-cast
-                # text allows UNQUOTED string elements ('[a, b]') that
-                # from_json would silently NULL (review r7-2) — string
-                # element types stay loud
-                ex, ty = mc.group(1).strip(), mc.group(2)
-                is_str = ((ex.startswith("'") and ex.endswith("'"))
-                          or (column_kinds or {}).get(
-                              ex.lower()) == "string"
-                          # a ||-concat led by a string literal is a
-                          # string ('[' || x || ']')
-                          or (re.match(r"^\(*\s*'", ex) and "||" in ex))
-                if is_str:
-                    out.append(f"from_json({ex}, '{ty}')")
-                    i = close + 1
-                    changed = True
-                    continue
-        if name in ("add", "multiply", "subtract") and parts \
-                and len(parts[2]) == 2:
-            # operator-function aliases; divide() is deliberately NOT
-            # mapped — like '//' it integer-divides integers but
-            # plain-divides doubles [measured divide(7,2)=3,
-            # divide(7.0,2)=3.5], so no type-blind textual mapping is
-            # safe (§2.4.15a); it stays loud
-            _, close, spans = parts
-            a = _arg_text(toks, spans[0])
-            b = _arg_text(toks, spans[1])
-            op = {"add": "+", "multiply": "*", "subtract": "-"}[name]
-            out.append(f"(({a}) {op} ({b}))")
-            i = close + 1
-            changed = True
-            continue
-        if name == "sha256" and parts and len(parts[2]) == 1:
-            _, close, spans = parts
-            out.append(f"sha2({_arg_text(toks, spans[0])}, 256)")
-            i = close + 1
-            changed = True
-            continue
-        if name == "geomean" or name == "geometric_mean":
-            if parts and len(parts[2]) == 1:
-                # exp(mean(ln x)) — avg skips NULLs like DuckDB's agg;
-                # an empty/all-NULL group is NULL on both. Non-positive
-                # values ERROR in DuckDB ('cannot take logarithm') —
-                # ln() would silently return NULL and drop them
-                # (review r7-2), so the guard raises
-                _, close, spans = parts
-                x = _arg_text(toks, spans[0])
-                over, close = _trailing_filter_over(toks, close)
-                out.append(
-                    f"exp(avg(ln(CASE WHEN ({x}) <= 0 THEN "
-                    f"CAST(raise_error('geomean: cannot take logarithm "
-                    f"of non-positive value') AS DOUBLE) "
-                    f"ELSE CAST({x} AS DOUBLE) END)){over})")
-                i = close + 1
-                changed = True
-                continue
-        if name == "list_resize" and parts and len(parts[2]) in (2, 3):
-            # truncate or pad to n; the default pad is a typed NULL —
-            # get(l, -1) is NULL of the element type [measured:
-            # list_resize([1,2],4) = [1,2,NULL,NULL]; 3-arg pads the
-            # given value]
-            _, close, spans = parts
-            l_ = _arg_text(toks, spans[0])
-            n_ = _arg_text(toks, spans[1])
-            v_ = (_arg_text(toks, spans[2]) if len(spans) == 3
-                  else f"get({l_}, -1)")
-            # flatten(array(a, b)) concatenates lists without spelling
-            # "concat" — that name is the STRING rewrite's trigger
-            out.append(
-                f"(CASE WHEN size({l_}) >= ({n_}) "
-                f"THEN slice({l_}, 1, {n_}) "
-                f"ELSE flatten(array({l_}, array_repeat({v_}, "
-                f"({n_}) - size({l_})))) END)")
-            i = close + 1
-            changed = True
-            continue
-        if name == "range" and parts and 1 <= len(parts[2]) <= 3 \
-                and not _in_from_position(toks, i):
-            # list-producing range(): EXCLUSIVE stop, empty when the
-            # bounds cross [measured range(0) = [], range(2,2) = [],
-            # range(5,0,-2) = [5,3,1]]; Spark's sequence is INCLUSIVE.
-            # The FROM/JOIN/','-preceded forms are TABLE functions — the
-            # engine's series resolver rewrites the literal ones into
-            # Spark's native range TVF BEFORE this pass (which must not
-            # re-touch them), and non-literal TVF args stay loud. A
-            # zero step errors in DuckDB and yields [] here (documented
-            # edge).
-            _, close, spans = parts
-            args = [_arg_text(toks, s) for s in spans]
-            if len(args) == 1:
-                a, b, s = "0", args[0], "1"
-            elif len(args) == 2:
-                a, b, s = args[0], args[1], "1"
-            else:
-                a, b, s = args
-            if len(args) == 3 and _is_interval_step(s):
-                # temporal form — see _temporal_series_emission
-                out.append(_temporal_series_emission(
-                    a, b, s, inclusive=False))
-                i = close + 1
-                changed = True
-                continue
-            # a NULL bound/step is NULL in DuckDB [measured], not the
-            # empty list the guards would otherwise fall through to
-            out.append(
-                f"(CASE WHEN ({a}) IS NULL OR ({b}) IS NULL "
-                f"OR ({s}) IS NULL THEN NULL "
-                f"WHEN ({s}) > 0 AND ({a}) < ({b}) "
-                f"THEN sequence({a}, ({b}) - 1, {s}) "
-                f"WHEN ({s}) < 0 AND ({a}) > ({b}) "
-                f"THEN sequence({a}, ({b}) + 1, {s}) "
-                f"ELSE slice(array({a}), 1, 0) END)")
-            i = close + 1
-            changed = True
-            continue
-        if name == "generate_series" and parts and 1 <= len(parts[2]) <= 3 \
-                and not _in_from_position(toks, i):
-            # list-producing generate_series(): INCLUSIVE stop
-            # [measured: (3) → [0..3], (5,1) → [] — Spark's sequence
-            # would auto-step DOWN, a silent wrong answer — and
-            # (5,1,-2) → [5,3,1]]. With an EXPLICIT step Spark's
-            # sequence matches exactly; the no-step forms guard the
-            # crossing-bounds case. FROM/JOIN forms were consumed by
-            # the engine's series-TVF resolver.
-            _, close, spans = parts
-            gs = [_arg_text(toks, s) for s in spans]
-            if len(gs) == 3 and _is_interval_step(gs[2]):
-                # temporal form — see _temporal_series_emission
-                out.append(_temporal_series_emission(
-                    gs[0], gs[1], gs[2], inclusive=True))
-                i = close + 1
-                changed = True
-                continue
-            if len(gs) == 3:
-                out.append(f"sequence({gs[0]}, {gs[1]}, {gs[2]})")
-            else:
-                a, b = ("0", gs[0]) if len(gs) == 1 else (gs[0], gs[1])
-                out.append(
-                    f"(CASE WHEN ({a}) IS NULL OR ({b}) IS NULL "
-                    f"THEN NULL "
-                    f"WHEN ({a}) <= ({b}) THEN sequence({a}, {b}) "
-                    f"ELSE slice(array({a}), 1, 0) END)")
-            i = close + 1
-            changed = True
-            continue
-        if name == "list_sort" and parts and len(parts[2]) == 1:
-            # 1-arg: plain rename — Spark array_sort is ASC NULLS LAST,
-            # exactly DuckDB's default [measured [3,NULL,1] → [1,3,NULL]]
-            out.append("array_sort")
-            i += 1
-            changed = True
-            continue
-        if name == "list_sort" and parts and len(parts[2]) in (2, 3):
-            # string-literal direction/null-order options [measured:
-            # default is ASC NULLS LAST — matching Spark's array_sort,
-            # which the 1-arg rename uses — and 'DESC' defaults NULLS
-            # LAST too]. sort_array: asc = NULLS FIRST, desc = NULLS
-            # LAST; DESC NULLS FIRST needs the struct trick. A 2-arg
-            # LAMBDA comparator (Spark-style) falls through unrenamed
-            # (loud — DuckDB's list_sort has no comparator form).
-            _, close, spans = parts
-            l_ = _arg_text(toks, spans[0])
-            d_ = _arg_text(toks, spans[1]).strip().strip("'\"").upper()
-            n3 = (_arg_text(toks, spans[2]).strip().strip("'\"").upper()
-                  if len(spans) == 3 else "")
-            emit = None
-            if d_ in ("ASC", "DESC"):
-                first = n3 == "NULLS FIRST"
-                if d_ == "ASC":
-                    emit = (f"sort_array({l_})" if first
-                            else f"array_sort({l_})")
-                else:
-                    emit = (f"transform(sort_array(transform({l_}, "
-                            f"__ls -> struct(__ls IS NULL AS n, "
-                            f"__ls AS v)), false), __ls -> __ls.v)"
-                            if first else f"sort_array({l_}, false)")
-            if emit is not None:
-                out.append(emit)
-                i = close + 1
-                changed = True
-                continue
-        if (name == "try_strptime" and parts and len(parts[2]) == 2
-                and not _arg_text(toks,
-                                  parts[2][1]).strip().startswith("[")):
-            # try_to_timestamp: NULL instead of an error on parse
-            # failure [measured] — format string converts like strptime
-            # (the FORMAT-LIST form falls through to its own branch)
-            _, close, spans = parts
-            s_ = _arg_text(toks, spans[0])
-            f_ = _arg_text(toks, spans[1]).strip()
-            raw_f = f_
-            if f_.startswith("'") and f_.endswith("'"):
-                f_ = ("'" + _sql_quote(
-                    convert_strftime_format(f_[1:-1])) + "'")
-            out.append(_strptime_year_shift(
-                f"try_to_timestamp({s_}, {f_})", raw_f))
-            i = close + 1
-            changed = True
-            continue
-        if name == "date_trunc" and parts and len(parts[2]) == 2:
-            # DuckDB 1.0 date_trunc return type is decided by the FIELD,
-            # not the input [measured matrix, both DATE and TIMESTAMP
-            # inputs]: day-or-coarser fields (day/week/month/quarter/
-            # year/isoyear/decade/century/millennium + plural/short
-            # aliases) return DATE; hour-or-finer (hour/minute/second/
-            # millisecond/microsecond/epoch) return TIMESTAMP. Spark's
-            # date_trunc always returns TIMESTAMP, silently NULLs
-            # unknown fields, and lacks the DuckDB-only fields — so
-            # every literal field is normalized and re-typed here.
-            _, close, spans = parts
-            raw_fld = _arg_text(toks, spans[0]).strip()
-            fld = raw_fld.strip("'\"").lower()
-            x = _arg_text(toks, spans[1])
-            is_lit = raw_fld[:1] in ("'", '"')
-            width = {"decade": 10, "decades": 10,
-                     "century": 100, "centuries": 100,
-                     "millennium": 1000, "millenniums": 1000,
-                     "millennia": 1000}.get(fld)
-            spark_date_fld = {  # Spark-supported, DuckDB returns DATE
-                "day": "day", "days": "day", "d": "day",
-                "week": "week", "weeks": "week", "w": "week",
-                "month": "month", "months": "month", "mon": "month",
-                "quarter": "quarter", "quarters": "quarter",
-                "year": "year", "years": "year", "y": "year",
-            }.get(fld)
-            spark_ts_fld = {  # Spark-supported, TIMESTAMP out
-                "hour": "hour", "hours": "hour", "h": "hour",
-                "hr": "hour",
-                "minute": "minute", "minutes": "minute", "m": "minute",
-                "mins": "minute",
-                "second": "second", "seconds": "second", "s": "second",
-                "secs": "second",
-                # epoch-trunc = second-trunc [measured: '...45.123456'
-                # → '...45']
-                "epoch": "second",
-                "millisecond": "millisecond",
-                "milliseconds": "millisecond", "ms": "millisecond",
-                "microsecond": "microsecond",
-                "microseconds": "microsecond", "us": "microsecond",
-            }.get(fld)
-            if width is not None:
-                # decade/century/millennium truncate by FLOOR of the
-                # year [measured: decade 2024 → 2020-01-01, century
-                # 2024 → 2000-01-01 (not the ceil-based century()
-                # FIELD, which is 21)]; make_date returns DATE,
-                # matching DuckDB's day-or-coarser return type.
-                out.append(f"make_date(year({x}) - pmod(year({x}), "
-                           f"{width}), 1, 1)")
-                i = close + 1
-                changed = True
-                continue
-            if fld in ("isoyear", "isoyears"):
-                # start of the ISO week-numbering year = the Monday of
-                # the week containing Jan 4 [measured: '2021-01-01' →
-                # '2019-12-30'; '2023-01-01' → '2022-01-03']
-                iso = f"extract(YEAROFWEEK FROM {x})"
-                j4 = f"make_date({iso}, 1, 4)"
-                # DAYOFWEEK_ISO is 1=Monday; plain weekday()/dayofweek()
-                # spellings would be re-captured by the DuckDB
-                # Sunday-0-based rewrite on the fixpoint pass
-                out.append(f"date_sub({j4}, "
-                           f"extract(DAYOFWEEK_ISO FROM {j4}) - 1)")
-                i = close + 1
-                changed = True
-                continue
-            if spark_date_fld == "day":
-                # truncation to day IS the date part; CAST avoids
-                # re-matching this rule on the fixpoint pass
-                out.append(f"CAST({x} AS DATE)")
-                i = close + 1
-                changed = True
-                continue
-            if spark_date_fld is not None:
-                # Spark's trunc() returns DATE natively (and is a
-                # different name, so the fixpoint pass stops)
-                out.append(f"trunc(CAST({x} AS DATE), "
-                           f"'{spark_date_fld}')")
-                i = close + 1
-                changed = True
-                continue
-            if spark_ts_fld is not None and fld != spark_ts_fld:
-                # normalize alias → canonical; canonical spellings pass
-                # through untouched (Spark's date_trunc agrees:
-                # TIMESTAMP out) so the fixpoint pass terminates
-                out.append(f"date_trunc('{spark_ts_fld}', {x})")
-                i = close + 1
-                changed = True
-                continue
-            # canonical hour/minute/second/millisecond/microsecond:
-            # Spark-native (TIMESTAMP out, agreeing with DuckDB) —
-            # verbatim token copy below
-            if is_lit and spark_ts_fld is None:
-                # DuckDB errors loudly on an unrecognized specifier;
-                # Spark would silently return NULL — refuse instead.
-                raise ValueError(
-                    f"date_trunc specifier {raw_fld} is not recognized "
-                    f"(DuckDB 1.0 rejects it with a Conversion Error)")
-            # non-literal field (column/parameter): unknowable at
-            # rewrite time; pass through to Spark's date_trunc
-            # (TIMESTAMP out, NULL on unknown) — documented divergence.
-        if (name in ("array_pop_back", "array_pop_front", "list_pop_back",
-                     "list_pop_front") and parts
-                and len(parts[2]) == 1):
-            # drop the last/first element [measured r11: pop of [] →
-            # [], NULL → NULL]; Spark has no pop — slice() with a
-            # clamped length
-            _, close, spans = parts
-            lst = _arg_text(toks, spans[0])
-            if name.endswith("back"):
-                out.append(f"slice({lst}, 1, "
-                           f"greatest(size({lst}) - 1, 0))")
-            else:
-                out.append(f"(CASE WHEN size({lst}) <= 1 THEN "
-                           f"slice({lst}, 1, 0) ELSE slice({lst}, 2, "
-                           f"size({lst}) - 1) END)")
-            i = close + 1
-            changed = True
-            continue
-        if name == "list_reverse_sort" and parts:
-            _, close, spans = parts
-            lst = _arg_text(toks, spans[0])
-            out.append(f"sort_array({lst}, false)")
-            i = close + 1
-            changed = True
-            continue
-        if name == "array_to_string" and parts and len(parts[2]) == 2:
-            # DuckDB returns NULL for an EMPTY list; Spark's array_join
-            # returns '' — wrap to reproduce DuckDB semantics
-            _, close, spans = parts
-            lst = _arg_text(toks, spans[0])
-            sep = _arg_text(toks, spans[1])
-            out.append(
-                f"(CASE WHEN size({lst}) = 0 THEN CAST(NULL AS STRING) "
-                f"ELSE array_join({lst}, {sep}) END)"
-            )
-            i = close + 1
-            changed = True
-            continue
-        if name in ("list_cosine_similarity", "array_cosine_similarity",
-                    "list_cosine_distance", "array_cosine_distance",
-                    "list_inner_product", "array_inner_product",
-                    "list_dot_product",
-                    "list_distance", "array_distance") and parts \
-                and len(parts[2]) == 2:
-            # DuckDB vector functions (measured against 1.0.0):
-            #   * list_cosine_similarity returns -1.0 when either vector has
-            #     zero norm (NOT NaN/NULL) — reproduced via the CASE guard.
-            #   * NULL *list* argument propagates NULL (zip_with/aggregate
-            #     give this for free).
-            #   * DuckDB ERRORS on length mismatch or NULL elements; the
-            #     Spark composition returns NULL there instead (zip_with
-            #     pads with NULL) — a documented soft divergence, since
-            #     raising from inside an expression isn't expressible.
-            #   * Results are DOUBLE even for integer lists — every element
-            #     is cast before multiplying.
-            # list_cosine_distance/array_cosine_distance (DuckDB >= 1.1) are
-            # accepted as 1 - similarity; DuckDB 1.0.0 lacks them, so
-            # cross-engine tests cover only the 1.0.0 trio.
-            _, close, spans = parts
-            # The ARRAY<DOUBLE> cast (a) forces double math for integer/
-            # decimal/float32 lists, matching DuckDB's DOUBLE result type,
-            # and (b) types a bare NULL literal argument, which would
-            # otherwise fail Spark analysis as VOID inside aggregate().
-            a = f"CAST({_arg_text(toks, spans[0])} AS ARRAY<DOUBLE>)"
-            b = f"CAST({_arg_text(toks, spans[1])} AS ARRAY<DOUBLE>)"
-            dot = (
-                f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), "
-                f"CAST(0 AS DOUBLE), (s, v) -> s + v)"
-            )
-            n2a = (f"aggregate({a}, CAST(0 AS DOUBLE), "
-                   f"(s, x) -> s + x * x)")
-            n2b = (f"aggregate({b}, CAST(0 AS DOUBLE), "
-                   f"(s, x) -> s + x * x)")
-            cos = (
-                f"(CASE WHEN ({a}) IS NULL OR ({b}) IS NULL "
-                f"THEN CAST(NULL AS DOUBLE) "
-                f"WHEN {n2a} = 0 OR {n2b} = 0 THEN CAST(-1.0 AS DOUBLE) "
-                f"ELSE {dot} / (sqrt({n2a}) * sqrt({n2b})) END)"
-                # the IS NULL arm must come FIRST: with a NULL list and a
-                # zero-norm other side, 'NULL OR TRUE' is TRUE and the
-                # -1.0 arm would fire — DuckDB returns NULL there (review)
-            )
-            base = name.split("_", 1)[1]
-            if base in ("inner_product", "dot_product"):
-                body = dot
-            elif base == "distance":
-                body = (
-                    f"sqrt(aggregate(zip_with({a}, {b}, (x, y) -> "
-                    f"(x - y) * (x - y)), "
-                    f"CAST(0 AS DOUBLE), (s, v) -> s + v))"
-                )
-            elif base == "cosine_similarity":
-                body = cos
-            else:  # cosine_distance
-                body = f"(CAST(1.0 AS DOUBLE) - {cos})"
-            out.append(body)
-            i = close + 1
-            changed = True
-            continue
-        if name in ("list_sum", "list_avg") and parts \
-                and len(parts[2]) == 1:
-            # DuckDB SKIPS NULL elements and returns NULL for empty /
-            # all-NULL lists [measured: list_sum([1,NULL,2])=3,
-            # list_sum([])=NULL, list_avg([1.0,NULL,3.0])=2.0] — filter
-            # first, then guard on the filtered size (review fix; the
-            # naive aggregate gave NULL on NULL elements and 0.0 on [])
-            _, close, spans = parts
-            lst = _arg_text(toks, spans[0])
-            flt = f"filter({lst}, x -> x IS NOT NULL)"
-            s = f"aggregate({flt}, CAST(0 AS DOUBLE), (acc, x) -> acc + x)"
-            body = s if name == "list_sum" else f"({s} / size({flt}))"
-            out.append(f"(CASE WHEN size({flt}) = 0 "
-                       f"THEN CAST(NULL AS DOUBLE) ELSE {body} END)")
-            i = close + 1
-            changed = True
-            continue
-        if name == "list_any_value" and parts and len(parts[2]) == 1:
-            # first non-NULL element; get() is 0-based and NULL-safe
-            # out-of-bounds (element_at would throw under ANSI)
-            _, close, spans = parts
-            e = _arg_text(toks, spans[0])
-            out.append(f"get(filter({e}, x -> x IS NOT NULL), 0)")
-            i = close + 1
-            changed = True
-            continue
-        if name in ("list_extract", "array_extract", "list_element") \
-                and parts and len(parts[2]) == 2:
-            # 1-based list element; measured pins: out-of-bounds -> NULL,
-            # index 0 -> NULL, NEGATIVE indexes count from the back
-            # (list_extract([1,2,3], -1) = 3, -5 -> NULL) — hence get()
-            # (0-based, NULL out-of-bounds; element_at throws under ANSI)
-            # plus the sign CASE. array_extract over a STRING argument is
-            # not supported — get() fails analysis loudly there.
-            _, close, spans = parts
-            lst = _arg_text(toks, spans[0])
-            idx = _arg_text(toks, spans[1])
-            is_str = ((lst.strip().startswith("'")
-                       and lst.strip().endswith("'"))
-                      or (column_kinds or {}).get(
-                          lst.strip().lower()) == "string")
-            if is_str:
-                # STRING overload [measured r10: list_extract('abc',2)
-                # = 'b', -1 = 'c', out-of-range/0 = '', NULL idx NULL]
-                out.append(
-                    f"(CASE WHEN ({idx}) IS NULL THEN NULL "
-                    f"WHEN ({idx}) > 0 THEN substring({lst}, {idx}, 1) "
-                    f"WHEN ({idx}) < 0 THEN substring({lst}, "
-                    f"length({lst}) + ({idx}) + 1, 1) ELSE '' END)")
-            else:
-                out.append(
-                    f"get({lst}, CASE WHEN ({idx}) > 0 THEN ({idx}) - 1 "
-                    f"WHEN ({idx}) < 0 THEN size({lst}) + ({idx}) "
-                    f"ELSE NULL END)")
-            i = close + 1
-            changed = True
-            continue
-        if (name in ("like_escape", "not_like_escape", "ilike_escape",
-                     "not_ilike_escape") and parts
-                and len(parts[2]) == 3):
-            # function spellings of LIKE … ESCAPE [measured: escape
-            # char makes _/% literal; ilike folds case on BOTH sides]
-            _, close, spans = parts
-            s_ = _arg_text(toks, spans[0])
-            pat = _arg_text(toks, spans[1])
-            esc = _arg_text(toks, spans[2])
-            if "ilike" in name:
-                body = f"lower({s_}) LIKE lower({pat}) ESCAPE {esc}"
-            else:
-                body = f"{s_} LIKE {pat} ESCAPE {esc}"
-            neg = "NOT " if name.startswith("not_") else ""
-            out.append(f"({neg}({body}))")
-            i = close + 1
-            changed = True
-            continue
-        if (name in ("divide", "multiply", "add", "subtract", "mod")
-                and parts and len(parts[2]) == 2):
-            # operator-function spellings [measured: divide(7,2)=3 —
-            # it is the `//` semantics, NOT `/`; mod(7,0)=NULL]
-            _, close, spans = parts
-            a = _arg_text(toks, spans[0])
-            b = _arg_text(toks, spans[1])
-            if name == "divide":
-                out.append(f"__floordiv__({a}, {b})")
-            elif name == "mod":
-                out.append(f"try_mod({a}, {b})")
-            else:
-                op2 = {"multiply": "*", "add": "+",
-                       "subtract": "-"}[name]
-                out.append(f"(({a}) {op2} ({b}))")
-            i = close + 1
-            changed = True
-            continue
-        if name in ("encode", "decode") and parts \
-                and len(parts[2]) == 1:
-            # DuckDB's 1-arg VARCHAR↔BLOB converters are UTF-8
-            # [measured: octet_length(encode('abc')) = 3]; Spark's
-            # spellings take an explicit charset (2-arg emission, so
-            # this 1-arg branch doesn't re-trigger)
-            _, close, spans = parts
-            e = _arg_text(toks, spans[0])
-            out.append(f"{name}({e}, 'UTF-8')")
-            i = close + 1
-            changed = True
-            continue
-        if name == "isodow" and parts and len(parts[2]) == 1:
-            # bare-function form of date_part('isodow'): 1..7 Monday-based
-            _, close, spans = parts
-            e = _arg_text(toks, spans[0])
-            out.append(f"(((extract(DAYOFWEEK FROM {e}) + 5) % 7) + 1)")
-            i = close + 1
-            changed = True
-            continue
-        if (name in ("parse_filename", "parse_dirname", "parse_dirpath",
-                     "parse_path") and parts
-                and 1 <= len(parts[2]) <= (3 if name == "parse_filename"
-                                           else 2)):
-            # data-lake path scalars → fixed-arity session UDFs
-            # (functions/udfs.py carries the measured pins). The
-            # optional args normalize here: parse_filename's 2nd arg is
-            # trim_extension (bool) OR the separator (a string literal
-            # naming one of the four modes).
-            _, close, spans = parts
-            args = [_arg_text(toks, sp) for sp in spans]
-            sep_lits = ("'both_slash'", "'forward_slash'",
-                        "'backslash'", "'system'")
-            if name == "parse_filename":
-                trim, sep = "false", "'both_slash'"
-                if len(args) == 2:
-                    if args[1].lower() in sep_lits:
-                        sep = args[1]
-                    else:
-                        trim = f"CAST({args[1]} AS BOOLEAN)"
-                elif len(args) == 3:
-                    trim = f"CAST({args[1]} AS BOOLEAN)"
-                    sep = args[2]
-                out.append(f"__parse_filename__({args[0]}, {trim}, "
-                           f"CAST({sep} AS STRING))")
-            else:
-                sep = args[1] if len(args) == 2 else "'both_slash'"
-                out.append(f"__{name}__({args[0]}, "
-                           f"CAST({sep} AS STRING))")
-            i = close + 1
-            changed = True
-            continue
-        if (name in ("make_timestamp", "__make_timestamptz__") and parts
-                and len(parts[2]) == 1):
-            # 1-arg form: microseconds since the epoch [measured:
-            # make_timestamp(1612325106123456) = 2021-02-03 04:05:06.
-            # 123456; negative and NULL pass through] — Spark's
-            # timestamp_micros. The timestamptz marker's 1-arg form
-            # loses its instant-ness here (render residue: no '+00'
-            # on a ::VARCHAR of make_timestamptz(micros)) — the
-            # component forms keep it via _span_is_instant_typed.
-            _, close, spans = parts
-            e = _arg_text(toks, spans[0])
-            out.append(f"timestamp_micros(CAST({e} AS BIGINT))")
-            i = close + 1
-            changed = True
-            continue
-        if (name in ("date_part", "datepart") and parts
-                and len(parts[2]) == 2
-                and _arg_text(toks, parts[2][0]).startswith("[")):
-            # list-form date_part(['year','month'], d) → STRUCT of
-            # fields [measured: BIGINT values, epoch DOUBLE; an unknown
-            # field errors — the emitted per-field date_part stays loud
-            # on it]. Each element re-enters the fixpoint, so divergent
-            # fields (dow/epoch/…) pick up their own rewrites.
-            _, close, spans = parts
-            lst = _arg_text(toks, spans[0])
-            e = _arg_text(toks, spans[1])
-            lt = tokenize(lst)
-            lspans = split_args(lt, 0, len(lt) - 1)
-            fields = [detokenize(lt[a:b]).strip() for a, b in lspans]
-            items = []
-            for f_ in fields:
-                fname = f_.strip().strip("'")
-                cast_t = ("DOUBLE" if fname.lower() == "epoch"
-                          else "BIGINT")
-                items.append(f"{f_}, CAST(date_part({f_}, {e}) "
-                             f"AS {cast_t})")
-            out.append(f"named_struct({', '.join(items)})")
-            i = close + 1
-            changed = True
-            continue
-        if name == "date_add" and parts and len(parts[2]) == 2:
-            # DuckDB date_add(d, INTERVAL …) vs Spark date_add(d, days):
-            # the INTERVAL form becomes plain interval arithmetic; the
-            # integer-days form passes through untouched
-            _, close, spans = parts
-            a = _arg_text(toks, spans[0])
-            b = _arg_text(toks, spans[1])
-            if b.upper().lstrip().startswith("INTERVAL"):
-                out.append(f"(({a}) + {b})")
-                i = close + 1
-                changed = True
-                continue
-        if name == "xor" and parts and len(parts[2]) == 2:
-            # DuckDB integer xor(a, b). Spark spells bitwise XOR as the
-            # '^' operator — which the power rewrite owns in this dialect —
-            # so compose from AND/OR/NOT instead.
-            _, close, spans = parts
-            a = _arg_text(toks, spans[0])
-            b = _arg_text(toks, spans[1])
-            out.append(f"((({a}) & ~({b})) | (~({a}) & ({b})))")
-            i = close + 1
-            changed = True
-            continue
-        if name == "trunc" and parts and len(parts[2]) == 1:
-            # 1-arg numeric trunc (toward zero). Spark's trunc is the
-            # 2-arg DATE truncation — only the 1-arg form is DuckDB's.
-            # Result is DOUBLE (DuckDB preserves the input type; for an
-            # INTEGER argument the value matches but the type widens —
-            # fuzz/tests use non-integer inputs).
-            _, close, spans = parts
-            e = _arg_text(toks, spans[0])
-            out.append(f"CAST(CASE WHEN ({e}) >= 0 THEN floor({e}) "
-                       f"ELSE ceil({e}) END AS DOUBLE)")
-            i = close + 1
-            changed = True
-            continue
-        if name == "even" and parts and len(parts[2]) == 1:
-            # round away from zero to the next EVEN number [measured:
-            # even(2.5)=4, even(-0.5)=-2, even(0)=0.0, even(3)=4]
-            _, close, spans = parts
-            e = _arg_text(toks, spans[0])
-            out.append(
-                f"CAST(CASE WHEN ({e}) = 0 THEN 0.0 ELSE "
-                f"signum({e}) * 2 * ceil(abs({e}) / 2.0) END AS DOUBLE)")
-            i = close + 1
-            changed = True
-            continue
-        if name == "array_unique" and parts and len(parts[2]) == 1:
-            # COUNT of distinct non-NULL elements (not the deduped list)
-            _, close, spans = parts
-            e = _arg_text(toks, spans[0])
-            out.append(f"size(array_distinct(filter({e}, "
-                       f"x -> x IS NOT NULL)))")
-            i = close + 1
-            changed = True
-            continue
-        if name == "list_count" and parts and len(parts[2]) == 1:
-            # count of non-NULL elements
-            _, close, spans = parts
-            e = _arg_text(toks, spans[0])
-            out.append(f"size(filter({e}, x -> x IS NOT NULL))")
-            i = close + 1
-            changed = True
-            continue
-        if name in ("mismatches", "hamming") and parts \
-                and len(parts[2]) == 2:
-            # positionwise inequality count over equal-length strings.
-            # DuckDB ERRORS on unequal lengths and on empty strings; this
-            # composition counts over the FIRST argument's length and
-            # gives 0 for empty (soft divergences — raising from an
-            # expression isn't expressible). The empty guard also matters
-            # mechanically: Spark sequence(1, 0) yields a DESCENDING
-            # [1, 0], not an empty array.
-            _, close, spans = parts
-            a = _arg_text(toks, spans[0])
-            b = _arg_text(toks, spans[1])
-            out.append(
-                f"(CASE WHEN length({a}) = 0 THEN 0 ELSE "
-                f"size(filter(sequence(1, length({a})), "
-                f"i -> substr({a}, i, 1) <> substr({b}, i, 1))) END)")
-            i = close + 1
-            changed = True
-            continue
-        if name == "bar" and parts and len(parts[2]) in (3, 4):
-            # DuckDB bar(x, min, max [, width=80]): eighth-block bar
-            # chart. Measured algorithm: chars = (x-min)*width/(max-min)
-            # (multiply FIRST — 3*10/10 must be exactly 3.0), clamped to
-            # [0, width]; floor(chars) full blocks + one partial eighth
-            # block (floor of the fractional eighths); then the result is
-            # space-padded to width BYTES, not characters — block chars
-            # are 3 UTF-8 bytes, so '███' + 1 space for width 10 and
-            # 10 spaces for an empty bar (DuckDB pads the byte string).
-            _, close, spans = parts
-            x = _arg_text(toks, spans[0])
-            lo = _arg_text(toks, spans[1])
-            hi = _arg_text(toks, spans[2])
-            w = _arg_text(toks, spans[3]) if len(parts[2]) == 4 else "80"
-            # try_divide: a zero-width range (max == min) renders an
-            # EMPTY bar in DuckDB, not a divide-by-zero error (r10)
-            chars = (f"least(greatest(coalesce(try_divide((({x}) - "
-                     f"({lo})) * ({w}), ({hi}) - ({lo})), "
-                     f"CAST(0 AS DOUBLE)), CAST(0 AS DOUBLE)), "
-                     f"CAST(({w}) AS DOUBLE))")
-            full = f"CAST(floor({chars}) AS INT)"
-            kth = f"CAST(floor(({chars} - floor({chars})) * 8) AS INT)"
-            eighths = ("array('', '▏', '▎', '▍', "
-                       "'▌', '▋', '▊', '▉')")
-            body = (f"(repeat('█', {full}) || "
-                    f"element_at({eighths}, {kth} + 1))")
-            bytelen = (f"({full} * 3 + CASE WHEN {kth} > 0 THEN 3 "
-                       f"ELSE 0 END)")
-            out.append(
-                f"(CASE WHEN ({x}) IS NULL THEN CAST(NULL AS STRING) "
-                f"ELSE ({body} || repeat(' ', "
-                f"greatest(0, CAST(({w}) AS INT) - {bytelen}))) END)")
-            i = close + 1
-            changed = True
-            continue
-        if (name == "formatreadabledecimalsize" and parts
-                and len(parts[2]) == 1):
-            # decimal-prefix sibling of format_bytes [measured r10:
-            # 1500 → '1.5 kB' (lowercase k), 999949999999 → '999.9 GB'
-            # truncated, 0 → '0 bytes', -2000 → '-2.0 kB']
-            _, close, spans = parts
-            e = f"CAST({_arg_text(toks, spans[0])} AS BIGINT)"
-            tiers = [("kB", 1000), ("MB", 1000**2), ("GB", 1000**3),
-                     ("TB", 1000**4), ("PB", 1000**5)]
-            ladder = []
-            for idx, (unit, div) in enumerate(tiers):
-                cond = (f"WHEN abs({e}) < {div * 1000} "
-                        if idx < len(tiers) - 1 else "ELSE ")
-                if idx < len(tiers) - 1:
-                    cond += "THEN "
-                ladder.append(
-                    f"{cond}(CAST(abs({e}) DIV {div} AS STRING) || "
-                    f"'.' || CAST((abs({e}) % {div}) * 10 DIV {div} "
-                    f"AS STRING) || ' {unit}')")
-            out.append(
-                f"(CASE WHEN abs({e}) = 1 THEN (CAST({e} AS STRING) || "
-                f"' byte') WHEN abs({e}) < 1000 THEN "
-                f"(CAST({e} AS STRING) || ' bytes') ELSE "
-                f"((CASE WHEN ({e}) < 0 THEN '-' ELSE '' END) || "
-                f"(CASE {' '.join(ladder)} END)) END)")
-            i = close + 1
-            changed = True
-            continue
-        if name == "format_bytes" and parts and len(parts[2]) == 1:
-            # binary-prefix rendering, one TRUNCATED decimal [measured:
-            # 1 -> '1 byte', 1500 -> '1.4 KiB' (not 1.5), 1047552 ->
-            # '1023.0 KiB', -2048 -> '-2.0 KiB', 0 -> '0 bytes']
-            _, close, spans = parts
-            # the BIGINT cast types a bare NULL literal (VOID would fail
-            # analysis inside abs()/DIV) and pins integer math
-            e = f"CAST({_arg_text(toks, spans[0])} AS BIGINT)"
-            # the ladder stops at PiB [measured: 1024^6 -> '1024.0 PiB',
-            # no EiB tier in DuckDB]
-            tiers = [("KiB", 1024), ("MiB", 1024**2), ("GiB", 1024**3),
-                     ("TiB", 1024**4), ("PiB", 1024**5)]
-            # exact integer math for the truncated decimal: a double
-            # division rounds BIGINT max up to '8192.0 PiB' where DuckDB
-            # truncates to '8191.9 PiB'
-            ladder = []
-            for idx, (unit, div) in enumerate(tiers):
-                cond = (f"WHEN abs({e}) < {div * 1024} "
-                        if idx < len(tiers) - 1 else "ELSE ")
-                if idx < len(tiers) - 1:
-                    cond += "THEN "
-                ladder.append(
-                    f"{cond}(CAST(abs({e}) DIV {div} AS STRING) || "
-                    f"'.' || CAST((abs({e}) % {div}) * 10 DIV {div} "
-                    f"AS STRING) || ' {unit}')")
-            out.append(
-                f"(CASE WHEN abs({e}) = 1 THEN (CAST({e} AS STRING) || "
-                f"' byte') WHEN abs({e}) < 1024 THEN "
-                f"(CAST({e} AS STRING) || ' bytes') ELSE "
-                f"((CASE WHEN ({e}) < 0 THEN '-' ELSE '' END) || "
-                f"(CASE {' '.join(ladder)} END)) END)")
-            i = close + 1
-            changed = True
-            continue
-        if (name in ("list_count", "list_product", "list_bool_and",
-                     "list_bool_or", "list_entropy", "list_first",
-                     "list_last", "array_count", "array_product")
-                and parts and len(parts[2]) == 1):
-            # shortcut fold names [measured r12]: count counts
-            # non-NULL (empty → 0); product/bool_and/bool_or skip
-            # NULLs, empty → NULL (product is DOUBLE); entropy is
-            # log2 over value frequencies, empty → 0.0; first/last
-            # take the PLAIN end elements (NULLs kept), empty → NULL
-            _, close, spans = parts
-            lst = _arg_text(toks, spans[0])
-            flt = f"filter({lst}, x -> x IS NOT NULL)"
-            base = name.replace("array_", "list_")
-            if base == "list_count":
-                body = f"size({flt})"
-            elif base == "list_product":
-                body = (f"(CASE WHEN size({flt}) = 0 THEN "
-                        f"CAST(NULL AS DOUBLE) ELSE "
-                        f"aggregate({flt}, CAST(1 AS DOUBLE), "
-                        f"(acc, x) -> acc * x) END)")
-            elif base == "list_bool_and":
-                body = (f"(CASE WHEN size({flt}) = 0 THEN "
-                        f"CAST(NULL AS BOOLEAN) ELSE "
-                        f"forall({flt}, x -> x) END)")
-            elif base == "list_bool_or":
-                body = (f"(CASE WHEN size({flt}) = 0 THEN "
-                        f"CAST(NULL AS BOOLEAN) ELSE "
-                        f"exists({flt}, x -> x) END)")
-            elif base == "list_entropy":
-                # collision-proof lambda names (review r12: a source
-                # column literally named 'v' was shadowed by the
-                # outer lambda variable inside the nested filter)
-                p_ = (f"(CAST(size(filter({flt}, "
-                      f"__lee -> __lee = __lev)) "
-                      f"AS DOUBLE) / size({flt}))")
-                body = (f"(CASE WHEN ({lst}) IS NULL THEN "
-                        f"CAST(NULL AS DOUBLE) "
-                        f"WHEN size({flt}) = 0 THEN CAST(0 AS DOUBLE) "
-                        f"ELSE aggregate(array_distinct({flt}), "
-                        f"CAST(0 AS DOUBLE), "
-                        f"(__leacc, __lev) -> __leacc - {p_} "
-                        f"* log2({p_})) END)")
-            elif base == "list_first":
-                body = f"try_element_at({lst}, 1)"
-            else:
-                body = f"try_element_at({lst}, -1)"
-            out.append(body)
-            i = close + 1
-            changed = True
-            continue
-        if name == "list_aggregate" and parts and len(parts[2]) == 2:
-            _, close, spans = parts
-            lst = _arg_text(toks, spans[0])
-            agg = _arg_text(toks, spans[1]).strip("'").lower()
-            # NULL-element/empty pins shared with list_sum/list_avg
-            # [measured: sum skips NULLs, empty sum -> NULL, count counts
-            # non-NULL, empty count -> 0] (review fix). Pure f-strings —
-            # str.format on text containing user SQL blows up on brace
-            # struct literals (second review).
-            _flt = f"filter({lst}, x -> x IS NOT NULL)"
-            _s = (f"aggregate({_flt}, CAST(0 AS DOUBLE), "
-                  f"(acc, x) -> acc + x)")
-
-            def _guarded(inner: str) -> str:
-                return (f"(CASE WHEN size({_flt}) = 0 "
-                        f"THEN CAST(NULL AS DOUBLE) ELSE {inner} END)")
-
-            body = {
-                "sum": _guarded(_s),
-                "min": f"array_min({lst})",
-                "max": f"array_max({lst})",
-                "avg": _guarded(f"({_s} / size({_flt}))"),
-                "mean": _guarded(f"({_s} / size({_flt}))"),
-                "count": f"size({_flt})",
-                # r9 additions — re-enter their dedicated rewrites
-                "median": f"list_median({lst})",
-                "any_value": f"list_any_value({lst})",
-                # 2-arg string_agg defaults to ',' [measured r9]
-                "string_agg": (f"(CASE WHEN size({_flt}) = 0 "
-                               f"THEN CAST(NULL AS STRING) "
-                               f"ELSE array_join({_flt}, ',') END)"),
-                "group_concat": (f"(CASE WHEN size({_flt}) = 0 "
-                                 f"THEN CAST(NULL AS STRING) "
-                                 f"ELSE array_join({_flt}, ',') END)"),
-                # r12 shortcut folds — re-enter their dedicated
-                # rewrites above
-                "product": f"list_product({lst})",
-                "bool_and": f"list_bool_and({lst})",
-                "bool_or": f"list_bool_or({lst})",
-                "entropy": f"list_entropy({lst})",
-                "first": f"list_first({lst})",
-                "last": f"list_last({lst})",
-            }.get(agg)
-            if body is not None:
-                out.append(body)
-                i = close + 1
-                changed = True
-                continue
-        if name == "list_aggregate" and parts and len(parts[2]) == 3:
-            # 3-arg form passes an agg parameter: string_agg separator
-            # [measured: list_aggregate(['a','b'],'string_agg','-') →
-            # 'a-b'; NULL elements skipped, empty → NULL like the agg]
-            _, close, spans = parts
-            lst = _arg_text(toks, spans[0])
-            agg3 = _arg_text(toks, spans[1]).strip("'").lower()
-            prm = _arg_text(toks, spans[2])
-            if agg3 in ("string_agg", "group_concat"):
-                _flt3 = f"filter({lst}, x -> x IS NOT NULL)"
-                out.append(
-                    f"(CASE WHEN size({_flt3}) = 0 "
-                    f"THEN CAST(NULL AS STRING) "
-                    f"ELSE array_join({_flt3}, {prm}) END)")
-                i = close + 1
-                changed = True
-                continue
-        if name == "regexp_full_match" and parts and len(parts[2]) == 2:
-            # full-match boolean [DuckDB core] — anchor a non-capturing
-            # group; a literal pattern embeds, an expression concats
-            _, close, spans = parts
-            s_ = _arg_text(toks, spans[0])
-            p_ = _arg_text(toks, spans[1]).strip()
-            if p_.startswith("'") and p_.endswith("'") and len(p_) >= 2:
-                pat = f"'^(?:{p_[1:-1]})$'"
-            else:
-                pat = f"concat('^(?:', {p_}, ')$')"
-            out.append(f"({s_} RLIKE {pat})")
-            i = close + 1
-            changed = True
-            continue
-        if name == "strftime" and parts and len(parts[2]) == 2:
-            _, close, spans = parts
-            expr = _arg_text(toks, spans[0])
-            fmt = _arg_text(toks, spans[1])
-            if (expr.startswith("'") and expr.endswith("'")
-                    and "%" in expr and not fmt.startswith("'")):
-                # DuckDB also accepts strftime(fmt, ts) — the REVERSED
-                # Postgres argument order [measured r10: both orders
-                # return the same text]
-                expr, fmt = fmt, expr
-            if fmt.startswith("'") and fmt.endswith("'"):
-                cc = _strftime_concat_expr(expr, fmt[1:-1])
-                if cc is not None:
-                    out.append(cc)
-                    i = close + 1
-                    changed = True
-                    continue
-                fmt = ("'" + _sql_quote(
-                    convert_strftime_format(fmt[1:-1])) + "'")
-            out.append(f"date_format({expr}, {fmt})")
-            i = close + 1
-            changed = True
-            continue
-        if (name in ("strptime", "try_strptime") and parts
-                and len(parts[2]) == 2
-                and _arg_text(toks, parts[2][1]).strip().startswith("[")):
-            # FORMAT-LIST form [measured r9: formats try in order;
-            # strptime errors when none match, try_strptime → NULL] —
-            # coalesce over try_to_timestamp per format, with a strict
-            # to_timestamp on the LAST for the erroring spelling
-            _, close, spans = parts
-            s_ = _arg_text(toks, spans[0])
-            flist = _arg_text(toks, spans[1]).strip()
-            fmts = re.findall(r"'((?:[^']|'')*)'", flist)
-            if fmts:
-                conv = [convert_strftime_format(f.replace("''", "'"))
-                        for f in fmts]
-                # formats here were extracted FROM string literals, so
-                # re-quote for the year-shift's literal-only gate
-                tries = [_strptime_year_shift(
-                    f"try_to_timestamp({s_}, '{_sql_quote(c)}')",
-                    f"'{f}'")
-                    for c, f in zip(conv, fmts)]
-                if name == "strptime":
-                    tries[-1] = _strptime_year_shift(
-                        f"to_timestamp({s_}, "
-                        f"'{_sql_quote(conv[-1])}')", f"'{fmts[-1]}'")
-                body = ("coalesce(" + ", ".join(tries) + ")"
-                        if len(tries) > 1 else tries[0])
-                # the FORMAT-LIST forms return TIMESTAMPTZ in DuckDB
-                # [measured r11: typeof → TIMESTAMP WITH TIME ZONE;
-                # the scalar forms are naive] — the __duck_instant__
-                # marker keeps that visible to the ::VARCHAR '+00'
-                # render and erases to a plain paren group in
-                # _rewrite_keywords
-                out.append(f"__duck_instant__({body})")
-                i = close + 1
-                changed = True
-                continue
-        if name == "strptime" and parts and len(parts[2]) == 2:
-            # DuckDB strptime(text, '%fmt') → to_timestamp with the same
-            # %-directive translation strftime uses (shared map)
-            _, close, spans = parts
-            expr = _arg_text(toks, spans[0])
-            fmt = _arg_text(toks, spans[1])
-            raw = fmt
-            if fmt.startswith("'") and fmt.endswith("'"):
-                fmt = ("'" + _sql_quote(
-                    convert_strftime_format(fmt[1:-1])) + "'")
-            out.append(_strptime_year_shift(
-                f"to_timestamp({expr}, {fmt})", raw))
-            i = close + 1
-            changed = True
-            continue
-        if name == "approx_quantile" and parts:
-            out.append("approx_percentile")
-            i += 1
-            changed = True
-            continue
-        if (name == "reservoir_quantile" and parts
-                and len(parts[2]) in (2, 3)):
-            # reservoir-sampled approximate quantile_disc; the sample
-            # size (arg 3, default 8192) exceeds the oracle fixtures,
-            # where it degenerates to the exact disc quantile — mapped
-            # onto quantile_disc (re-enters that rewrite). At larger
-            # data the values are approximate on BOTH engines.
-            _, close, spans = parts
-            x_ = _arg_text(toks, spans[0])
-            q_ = _arg_text(toks, spans[1])
-            out.append(f"quantile_disc({x_}, {q_})")
-            i = close + 1
-            changed = True
-            continue
-        if name == "date_diff" and parts and len(parts[2]) == 3:
-            _, close, spans = parts
-            unit = _arg_text(toks, spans[0]).strip("'").lower()
-            a = _arg_text(toks, spans[1])
-            b = _arg_text(toks, spans[2])
-            # TIME-literal operands [measured r11: date_diff('minute',
-            # TIME '10:00', TIME '11:30') = 90 in DuckDB; Spark cannot
-            # cast a TIME literal for the arithmetic] — anchor both on
-            # the same date, preserving the within-day difference
-            tl = r"(?is)^TIME\s+'(\d{1,2}:\d{2}:\d{2}(?:\.\d+)?)'$"
-            ma_, mb_ = re.match(tl, a.strip()), re.match(tl, b.strip())
-            if ma_ and mb_:
-                a = f"TIMESTAMP '1970-01-01 {ma_.group(1)}'"
-                b = f"TIMESTAMP '1970-01-01 {mb_.group(1)}'"
-            # DuckDB date_diff counts PART BOUNDARIES CROSSED, not elapsed
-            # units: diff('month', Jan 31, Feb 1) = 1, diff('hour', 01:59,
-            # 02:01) = 1. Truncate both sides to the part first.
-            body = {
-                # emitted as date_diff (the Spark 3.5+ alias): a bare
-                # "datediff" emission would re-enter the datediff →
-                # date_diff alias rename on the next fixpoint pass
-                "day": f"CAST(date_diff({b}, {a}) AS BIGINT)",
-                "month": (
-                    f"CAST((year({b}) * 12 + month({b}))"
-                    f" - (year({a}) * 12 + month({a})) AS BIGINT)"
-                ),
-                "year": f"CAST(year({b}) - year({a}) AS BIGINT)",
-                "hour": (
-                    f"CAST((unix_timestamp(date_trunc('hour', {b}))"
-                    f" - unix_timestamp(date_trunc('hour', {a}))) DIV 3600 AS BIGINT)"
-                ),
-                "minute": (
-                    f"CAST((unix_timestamp(date_trunc('minute', {b}))"
-                    f" - unix_timestamp(date_trunc('minute', {a}))) DIV 60 AS BIGINT)"
-                ),
-                "second": f"CAST(unix_timestamp({b}) - unix_timestamp({a}) AS BIGINT)",
-                # week boundaries are MONDAYS (measured: Wed Jan 3 →
-                # Mon Jan 8 2024 = 1); anchor on the 2000-01-03 Monday
-                "week": (
-                    f"CAST(floor(datediff({b}, DATE '2000-01-03') / 7)"
-                    f" - floor(datediff({a}, DATE '2000-01-03') / 7)"
-                    f" AS BIGINT)"
-                ),
-            }.get(unit)
-            if body is not None:
-                out.append(body)
-                i = close + 1
-                changed = True
-                continue
-        if name == "regexp_extract" and parts and len(parts[2]) == 2:
-            # DuckDB's 2-arg regexp_extract returns the WHOLE match
-            # (group 0); Spark's 2-arg form defaults to group 1 — a
-            # silent wrong answer whenever the pattern has groups. The
-            # emitted 3-arg call doesn't re-match this 2-arg branch.
-            _, close, spans = parts
-            a = _arg_text(toks, spans[0])
-            b = _arg_text(toks, spans[1])
-            out.append(f"regexp_extract({a}, {b}, 0)")
-            i = close + 1
-            changed = True
-            continue
-        if name == "regexp_extract" and parts and len(parts[2]) == 3:
-            # a group index PAST the pattern's capture count returns ''
-            # in DuckDB [measured r12: regexp_extract('ab12',
-            # '([a-z]+)(\d+)', 3) = '']; Spark throws
-            # REGEX_GROUP_INDEX. Provable only for a LITERAL pattern +
-            # LITERAL index (counted driver-side); negative indexes
-            # error in BOTH engines and stay loud.
-            _, close, spans = parts
-            pat = _arg_text(toks, spans[1]).strip()
-            gix = _arg_text(toks, spans[2]).strip()
-            mp = re.fullmatch(r"'((?:[^']|'')*)'", pat)
-            if mp and re.fullmatch(r"\d+", gix) and int(gix) > 0:
-                try:
-                    ngroups = re.compile(
-                        mp.group(1).replace("''", "'")).groups
-                except re.error:
-                    ngroups = None
-                if ngroups is not None and int(gix) > ngroups:
-                    # NULL subject stays NULL (review r12: the bare
-                    # '' fold lost NULL propagation)
-                    subj0 = _arg_text(toks, spans[0])
-                    out.append(f"(CASE WHEN ({subj0}) IS NULL "
-                               f"THEN NULL ELSE '' END)")
-                    i = close + 1
-                    changed = True
-                    continue
-        if name == "regexp_replace" and parts and len(parts[2]) == 4:
-            # 4-arg options form. 'g' = replace-all = Spark's native
-            # semantics; WITHOUT 'g' DuckDB replaces only the FIRST
-            # match, which the late _rewrite_regexp_first_match pass
-            # emulates on bare 3-arg calls — so the global form must
-            # leave through the __global_regexp_replace__ MARKER (renamed
-            # back in _rewrite_keywords) or that pass would wrongly
-            # first-match it. 'i'/'s' translate to inline (?i)/(?s)
-            # prefixes on the pattern [measured: 'i' alone stays
-            # first-only]; other option letters pass through untouched
-            # (4-arg Spark regexp_replace then fails loudly on the
-            # string position argument).
-            _, close, spans = parts
-            flag = _arg_text(toks, spans[3]).strip()
-            if (len(flag) >= 2 and flag[0] == flag[-1]
-                    and flag[0] in "'\""):
-                letters = flag[1:-1]
-                if letters and all(c in "gismnp" for c in letters):
-                    s_ = _arg_text(toks, spans[0])
-                    p_ = _arg_text(toks, spans[1]).strip()
-                    r_ = _arg_text(toks, spans[2])
-                    inline = "".join(f"(?{c})" for c in "is"
-                                     if c in letters)
-                    if inline:
-                        if p_.startswith("'") and p_.endswith("'") \
-                                and len(p_) >= 2:
-                            p_ = f"'{inline}" + p_[1:]
-                        else:
-                            p_ = f"concat('{inline}', {p_})"
-                    fn = ("__global_regexp_replace__"
-                          if "g" in letters else "regexp_replace")
-                    out.append(f"{fn}({s_}, {p_}, {r_})")
-                    i = close + 1
-                    changed = True
-                    continue
-        if name == "list_cosine_similarity" and parts and len(parts[2]) == 2:
-            _, close, spans = parts
-            a = _arg_text(toks, spans[0])
-            b = _arg_text(toks, spans[1])
-            dot = (f"aggregate(zip_with({a}, {b}, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
-                   f"CAST(0 AS DOUBLE), (acc, v) -> acc + v)")
-            na = f"sqrt(aggregate({a}, CAST(0 AS DOUBLE), (acc, x) -> acc + CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))"
-            nb = f"sqrt(aggregate({b}, CAST(0 AS DOUBLE), (acc, x) -> acc + CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))"
-            out.append(f"({dot} / ({na} * {nb}))")
-            i = close + 1
-            changed = True
-            continue
-        # NOTE ordered/plain any_value rewrites live with first/last
-        # above (r12: min_by/max_by emission — no collect_list of the
-        # whole group; the old sort_array form is retired).
-        if (name == "string_agg" and parts and len(parts[2]) == 2
-                and re.match(r"(?is)^\s*NULL\s*(ORDER\s+BY\b.*)?$",
-                             _arg_text(toks, parts[2][1]))):
-            # a NULL separator makes the WHOLE aggregate NULL in DuckDB
-            # [measured: string_agg(x, NULL ORDER BY x) → NULL, empty
-            # group → NULL too] — previously this shape dodged the
-            # ordered-string_agg rewrite (separator regex wants a
-            # quoted literal) and parse-errored in Spark. max(NULL)
-            # stays an aggregate, so GROUP BY/OVER positions still work.
-            out.append("max(CAST(NULL AS STRING))")
-            i = parts[1] + 1
-            changed = True
-            continue
-        if name in ("array_agg", "string_agg") and parts:
-            _, close, spans = parts
-            inner = detokenize(toks[parts[0] + 1:close])
-            distinct = False
-            md = re.match(r"^\s*DISTINCT\s+(.*)$", inner,
-                          re.IGNORECASE | re.DOTALL)
-            if md:
-                distinct, inner = True, md.group(1)
-            forced_sep = False
-            if name == "string_agg" and len(parts[2]) == 1:
-                # 1-arg form defaults the separator to ',' [measured] —
-                # Spark's own string_agg concatenates with NO separator,
-                # a silent wrong answer if passed through. forced_sep
-                # routes the plain form through the array_join branch
-                # below (otherwise an unmodified call would fall through).
-                m1 = re.match(r"^(?P<e>.*?)(?P<ob>\s+ORDER\s+BY\s+.*)?$",
-                              inner, re.IGNORECASE | re.DOTALL)
-                inner = (m1.group("e").rstrip() + ", ','"
-                         + (m1.group("ob") or ""))
-                forced_sep = True
-            collect = "collect_set" if distinct else "collect_list"
-            # a trailing FILTER (WHERE …) must move INSIDE the rewritten
-            # aggregate — Spark rejects it on the sort_array wrapper
-            filt, fend = "", close
-            if (close + 1 < len(toks)):
-                after = [k for k in range(close + 1, len(toks))
-                         if toks[k].kind not in ("ws", "comment")]
-                if (after and toks[after[0]].kind == "ident"
-                        and toks[after[0]].text.upper() == "FILTER"
-                        and len(after) > 1 and toks[after[1]].text == "("):
-                    try:
-                        fclose = match_bracket(toks, after[1])
-                    except ValueError:
-                        fclose = None
-                    if fclose is not None:
-                        filt = " FILTER " + detokenize(
-                            toks[after[1]:fclose + 1])
-                        fend = fclose
-            m = re.match(
-                r"^(?P<expr>.*?)\s+ORDER\s+BY\s+(?P<key>.+?)"
-                r"(?:\s+(?P<dir>ASC|DESC))?\s*$",
-                inner, re.IGNORECASE | re.DOTALL)
-            if m:
-                desc = (m.group("dir") or "").upper() == "DESC"
-                sort = (lambda x: f"sort_array({x}, false)" if desc
-                        else f"sort_array({x})")
-                if name == "array_agg":
-                    expr = m.group("expr").strip()
-                    key = m.group("key").strip()
-                    # DuckDB array_agg KEEPS NULL elements (judge probe
-                    # r6: (1,NULL,2 ORDER BY x) → [1,2,NULL]) and its
-                    # default null order is NULLS LAST in BOTH
-                    # directions [measured: DESC → [2,1,NULL]] —
-                    # collect_list drops them, so collect structs (never
-                    # NULL even when the value is) with an explicit
-                    # null-rank flag leading the sort key. expr may
-                    # differ from the (single) order key; DISTINCT with
-                    # expr != key errors in DuckDB too, so that shape
-                    # stays unrewritten (loud on Spark).
-                    single_key = "," not in re.sub(r"\([^()]*\)", "",
-                                                   key)
-                    has_nulls_kw = re.search(r"(?is)\bNULLS\s+"
-                                             r"(FIRST|LAST)\b", key)
-                    if (single_key and not has_nulls_kw
-                            and (not distinct or expr == key)):
-                        flag = ("IS NOT NULL" if desc else "IS NULL")
-                        agg = (f"{collect}(struct(({key}) {flag} AS "
-                               f"__n, {key} AS __k, {expr} AS __v))"
-                               f"{filt}")
-                        res = (f"transform({sort(agg)}, "
-                               f"__s -> __s.__v)")
-                        # an EMPTY aggregate is NULL in DuckDB — fully
-                        # filtered group, WHERE false, zero-row relation
-                        # [measured r10: array_agg(x) WHERE false →
-                        # NULL; collect_list gives []] — Catalyst dedups
-                        # the repeated aggregate expression
-                        res = (f"(CASE WHEN size({agg}) = 0 "
-                               f"THEN NULL ELSE {res} END)")
-                        out.append(res)
-                        i = fend + 1
-                        changed = True
-                        continue
-                    if not distinct:
-                        # MULTI-key / NULLS-overridden ORDER BY (r11):
-                        # comparator-sorted struct collection —
-                        # per-key direction, DuckDB's NULLS LAST
-                        # default unless overridden. The full key TEXT
-                        # (incl. a trailing dir the outer regex split
-                        # off) re-parses here.
-                        full_key = (key + (" " + m.group("dir")
-                                           if m.group("dir") else ""))
-                        okeys = _parse_order_keys(full_key)
-                        if okeys:
-                            fields = ", ".join(
-                                f"({e}) AS __k{ix}"
-                                for ix, (e, _, _) in enumerate(okeys))
-                            agg = (f"{collect}(struct({fields}, "
-                                   f"{expr} AS __v)){filt}")
-                            cmp_ = _order_comparator(okeys)
-                            res = (f"transform(array_sort({agg}, "
-                                   f"(__l, __r) -> {cmp_}), "
-                                   f"__s -> __s.__v)")
-                            res = (f"(CASE WHEN size({agg}) = 0 "
-                                   f"THEN NULL ELSE {res} END)")
-                            out.append(res)
-                            i = fend + 1
-                            changed = True
-                            continue
-                else:  # string_agg(x, sep ORDER BY key [dir])
-                    m2 = re.match(
-                        r"^(?P<expr>.+?),\s*(?P<sep>'(?:[^']|'')*')\s+"
-                        r"ORDER\s+BY\s+(?P<key>.+?)"
-                        r"(?:\s+(?P<dir>ASC|DESC))?\s*$",
-                        inner, re.IGNORECASE | re.DOTALL)
-                    if (m2 and "," not in re.sub(r"\([^()]*\)", "",
-                                                 m2.group("key"))
-                            and not re.search(r"(?is)\bNULLS\s+"
-                                              r"(FIRST|LAST)\b",
-                                              m2.group("key"))):
-                        # expr may differ from the (single) sort key
-                        # (r7 probe): struct-wrap like array_agg, but
-                        # drop NULL exprs first — string_agg skips them
-                        desc = (m2.group("dir") or "").upper() == "DESC"
-                        expr2 = m2.group("expr").strip()
-                        key2 = m2.group("key").strip()
-                        if expr2 == key2:
-                            agg = f"{collect}({expr2}){filt}"
-                            sorted_agg = (f"sort_array({agg}, false)"
-                                          if desc
-                                          else f"sort_array({agg})")
-                            joined = (f"array_join({sorted_agg}, "
-                                      f"{m2.group('sep')})")
-                        else:
-                            flag2 = ("IS NOT NULL" if desc else "IS NULL")
-                            agg = (f"{collect}(CASE WHEN ({expr2}) IS "
-                                   f"NOT NULL THEN struct(({key2}) "
-                                   f"{flag2} AS __n, {key2} AS __k, "
-                                   f"{expr2} AS __v) END){filt}")
-                            sorted_agg = (f"sort_array({agg}, false)"
-                                          if desc
-                                          else f"sort_array({agg})")
-                            joined = (f"array_join(transform({sorted_agg}"
-                                      f", __s -> __s.__v), "
-                                      f"{m2.group('sep')})")
-                        # empty aggregate → NULL (see array_agg branch;
-                        # array_join would give '' — measured r10:
-                        # string_agg(x, ',') WHERE false → NULL)
-                        res = (f"(CASE WHEN size({agg}) = 0 "
-                               f"THEN NULL ELSE {joined} END)")
-                        out.append(res)
-                        i = fend + 1
-                        changed = True
-                        continue
-                    if m2 and not distinct:
-                        # MULTI-key / NULLS-overridden ORDER BY (r11):
-                        # comparator sort like the array_agg path;
-                        # NULL exprs drop first (string_agg skips them)
-                        full_key = (m2.group("key").strip()
-                                    + (" " + m2.group("dir")
-                                       if m2.group("dir") else ""))
-                        okeys = _parse_order_keys(full_key)
-                        if okeys:
-                            expr2 = m2.group("expr").strip()
-                            fields = ", ".join(
-                                f"({e}) AS __k{ix}"
-                                for ix, (e, _, _) in enumerate(okeys))
-                            agg = (f"{collect}(CASE WHEN ({expr2}) IS "
-                                   f"NOT NULL THEN struct({fields}, "
-                                   f"{expr2} AS __v) END){filt}")
-                            cmp_ = _order_comparator(okeys)
-                            joined = (
-                                f"array_join(transform(array_sort("
-                                f"{agg}, (__l, __r) -> {cmp_}), "
-                                f"__s -> __s.__v), {m2.group('sep')})")
-                            res = (f"(CASE WHEN size({agg}) = 0 "
-                                   f"THEN NULL ELSE {joined} END)")
-                            out.append(res)
-                            i = fend + 1
-                            changed = True
-                            continue
-            elif name == "array_agg" or distinct or filt or forced_sep:
-                # DISTINCT without ORDER BY (set semantics, arbitrary
-                # order in DuckDB too), a bare FILTER (the
-                # all-filtered-group → NULL pin applies here too,
-                # review r6), a forced default separator — or ANY plain
-                # array_agg, which must struct-wrap to keep NULL
-                # elements (judge probe r6: Spark's array_agg is a
-                # collect_list alias and drops them)
-                def _null_guard(agg: str, res: str) -> str:
-                    # EVERY empty aggregate is NULL in DuckDB — not
-                    # just FILTERed/forced-sep shapes [measured r10:
-                    # array_agg(x)/string_agg(x, ',')/list(x) over
-                    # WHERE false all → NULL; collect_list gives [],
-                    # array_join gives '']
-                    return (f"(CASE WHEN size({agg}) = 0 "
-                            f"THEN NULL ELSE {res} END)")
-
-                if name == "array_agg":
-                    # window form: the OVER clause must attach to the
-                    # inner collect, not trail the transform wrapper
-                    over, oend = "", fend
-                    after_o = [k for k in range(fend + 1, len(toks))
-                               if toks[k].kind not in ("ws", "comment")]
-                    if (after_o and toks[after_o[0]].kind == "ident"
-                            and toks[after_o[0]].text.upper() == "OVER"
-                            and len(after_o) > 1):
-                        nxt = toks[after_o[1]]
-                        if nxt.text == "(":
-                            try:
-                                oclose = match_bracket(toks, after_o[1])
-                                over = " OVER " + detokenize(
-                                    toks[after_o[1]:oclose + 1])
-                                oend = oclose
-                            except ValueError:
-                                pass
-                        elif nxt.kind == "ident":
-                            over = f" OVER {nxt.text}"
-                            oend = after_o[1]
-                    agg = (f"{collect}(struct({inner.strip()} AS __v))"
-                           f"{filt}{over}")
-                    out.append(_null_guard(
-                        agg, f"transform({agg}, __s -> __s.__v)"))
-                    i = oend + 1
-                    changed = True
-                    continue
-                m3 = re.match(
-                    r"^(?P<expr>.+?),\s*(?P<sep>'(?:[^']|'')*')\s*$",
-                    inner, re.IGNORECASE | re.DOTALL)
-                if m3:
-                    agg = (f"{collect}({m3.group('expr').strip()})"
-                           f"{filt}")
-                    out.append(_null_guard(
-                        agg, f"array_join({agg}, {m3.group('sep')})"))
-                    i = fend + 1
-                    changed = True
-                    continue
-        out.append(t.text)
-        i += 1
+        text, last_tok = hit
+        out.append(text)
+        # handing back the bare name (any case) is no change
+        changed = changed or last_tok > i or text.lower() != name
+        i = last_tok + 1
 
     result = "".join(out)
     return _rewrite_calls(result, column_kinds) if changed else result
+
+
+@_calls("cast", "try_cast", nargs=1)
+def _call_cast(toks, i, parts, column_kinds):
+    # CAST(<array> AS VARCHAR): Spark renders NULL elements
+    # lowercase ('[1, null, 3]'), DuckDB uppercase ('[1, NULL,
+    # 3]') — a silent hash mismatch in the declared-query
+    # contract. Rewrites only PROVABLY-array operands (list
+    # literal, array-kind column, array-returning call);
+    # everything else keeps the native cast.
+    body = _arg_text(toks, parts[2][0])
+    mvc = re.fullmatch(r"(?is)(.*)\s+AS\s+(?:VARCHAR|STRING|"
+                       r"TEXT)\s*", body)
+    if mvc:
+        x = mvc.group(1).strip()
+        is_arr = (
+            (x.startswith("[") and x.endswith("]"))
+            or (column_kinds or {}).get(x.lower()) == "array"
+            or re.match(
+                r"(?i)^(?:array|array_agg|collect_list|"
+                r"collect_set|sort_array|sequence|"
+                r"array_distinct|array_sort|list_sort|"
+                r"list_distinct|string_split|split|"
+                r"string_to_array|regexp_split_to_array|"
+                r"flatten|slice|list_transform|list_filter|"
+                r"array_transform)\s*\(", x))
+        if is_arr and _expr_is_double_array(
+                f"array({x[1:-1]})" if x.startswith("[")
+                else x, column_kinds):
+            # DOUBLE elements render shortest-round-trip in
+            # DuckDB ('[1e+16]'; CAST says '1.0E16') — a
+            # struct-flagged render UDF (NULL elements merge
+            # with NaN in a bare float64 Arrow block) (r10)
+            return (
+                f"__duck_double_array_varchar__(transform"
+                f"(({x}), __da -> struct(CAST(__da AS DOUBLE) "
+                f"AS v, __da IS NULL AS n)))", parts[1])
+        if is_arr:
+            if re.match(r"^\[\s*\[", x):
+                # one nesting level of literal arrays: inner
+                # NULLs must render uppercase too (review r9
+                # #6; deeper nesting is documented residue)
+                inner = (
+                    f"'[' || array_join(transform(__e, "
+                    f"__e2 -> coalesce(CAST(__e2 AS STRING), "
+                    f"'NULL')), ', ') || ']'")
+                text = (
+                    f"(CASE WHEN ({x}) IS NULL THEN "
+                    f"CAST(NULL AS STRING) ELSE '[' || "
+                    f"array_join(transform({x}, __e -> "
+                    f"CASE WHEN __e IS NULL THEN 'NULL' "
+                    f"ELSE {inner} END), ', ') || ']' END)")
+            else:
+                text = (
+                    f"(CASE WHEN ({x}) IS NULL THEN "
+                    f"CAST(NULL AS STRING) ELSE '[' || "
+                    f"array_join(transform({x}, __e -> "
+                    f"coalesce(CAST(__e AS STRING), 'NULL')), "
+                    f"', ') || ']' END)")
+            return text, parts[1]
+
+
+@_calls("__floordiv__", nargs=2)
+def _call_floordiv(toks, i, parts, column_kinds):
+    # `//` marker (from _rewrite_floordiv_operator) — expand
+    # with the schema-resolved dispatch [measured]: int//int is
+    # TRUNCATING integer division with NULL on a zero divisor
+    # (-7//2 = -3, 7//0 = NULL); any DOUBLE/DECIMAL operand
+    # makes it PLAIN division (7.0//2 = 3.5). Unprovable
+    # operands default to the integer path (the dominant use;
+    # §2.4 documented divergence).
+    a = _arg_text(toks, parts[2][0])
+    b = _arg_text(toks, parts[2][1])
+    ca = _numeric_class(a, column_kinds)
+    cb = _numeric_class(b, column_kinds)
+    if ca == "frac" or cb == "frac":
+        text = f"try_divide({a}, {b})"
+    else:
+        text = (f"(CASE WHEN ({b}) = 0 THEN NULL "
+                f"ELSE ({a}) DIV ({b}) END)")
+    return text, parts[1]
+
+
+@_calls(*_ORDER_INSENSITIVE_AGGS)
+def _call_order_insensitive_agg(toks, i, parts, column_kinds):
+    name = toks[i].text.lower()
+    # DuckDB accepts an ORDER BY modifier inside EVERY aggregate
+    # (it only matters for order-sensitive ones like string_agg
+    # / array_agg / first, which have their own branches) —
+    # Spark parse-errors on e.g. min(x ORDER BY x). For
+    # order-INSENSITIVE aggregates the modifier is a semantic
+    # no-op [measured], so strip it and re-enter the fixpoint
+    # with the plain call.
+    open_i, close, _ = parts
+    cut = None
+    depth = 0
+    k = open_i + 1
+    while k < close:
+        tk = toks[k]
+        if tk.kind in ("ws", "comment"):
+            k += 1
+            continue
+        if tk.text in ("(", "["):
+            depth += 1
+        elif tk.text in (")", "]"):
+            depth -= 1
+        elif (depth == 0 and tk.kind == "ident"
+                and tk.text.upper() == "ORDER"):
+            k2 = k + 1
+            while k2 < close and toks[k2].kind in (
+                    "ws", "comment"):
+                k2 += 1
+            if k2 < close and toks[k2].text.upper() == "BY":
+                cut = k
+                break
+        k += 1
+    if cut is not None:
+        inner = detokenize(toks[open_i + 1:cut]).strip()
+        return f"{name}({inner})", close
+
+
+@_calls("string_split", "str_split", "string_to_array", "split", nargs=2)
+def _call_string_split(toks, i, parts, column_kinds):
+    # DuckDB's split family takes a LITERAL separator; Spark's
+    # split() is REGEX — string_split('a|b', '|') silently split
+    # every character. Literal separators are regex-escaped at
+    # rewrite time; dynamic ones are \Q…\E-quoted. Emitted via
+    # the __regex_split__ marker (resolved to split by the final
+    # keyword pass) so the bare "split" name can own this branch.
+    _, close, spans = parts
+    sv = _arg_text(toks, spans[0])
+    sep_toks = [k for k in range(*spans[1])
+                if toks[k].kind not in ("ws", "comment")]
+    if len(sep_toks) == 1 and toks[sep_toks[0]].kind == "str":
+        inner2 = toks[sep_toks[0]].text[1:-1]
+        raw = inner2.replace("\\\\", "\\")  # undo literal doubling
+        if raw == "":
+            lit = "''"  # empty separator: per-char in both
+        else:
+            lit = "'" + _embed_regex_literal(re.escape(raw)) + "'"
+        text = f"__regex_split__({sv}, {lit})"
+    else:
+        sep = _arg_text(toks, spans[1])
+        text = (f"__regex_split__({sv}, "
+                f"'\\\\Q' || ({sep}) || '\\\\E')")
+    return text, close
+
+
+@_calls("len", "length", nargs=1)
+def _call_len(toks, i, parts, column_kinds):
+    name = toks[i].text.lower()
+    # DuckDB len() covers BOTH list length and string length; Spark
+    # splits these into size() and length(). A bare (optionally
+    # qualified) column resolves by the registered tables' schemas
+    # when the Engine threads them in; anything else falls back to
+    # the textual heuristic: the argument is list-shaped if it
+    # contains a list-producing call or a subscript.
+    _, close, spans = parts
+    arg_toks_all = toks[parts[0] + 1:close]
+    arg = detokenize(arg_toks_all).lower()
+    arg_toks = [t for t in arg_toks_all
+                if t.kind not in ("ws", "comment")]
+    bare = None
+    if len(arg_toks) == 1 and arg_toks[0].kind == "ident":
+        bare = arg_toks[0].text.lower()
+    elif (len(arg_toks) == 3 and arg_toks[0].kind == "ident"
+            and arg_toks[1].text == "." and arg_toks[2].kind == "ident"):
+        bare = arg_toks[2].text.lower()
+    kind = (column_kinds or {}).get(bare) if bare else None
+    if kind in ("array", "map", "string"):
+        # length()→length is a no-op — flagging it as a change
+        # would loop the fixpoint (r10)
+        return "length" if kind == "string" else "size", i
+    if name == "length":
+        # plain length() keeps Spark's string semantics unless
+        # the argument is ITSELF a list (whole-expression list
+        # literal or list-returning call — a containment
+        # heuristic misfired on string emissions that merely
+        # CONTAIN 'array(', r10): DuckDB's length() is a len()
+        # alias and counts list elements
+        at = arg.strip()
+        whole_list = at.startswith("[") and at.endswith("]")
+        if not whole_list and re.match(
+                r"(?is)(array|collect_list|collect_set|"
+                r"sequence|flatten|sort_array|array_distinct|"
+                r"array_sort|list_sort|list_distinct|"
+                r"string_to_array|string_split|split|"
+                r"regexp_split_to_array)\s*\(", at):
+            tk2 = tokenize(at)
+            sg2 = significant(tk2)
+            try:
+                whole_list = (len(sg2) >= 3
+                              and match_bracket(tk2, sg2[1])
+                              == sg2[-1])
+            except (ValueError, IndexError):
+                whole_list = False
+        if whole_list:
+            return "size", i
+        return toks[i].text, i  # Spark's own length()
+    listish = any(
+        k in arg
+        for k in ("split(", "array", "collect_list", "collect_set",
+                  "sequence(", "transform(", "list_", "[")
+    ) or any(h in arg for h in ARRAY_COLUMN_HINTS)
+    if bare is not None and not listish:
+        # Bare column with unknown type: the string assumption is a
+        # guess — fail loudly enough to be diagnosable (ADVICE r1).
+        import warnings
+
+        warnings.warn(
+            f"dialect: len({arg}) rewritten to length() by heuristic; "
+            "if the column is array-typed add it to ARRAY_COLUMN_HINTS",
+            stacklevel=4,
+        )
+    return "size" if listish else "length", i
+
+
+@_calls("unnest", nargs=2)
+def _call_unnest(toks, i, parts, column_kinds):
+    # named-argument forms [measured r12]: recursive := true
+    # flattens nested LISTS fully ([[1,2],[3]] → 1,2,3 rows);
+    # max_depth := n unnests n list levels; recursive := false
+    # is the bare unnest. Depth comes from the literal's
+    # bracket nesting — non-literal nested args stay loud.
+    a0 = _arg_text(toks, parts[2][0]).strip()
+    a1 = _arg_text(toks, parts[2][1]).strip()
+    mrec = re.match(r"(?is)^recursive\s*:=\s*(true|false)$", a1)
+    mdep = re.match(r"(?is)^max_depth\s*:=\s*(\d+)$", a1)
+    if mrec or mdep:
+        if a0.lstrip().startswith("["):
+            lead = a0.lstrip()
+            d_ = 0
+            for ch in lead:
+                if ch == "[":
+                    d_ += 1
+                elif not ch.isspace():
+                    break
+            if mrec and mrec.group(1).lower() == "false":
+                levels = 1
+            elif mrec:
+                levels = d_
+            else:
+                levels = min(int(mdep.group(1)), d_)
+            inner0 = a0
+            for _fl in range(max(levels - 1, 0)):
+                inner0 = f"flatten({inner0})"
+            return f"explode({inner0})", parts[1]
+        if mrec and re.match(r"(?is)^(\{|struct_pack\s*\(|"
+                             r"row\s*\()", a0.lstrip()):
+            # struct operand: recursive on a FLAT struct equals
+            # the bare struct unnest (fields → columns)
+            return f"inline(array({a0}))", parts[1]
+        raise ValueError(
+            "unnest recursive/max_depth: the list depth is "
+            "only provable for array literals — spell the "
+            "flatten() calls explicitly for column operands")
+
+
+@_calls("generate_subscripts", nargs=2)
+def _call_generate_subscripts(toks, i, parts, column_kinds):
+    # subscripts along dimension 1 → 1..len rows; [] on NULL
+    # or empty [measured r12]; DuckDB itself refuses other
+    # dimensions for LISTs ('Not implemented')
+    a0 = _arg_text(toks, parts[2][0]).strip()
+    a1 = _arg_text(toks, parts[2][1]).strip()
+    if a1 != "1":
+        raise ValueError(
+            "generate_subscripts: only dimension 1 exists for "
+            "LISTs (same as DuckDB)")
+    return (
+        f"explode(CASE WHEN ({a0}) IS NULL OR size({a0}) = 0 "
+        f"THEN slice(array(1), 1, 0) "
+        f"ELSE sequence(1, size({a0})) END)", parts[1])
+
+
+@_calls("unnest", nargs=1)
+def _call_unnest_2(toks, i, parts, column_kinds):
+    if re.match(r"(?is)^(\{|struct_pack\s*\(|row\s*\()",
+                _arg_text(toks, parts[2][0]).lstrip()):
+        # unnest(STRUCT) expands fields into COLUMNS in DuckDB
+        # [measured: unnest({'a':1,'b':2}) → columns a, b] —
+        # Spark's explode refuses structs; inline(array(s)) is the
+        # field-expanding generator
+        return (
+            f"inline(array({_arg_text(toks, parts[2][0])}))", parts[1])
+
+
+@_calls("unnest")
+def _call_unnest_3(toks, i, parts, column_kinds):
+    return "explode", i
+
+
+@_calls("count", "sum", "avg", nargs=1)
+def _call_count(toks, i, parts, column_kinds):
+    name = toks[i].text.lower()
+    if (re.match(r"(?is)^\s*DISTINCT\b",
+                 _arg_text(toks, parts[2][0]))
+            and _trailing_over(toks, parts[1])[0] != ""):
+        # DISTINCT aggregates as WINDOW functions — Spark refuses
+        # (DISTINCT_WINDOW_FUNCTION_UNSUPPORTED); DuckDB allows
+        # them [measured r9]. Rebuilt over a windowed collect_list
+        # → array_distinct (collect_list drops NULLs, matching the
+        # aggregates' NULL skipping); sum/avg fold in DOUBLE.
+        over, oc = _trailing_over(toks, parts[1])
+        a = re.sub(r"(?is)^\s*DISTINCT\b", "",
+                   _arg_text(toks, parts[2][0])).strip()
+        dl = f"array_distinct(collect_list({a}){over})"
+        if name == "count":
+            text = f"size({dl})"
+        else:
+            s_ = (f"aggregate({dl}, CAST(0 AS DOUBLE), "
+                  f"(__da__, __db__) -> __da__ + __db__)")
+            body = (s_ if name == "sum"
+                    else f"({s_} / size({dl}))")
+            text = (f"(CASE WHEN size({dl}) = 0 THEN "
+                    f"CAST(NULL AS DOUBLE) ELSE {body} END)")
+        return text, oc
+
+
+@_calls("arg_max_null", "arg_min_null", nargs=2)
+def _call_arg_max_null(toks, i, parts, column_kinds):
+    name = toks[i].text.lower()
+    # _null variants KEEP a NULL value at the winning key
+    # [measured r10: arg_max_null(d, k) over max-k row with
+    # NULL d → NULL] — exactly Spark's raw max_by/min_by
+    # (NULL keys still skip); marker dodges the NULL-skip wrap
+    v_ = _arg_text(toks, parts[2][0])
+    k_ = _arg_text(toks, parts[2][1])
+    fn2 = "max_by" if "max" in name else "min_by"
+    return f"__duck_{fn2}__({v_}, {k_})", parts[1]
+
+
+@_calls("map", nargs=0)
+def _call_map(toks, i, parts, column_kinds):
+    # zero-arg map() is the empty map [measured] — the marker
+    # dodges both the map→map_from_arrays rewrite and this
+    # branch's own fixpoint re-entry
+    return "__duck_map0__()", parts[1]
+
+
+@_calls("left_grapheme", "right_grapheme", nargs=2)
+def _call_left_grapheme(toks, i, parts, column_kinds):
+    name = toks[i].text.lower()
+    # grapheme-cluster left/right via substring_grapheme
+    # [measured r10: right_grapheme('héllo', 9) = whole string,
+    # left_grapheme(s, 0) = '']
+    s_ = _arg_text(toks, parts[2][0])
+    n_ = _arg_text(toks, parts[2][1])
+    if name == "left_grapheme":
+        text = f"substring_grapheme({s_}, 1, {n_})"
+    else:
+        text = (
+            f"substring_grapheme({s_}, greatest(1, "
+            f"length_grapheme({s_}) - ({n_}) + 1), ({n_}))")
+    return text, parts[1]
+
+
+@_calls("count_star", nargs=0)
+def _call_count_star(toks, i, parts, column_kinds):
+    return "count(*)", parts[1]  # zero-arg spelling [measured]
+
+
+@_calls("sem", nargs=1)
+def _call_sem(toks, i, parts, column_kinds):
+    # standard error of the mean — DuckDB computes it from the
+    # POPULATION stddev [measured: sem({2.5,1.5}) = 0.35355 =
+    # stddev_pop/sqrt(n), not the textbook samp form 0.5]. A
+    # trailing OVER hoists onto each sub-aggregate (r11).
+    a_ = _arg_text(toks, parts[2][0])
+    over, end = _trailing_filter_over(toks, parts[1])
+    return (f"(stddev_pop({a_}){over} "
+            f"/ sqrt(count({a_}){over}))", end)
+
+
+@_calls("arg_max", "arg_min", "max_by", "min_by", nargs=2)
+def _call_arg_max(toks, i, parts, column_kinds):
+    name = toks[i].text.lower()
+    if (not re.search(
+        r"(?is)\bORDER\s+BY\b|\bDISTINCT\b",
+        detokenize(toks[parts[0]:parts[1] + 1]))):
+        # DuckDB's arg_max/arg_min/max_by/min_by skip rows where
+        # EITHER argument is NULL [measured r10: arg_min(v, k)
+        # over ('a',1),(NULL,0) → 'a'; NULL keys skipped too].
+        # Spark's min_by ignores NULL keys but RETURNS a NULL
+        # value sitting at the winning key — nullify the key when
+        # the value is NULL so those rows drop out. Marker dodges
+        # the fixpoint re-entry; ordered/DISTINCT forms keep their
+        # dedicated handling.
+        v_ = _arg_text(toks, parts[2][0])
+        k_ = _arg_text(toks, parts[2][1])
+        fn2 = "max_by" if "max" in name else "min_by"
+        return (
+            f"__duck_{fn2}__({v_}, CASE WHEN ({v_}) IS NULL "
+            f"THEN NULL ELSE {k_} END)", parts[1])
+
+
+@_calls("avg", "mean", nargs=1)
+def _call_avg(toks, i, parts, column_kinds):
+    # avg is DOUBLE in DuckDB for EVERY accepted input —
+    # int/decimal/float all → DOUBLE, and non-numerics
+    # (interval/timestamp/varchar) are Binder Errors [measured
+    # r10], so an unconditional cast is faithful (Spark keeps
+    # DECIMAL(p+4,s+4), rendering '2.00000' vs '2.0'; VALUES-
+    # derived decimal columns aren't provable via
+    # column_kinds, so a conditional wrap missed them). Wraps
+    # the whole aggregate — including a trailing FILTER (…)
+    # and OVER (…). __decavg__ dodges the fixpoint re-entry;
+    # _rewrite_keywords renames it back to avg (Spark's mean
+    # is an avg alias, so one marker serves both spellings).
+    end = parts[1]
+    extra = ""
+    after = [k for k in range(end + 1, len(toks))
+             if toks[k].kind not in ("ws", "comment")]
+    if (after and toks[after[0]].kind == "ident"
+            and toks[after[0]].text.upper() == "FILTER"
+            and len(after) > 1 and toks[after[1]].text == "("):
+        try:
+            fclose = match_bracket(toks, after[1])
+        except ValueError:
+            fclose = None
+        if fclose is not None:
+            extra += " FILTER " + detokenize(
+                toks[after[1]:fclose + 1])
+            end = fclose
+            after = [k for k in range(end + 1, len(toks))
+                     if toks[k].kind not in ("ws", "comment")]
+    if (after and toks[after[0]].kind == "ident"
+            and toks[after[0]].text.upper() == "OVER"
+            and len(after) > 1):
+        nxt = toks[after[1]]
+        if nxt.text == "(":
+            try:
+                oclose = match_bracket(toks, after[1])
+                extra += " OVER " + detokenize(
+                    toks[after[1]:oclose + 1])
+                end = oclose
+            except ValueError:
+                pass
+        elif nxt.kind == "ident":
+            extra += f" OVER {nxt.text}"
+            end = after[1]
+    args_txt = detokenize(toks[parts[0]:parts[1] + 1])
+    return f"CAST(__decavg__{args_txt}{extra} AS DOUBLE)", end
+
+
+@_calls("sum", nargs=1)
+def _call_sum(toks, i, parts, column_kinds):
+    # sum(DECIMAL(p,s)) is DECIMAL(38,s) in DuckDB for ANY p
+    # [measured r11: sum(DECIMAL(4,1)) → DECIMAL(38,1), same
+    # for DISTINCT and OVER () forms]; Spark uses p+10 →
+    # DECIMAL(14,1) — schema mismatch on every plain decimal
+    # sum, and premature overflow at p+10 digits. Fires only
+    # when the operand is PROVABLY decimal with a provable
+    # scale (literal / decimal-kind column / decimal cast);
+    # int operands keep the pinned sum(BIGINT)→HUGEINT
+    # overflow fence, doubles already agree. Wraps the whole
+    # aggregate incl. trailing FILTER (…) / OVER (…);
+    # __decsum__ dodges the fixpoint re-entry.
+    arg0 = _arg_text(toks, parts[2][0]).strip()
+    bare = re.sub(r"(?is)^\s*(?:DISTINCT|ALL)\b", "",
+                  arg0).strip()
+    sc = (_known_decimal_scale(bare, column_kinds)
+          if _expr_is_decimal(bare, column_kinds) else None)
+    if sc is not None:
+        end = parts[1]
+        extra = ""
+        after = [k for k in range(end + 1, len(toks))
+                 if toks[k].kind not in ("ws", "comment")]
+        if (after and toks[after[0]].kind == "ident"
+                and toks[after[0]].text.upper() == "FILTER"
+                and len(after) > 1
+                and toks[after[1]].text == "("):
+            try:
+                fclose = match_bracket(toks, after[1])
+            except ValueError:
+                fclose = None
+            if fclose is not None:
+                extra += " FILTER " + detokenize(
+                    toks[after[1]:fclose + 1])
+                end = fclose
+                after = [k for k in range(end + 1, len(toks))
+                         if toks[k].kind not in ("ws",
+                                                 "comment")]
+        if (after and toks[after[0]].kind == "ident"
+                and toks[after[0]].text.upper() == "OVER"
+                and len(after) > 1):
+            nxt = toks[after[1]]
+            if nxt.text == "(":
+                try:
+                    oclose = match_bracket(toks, after[1])
+                    extra += " OVER " + detokenize(
+                        toks[after[1]:oclose + 1])
+                    end = oclose
+                except ValueError:
+                    pass
+            elif nxt.kind == "ident":
+                extra += f" OVER {nxt.text}"
+                end = after[1]
+        # upcast the operand to DECIMAL(38,s) (lossless: same
+        # scale, max precision) so Spark accumulates at
+        # min(38, 38+10) = 38 digits — otherwise a source
+        # DECIMAL(p,s) overflows at p+10 digits where DuckDB
+        # keeps going to 38
+        kw = re.match(r"(?is)^\s*(DISTINCT|ALL)\b", arg0)
+        pre = (kw.group(1).upper() + " ") if kw else ""
+        return (f"CAST(__decsum__({pre}CAST(({bare}) AS "
+                f"DECIMAL(38,{sc}))){extra} "
+                f"AS DECIMAL(38,{sc}))", end)
+
+
+@_calls("corr", nargs=2)
+def _call_corr(toks, i, parts, column_kinds):
+    # corr() over zero-variance input: DuckDB → NULL [measured:
+    # constant x, or a single row]; Spark's corr divides by the
+    # moment product and throws DIVIDE_BY_ZERO under ANSI — a
+    # loud failure for a legal answer. Rebuilt as try_divide(
+    # covar_samp, stddev*stddev): mathematically Pearson's r,
+    # NULL when either stddev is 0/NULL. (covar_samp/
+    # regr_slope/regr_r2 need no guard — probed: both engines
+    # already return NULL/1.0 alike on degenerate input.)
+    # Last-ulp rendering vs DuckDB's one-pass kernel is
+    # documented float residue — DuckDB's own corr differs in
+    # the last ulp from this identity too. Trailing FILTER/
+    # OVER clauses are carried onto every sub-aggregate.
+    _, close, spans = parts
+    a = _arg_text(toks, spans[0])
+    b = _arg_text(toks, spans[1])
+    end = close
+    extra = ""
+    after = [k for k in range(end + 1, len(toks))
+             if toks[k].kind not in ("ws", "comment")]
+    if (after and toks[after[0]].kind == "ident"
+            and toks[after[0]].text.upper() == "FILTER"
+            and len(after) > 1 and toks[after[1]].text == "("):
+        try:
+            fclose = match_bracket(toks, after[1])
+        except ValueError:
+            fclose = None
+        if fclose is not None:
+            extra += " FILTER " + detokenize(
+                toks[after[1]:fclose + 1])
+            end = fclose
+            after = [k for k in range(end + 1, len(toks))
+                     if toks[k].kind not in ("ws", "comment")]
+    if (after and toks[after[0]].kind == "ident"
+            and toks[after[0]].text.upper() == "OVER"
+            and len(after) > 1):
+        nxt = toks[after[1]]
+        if nxt.text == "(":
+            try:
+                oclose = match_bracket(toks, after[1])
+                extra += " OVER " + detokenize(
+                    toks[after[1]:oclose + 1])
+                end = oclose
+            except ValueError:
+                pass
+        elif nxt.kind == "ident":
+            extra += f" OVER {nxt.text}"
+            end = after[1]
+    # pairwise NULL skipping: corr drops a row when EITHER side
+    # is NULL, so each marginal stddev sees the masked operand
+    ax = (f"(CASE WHEN ({a}) IS NULL OR ({b}) IS NULL "
+          f"THEN NULL ELSE ({a}) END)")
+    bx = (f"(CASE WHEN ({a}) IS NULL OR ({b}) IS NULL "
+          f"THEN NULL ELSE ({b}) END)")
+    return (
+        f"try_divide(covar_samp({ax}, {bx}){extra}, "
+        f"stddev_samp({ax}){extra} * stddev_samp({bx}){extra})", end)
+
+
+@_calls("row_number", "rank", "dense_rank", "ntile", "percent_rank",
+        "cume_dist", "lag", "lead")
+def _call_row_number(toks, i, parts, column_kinds):
+    # DuckDB allows these without a window ORDER BY (row order
+    # = scan order); Spark refuses — append an ORDER BY over
+    # monotonically_increasing_id() (scan order, zero shuffle)
+    over, oc = _trailing_over(toks, parts[1])
+    if (over and not re.search(r"(?is)\bORDER\s+BY\b", over)
+            and "monotonically_increasing_id" not in over):
+        call_txt = detokenize(toks[i:parts[1] + 1])
+        inner = over.strip()[5:].strip()  # drop leading OVER
+        spec = inner[1:-1].strip()  # drop parens
+        sep = " " if spec else ""
+        return (
+            f"{call_txt} OVER ({spec}{sep}ORDER BY "
+            f"monotonically_increasing_id())", oc)
+
+
+@_calls("typeof", nargs=1)
+def _call_typeof(toks, i, parts, column_kinds):
+    # DuckDB type spellings (INTEGER/VARCHAR/INTEGER[]/
+    # STRUCT(a INTEGER)/'"NULL"'), not Spark's lowercase DDL —
+    # converted by the __duck_typename__ session UDF over
+    # Spark's own typeof string [measured r9]; a typeof already
+    # inside that UDF is this handler's own emission
+    k_ = i - 1
+    while k_ >= 0 and toks[k_].kind == "ws":
+        k_ -= 1
+    if k_ >= 1 and toks[k_].text == "(":
+        k2_ = k_ - 1
+        while k2_ >= 0 and toks[k2_].kind == "ws":
+            k2_ -= 1
+        if (toks[k2_].kind == "ident" and
+                toks[k2_].text == "__duck_typename__"):
+            return None
+    a = _arg_text(toks, parts[2][0])
+    return f"__duck_typename__(typeof({a}))", parts[1]
+
+
+@_calls("version", nargs=0)
+def _call_version(toks, i, parts, column_kinds):
+    # the engine's DuckDB-compat surface version — the oracle's
+    # DuckDB (1.0.0); Spark's version() returns the Spark build
+    return "'v1.0.0'", parts[1]
+
+
+@_calls("setseed", nargs=1)
+def _call_setseed(toks, i, parts, column_kinds):
+    # duck setseed(x) seeds random() and returns NULL; Spark
+    # random seeds per-expression — the seeding itself cannot
+    # carry over (random() values never cross-compare anyway,
+    # like hash()); NULL return preserved
+    return "CAST(NULL AS BOOLEAN)", parts[1]
+
+
+@_calls("txid_current", nargs=0)
+def _call_txid_current(toks, i, parts, column_kinds):
+    # a transaction ordinal — engine-specific VALUE by design
+    # (documented like hash()); typed BIGINT so comparisons run
+    return "CAST(1 AS BIGINT)", parts[1]
+
+
+@_calls("list_slice", "array_slice", nargs=4)
+def _call_list_slice(toks, i, parts, column_kinds):
+    # 4-arg step form → the bracket step-slice machinery
+    # (l[a:b:s], r8) owns the semantics; runs later in the
+    # pipeline
+    _, close, spans = parts
+    l_ = _arg_text(toks, spans[0])
+    a_ = _arg_text(toks, spans[1])
+    b_ = _arg_text(toks, spans[2])
+    s_ = _arg_text(toks, spans[3])
+    return f"({l_})[{a_}:{b_}:{s_}]", close
+
+
+@_calls("regexp_extract", nargs=3)
+def _call_regexp_extract(toks, i, parts, column_kinds):
+    if _arg_text(toks, parts[2][2]).strip().startswith("["):
+        # NAME-LIST form → STRUCT of the capture groups [measured
+        # r9: no match → struct of empty strings, same as the
+        # scalar form's '' default]
+        _, close, spans = parts
+        s_ = _arg_text(toks, spans[0])
+        p_ = _arg_text(toks, spans[1])
+        names = re.findall(r"'((?:[^']|'')*)'",
+                           _arg_text(toks, spans[2]))
+        if names:
+            fields = ", ".join(
+                f"'{n}', regexp_extract({s_}, {p_}, {k + 1})"
+                for k, n in enumerate(names))
+            return f"named_struct({fields})", close
+
+
+@_calls("alias", nargs=1)
+def _call_alias(toks, i, parts, column_kinds):
+    if re.fullmatch(r"[A-Za-z_]\w*",
+                    _arg_text(toks, parts[2][0]).strip()):
+        # alias(col) → the OUTPUT column's name as text [measured
+        # r9: a trailing AS x rebinds it — alias(n) AS a = 'a'];
+        # expression args render engine-specific and stay loud
+        nm_out = _arg_text(toks, parts[2][0]).strip()
+        close_ = parts[1]
+        k_ = close_ + 1
+        while k_ < len(toks) and toks[k_].kind == "ws":
+            k_ += 1
+        if (k_ + 1 < len(toks) and toks[k_].kind == "ident"
+                and toks[k_].text.upper() == "AS"):
+            k2_ = k_ + 1
+            while k2_ < len(toks) and toks[k2_].kind == "ws":
+                k2_ += 1
+            if toks[k2_].kind in ("ident", "bqid"):
+                nm_out = toks[k2_].text.strip("`")
+        elif (k_ < len(toks) and toks[k_].kind in ("ident", "bqid")
+                and toks[k_].text.upper() not in (
+                    "FROM", "WHERE", "GROUP", "ORDER", "HAVING",
+                    "LIMIT", "UNION", "INTERSECT", "EXCEPT",
+                    "WINDOW", "QUALIFY", "AND", "OR", "AS")):
+            # bare trailing alias rebinds too [measured r11:
+            # alias(n) a = 'a' like the AS form]
+            nm_out = toks[k_].text.strip("`")
+        return f"'{nm_out}'", close_
+
+
+@_calls("list_median", nargs=1)
+def _call_list_median(toks, i, parts, column_kinds):
+    # exact median of the non-NULL elements as DOUBLE
+    # [measured r9: [1,2,3] → 2.0, [1,2,3,4] → 2.5, NULLs skip,
+    # empty/all-NULL → NULL]
+    a = _arg_text(toks, parts[2][0])
+    s_ = f"array_sort(filter({a}, __lm__ -> __lm__ IS NOT NULL))"
+    n_ = f"size({s_})"
+    return (
+        f"(CASE WHEN {s_} IS NULL OR {n_} = 0 THEN "
+        f"CAST(NULL AS DOUBLE) WHEN {n_} % 2 = 1 THEN "
+        f"CAST(element_at({s_}, CAST(({n_} + 1) / 2 AS INT)) "
+        f"AS DOUBLE) "
+        f"ELSE (CAST(element_at({s_}, "
+        f"CAST({n_} / 2 AS INT)) AS DOUBLE) + "
+        f"CAST(element_at({s_}, CAST({n_} / 2 AS INT) + 1) "
+        f"AS DOUBLE)) / 2 END)", parts[1])
+
+
+@_calls("list_any_value", nargs=1)
+def _call_list_any_value(toks, i, parts, column_kinds):
+    # first non-NULL element, NULL when none [measured r9]
+    a = _arg_text(toks, parts[2][0])
+    return (f"get(filter({a}, __lv__ -> __lv__ IS NOT NULL), "
+            f"0)", parts[1])
+
+
+@_calls("round_even", "roundbankers")
+def _call_round_even(toks, i, parts, column_kinds):
+    if len(parts[2]) in (1, 2):
+        # half-even rounding ≡ Spark bround on every measured probe
+        # [r9: 2.5→2, 3.5→4, DECIMAL 2.345@2 → 2.34 (exact decimal
+        # tie → even), DOUBLE 2.675@2 → 2.68 — DuckDB's round_even,
+        # like bround, rounds the shortest DECIMAL repr, unlike its
+        # own format '{:.Nf}' which rounds the exact binary value]
+        _, close, spans = parts
+        a = _arg_text(toks, spans[0])
+        p_ = _arg_text(toks, spans[1]) if len(spans) == 2 else "0"
+        return f"bround({a}, {p_})", close
+
+
+@_calls("mode", nargs=1)
+def _call_mode(toks, i, parts, column_kinds):
+    if (not re.match(r"(?is)^\s*DISTINCT\b",
+                     _arg_text(toks, parts[2][0]))
+            and not re.search(r"(?is)\bORDER\s+BY\b",
+                              _arg_text(toks, parts[2][0]))
+            and "collect_list" not in _arg_text(toks, parts[2][0])):
+        # DuckDB mode() breaks count ties by FIRST APPEARANCE in
+        # scan order [measured r9: mode over (1,3,1,3) = 1, over
+        # (3,1,3,1) = 3] while Spark's mode picks arbitrarily.
+        # Emitted as most-frequent-then-lowest-first-index over an
+        # order-preserving collect_list (identical aggregate
+        # expressions share one buffer, so the three spellings
+        # below cost ONE collect). O(n·distinct) per group — fine
+        # for the oracle scale; mode(x ORDER BY …)/DISTINCT forms
+        # stay verbatim per the _ORDER_INSENSITIVE_AGGS note.
+        # window form: a trailing OVER (…) hoists onto the inner
+        # collect_list aggregates (r9: the windowed tie at sf0.001
+        # diverged; the three spellings still share one buffer)
+        over, oc = _trailing_over(toks, parts[1])
+        a = _arg_text(toks, parts[2][0])
+        lst = f"collect_list({a}){over}"
+        return (
+            f"(array_max(transform(array_distinct({lst}), "
+            f"__mv__ -> struct("
+            f"size(filter({lst}, __my__ -> __my__ = __mv__)) AS c, "
+            f"-array_position({lst}, __mv__) AS np, "
+            f"__mv__ AS v))).v)", oc if over else parts[1])
+
+
+@_calls("first_value", "last_value", "nth_value", "lag", "lead")
+def _call_first_value(toks, i, parts, column_kinds):
+    name = toks[i].text.lower()
+    # DuckDB spells the null-skipping modifier INSIDE the call
+    # parens — first_value(x IGNORE NULLS) OVER … — where Spark
+    # wants it between ')' and OVER. Move it out (RESPECT NULLS
+    # is the default on both and is simply dropped). The
+    # emission's inner args no longer carry the modifier, so the
+    # fixpoint doesn't re-fire. LOCF/gap-fill queries use this
+    # constantly (judge probe r6: parse error before this).
+    _, close, spans = parts
+    inner_iv = detokenize(toks[parts[0] + 1:close])
+    m_iv = re.match(
+        r"^(?P<args>.*?)\s+(?P<kind>IGNORE|RESPECT)\s+NULLS\s*$",
+        inner_iv, re.IGNORECASE | re.DOTALL)
+    if m_iv:
+        suffix = (" IGNORE NULLS"
+                  if m_iv.group("kind").upper() == "IGNORE"
+                  else "")
+        return f"{name}({m_iv.group('args')}){suffix}", close
+
+
+@_calls("list_contains", "list_position", "array_contains", "array_position",
+        "list_has", "array_has", "list_indexof", nargs=2)
+def _call_list_contains(toks, i, parts, column_kinds):
+    name = toks[i].text.lower()
+    if (_arg_text(toks, parts[2][1]).strip().upper()
+        == "NULL"
+        or _arg_text(toks, parts[2][0]).strip().upper()
+        == "NULL"):
+        # a NULL needle is NULL in DuckDB [measured: list_contains(
+        # [1,2], NULL) → NULL, list_position([1,2], NULL) → NULL],
+        # while Spark's array_contains REJECTS a NULL-typed argument
+        # (DATATYPE_MISMATCH.NULL_TYPE — judge probe r7). The
+        # element type is unknowable here, so fold the constant.
+        is_bool = "contains" in name or name == "list_has"
+        return f"CAST(NULL AS {'BOOLEAN' if is_bool else 'INT'})", parts[1]
+
+
+@_calls("list_contains", "array_contains", "list_has", "array_has", nargs=2)
+def _call_list_contains_2(toks, i, parts, column_kinds):
+    # DuckDB contains is FALSE when the needle is absent even
+    # with NULL elements present [measured r10: list_contains(
+    # [1,NULL], 3) → FALSE]; Spark's three-valued array_contains
+    # says NULL there. NULL list or NULL needle stay NULL
+    # (runtime nulls — the literal-NULL needle folded above,
+    # Spark rejects a NULL-typed argument). Marker dodges the
+    # fixpoint re-entry.
+    a_ = _arg_text(toks, parts[2][0])
+    x_ = _arg_text(toks, parts[2][1])
+    return (
+        f"(CASE WHEN ({a_}) IS NULL OR ({x_}) IS NULL "
+        f"THEN CAST(NULL AS BOOLEAN) "
+        f"ELSE coalesce(__duck_array_contains__({a_}, {x_}), "
+        f"FALSE) END)", parts[1])
+
+
+@_calls("list_intersect", "array_intersect", nargs=2)
+def _call_list_intersect(toks, i, parts, column_kinds):
+    # DuckDB intersect DROPS NULL elements ([1,2,NULL] ∩
+    # [NULL,2,3] = [2]; [NULL] ∩ [NULL] = []) [measured r9];
+    # Spark's array_intersect keeps a shared NULL. The inner
+    # call spells through a marker so the fixpoint terminates.
+    a_ = _arg_text(toks, parts[2][0])
+    b_ = _arg_text(toks, parts[2][1])
+    return (f"filter(__array_intersect__({a_}, {b_}), "
+            f"__li__ -> __li__ IS NOT NULL)", parts[1])
+
+
+@_calls("era", nargs=1)
+def _call_era(toks, i, parts, column_kinds):
+    # era(d) = 1 for every representable (CE) date [measured
+    # r9 — BC dates have no carrier here]
+    a_ = _arg_text(toks, parts[2][0])
+    return (f"(CASE WHEN ({a_}) IS NULL THEN NULL "
+            f"ELSE 1 END)", parts[1])
+
+
+@_calls("list_intersect", "list_contains", "list_position")
+def _call_list_intersect_2(toks, i, parts, column_kinds):
+    name = toks[i].text.lower()
+    # list_position: both engines return 0 for a missing element
+    # (measured against DuckDB 1.x) — plain rename is exact
+    return "array_" + name[5:], i
+
+
+@_calls("array_distinct", "list_distinct", nargs=1)
+def _call_array_distinct(toks, i, parts, column_kinds):
+    if re.search(r"->\s*\w+\s+IS\s+NOT\s+NULL\s*\)$",
+                 _arg_text(toks, parts[2][0]),
+                 re.IGNORECASE):
+        # argument already ends in a null-dropping filter (this
+        # branch's own emission — fixpoint loop otherwise — or the
+        # list_unique/array_unique emissions): skip the wrap, but
+        # list_distinct must still RENAME (review r7: the guard
+        # skip left an undefined function)
+        return "array_distinct", i
+
+
+@_calls("array_distinct", "list_distinct", nargs=1)
+def _call_array_distinct_2(toks, i, parts, column_kinds):
+    # DuckDB list_distinct/array_distinct DROPS NULL elements
+    # [measured: [1,1,NULL,NULL,2] → 2 elements]; Spark's
+    # array_distinct keeps one NULL — silent wrong answer
+    # (judge probe r6). Element ORDER of the result is
+    # arbitrary in DuckDB (hash order — the same probe returned
+    # [2,1]) and first-occurrence in Spark; documented §2.4,
+    # compare through list_sort. The guard skips arguments that
+    # already end in a null-dropping filter — this branch's own
+    # emission (fixpoint loop otherwise) and the list_unique /
+    # array_unique emissions (pointless double filter).
+    _, close, spans = parts
+    e = _arg_text(toks, spans[0])
+    return (f"array_distinct(filter({e}, "
+            f"__dd -> __dd IS NOT NULL))", close)
+
+
+@_calls("list_concat")
+def _call_list_concat(toks, i, parts, column_kinds):
+    # Spark flatten(array(a, b, …)) concatenates lists without
+    # spelling "concat" — which is now the STRING rewrite below
+    # (DuckDB concat stringifies even list arguments)
+    # DuckDB SKIPS NULL list arguments but gives NULL when ALL
+    # are NULL [measured: list_concat(NULL, [1,2]) = [1,2],
+    # list_concat(NULL, NULL) = NULL] — flatten alone would
+    # NULL-propagate (third review)
+    _, close, spans = parts
+    args = ", ".join(_arg_text(toks, sp) for sp in spans)
+    # __fl__ lambda var so the flatten NULL-sub-list branch
+    # doesn't re-wrap this already-NULL-free emission (r9)
+    flt = f"filter(array({args}), __fl__ -> __fl__ IS NOT NULL)"
+    return (f"(CASE WHEN size({flt}) = 0 THEN NULL "
+            f"ELSE flatten({flt}) END)", close)
+
+
+@_calls("concat")
+def _call_concat(toks, i, parts, column_kinds):
+    if parts[2]:
+        # DuckDB concat is STRING concatenation that casts every
+        # argument and SKIPS NULLs [measured: concat('a', NULL, 'b')
+        # = 'ab', concat(NULL, NULL) = '', concat(1, 2.5, DATE …)
+        # stringifies] — Spark's concat is NULL-propagating and
+        # array-polymorphic, a silent wrong answer on NULLs.
+        # concat_ws('') reproduces the NULL-skip; per-arg CAST
+        # reproduces the stringify.
+        _, close, spans = parts
+        args = ", ".join(f"CAST({_arg_text(toks, sp)} AS STRING)"
+                         for sp in spans)
+        return f"concat_ws('', {args})", close
+
+
+@_calls("current_schema", "current_database", "current_catalog", nargs=0)
+def _call_current_schema(toks, i, parts, column_kinds):
+    name = toks[i].text.lower()
+    # DuckDB's fresh-session identifiers [measured: 'main' /
+    # 'memory' / 'memory']; Spark would answer 'default'/
+    # 'spark_catalog' — a silent divergence. Post-USE sessions
+    # keep the fresh-session answer (documented residue; the
+    # engine's USE is a search-path alias layer, not a catalog
+    # switch).
+    return ("'main'" if name == "current_schema"
+            else "'memory'", parts[1])
+
+
+@_calls("json_group_array", nargs=1)
+def _call_json_group_array(toks, i, parts, column_kinds):
+    if (not re.match(r"(?is)^\s*DISTINCT\b",
+                     _arg_text(toks, parts[2][0]))
+            and not re.search(r"(?is)\bORDER\s+BY\b",
+                              _arg_text(toks, parts[2][0]))):
+        # JSON aggregate [measured: keeps NULL elements as json
+        # null, empty group → NULL] — to_json over the NULL-keeping
+        # array_agg rewrite (the emitted array_agg re-enters the
+        # fixpoint and picks up the struct-wrap). DISTINCT/ORDER BY
+        # modifiers and OVER (…) are a DuckDB Catalog Error (macro,
+        # not aggregate — measured r9) and stay verbatim/loud.
+        a = _arg_text(toks, parts[2][0])
+        if _trailing_over(toks, parts[1])[0] == "":
+            return (f"CASE WHEN count(1) = 0 THEN "
+                    f"CAST(NULL AS STRING) ELSE "
+                    f"__to_json__(array_agg({a})) END", parts[1])
+
+
+@_calls("json_transform", "from_json", nargs=2)
+def _call_json_transform(toks, i, parts, column_kinds):
+    # DuckDB json_transform(j, 'structure') (from_json is its
+    # alias) casts the document onto the structure, failed
+    # casts → NULL fields [measured r9] — Spark's from_json in
+    # PERMISSIVE mode does the same given the equivalent DDL
+    # schema. LITERAL structures only; a scalar root structure
+    # ('"DATE"') casts the unquoted root instead.
+    st = _arg_text(toks, parts[2][1]).strip()
+    j_ = _arg_text(toks, parts[2][0])
+    ddl = (_json_transform_expr(j_, st[1:-1])
+           if st.startswith("'") and st.endswith("'") else None)
+    if ddl is not None:
+        return ddl, parts[1]
+
+
+@_calls("to_json", "json_quote", nargs=1)
+def _call_to_json(toks, i, parts, column_kinds):
+    if "__to_json__" not in _arg_text(toks, parts[2][0]):
+        # DuckDB to_json/json_quote accept ANY value (scalars
+        # included: to_json('abc') = '"abc"') where Spark's to_json
+        # wants a container — wrap in a 1-element array, render,
+        # strip the brackets. NULL in → NULL out [measured].
+        # (A value already of JSON type re-quotes here — edge
+        # divergence, documented; the JSON carrier is VARCHAR.)
+        a = _arg_text(toks, parts[2][0])
+        arr = f"__to_json__(array({a}))"
+        # FROM/FOR substring spelling — the stable OUTPUT form of
+        # the duck-substr rewrite, so it doesn't re-wrap this
+        return (f"(CASE WHEN ({a}) IS NULL THEN NULL ELSE "
+                f"substring({arr} FROM 2 FOR length({arr}) - 2)"
+                f" END)", parts[1])
+
+
+@_calls("json_merge_patch")
+def _call_json_merge_patch(toks, i, parts, column_kinds):
+    if len(parts[2]) > 2:
+        # DuckDB's json_merge_patch is VARIADIC (review r8-3 #7) —
+        # fold left into the 2-arg session UDF; each pass reduces
+        # the arity by one, so the fixpoint converges
+        args = [_arg_text(toks, sp) for sp in parts[2]]
+        return (f"json_merge_patch(json_merge_patch({args[0]}, "
+                f"{args[1]}), {', '.join(args[2:])})", parts[1])
+
+
+@_calls("json_group_object", nargs=2)
+def _call_json_group_object(toks, i, parts, column_kinds):
+    if _trailing_over(toks, parts[1])[0] == "":
+        # [measured: NULL values keep their key as json null;
+        # empty group → NULL; OVER (…) is a DuckDB Catalog Error
+        # (macro) — stays verbatim/loud]
+        k_ = _arg_text(toks, parts[2][0])
+        v_ = _arg_text(toks, parts[2][1])
+        return (
+            f"CASE WHEN count(1) = 0 THEN CAST(NULL AS STRING) "
+            f"ELSE __to_json__(map_from_entries(collect_list("
+            f"struct({k_}, {v_})))) END", parts[1])
+
+
+@_calls("timezone_hour", "timezone_minute", nargs=1)
+def _call_timezone_hour(toks, i, parts, column_kinds):
+    # session-zone offset of a naive timestamp — both engines
+    # pin the session to UTC (D3), so the offset is 0 at every
+    # instant [measured: timezone_hour(TIMESTAMP '2024-07-01')
+    # = 0 in a UTC DuckDB session]; Spark has no such function.
+    # NULL inputs stay NULL (review r8 #3) and the argument
+    # still evaluates, so its errors aren't swallowed. DATE and
+    # INTERVAL operands ERROR in DuckDB (review r8-3 #6) —
+    # provable ones stay verbatim and fail loudly.
+    a = _arg_text(toks, parts[2][0])
+    if not re.match(r"(?is)^\s*(DATE\b|INTERVAL\b)", a):
+        return (f"CAST(CASE WHEN ({a}) IS NULL THEN NULL "
+                f"ELSE 0 END AS BIGINT)", parts[1])
+
+
+@_calls(*_TO_INTERVAL_FNS, nargs=1)
+def _call_to_interval(toks, i, parts, column_kinds):
+    name = toks[i].text.lower()
+    # DuckDB's to_years/to_days/… interval constructors → Spark
+    # make_ym_interval / make_dt_interval [measured: to_days(3)
+    # + DATE x = TIMESTAMP, same in Spark]
+    kind, expr_t = _TO_INTERVAL_FNS[name]
+    a = _arg_text(toks, parts[2][0])
+    return f"{kind}({expr_t.format(n=a)})", parts[1]
+
+
+@_calls("regexp_split_to_table", nargs=2)
+def _call_regexp_split_to_table(toks, i, parts, column_kinds):
+    # set-returning split → explode over the regex-split array
+    # (the regexp_split_to_array machinery owns the split
+    # semantics; one extra fixpoint pass renames it)
+    a = _arg_text(toks, parts[2][0])
+    b_ = _arg_text(toks, parts[2][1])
+    return f"explode(regexp_split_to_array({a}, {b_}))", parts[1]
+
+
+@_calls("date_add", nargs=2)
+def _call_date_add(toks, i, parts, column_kinds):
+    if re.match(r"(?is)^\s*(INTERVAL\b|to_\w+\s*\()",
+                _arg_text(toks, parts[2][1])):
+        # DuckDB date_add(d, INTERVAL) returns TIMESTAMP even for
+        # DATE inputs [measured: date_add(DATE '2024-01-31',
+        # INTERVAL 1 MONTH) → TIMESTAMP '2024-02-29 00:00:00'];
+        # Spark's date_add is (date, int_days) and its + operator
+        # keeps DATE for ym-intervals — the CAST makes both the
+        # type and the month-clamping match
+        a = _arg_text(toks, parts[2][0])
+        iv = _arg_text(toks, parts[2][1])
+        return f"(CAST({a} AS TIMESTAMP) + {iv})", parts[1]
+
+
+@_calls("hour", "minute", "second", "millisecond", "microsecond", "epoch",
+        nargs=1)
+def _call_hour(toks, i, parts, column_kinds):
+    name = toks[i].text.lower()
+    # function-form fields over a TIME literal constant-fold
+    # (Spark: UNSUPPORTED_TIME_TYPE on hour(TIME '…'))
+    tconst = _try_time_field(
+        name, _arg_text(toks, parts[2][0]))
+    if tconst is not None:
+        return tconst, parts[1]
+
+
+@_calls("mad", nargs=1)
+def _call_mad(toks, i, parts, column_kinds):
+    # median absolute deviation [measured in DuckDB 1.0.0]:
+    # interpolating median of |x - median(x)| — INTERPOLATING
+    # even over DECIMAL inputs (mad of (1.0,2.0,9.0,10.0)
+    # DECIMAL = 4.0 from median 5.5), with the RESULT truncated
+    # toward zero to the operand scale (0.005 → 0.00, 0.015 →
+    # 0.01); numeric inputs → DOUBLE. Spark has no mad().
+    # DECIMAL path stays in exact decimal arithmetic by working
+    # in a doubled domain: D_i = |2·x_i − (m1+m2)| (scale s),
+    # mad = trunc_s((D_j + D_k) · 0.25).
+    _, close, spans = parts
+    e = _arg_text(toks, spans[0])
+    mdec = _decimal_kind(e, column_kinds)
+
+    def _mid(arr: str, off: int) -> str:
+        return (f"element_at({arr}, "
+                f"CAST((size({arr}) + {off}) DIV 2 AS INT))")
+
+    if mdec:
+        p_, s_ = mdec
+        dec = f"DECIMAL({p_},{s_})"
+        unit = ("1" if s_ == 0 else "0." + "0" * (s_ - 1) + "1")
+        dev = (f"abs(2 * __v - ({_mid('__arr', 1)} "
+               f"+ {_mid('__arr', 2)}))")
+        val = f"(({_mid('__a2', 1)} + {_mid('__a2', 2)}) * 0.25)"
+        inner = (
+            f"element_at(transform(array(sort_array(transform("
+            f"__arr, __v -> {dev}))), __a2 -> "
+            f"CAST({val} - ({val} % {unit}) AS {dec})), 1)")
+        null_t = dec
+        src = f"collect_list({e})"
+    else:
+        dev = (f"abs(__v - ({_mid('__arr', 1)} "
+               f"+ {_mid('__arr', 2)}) / 2)")
+        inner = (
+            f"element_at(transform(array(sort_array(transform("
+            f"__arr, __v -> {dev}))), __a2 -> "
+            f"({_mid('__a2', 1)} + {_mid('__a2', 2)}) / 2), 1)")
+        null_t = "DOUBLE"
+        src = f"collect_list(CAST({e} AS DOUBLE))"
+    # a trailing OVER (…) attaches to the INNER collect_list
+    # (mad IS a valid window aggregate in DuckDB — measured r9)
+    over, close = _trailing_over(toks, close)
+    return (
+        f"element_at(transform(array(sort_array({src}{over})), "
+        f"__arr -> CASE WHEN size(__arr) = 0 THEN "
+        f"CAST(NULL AS {null_t}) ELSE {inner} END), 1)", close)
+
+
+@_calls("bitstring_agg", nargs=3)
+def _call_bitstring_agg(toks, i, parts, column_kinds):
+    # bitstring_agg(x, lo, hi) [measured]: a (hi-lo+1)-char
+    # '0'/'1' string, bit v-lo set per distinct value; NULLs
+    # skipped; a value outside [lo, hi] ERRORS; empty/all-NULL
+    # group → NULL. (The 1-arg form needs table statistics and
+    # errors in DuckDB for plain queries — left loud.)
+    _, close, spans = parts
+    x = _arg_text(toks, spans[0])
+    lo = _arg_text(toks, spans[1])
+    hi = _arg_text(toks, spans[2])
+    # trailing OVER (…) hoists onto the inner collect_set
+    # (valid window aggregate in DuckDB — measured r9)
+    over, close = _trailing_over(toks, close)
+    return (
+        f"element_at(transform(array(collect_set({x}){over}), __s -> "
+        f"CASE WHEN size(__s) = 0 THEN CAST(NULL AS STRING) "
+        f"WHEN exists(__s, __v -> __v < ({lo}) OR __v > ({hi})) "
+        f"THEN raise_error('bitstring_agg: value outside of "
+        f"provided min and max range') "
+        f"ELSE concat_ws('', transform(sequence({lo}, {hi}), "
+        f"__p -> if(array_contains(__s, __p), '1', '0'))) "
+        f"END), 1)", close)
+
+
+@_calls("quantile_cont", "median")
+def _call_quantile_cont(toks, i, parts, column_kinds):
+    name = toks[i].text.lower()
+    # DOUBLE/integer inputs: Spark's exact interpolating
+    # percentile()/median() match DuckDB exactly. DECIMAL inputs
+    # silently diverge [measured in DuckDB 1.0.0, judge probe
+    # r7]: quantile_cont returns a DECIMAL TRUNCATED TOWARD ZERO
+    # to the operand scale (1.625→1.62, -1.015→-1.01,
+    # 1.035→1.03 — not half-even), and median does NOT
+    # interpolate at all (lower-middle element: median of
+    # (1.0, 2.0) = 1.0, of (-1.0, -2.0) = -2.0). Reproduced
+    # via a sorted collect_list with a transform()-let binding —
+    # same buffering cost class as Spark's exact percentile.
+    # Schema-aware only for a bare decimal-kind column (the
+    # len()-dispatch convention); empty/all-NULL group → NULL
+    # in both engines.
+    _, close, spans = parts
+    first = _arg_text(toks, spans[0])
+    mdec = _decimal_kind(first, column_kinds)
+    qtext = (_arg_text(toks, spans[1])
+             if len(spans) == 2 else None)
+    q_ok = (name == "median" and len(spans) == 1) or (
+        qtext is not None
+        and (re.fullmatch(r"[0-9.]+", qtext)
+             or (qtext.startswith("[")
+                 and re.fullmatch(r"\[[0-9., ]+\]", qtext))))
+    if mdec and q_ok:
+        p, s = mdec
+        dec = f"DECIMAL({p},{s})"
+        unit = ("1" if s == 0 else "0." + "0" * (s - 1) + "1")
+
+        def _cont(q: str) -> str:
+            pos = f"(CAST(size(__arr) - 1 AS DECIMAL(20,0)) * {q})"
+            lo = f"element_at(__arr, CAST(floor({pos}) AS INT) + 1)"
+            hi = (f"element_at(__arr, CAST(ceiling({pos}) AS INT)"
+                  f" + 1)")
+            val = f"({lo} + ({hi} - {lo}) * ({pos} - floor({pos})))"
+            # truncate toward zero: decimal % keeps the sign of
+            # the dividend, so val - val % unit chops the tail
+            return (f"CAST({val} - ({val} % {unit}) AS {dec})")
+
+        if name == "median":
+            inner = ("element_at(__arr, "
+                     "CAST((size(__arr) + 1) DIV 2 AS INT))")
+        elif qtext.startswith("["):
+            qs = f"array({qtext[1:-1]})"
+            inner = f"transform({qs}, __q -> {_cont('__q')})"
+        else:
+            inner = _cont(qtext)
+        null_t = (f"ARRAY<{dec}>" if (name != "median"
+                  and qtext.startswith("[")) else dec)
+        # trailing FILTER (…) / OVER (…) must attach to the
+        # INNER aggregate (collect_list), not the element_at
+        # wrapper — otherwise Spark sees a non-window call and
+        # demands GROUP BY (or refuses FILTER on element_at)
+        over, close = _trailing_filter_over(toks, close)
+        return (
+            f"element_at(transform(array(sort_array("
+            f"collect_list({first}){over})), __arr -> "
+            f"CASE WHEN size(__arr) = 0 THEN "
+            f"CAST(NULL AS {null_t}) ELSE {inner} END), 1)", close)
+    if name == "quantile_cont":
+        return "percentile", i  # exact interpolated percentile
+    if (name == "median" and len(parts[2]) == 1
+            and _trailing_over(toks, parts[1])[0] != ""
+            and re.search(r"(?is)\bORDER\s+BY\b",
+                          _trailing_over(toks, parts[1])[0])):
+        # windowed median with ORDER BY / an explicit frame:
+        # Spark's median refuses window frames
+        # (INVALID_WINDOW_SPEC_FOR_AGGREGATION_FUNC) where
+        # DuckDB computes them [r10 verdict] — Spark's
+        # percentile(x, 0.5) is the same exact interpolating
+        # median and supports every frame; the OVER clause
+        # stays in place after the call
+        return (
+            f"percentile({_arg_text(toks, parts[2][0])}, 0.5)", parts[1])
+    # non-decimal median: Spark's own median() is identical
+
+
+@_calls("list_transform", "array_transform", "apply", "list_apply",
+        "array_apply", "list_filter", "array_filter", "filter", nargs=2)
+def _call_list_transform(toks, i, parts, column_kinds):
+    name = toks[i].text.lower()
+    # Spark transform()/filter() HOFs — plus DuckDB's alias fan
+    # (apply/array_apply/array_transform/array_filter/bare
+    # filter). Indexed two-parameter lambdas are 1-BASED in
+    # DuckDB and 0-based in Spark [measured: list_transform(
+    # [10,20,30], (x,i) -> x+i) → [11,22,33]; list_filter(
+    # [10,15,20,25], (x,i) -> i%2=0) → [15,25]] — a silent
+    # off-by-one (judge probe r7), fixed by substituting the
+    # index parameter with (i + 1) in the body (token-level;
+    # shadowing nested lambdas refuse loudly).
+    target = "filter" if "filter" in name else "transform"
+    _, close, spans = parts
+    lam = _arg_text(toks, spans[1])
+    lp = _lambda_parts(lam)
+    if lp is not None and len(lp[0]) == 2:
+        lst = _arg_text(toks, spans[0])
+        p1, p2 = lp[0]
+        body = _substitute_lambda_ident(lp[1], p2, f"({p2} + 1)")
+        # __hof_filter__ marker, not "filter": bare filter is a
+        # TRIGGER of this very branch and emitting it re-enters
+        # the fixpoint forever (the sign()→CAST(sign()) class);
+        # the keyword pass renames the marker at the end
+        emit = "__hof_filter__" if target == "filter" else target
+        return f"{emit}({lst}, ({p1}, {p2}) -> {body})", close
+    if name in ("list_transform", "list_filter", "array_transform",
+                "array_filter", "apply", "list_apply",
+                "array_apply") and lp is not None:
+        return target, i  # 1-param lambda: plain rename
+    # bare filter() with a 1-param lambda (or a non-lambda
+    # second argument) is already Spark-native — leave verbatim
+
+
+@_calls("union_value", "union_extract", "union_tag")
+def _call_union_value(toks, i, parts, column_kinds):
+    name = toks[i].text.lower()
+    # DuckDB UNION (sum) types have no Spark analog — refuse
+    # with guidance instead of a ':=' parse error (r11)
+    raise ValueError(
+        f"{name}: DuckDB UNION types are not supported — "
+        f"model the variant as a STRUCT of nullable fields "
+        f"and tag with a separate column")
+
+
+@_calls("struct_insert")
+def _call_struct_insert(toks, i, parts, column_kinds):
+    if len(parts[2]) >= 2:
+        # struct_insert(s, k := v, …) appends fields [measured:
+        # struct_insert({'a': 1}, b := 2) = {'a': 1, 'b': 2}];
+        # Spark has no := syntax and no generic field-append, so
+        # only LITERAL struct first arguments rewrite (brace
+        # literal → merged brace literal for the later struct
+        # pass; named_struct → extended named_struct); non-literal
+        # structs refuse loudly instead of PARSE_SYNTAX_ERROR.
+        _, close, spans = parts
+        base = _arg_text(toks, spans[0]).strip()
+        adds = []
+        ok_add = True
+        for sp in spans[1:]:
+            ma = re.match(r"(?is)^\s*([A-Za-z_]\w*)\s*:\s*=\s*(.+)$",
+                          _arg_text(toks, sp))
+            if ma is None:
+                ok_add = False
+                break
+            adds.append((ma.group(1), ma.group(2).strip()))
+        if ok_add and base.startswith("{") and base.endswith("}"):
+            inner = base[1:-1].strip()
+            pairs = ", ".join(f"'{k}': ({v})" for k, v in adds)
+            return ("{" + (inner + ", " if inner else "")
+                    + pairs + "}", close)
+        if ok_add and re.match(r"(?is)^named_struct\s*\(", base) \
+                and base.endswith(")"):
+            inner = base[base.index("(") + 1:-1].strip()
+            pairs = ", ".join(f"'{k}', ({v})" for k, v in adds)
+            return ("named_struct(" + (inner + ", " if inner
+                    else "") + pairs + ")", close)
+        if ok_add:
+            raise ValueError(
+                "struct_insert on a non-literal struct is not "
+                "supported — Spark SQL has no generic field "
+                "append; rebuild the struct with named_struct")
+
+
+@_calls("grouping")
+def _call_grouping(toks, i, parts, column_kinds):
+    if len(parts[2]) >= 2:
+        # multi-arg grouping(a, b) returns the combined BITMASK in
+        # DuckDB [measured r12: CUBE rows → 0/1/2/3, b is the LSB];
+        # Spark's grouping() is strictly 1-arg — grouping_id(a, b)
+        # is the exact equivalent (same bit order)
+        return "grouping_id", i
+
+
+@_calls("map")
+def _call_map_2(toks, i, parts, column_kinds):
+    # DuckDB map([keys], [values]) — Spark's two-array constructor
+    # is map_from_arrays (Spark's own map() takes interleaved args;
+    # the two-list form is the only call-shaped map() in DuckDB)
+    return "map_from_arrays", i
+
+
+@_calls("map_extract")
+def _call_map_extract(toks, i, parts, column_kinds):
+    # DuckDB map_extract returns a one-element LIST, so idiomatic
+    # DuckDB unwraps with [1]; Spark element_at returns the value
+    # directly — rename and swallow the unwrapping subscript.
+    _, close, spans = parts
+    inner = detokenize(toks[parts[0] + 1:close])
+    j = close + 1
+    while j < len(toks) and toks[j].kind in ("ws", "comment"):
+        j += 1
+    sub = [k for k in range(j, min(j + 3, len(toks)))]
+    if (len(sub) == 3 and toks[sub[0]].text == "["
+            and toks[sub[1]].kind == "num" and toks[sub[1]].text == "1"
+            and toks[sub[2]].text == "]"):
+        # try_element_at: a missing key is NULL in DuckDB's
+        # map_extract(m,k)[1] ([] subscripted), where ANSI
+        # element_at would throw; it also keeps the element_at
+        # map rewrite below from re-firing on this emission
+        return f"try_element_at({inner})", sub[2]
+    if len(spans) == 2:
+        # No [1] unwrap: preserve DuckDB's one-element-LIST shape
+        return _map_list_lookup(_arg_text(toks, spans[0]),
+                                _arg_text(toks, spans[1])), close
+    return f"map_extract({inner})", close  # wrong arity → loud
+
+
+@_calls("element_at", nargs=2)
+def _call_element_at(toks, i, parts, column_kinds):
+    # DuckDB element_at is a map_extract ALIAS: it returns a
+    # one-element LIST, [] on a missing key — not Spark's scalar
+    # (judge probe r6: element_at(m, missing) was NULL, DuckDB
+    # []). Rewritten only when the first argument is provably a
+    # MAP — a registered map-kind column or a map-constructor
+    # call — because Spark-dialect element_at-on-array text must
+    # keep Spark's scalar semantics. The emission uses
+    # try_element_at, so this branch never re-fires on itself
+    # (the old fixpoint-loop risk with map_extract's emission is
+    # gone for the same reason).
+    _, close, spans = parts
+    mp = _arg_text(toks, spans[0])
+    ky = _arg_text(toks, spans[1])
+    base = mp.strip().lower()
+    is_map = ((column_kinds or {}).get(base) == "map"
+              or (column_kinds or {}).get(
+                  base.rsplit(".", 1)[-1]) == "map"
+              or _MAP_CONSTRUCTOR_RE.match(base) is not None)
+    if is_map:
+        return _map_list_lookup(mp, ky), close
+
+
+@_calls("struct_pack")
+def _call_struct_pack(toks, i, parts, column_kinds):
+    # DuckDB struct_pack(a := x, b := y) → named_struct('a', x,
+    # 'b', y). Only the fully keyword-form call rewrites; anything
+    # else passes through and fails loudly in Spark analysis.
+    _, close, spans = parts
+    kv = []
+    for sp in spans:
+        m = re.match(r"\s*([A-Za-z_][A-Za-z0-9_]*)\s*:=\s*(.+)$",
+                     _arg_text(toks, sp), re.S)
+        if not m:
+            kv = None
+            break
+        kv.append(f"'{m.group(1)}', {m.group(2).strip()}")
+    if kv:
+        return f"named_struct({', '.join(kv)})", close
+
+
+@_calls("struct_extract")
+def _call_struct_extract(toks, i, parts, column_kinds):
+    # struct_extract(s, 'name') → (s).`name` — Spark's field
+    # access on a parenthesized expression (measured to parse for
+    # nested/backticked fields). Non-literal field names have no
+    # Spark equivalent and pass through loudly.
+    _, close, spans = parts
+    if len(spans) == 2:
+        m = re.fullmatch(r"'([^'`]*)'", _arg_text(toks, spans[1]))
+        if m:
+            return (
+                f"({_arg_text(toks, spans[0])}).`{m.group(1)}`", close)
+        # positional form (UNNAMED structs only in DuckDB —
+        # row(7,8)): the engine's row() builds Spark col1…
+        # auto-names, so 1-based position n is field `coln`;
+        # named structs fail loudly on the missing field (r9)
+        mi = re.fullmatch(r"(\d+)", _arg_text(toks,
+                                              spans[1]).strip())
+        if mi:
+            return (f"({_arg_text(toks, spans[0])})"
+                    f".`col{mi.group(1)}`", close)
+
+
+@_calls("flatten", nargs=1)
+def _call_flatten(toks, i, parts, column_kinds):
+    if (_arg_text(toks, parts[2][0]).strip() in
+            ("array()", "[]")):
+        # flatten([]) → [] in DuckDB; Spark's flatten rejects the
+        # untyped empty array (array<void> is not array<array>) (r9)
+        return "array()", parts[1]
+
+
+@_calls("__duck_upper__", "__duck_lower__", nargs=1)
+def _call_duck_upper(toks, i, parts, column_kinds):
+    name = toks[i].text.lower()
+    # DuckDB cases per-codepoint (utf8proc SIMPLE maps) vs the
+    # JVM's FULL maps — upper('straße') = 'STRAẞE' vs
+    # 'STRASSE', lower('ΑΣ') = 'ασ' vs final-sigma 'ας'
+    # [measured r9 over U+0020..U+2FFFF: 172/71 divergent
+    # codepoints, every DuckDB target single-codepoint].
+    # Inline translate sandwich: divergent sources swap to
+    # case-stable plane-16 private-use placeholders, the JVM
+    # cases the rest, placeholders map to DuckDB's target.
+    # Inlined (not a SQL temp function) because Spark forbids
+    # SQL UDFs inside Sort — ORDER BY lower(x) must work.
+    from .functions.casetables import (
+        LOWER_PUA, LOWER_SRC, LOWER_TGT,
+        UPPER_PUA, UPPER_SRC, UPPER_TGT)
+
+    a = _arg_text(toks, parts[2][0])
+    base, src, pua, tgt = (
+        ("__jvm_upper__", UPPER_SRC, UPPER_PUA, UPPER_TGT)
+        if name == "__duck_upper__"
+        else ("__jvm_lower__", LOWER_SRC, LOWER_PUA, LOWER_TGT))
+    return (f"translate({base}(translate({a}, '{src}', "
+            f"'{pua}')), '{pua}', '{tgt}')", parts[1])
+
+
+@_calls("flatten", nargs=1)
+def _call_flatten_2(toks, i, parts, column_kinds):
+    if "__fl__" not in _arg_text(toks, parts[2][0]):
+        # DuckDB flatten SKIPS NULL sub-lists ([[1,2],NULL,[3]] →
+        # [1,2,3]) while Spark's is NULL-poisoning [measured r9:
+        # flatten(NULL)=NULL, flatten([NULL])=[], element NULLs
+        # inside sub-lists survive] — drop NULL sub-lists first
+        a = _arg_text(toks, parts[2][0])
+        return (
+            f"flatten(filter({a}, __fl__ -> __fl__ IS NOT NULL))", parts[1])
+
+
+@_calls("regexp_matches", nargs=3)
+def _call_regexp_matches(toks, i, parts, column_kinds):
+    # 3-arg form carries DuckDB option flags; Spark regexp_like
+    # is 2-arg, so fold supported flags into the pattern as
+    # inline modifiers ((?i) etc). Unknown flags pass through
+    # and fail loudly in Spark analysis (3-arg regexp_like).
+    _, close, spans = parts
+    subj = _arg_text(toks, spans[0])
+    pat = _arg_text(toks, spans[1])
+    flags = _arg_text(toks, spans[2]).strip()
+    m = re.fullmatch(r"'([ismnp]+)'", flags)
+    if m:
+        # 'm'/'n'/'p' do NOT change ^$/. behavior in DuckDB
+        # 1.0 [measured r12: '^b$' with 'm' over 'a\nb' stays
+        # FALSE] — only i/s fold as inline modifiers
+        eff = "".join(c for c in m.group(1) if c in "is")
+        if eff:
+            text = (
+                f"regexp_like({subj}, '(?{eff})' || {pat})")
+        else:
+            text = f"regexp_like({subj}, {pat})"
+        return text, close
+
+
+@_calls("list_prepend", nargs=2)
+def _call_list_prepend(toks, i, parts, column_kinds):
+    # DuckDB list_prepend(elem, list) ↔ Spark array_prepend(list,
+    # elem) — swapped argument order
+    _, close, spans = parts
+    el = _arg_text(toks, spans[0])
+    lst = _arg_text(toks, spans[1])
+    return f"array_prepend({lst}, {el})", close
+
+
+@_calls("log", nargs=1)
+def _call_log(toks, i, parts, column_kinds):
+    # DuckDB 1-arg log() is LOG10; Spark's is ln — a silent
+    # wrong answer without the rewrite [measured log(100)=2].
+    # The 2-arg log(base, x) agrees and passes through.
+    _, close, spans = parts
+    return f"log10({_arg_text(toks, spans[0])})", close
+
+
+@_calls("sign", nargs=1)
+def _call_sign(toks, i, parts, column_kinds):
+    # DuckDB sign() returns INTEGER even for doubles [measured];
+    # Spark returns DOUBLE — cast for stringify parity. signum
+    # (Spark's alias) keeps the rewritten text from re-matching
+    # this rule on the fixpoint pass.
+    _, close, spans = parts
+    return (
+        f"CAST(signum({_arg_text(toks, spans[0])}) AS INT)", close)
+
+
+@_calls("dayofweek", "weekday", nargs=1)
+def _call_dayofweek(toks, i, parts, column_kinds):
+    # BOTH are 0-based-Sunday in DuckDB [measured: Thu=4, Sun=0].
+    # Spark's same-named builtins silently differ (dayofweek is
+    # 1-based Sunday, weekday 0-based MONDAY) — emitted via
+    # extract(DAYOFWEEK), which is not a rewrite trigger
+    _, close, spans = parts
+    e = _arg_text(toks, spans[0])
+    return f"(extract(DAYOFWEEK FROM {e}) - 1)", close
+
+
+@_calls("yearweek", nargs=1)
+def _call_yearweek(toks, i, parts, column_kinds):
+    # ISO year * 100 + ISO week [measured: 2024-12-30 -> 202501]
+    _, close, spans = parts
+    e = _arg_text(toks, spans[0])
+    return (f"(extract(YEAROFWEEK FROM {e}) * 100 + "
+            f"extract(WEEK FROM {e}))", close)
+
+
+@_calls("isoyear", nargs=1)
+def _call_isoyear(toks, i, parts, column_kinds):
+    _, close, spans = parts
+    e = _arg_text(toks, spans[0])
+    return f"extract(YEAROFWEEK FROM {e})", close
+
+
+@_calls("epoch_ns", "epoch_us", nargs=1)
+def _call_epoch_ns(toks, i, parts, column_kinds):
+    name = toks[i].text.lower()
+    # DATE args need the TIMESTAMP cast (r10: unix_micros(DATE)
+    # is a type mismatch; DuckDB accepts DATE for the whole
+    # epoch_* family)
+    _, close, spans = parts
+    e = _arg_text(toks, spans[0])
+    mul = " * 1000" if name == "epoch_ns" else ""
+    return f"(unix_micros(CAST({e} AS TIMESTAMP)){mul})", close
+
+
+@_calls("julian", nargs=1)
+def _call_julian(toks, i, parts, column_kinds):
+    # Julian Day, midnight-based [measured: DATE 2024-01-01 ->
+    # 2460311.0, noon -> +0.5] = days since epoch + 2440588
+    _, close, spans = parts
+    e = _arg_text(toks, spans[0])
+    # unix_micros keeps fractional seconds (third review:
+    # unix_timestamp truncated to whole seconds)
+    return (f"(CAST(unix_micros(CAST({e} AS TIMESTAMP)) "
+            f"AS DOUBLE) / 86400000000.0 + 2440588.0)", close)
+
+
+@_calls("decade", "millennium", nargs=1)
+def _call_decade(toks, i, parts, column_kinds):
+    name = toks[i].text.lower()
+    # decade = floor(year/10) [1999 -> 199]; millennium =
+    # ceil(year/1000) [999 -> 1, 2024 -> 3] — note the mixed
+    # floor/ceil, both measured
+    _, close, spans = parts
+    e = _arg_text(toks, spans[0])
+    if name == "decade":
+        text = f"CAST(floor(year({e}) / 10.0) AS BIGINT)"
+    else:
+        text = f"CAST(ceil(year({e}) / 1000.0) AS BIGINT)"
+    return text, close
+
+
+@_calls("age", nargs=1)
+def _call_age(toks, i, parts, column_kinds):
+    # DuckDB 1-arg age(ts) measures from current_timestamp
+    # [measured: the result carries the wall-clock time, not
+    # midnight]. The 2-arg form passes through to the session
+    # 'age' pandas UDF (functions/udfs.py) — 2 args, so this
+    # branch doesn't re-fire on its own emission.
+    _, close, spans = parts
+    e = _arg_text(toks, spans[0])
+    return f"age(current_timestamp(), {e})", close
+
+
+@_calls("century", nargs=1)
+def _call_century(toks, i, parts, column_kinds):
+    # measured: 2000 → 20, 2001/2024 → 21 (ceil of year/100)
+    _, close, spans = parts
+    e = _arg_text(toks, spans[0])
+    return f"CAST(ceil(year({e}) / 100.0) AS BIGINT)", close
+
+
+@_calls("to_base", nargs=3)
+def _call_to_base(toks, i, parts, column_kinds):
+    # 3-arg form zero-pads LEFT to the given length [measured
+    # r12: to_base(10, 2, 8) = '00001010']
+    _, close, spans = parts
+    x = _arg_text(toks, spans[0])
+    b = _arg_text(toks, spans[1])
+    ln = _arg_text(toks, spans[2])
+    return (
+        f"lpad((CASE WHEN ({x}) < 0 THEN raise_error('to_base:"
+        f" number must be greater than or equal to 0') "
+        f"ELSE conv({x}, 10, {b}) END), {ln}, '0')", close)
+
+
+@_calls("to_base", nargs=2)
+def _call_to_base_2(toks, i, parts, column_kinds):
+    # conv() matches DuckDB's uppercase digits [measured 'FF'];
+    # DuckDB REFUSES negatives where conv would silently return
+    # two's-complement digits (review r6) — keep the refusal
+    _, close, spans = parts
+    x = _arg_text(toks, spans[0])
+    b = _arg_text(toks, spans[1])
+    return (
+        f"(CASE WHEN ({x}) < 0 THEN raise_error('to_base: "
+        f"number must be greater than or equal to 0') "
+        f"ELSE conv({x}, 10, {b}) END)", close)
+
+
+@_calls("ord", "unicode", nargs=1)
+def _call_ord(toks, i, parts, column_kinds):
+    # full codepoint on both (ord('€')=8364), but DuckDB returns
+    # -1 on the EMPTY string where Spark ascii gives 0 (review r6)
+    _, close, spans = parts
+    s_ = _arg_text(toks, spans[0])
+    return (f"(CASE WHEN ({s_}) = '' THEN -1 "
+            f"ELSE ascii({s_}) END)", close)
+
+
+@_calls("epoch_ms", nargs=1)
+def _call_epoch_ms(toks, i, parts, column_kinds):
+    # overloaded in DuckDB: TIMESTAMP → BIGINT ms, BIGINT ms →
+    # TIMESTAMP (review r6). An integer-literal/arithmetic arg
+    # takes the reverse direction; else the timestamp form.
+    _, close, spans = parts
+    e_ = _arg_text(toks, spans[0]).strip()
+    if re.fullmatch(r"[\d\s+\-*/%()]+", e_):
+        text = f"timestamp_millis({e_})"
+    else:
+        text = f"unix_millis(CAST({e_} AS TIMESTAMP))"
+    return text, close
+
+
+@_calls("isfinite", "isinf", nargs=1)
+def _call_isfinite(toks, i, parts, column_kinds):
+    name = toks[i].text.lower()
+    _, close, spans = parts
+    e = _arg_text(toks, spans[0])
+    # DATE/TIMESTAMP args: DuckDB has ±infinity dates, which
+    # the engine cannot represent (parquet can't store them) —
+    # every representable temporal is finite, so isfinite is
+    # TRUE / isinf FALSE with NULL-in → NULL-out [measured r9]
+    e_strip = e.strip()
+    is_temporal = bool(
+        re.match(r"(?is)^(?:DATE|TIMESTAMP(?:TZ)?)\s*'", e_strip)
+        or re.search(r"(?is)::\s*(?:DATE|TIMESTAMP(?:TZ)?)\s*$",
+                     e_strip)
+        or (re.fullmatch(r"[A-Za-z_]\w*", e_strip)
+            and (column_kinds or {}).get(e_strip.lower())
+            in ("date", "timestamp")))
+    if is_temporal:
+        val = "FALSE" if name == "isinf" else "TRUE"
+        return (f"(CASE WHEN {e} IS NULL THEN NULL "
+                f"ELSE {val} END)", close)
+    d = f"CAST({e} AS DOUBLE)"
+    inf = f"(isnan({d}) OR abs({d}) = CAST('inf' AS DOUBLE))"
+    body = (f"(abs({d}) = CAST('inf' AS DOUBLE))"
+            if name == "isinf" else f"(NOT {inf})")
+    # NULL in → NULL out on both engines [measured]
+    return (f"(CASE WHEN {e} IS NULL THEN NULL "
+            f"ELSE {body} END)", close)
+
+
+@_calls("dayname", "monthname", nargs=1)
+def _call_dayname(toks, i, parts, column_kinds):
+    name = toks[i].text.lower()
+    _, close, spans = parts
+    e = _arg_text(toks, spans[0])
+    fmt = "EEEE" if name == "dayname" else "MMMM"
+    return f"date_format({e}, '{fmt}')", close
+
+
+@_calls("date_sub", nargs=3)
+def _call_date_sub(toks, i, parts, column_kinds):
+    # DuckDB date_sub(part, a, b) = COMPLETE parts in the
+    # interval [measured: ('hour', 00:00, 05:30) = 5] — true
+    # elapsed-time division, unlike date_diff's boundary count.
+    # Spark's own 2-arg date_sub(date, n) is untouched.
+    _, close, spans = parts
+    unit = _arg_text(toks, spans[0]).strip().strip("'").lower()
+    a = _arg_text(toks, spans[1])
+    b = _arg_text(toks, spans[2])
+    per = {"second": 1, "minute": 60, "hour": 3600,
+           "day": 86400, "week": 604800}.get(unit)
+    months_per = {"month": 1, "quarter": 3, "year": 12,
+                  "decade": 120, "century": 1200,
+                  "millennium": 12000}.get(unit)
+    if per is None and months_per is not None:
+        # calendar-variable parts (r9) [measured: ('month',
+        # 01-31, 02-29) = 1 — day-clamped completeness;
+        # ('year', 2020-06-01, 2024-05-31) = 3; reversed = -1,
+        # truncation toward zero]: Spark's months_between
+        # shares the clamped/last-day rule, CAST truncates
+        mb = (f"months_between(CAST({b} AS TIMESTAMP), "
+              f"CAST({a} AS TIMESTAMP))")
+        if months_per == 1:
+            text = f"CAST({mb} AS BIGINT)"
+        else:
+            text = (
+                f"(CAST({mb} AS BIGINT) DIV {months_per})")
+        return text, close
+    if per is None:
+        raise NotImplementedError(
+            f"date_sub({unit!r}, ...): unknown part")
+    # CAST truncates toward zero, matching DuckDB's complete-
+    # parts rule for reversed intervals (measured -5, not
+    # floor's -6 — review r6)
+    return (
+        f"CAST((unix_micros(CAST({b} AS TIMESTAMP)) - "
+        f"unix_micros(CAST({a} AS TIMESTAMP))) / "
+        f"({per} * 1000000.0) AS BIGINT)", close)
+
+
+@_calls("array_slice", nargs=3)
+def _call_array_slice(toks, i, parts, column_kinds):
+    # function form of [a:b] — same 1-based inclusive bounds,
+    # negatives from the end, 0 start clamps, 0 end empties;
+    # bounds may be runtime expressions here, so the arithmetic
+    # is emitted unconditionally
+    _, close, spans = parts
+    l_ = _arg_text(toks, spans[0])
+    a = _arg_text(toks, spans[1])
+    b = _arg_text(toks, spans[2])
+    lt = l_.strip()
+    if (lt.startswith("'") and lt.endswith("'")) or \
+            (column_kinds or {}).get(lt.lower()) == "string":
+        # STRING slicing [measured: ('hello',2,3) → 'el',
+        # (-3,-1) → 'llo', NULL bound → NULL] — substr with the
+        # same 1-based inclusive arithmetic; size() on a string
+        # would fail analysis
+        s = (f"(CASE WHEN ({a}) < 0 THEN "
+             f"greatest(length({l_}) + ({a}) + 1, 1) "
+             f"WHEN ({a}) = 0 THEN 1 ELSE ({a}) END)")
+        en = (f"(CASE WHEN ({b}) < 0 THEN "
+              f"length({l_}) + ({b}) + 1 ELSE ({b}) END)")
+        # keyword form dodges the substr phantom-position
+        # rewrite (the clamped start is never 0 anyway); a NULL
+        # bound is NULL in DuckDB where greatest(NULL, 0) would
+        # silently empty the result (r7 probe)
+        return (f"(CASE WHEN ({a}) IS NULL OR ({b}) IS NULL "
+                f"THEN NULL ELSE substring({l_} FROM {s} "
+                f"FOR greatest({en} - {s} + 1, 0)) END)", close)
+    s = (f"(CASE WHEN ({a}) < 0 THEN "
+         f"greatest(size({l_}) + ({a}) + 1, 1) "
+         f"WHEN ({a}) = 0 THEN 1 ELSE ({a}) END)")
+    en = (f"(CASE WHEN ({b}) < 0 THEN size({l_}) + ({b}) + 1 "
+          f"ELSE ({b}) END)")
+    # NULL bound → NULL [measured], not the empty list that
+    # greatest(NULL, 0) = 0 would silently produce (r7 probe)
+    return (
+        f"(CASE WHEN ({a}) IS NULL OR ({b}) IS NULL THEN NULL "
+        f"ELSE slice({l_}, {s}, greatest({en} - {s} + 1, 0)) "
+        f"END)", close)
+
+
+@_calls("list_select", nargs=2)
+def _call_list_select(toks, i, parts, column_kinds):
+    # index 0, negative and out-of-range all yield NULL in
+    # DuckDB [measured]; ANSI element_at would throw on 0 and
+    # wrap on negatives (review r6)
+    _, close, spans = parts
+    l_ = _arg_text(toks, spans[0])
+    idx = _arg_text(toks, spans[1])
+    return (
+        f"transform({idx}, __li -> CASE WHEN __li IS NULL "
+        f"OR __li <= 0 THEN NULL "
+        f"ELSE try_element_at({l_}, __li) END)", close)
+
+
+@_calls("list_where", nargs=2)
+def _call_list_where(toks, i, parts, column_kinds):
+    _, close, spans = parts
+    l_ = _arg_text(toks, spans[0])
+    mk = _arg_text(toks, spans[1])
+    return (
+        f"transform(filter(zip_with({l_}, {mk}, "
+        f"(__lv, __lm) -> named_struct('v', __lv, 'm', __lm)), "
+        f"__lp -> __lp.m), __lp -> __lp.v)", close)
+
+
+@_calls("list_grade_up", nargs=1)
+def _call_list_grade_up(toks, i, parts, column_kinds):
+    # indices that would sort the list ascending; ties keep
+    # original order [measured [30,10,20,10] → [2,4,3,1]] —
+    # struct sort on (null-flag, value, index): DuckDB sorts
+    # NULL VALUES LAST [measured [30,NULL,10] → [3,1,2]] while
+    # Spark's struct compare would put null fields first
+    # (review r6), so an explicit flag leads the key
+    _, close, spans = parts
+    l_ = _arg_text(toks, spans[0])
+    return (
+        f"transform(array_sort(zip_with({l_}, "
+        f"sequence(1, size({l_})), "
+        f"(__gv, __gi) -> named_struct("
+        f"'n', CASE WHEN __gv IS NULL THEN 1 ELSE 0 END, "
+        f"'v', __gv, 'i', __gi))), "
+        f"__gp -> __gp.i)", close)
+
+
+@_calls("json_extract_string", "json_extract_path_text", nargs=2)
+def _call_json_extract_string(toks, i, parts, column_kinds):
+    # raw (unquoted) scalar extraction — get_json_object for
+    # the common literal-'$'-path case [measured: '$.c.d' →
+    # 'x', numbers stringify, missing → NULL]; every other
+    # path form (bare key, integer index, '/a/b' pointer, a
+    # non-literal path expression — get_json_object requires a
+    # foldable '$' path) routes through the session UDF that
+    # implements DuckDB's full path grammar (r9).
+    _, close, spans = parts
+    j = _arg_text(toks, spans[0])
+    pth = _arg_text(toks, spans[1])
+    if pth.startswith("[") and pth.endswith("]"):
+        # VARCHAR[] overload → element-wise fan-out (review
+        # r9 #4 — the scalar route stringified the list)
+        lt = tokenize(pth)
+        lspans = split_args(lt, 0, len(lt) - 1)
+        elems = [detokenize(lt[a:b]).strip() for a, b in lspans]
+        calls = ", ".join(
+            f"__json_extract_string__({j}, "
+            f"CAST({p_} AS STRING))" for p_ in elems)
+        text = f"array({calls})"
+    elif re.fullmatch(r"'\$(?:[^']|'')*'", pth) \
+            and "[*]" in pth:
+        # '$…[*]…' wildcard returns a LIST of nodes (r12)
+        text = f"__json_extract_string_wild__({j}, {pth})"
+    elif re.fullmatch(r"'\$(?:[^']|'')*'", pth):
+        text = f"get_json_object({j}, {pth})"
+    else:
+        text = (f"__json_extract_string__({j}, "
+                f"CAST({pth} AS STRING))")
+    return text, close
+
+
+@_calls("json_extract", "json_type", "json_extract_path", nargs=2)
+def _call_json_extract(toks, i, parts, column_kinds):
+    name = toks[i].text.lower()
+    # quote-KEEPING extraction / node typing — session UDFs
+    # with DuckDB's measured path grammar and yyjson number
+    # re-rendering (functions/udfs.py). A list-of-paths literal
+    # second argument fans out to array(...) like DuckDB's
+    # VARCHAR[] overload.
+    _, close, spans = parts
+    j = _arg_text(toks, spans[0])
+    pth = _arg_text(toks, spans[1])
+    fn = ("__json_type__" if name == "json_type"
+          else "__json_extract__")  # dunder names: the public
+    # spellings re-match this branch and would wrap forever
+    if pth.startswith("[") and pth.endswith("]"):
+        lt = tokenize(pth)
+        lspans = split_args(lt, 0, len(lt) - 1)
+        elems = [detokenize(lt[a:b]).strip() for a, b in lspans]
+        calls = ", ".join(
+            f"{fn}({j}, CAST({p_} AS STRING))" for p_ in elems)
+        text = f"array({calls})"
+    elif (fn == "__json_extract__" and "[*]" in pth
+            and pth.startswith("'") and pth.endswith("'")):
+        # '$…[*]…' wildcard returns a LIST of nodes (r12)
+        text = f"__json_extract_wild__({j}, {pth})"
+    else:
+        text = f"{fn}({j}, CAST({pth} AS STRING))"
+    return text, close
+
+
+@_calls("json_type", nargs=1)
+def _call_json_type(toks, i, parts, column_kinds):
+    # 1-arg form types the whole document — same as path '$'
+    # [measured]
+    _, close, spans = parts
+    j = _arg_text(toks, spans[0])
+    return f"__json_type__({j}, '$')", close
+
+
+@_calls("json_array_length", nargs=2)
+def _call_json_array_length(toks, i, parts, column_kinds):
+    # DuckDB's 2-arg (json, path) form — Spark's takes only the
+    # array text, so extract first
+    _, close, spans = parts
+    j = _arg_text(toks, spans[0])
+    pth = _arg_text(toks, spans[1])
+    return (
+        f"json_array_length(get_json_object({j}, {pth}))", close)
+
+
+@_calls("json_object")
+def _call_json_object(toks, i, parts, column_kinds):
+    if (len(parts[2]) % 2 == 0 and parts[2]):
+        # key/value pairs → to_json(named_struct(...)) [measured
+        # output shape {\"k\":7,\"s\":\"x\"}]
+        _, close, spans = parts
+        args = [_arg_text(toks, s) for s in parts[2]]
+        return f"__to_json__(named_struct({', '.join(args)}))", close
+
+
+@_calls("json_array")
+def _call_json_array(toks, i, parts, column_kinds):
+    if parts[2]:
+        # per-ELEMENT json conversion (r10): Spark arrays are
+        # typed, so the old array()-based emission was a loud
+        # analysis error on mixed args where DuckDB coerces each
+        # element independently [measured: json_array(1, 'a') →
+        # '[1,"a"]', NULL args → literal null]
+        _, close, spans = parts
+        args = [_arg_text(toks, s) for s in parts[2]]
+        # json_quote re-enters the fixpoint and picks up the
+        # scalar-accepting to_json wrap for each element
+        elems = ", ".join(
+            f"coalesce(json_quote({a}), 'null')" for a in args)
+        return f"concat('[', concat_ws(',', {elems}), ']')", close
+
+
+@_calls("json_array", nargs=0)
+def _call_json_array_2(toks, i, parts, column_kinds):
+    return "'[]'", parts[1]  # zero-arg form [measured]
+
+
+@_calls("json_valid", nargs=1)
+def _call_json_valid(toks, i, parts, column_kinds):
+    # measured: 'null' and bare scalars are VALID json; NULL in
+    # → NULL out. get_json_object(j, '$') is NULL for both
+    # invalid json AND the json literal null — disambiguate the
+    # latter with a trimmed-text check.
+    _, close, spans = parts
+    j = _arg_text(toks, spans[0])
+    return (
+        f"(CASE WHEN {j} IS NULL THEN NULL "
+        f"WHEN trim({j}) = 'null' THEN true "
+        f"ELSE get_json_object({j}, '$') IS NOT NULL END)", close)
+
+
+@_calls("regexp_extract_all", nargs=2)
+def _call_regexp_extract_all(toks, i, parts, column_kinds):
+    # Spark requires the group index; DuckDB defaults to 0
+    _, close, spans = parts
+    s = _arg_text(toks, spans[0])
+    r = _arg_text(toks, spans[1])
+    return f"regexp_extract_all({s}, {r}, 0)", close
+
+
+@_calls("product", nargs=1)
+def _call_product(toks, i, parts, column_kinds):
+    # exact fold over the group (exp/sum(ln) would break on zeros
+    # and negatives); collect_list drops NULLs like DuckDB's agg;
+    # empty/all-NULL group is NULL in DuckDB, not the seed
+    # (review r6). A trailing OVER hoists onto the inner
+    # collect_list (r11: the windowed form parse-errored).
+    _, close, spans = parts
+    x = _arg_text(toks, spans[0])
+    over, close = _trailing_filter_over(toks, close)
+    cl = f"collect_list(CAST({x} AS DOUBLE)){over}"
+    return (
+        f"(CASE WHEN size({cl}) = 0 THEN NULL ELSE "
+        f"aggregate({cl}, CAST(1.0 AS DOUBLE), "
+        f"(acc, v) -> acc * v) END)", close)
+
+
+@_calls("first", "last", "any_value")
+def _call_first(toks, i, parts, column_kinds):
+    name = toks[i].text.lower()
+    if parts[2]:
+        # ordered first/last: first(x ORDER BY y) is the x of the
+        # minimum y — exactly min_by/max_by [measured]; DESC flips.
+        # any_value rides the same shape but SKIPS NULL values
+        # [measured r12: any_value(v ORDER BY k DESC) over
+        # ((1,7),(2,NULL),(4,9)) → 9] — a value-null flag leads
+        # its sort struct so NULL values always lose.
+        # The plain (unordered) forms pass through — arbitrary-order
+        # in both engines. Trailing FILTER clauses stay outside
+        # (valid on min_by/max_by). NOTE: the whole inner text, not
+        # arg spans — a multi-key ORDER BY's commas split the spans.
+        _, close, spans = parts
+        inner = detokenize(toks[parts[0] + 1:close]).strip()
+        mob = re.match(
+            r"^(?P<e>.+?)\s+ORDER\s+BY\s+(?P<k>.+?)"
+            r"(?:\s+(?P<dir>ASC|DESC))?\s*$",
+            inner, re.IGNORECASE | re.DOTALL)
+        if mob:
+            desc = (mob.group("dir") or "").upper() == "DESC"
+            key = mob.group("k").strip()
+            keys = split_top_commas(key)
+            if len(keys) > 1 and (desc or re.search(
+                    r"\b(ASC|DESC)\b", key, re.IGNORECASE)):
+                # per-key directions can't map onto one min_by/max_by
+                # struct (third review: a trailing DESC silently
+                # inverted the PRIMARY key) — refuse loudly
+                raise ValueError(
+                    f"{name}(… ORDER BY <multiple keys with "
+                    f"directions>) is not rewritable — use a single "
+                    f"key or uniform ASC: {key!r}")
+            # NULLS LAST is DuckDB's default for BOTH directions, but
+            # Spark min_by/max_by IGNORE NULL ordering keys (third
+            # review: last() must be able to pick a NULL-keyed row).
+            # A null flag rides in front of each key inside the
+            # struct; DESC flips which extreme carries the flag.
+            def _flagged(flag_when_null: str) -> str:
+                parts_k = []
+                for k in keys:
+                    k = k.strip()
+                    parts_k.append(f"(CASE WHEN ({k}) IS NULL THEN "
+                                   f"{flag_when_null} ELSE "
+                                   f"{1 - int(flag_when_null)} END)")
+                    parts_k.append(k)
+                return "struct(" + ", ".join(parts_k) + ")"
+
+            e = mob.group("e").strip()
+            if not desc:
+                sk = _flagged("1")  # NULLs sort AFTER non-NULLs
+                fn = "min_by" if name != "last" else "max_by"
+            else:
+                sk = _flagged("0")  # flag 0 so max=non-NULL extreme
+                fn = "max_by" if name != "last" else "min_by"
+            if name == "any_value":
+                vf = "1" if not desc else "0"
+                sk = (f"struct((CASE WHEN ({e}) IS NULL THEN {vf} "
+                      f"ELSE {1 - int(vf)} END), "
+                      + sk[len("struct("):])
+            # marker spelling: ordered first/last must KEEP a NULL
+            # value at the winning key (r10: the arg_max NULL-skip
+            # wrap would re-capture a plain min_by emission)
+            return f"__duck_{fn}__({e}, {sk})", close
+
+
+@_calls("any_value", nargs=1)
+def _call_any_value(toks, i, parts, column_kinds):
+    # bare any_value SKIPS NULLs in DuckDB [measured r12:
+    # any_value(v) over ((NULL),(7)) → 7]; Spark's 1-arg form
+    # keeps the first value, NULL included — a silent wrong
+    # value on an everyday aggregate (VERDICT r11 #2). Spark's
+    # 2-arg any_value(x, true) is the exact semantic; DISTINCT
+    # is a no-op for "pick any non-NULL" and is stripped.
+    _, close, spans = parts
+    inner = detokenize(toks[parts[0] + 1:close]).strip()
+    inner = re.sub(r"(?is)^DISTINCT\s+", "", inner)
+    return f"any_value(({inner}), true)", close
+
+
+@_calls("fsum", "favg", "kahan_sum", "sumkahan", nargs=1)
+def _call_fsum(toks, i, parts, column_kinds):
+    name = toks[i].text.lower()
+    # Kahan-compensated float aggregates: the compensation is an
+    # accuracy detail — DOUBLE sum/avg is the semantic
+    _, close, spans = parts
+    e = _arg_text(toks, spans[0])
+    fn = "avg" if name == "favg" else "sum"
+    return f"{fn}(CAST({e} AS DOUBLE))", close
+
+
+@_calls("left", "right", nargs=2)
+def _call_left(toks, i, parts, column_kinds):
+    name = toks[i].text.lower()
+    # NEGATIVE counts mean "all but n from the other end" in
+    # DuckDB [measured: left('abcde', -2) = 'abc',
+    # right('abcde', -2) = 'cde'] — Spark returns '' there.
+    # substring-only emissions (left/right would re-trigger).
+    _, close, spans = parts
+    s = _arg_text(toks, spans[0])
+    n = _arg_text(toks, spans[1])
+    if name == "left":
+        body = (f"(CASE WHEN ({n}) < 0 THEN substring({s} FROM 1 "
+                f"FOR greatest(length({s}) + ({n}), 0)) "
+                f"ELSE substring({s} FROM 1 FOR {n}) END)")
+    else:
+        body = (f"(CASE WHEN ({n}) < 0 THEN "
+                f"substring({s} FROM 1 - ({n})) "
+                f"ELSE substring({s} FROM "
+                f"greatest(length({s}) - ({n}) + 1, 1)) END)")
+    return body, close
+
+
+@_calls("substr", "substring", nargs=3)
+def _call_substr(toks, i, parts, column_kinds):
+    # DuckDB's 3-arg substr works on a POSITION LINE [measured
+    # matrix r12]: a negative start means len(s)+start+1, then
+    # the window is [p, p+L) for L >= 0 and [p+L, p) for L < 0
+    # (negative length extends LEFT of start — substr('hello',
+    # 2, -1) = 'h', (3,-2) = 'he', (6,-3) = 'llo'), clipped to
+    # the string; start 0 counts the nonexistent position 0
+    # against the length (substr('abcde',0,3) = 'ab'). Spark
+    # returns '' for any negative length and treats start 0 as
+    # 1 — silent wrong values (VERDICT r11 #3). Literal
+    # start >= 1 with literal length >= 0 agrees and stays
+    # native; everything else takes the windowed form.
+    _, close, spans = parts
+    s = _arg_text(toks, spans[0])
+    st = _arg_text(toks, spans[1]).strip()
+    ln = _arg_text(toks, spans[2]).strip()
+    lit_st = re.fullmatch(r"[+-]?\d+", st)
+    lit_ln = re.fullmatch(r"[+-]?\d+", ln)
+    if lit_st and lit_ln and int(st) >= 1 and int(ln) >= 0:
+        body = f"substring({s} FROM {st} FOR {ln})"
+    else:
+        p = (f"(CASE WHEN ({st}) < 0 THEN length({s}) + ({st})"
+             f" + 1 ELSE ({st}) END)")
+        a = (f"greatest(CASE WHEN ({ln}) >= 0 THEN {p} "
+             f"ELSE {p} + ({ln}) END, 1)")
+        b = (f"least(CASE WHEN ({ln}) >= 0 THEN {p} + ({ln}) "
+             f"- 1 ELSE {p} - 1 END, length({s}))")
+        # explicit NULL guard: greatest/least IGNORE NULL args,
+        # so a NULL start/length would otherwise clamp to 1/end
+        body = (f"(CASE WHEN ({st}) IS NULL OR ({ln}) IS NULL "
+                f"THEN CAST(NULL AS STRING) "
+                f"WHEN ({b}) < ({a}) THEN '' ELSE "
+                f"substring({s} FROM {a} FOR ({b}) - ({a}) "
+                f"+ 1) END)")
+    return body, close
+    # FROM/FOR keyword form everywhere above: a comma'd 3-arg
+    # substring emission would re-enter this very rewrite
+
+
+@_calls("split_part", nargs=3)
+def _call_split_part(toks, i, parts, column_kinds):
+    # DuckDB's split_part NULL/zero matrix [measured r12]:
+    # NULL separator → the WHOLE string; NULL string, NULL or
+    # 0 index, and any out-of-range index (either sign) → ''
+    # — it never returns NULL and never errors. Spark's
+    # split_part NULLs on NULL input and THROWS
+    # INVALID_INDEX_OF_ZERO on 0. Emitted over split() +
+    # try_element_at (no split_part in the output — this very
+    # branch would re-trigger); \Q…\E quotes the separator so
+    # a dynamic one stays literal.
+    _, close, spans = parts
+    s = _arg_text(toks, spans[0])
+    sep = _arg_text(toks, spans[1])
+    ix = _arg_text(toks, spans[2])
+    return (
+        f"(CASE WHEN ({sep}) IS NULL THEN ({s}) "
+        f"WHEN ({s}) IS NULL OR ({ix}) IS NULL "
+        f"OR ({ix}) = 0 THEN '' "
+        f"ELSE coalesce(try_element_at(split({s}, "
+        f"concat('\\\\Q', {sep}, '\\\\E'), -1), "
+        f"CAST(({ix}) AS INT)), '') END)", close)
+
+
+@_calls("ltrim", "rtrim", "trim", nargs=2)
+def _call_ltrim(toks, i, parts, column_kinds):
+    name = toks[i].text.lower()
+    # 2-arg trim family: DuckDB is (string, trim_chars) but
+    # Spark's 2-arg forms are (trim_chars, string) — REVERSED;
+    # passing through silently trims the wrong operand
+    # (ltrim('xxaxx','x') returned '' instead of 'axx'). Emitted
+    # as the TRIM(LEADING … FROM …) keyword form — a swapped
+    # 2-arg emission would re-trigger this rewrite forever.
+    _, close, spans = parts
+    s = _arg_text(toks, spans[0])
+    chars = _arg_text(toks, spans[1])
+    side = {"ltrim": "LEADING", "rtrim": "TRAILING",
+            "trim": "BOTH"}[name]
+    return f"TRIM({side} {chars} FROM {s})", close
+
+
+# NOTE element_at on a provably-MAP argument now rewrites to the
+# one-element-LIST form above (r7); on anything else it keeps
+# Spark's scalar semantics — the unresolvable-expression residue
+# is documented in SURVEY §2.4.
+@_calls("constant_or_null", nargs=2)
+def _call_constant_or_null(toks, i, parts, column_kinds):
+    # returns arg1 unless arg2 is NULL [measured]
+    _, close, spans = parts
+    a = _arg_text(toks, spans[0])
+    b = _arg_text(toks, spans[1])
+    return (f"(CASE WHEN ({b}) IS NULL THEN NULL "
+            f"ELSE ({a}) END)", close)
+
+
+@_calls("multiply", "subtract", "add", nargs=2)
+def _call_multiply(toks, i, parts, column_kinds):
+    name = toks[i].text.lower()
+    # operator-function spellings (type-safe, unlike divide()
+    # whose //-semantics depend on operand types — left loud)
+    _, close, spans = parts
+    a = _arg_text(toks, spans[0])
+    b = _arg_text(toks, spans[1])
+    op = {"multiply": "*", "subtract": "-", "add": "+"}[name]
+    return f"(({a}) {op} ({b}))", close
+
+
+@_calls("fmod", nargs=2)
+def _call_fmod(toks, i, parts, column_kinds):
+    # FLOORED modulo [measured: fmod(-7.5, 2.0) = 0.5 where C
+    # fmod and Spark % give -1.5]; result DOUBLE
+    _, close, spans = parts
+    a = _arg_text(toks, spans[0])
+    b = _arg_text(toks, spans[1])
+    return (f"CAST(CASE WHEN ({b}) = 0 THEN NULL ELSE "
+            f"((({a}) % ({b})) + ({b})) % ({b}) END "
+            f"AS DOUBLE)", close)
+
+
+@_calls("fdiv", nargs=2)
+def _call_fdiv(toks, i, parts, column_kinds):
+    # floored division, DOUBLE result [measured:
+    # fdiv(-7.5, 2.0) = -4.0]
+    _, close, spans = parts
+    a = _arg_text(toks, spans[0])
+    b = _arg_text(toks, spans[1])
+    # zero divisor → NULL [measured r12: fdiv(5.0, 0.0) is
+    # NULL, not inf — DuckDB floors a NULL-safe division]
+    return (f"CAST(CASE WHEN ({b}) = 0 THEN NULL ELSE "
+            f"floor(({a}) / ({b})) END AS DOUBLE)", close)
+
+
+@_calls("quantile_disc", "quantile", nargs=2)
+def _call_quantile_disc(toks, i, parts, column_kinds):
+    if _arg_text(toks, parts[2][1]).lstrip().startswith("["):
+        # bare quantile() is DuckDB's quantile_disc ALIAS [measured]
+        # array-of-quantiles form: same ceil(n*q) index rule applied
+        # per element via transform — Spark allows the aggregate
+        # inside the lambda since the lambda maps a literal array
+        _, close, spans = parts
+        x = _arg_text(toks, spans[0])
+        qq = _arg_text(toks, spans[1])
+        over, close = _trailing_filter_over(toks, close)
+        cl = f"collect_list({x}){over}"
+        return (
+            f"transform({qq}, __q -> try_element_at(array_sort({cl}), "
+            f"greatest(CAST(ceil(size({cl}) * __q) AS INT), 1)))", close)
+
+
+@_calls("quantile_disc", "quantile", nargs=2)
+def _call_quantile_disc_2(toks, i, parts, column_kinds):
+    # DuckDB discrete quantile: the element at index ceil(n*q),
+    # clamped to >= 1, of the sorted group [measured across
+    # n=3..11 x q=0.1..0.9 — floor((n-1)q)+1 diverges at e.g.
+    # n=7 q=0.75; fuzz seed 269 caught it]. Empty/all-NULL
+    # group: clamped index 1 on [] → try_element_at NULL,
+    # matching DuckDB; ANSI mode rejects index 0 outright.
+    _, close, spans = parts
+    x = _arg_text(toks, spans[0])
+    qq = _arg_text(toks, spans[1])
+    over, close = _trailing_filter_over(toks, close)
+    cl = f"collect_list({x}){over}"
+    return (
+        f"try_element_at(array_sort({cl}), greatest("
+        f"CAST(ceil(size({cl}) * ({qq})) AS INT), 1))", close)
+
+
+@_calls("entropy", nargs=1)
+def _call_entropy(toks, i, parts, column_kinds):
+    # Shannon entropy (log2) of the group's value distribution
+    # [measured: (1,1,2,3) → 1.5]; NULLs ignored by both
+    _, close, spans = parts
+    x = _arg_text(toks, spans[0])
+    over, close = _trailing_filter_over(toks, close)
+    cl = f"collect_list({x}){over}"
+    n = f"CAST(size({cl}) AS DOUBLE)"
+    return (
+        f"aggregate(transform(array_distinct({cl}), "
+        f"__ev -> CAST(size(filter({cl}, __ey -> __ey = __ev)) "
+        f"AS DOUBLE)), CAST(0.0 AS DOUBLE), "
+        f"(__acc, __c) -> __acc - (__c / {n}) * log2(__c / {n}))", close)
+
+
+@_calls("histogram", nargs=1)
+def _call_histogram(toks, i, parts, column_kinds):
+    # DuckDB histogram(x) → MAP(value → count), keys sorted
+    # [measured]; counts BIGINT-cast for stable stringify;
+    # empty/all-NULL group is NULL, not {} (review r6)
+    _, close, spans = parts
+    x = _arg_text(toks, spans[0])
+    over, close = _trailing_filter_over(toks, close)
+    cl = f"collect_list({x}){over}"
+    return (
+        f"(CASE WHEN size({cl}) = 0 THEN NULL ELSE "
+        f"map_from_entries(transform(array_sort("
+        f"array_distinct({cl})), __hv -> struct(__hv, "
+        f"CAST(size(filter({cl}, __hy -> __hy = __hv)) "
+        f"AS BIGINT)))) END)", close)
+
+
+@_calls("list_histogram", nargs=1)
+def _call_list_histogram(toks, i, parts, column_kinds):
+    # list variant of histogram [measured r11: NULL elements
+    # skip, keys sorted, empty/NULL list → NULL]
+    _, close, spans = parts
+    lraw = _arg_text(toks, spans[0])
+    lst = f"filter({lraw}, __hn -> __hn IS NOT NULL)"
+    return (
+        f"(CASE WHEN ({lraw}) IS NULL OR size({lst}) = 0 "
+        f"THEN NULL ELSE "
+        f"map_from_entries(transform(array_sort("
+        f"array_distinct({lst})), __hv -> struct(__hv, "
+        f"CAST(size(filter({lst}, __hy -> __hy = __hv)) "
+        f"AS BIGINT)))) END)", close)
+
+
+@_calls("time_bucket")
+def _call_time_bucket(toks, i, parts, column_kinds):
+    if len(parts[2]) in (2, 3):
+        rewritten = _time_bucket_expr(toks, parts, column_kinds)
+        if rewritten is not None:
+            return rewritten, parts[1]
+
+
+@_calls("list_unique", nargs=1)
+def _call_list_unique(toks, i, parts, column_kinds):
+    # DuckDB: COUNT of distinct non-null elements [measured]:
+    # [1,NULL,NULL,2] → 2, NULL list → NULL, [] → 0
+    _, close, spans = parts
+    lst = _arg_text(toks, spans[0])
+    return (
+        f"CAST(size(array_distinct(filter({lst}, "
+        f"__lu -> __lu IS NOT NULL))) AS BIGINT)", close)
+
+
+@_calls("list_reduce", "array_reduce", "reduce", nargs=2)
+def _call_list_reduce(toks, i, parts, column_kinds):
+    # DuckDB list_reduce(L, (acc, x) -> …) seeds the accumulator
+    # with the FIRST element (no init value). Spark's aggregate()
+    # needs an init: seed with element_at(L, 1) and fold the tail.
+    # Empty list: BOTH engines error (DuckDB "cannot perform
+    # list_reduce on an empty input list"; ANSI Spark
+    # INVALID_ARRAY_INDEX_IN_ELEMENT_AT on the seed — review r6
+    # corrected an earlier fail-soft claim). NULL list → NULL in
+    # both [measured]. Spark's own reduce() takes 3+ args, so the
+    # 2-arg gate keeps Spark-spelled reduce(l, init, lam) intact.
+    # The 3-PARAM lambda form (a, b, i) passes the 1-based
+    # ITERATION number [measured: list_reduce([1,2,3,4],
+    # (a,b,i) -> a + b*i) = 21 → i is 1,2,3 per fold step, i.e.
+    # (position of b) - 1]: fold over the tail POSITIONS and
+    # substitute b → element_at(L, pos), i → pos - 1.
+    _, close, spans = parts
+    lst = _arg_text(toks, spans[0])
+    lam = _arg_text(toks, spans[1])
+    lp = _lambda_parts(lam)
+    if lp is not None and len(lp[0]) == 3:
+        acc, elt, idx = lp[0]
+        # substitution order matters (review r8): idx and acc
+        # rename BEFORE elt, because the elt substitution
+        # inserts {lst} — whose text may legitimately contain a
+        # column named like idx or, worse, like acc (list_
+        # reduce(a, (a,b,i) -> …) would otherwise capture the
+        # accumulator where DuckDB reads the column)
+        body = _substitute_lambda_ident(lp[1], idx, "(__pos - 1)")
+        body = _substitute_lambda_ident(body, acc, "__acc")
+        body = _substitute_lambda_ident(
+            body, elt, f"element_at({lst}, __pos)")
+        text = (
+            f"aggregate(slice(sequence(1, size({lst})), 2, "
+            f"greatest(size({lst}) - 1, 0)), "
+            f"element_at({lst}, 1), (__acc, __pos) -> {body})")
+    else:
+        text = (
+            f"aggregate(slice({lst}, 2, "
+            f"greatest(size({lst}) - 1, 0)), "
+            f"element_at({lst}, 1), {lam})")
+    return text, close
+
+
+@_calls("greatest", "least", nargs=1)
+def _call_greatest(toks, i, parts, column_kinds):
+    # 1-arg form is the identity in DuckDB [measured:
+    # greatest(7) = 7]; Spark requires two args
+    return f"({_arg_text(toks, parts[2][0])})", parts[1]
+
+
+@_calls("greatest", "least")
+def _call_greatest_2(toks, i, parts, column_kinds):
+    name = toks[i].text.lower()
+    if len(parts[2]) >= 2:
+        # mixed string-literal + numeric/date args: DuckDB casts
+        # the STRING to the other side's type [measured r11:
+        # least(1,'2') = 1 BIGINT (not varchar comparison — '05'
+        # orders as 5); greatest(DATE…, '2023-06-01') = DATE];
+        # Spark's least/greatest refuse mixed types. Only literal
+        # strings rewrite; anything unprovable stays loud.
+        _, close, spans = parts
+        args = [_arg_text(toks, sp).strip() for sp in spans]
+        is_str = [a.startswith("'") and a.endswith("'")
+                  for a in args]
+        if any(is_str) and not all(is_str):
+            others = [a for a, s in zip(args, is_str) if not s]
+            ncls = [_numeric_class(a, column_kinds)
+                    for a in others]
+            if all(c is not None for c in ncls):
+                tgt = ("DOUBLE" if any(c == "frac" for c in ncls)
+                       else "BIGINT")
+            elif all(_expr_is_date(a, column_kinds)
+                     for a in others):
+                tgt = "DATE"
+            else:
+                tgt = None
+            if tgt is not None:
+                new_args = [
+                    f"CAST({a} AS {tgt})" if s else a
+                    for a, s in zip(args, is_str)]
+                return f"{name}(" + ", ".join(new_args) + ")", close
+
+
+@_calls("format", nargs=1)
+def _call_format(toks, i, parts, column_kinds):
+    if (_arg_text(toks, parts[2][0]).strip().startswith("'")
+            and "{" not in _arg_text(toks, parts[2][0]).replace(
+                "{{", "").replace("}}", "")):
+        # 1-arg form: no placeholders — the template IS the result
+        # with doubled braces unescaped [measured: format('{{}}') →
+        # '{}']
+        lit = _arg_text(toks, parts[2][0]).strip()
+        body = lit[1:-1].replace("{{", "{").replace("}}", "}")
+        return "'" + body + "'", parts[1]
+
+
+@_calls("to_binary", nargs=1)
+def _call_to_binary(toks, i, parts, column_kinds):
+    # DuckDB to_binary(VARCHAR) is the VARCHAR→BIT cast: the
+    # UTF-8 BYTES as a 0/1 text [measured: 'abc' →
+    # '011000010110001001100011']; Spark's to_binary is a
+    # hex/base64 decoder — silent wrong answer
+    return (
+        f"__duck_to_bit__({_arg_text(toks, parts[2][0])})", parts[1])
+
+
+@_calls("current_schemas", nargs=1)
+def _call_current_schemas(toks, i, parts, column_kinds):
+    if (_arg_text(toks, parts[2][0]).strip().lower()
+            in ("true", "false")):
+        # search-path introspection [measured: true → ['main',
+        # 'main', 'main', 'pg_catalog'], false → []]
+        if _arg_text(toks, parts[2][0]).strip().lower() == "true":
+            text = ("array('main', 'main', 'main', "
+                    "'pg_catalog')")
+        else:
+            text = "array()"
+        return text, parts[1]
+
+
+@_calls("format")
+def _call_format_2(toks, i, parts, column_kinds):
+    if len(parts[2]) >= 2:
+        # DuckDB format() is fmt-style ('{} {:.2f} {:>8}'); Spark's
+        # format_string is printf-style. Translate a LITERAL format
+        # string's {} / {:spec} placeholders — including fill/align/
+        # width specs ('{:>8}' / '{:*<6}' / '{:^7}'), which printf
+        # can't express and become lpad/rpad wrappers around the
+        # argument (r7: judge probe found '{:>8}' refusing).
+        # Anything fancier (positional {0}, named {x}) raises
+        # rather than mangling.
+        _, close, spans = parts
+        fmt_txt = _arg_text(toks, spans[0]).strip()
+        if (fmt_txt.startswith("'") and fmt_txt.endswith("'")
+                and len(fmt_txt) >= 2):
+            body = fmt_txt[1:-1]
+            # {{ / }} are fmt-escaped literal braces
+            pct = (body.replace("{{", "\x00").replace("}}", "\x01")
+                   .replace("%", "%%"))
+            convs: list[object] = []
+            arg_idx: list[int | None] = []  # {N} positional (r9)
+
+            def _fmt_spec(m: "re.Match[str]") -> str:
+                arg_idx.append(
+                    int(m.group(1)) if m.group(1) is not None
+                    else None)
+                spec = m.group(2)
+                if spec is None or spec == "":
+                    convs.append("s")
+                    return "%s"
+                if re.fullmatch(r",d?", spec):
+                    # thousands separators [measured r12: DuckDB
+                    # '{:,}'/'{:,d}' group integers; floats error]
+                    # — Java printf's ',' flag is the same grouping
+                    convs.append(",d")
+                    return "%,d"
+                mr = re.fullmatch(
+                    r"(?P<sign>[+ ]?)(?P<alt>#?)(?P<type>[bxXo])",
+                    spec)
+                if mr:
+                    # widthless radix specs are sign-aware [measured
+                    # r12: '{:x}' of -255 → '-ff', '{:#x}' → '-0xff',
+                    # '{:+x}' → '+ff'] — Java %x would print the
+                    # two's complement; binary has no Java spec at
+                    # all, so all four radixes emit sign ||
+                    # prefix || magnitude driver-side
+                    convs.append(("radix", mr.group("sign"),
+                                  bool(mr.group("alt")),
+                                  mr.group("type")))
+                    return "%s"
+                mg2 = re.fullmatch(
+                    r"(?P<sign>[+ ]?)(?P<prec>(?:\.\d+)?)"
+                    r"(?P<type>[gG])", spec)
+                if mg2:
+                    # fmt 'g' strips trailing mantissa zeros (C
+                    # style: '{:g}' of 100.0 → '100'); Java %g
+                    # keeps them — post-strip per argument
+                    convs.append(("gstrip", mg2.group("sign"),
+                                  mg2.group("prec"),
+                                  mg2.group("type")))
+                    return "%s"
+                if re.fullmatch(r"[0-9.]*[dfsxX]", spec):
+                    convs.append(spec)  # full spec (precision for f)
+                    return "%" + spec
+                if re.fullmatch(r"[+ ]?#?0?\d*(?:\.\d+)?[dfsxXoeE]",
+                                spec):
+                    # sign/alternate/zero-pad/width/precision pass
+                    # straight through — Java printf speaks the
+                    # same flags for these conversions [measured
+                    # r12: '{:+d}' '+5', '{: d}' ' 5', '{:#x}'
+                    # '0xff', '{:08d}' '-0000042', '{:e}'
+                    # '1.234568e+04' all agree]
+                    convs.append(spec)
+                    return "%" + spec
+                ma = re.fullmatch(
+                    r"(?P<fill>.)?(?P<align>[<>^])(?P<width>\d+)"
+                    r"(?P<rest>(?:\.\d+)?[dfsxX]?)", spec)
+                if ma:
+                    convs.append(("align", ma.group("fill") or " ",
+                                  ma.group("align"),
+                                  int(ma.group("width")),
+                                  ma.group("rest")))
+                    return "%s"
+                raise ValueError(
+                    f"format(): unsupported fmt spec {{{spec}}} — "
+                    f"only {{}}, {{:d}}, {{:f}}, {{:s}}, {{:x}} and "
+                    f"fill/align/width shapes translate")
+
+            translated = re.sub(r"\{(?:(\d+))?(?::([^{}]*))?\}",
+                                _fmt_spec, pct)
+            if "{" in translated or "}" in translated:
+                raise ValueError(
+                    "format(): positional/named fmt placeholders "
+                    "({0}, {name}) are not supported — use {} or "
+                    "{:spec}")
+            translated = (translated.replace("\x00", "{")
+                          .replace("\x01", "}"))
+            # JVM printf is type-strict (%f rejects Decimal, %d
+            # rejects INT32-typed literals' narrower types) — cast
+            # each argument to the conversion's carrier type
+            casts = {"f": "DOUBLE", "d": "BIGINT",
+                     "x": "BIGINT", "X": "BIGINT",
+                     "o": "BIGINT", "e": "DOUBLE", "E": "DOUBLE"}
+            args = [_arg_text(toks, s) for s in parts[2][1:]]
+            if any(ix is not None for ix in arg_idx):
+                # positional {N} form: every placeholder must carry
+                # an index (fmt forbids mixing); args may repeat
+                if any(ix is None for ix in arg_idx):
+                    raise ValueError(
+                        "format(): cannot mix {} and {N} "
+                        "placeholders (same as fmt)")
+                if max(arg_idx) >= len(args):
+                    raise ValueError(
+                        f"format(): placeholder {{{max(arg_idx)}}} "
+                        f"but only {len(args)} argument(s)")
+                args = [args[ix] for ix in arg_idx]
+            elif len(convs) != len(args):
+                raise ValueError(
+                    f"format(): {len(convs)} placeholder(s) but "
+                    f"{len(args)} argument(s)")
+
+            def _one_arg(a: str, cv) -> str:
+                if isinstance(cv, tuple) and cv[0] == "radix":
+                    # sign || prefix || magnitude [measured r12]
+                    _, sgn, alt, typ = cv
+                    v = f"CAST({a} AS BIGINT)"
+                    mag = {"x": f"lower(hex(abs({v})))",
+                           "X": f"hex(abs({v}))",
+                           "o": f"format_string('%o', abs({v}))",
+                           "b": f"bin(abs({v}))"}[typ]
+                    pre = ({"x": "0x", "X": "0X",
+                            "o": "0", "b": "0b"}[typ] if alt else "")
+                    pos = f"'{sgn}'" if sgn else "''"
+                    return (f"concat(CASE WHEN {v} < 0 THEN '-' "
+                            f"ELSE {pos} END, '{pre}', {mag})")
+                if isinstance(cv, tuple) and cv[0] == "gstrip":
+                    # Java %g then strip trailing mantissa zeros
+                    # (and a bare trailing '.') — C/fmt semantics
+                    _, sgn, prec, typ = cv
+                    p_ = prec or ".6"
+                    inner = (f"format_string('%{sgn}{p_}{typ}', "
+                             f"CAST({a} AS DOUBLE))")
+                    s1 = (f"__java_regexp_replace__({inner}, "
+                          f"'(\\\\.\\\\d*?)0+([eE]|$)', '$1$2')")
+                    return (f"__java_regexp_replace__({s1}, "
+                            f"'\\\\.([eE]|$)', '$1')")
+                if isinstance(cv, tuple):  # fill/align/width wrap
+                    _, fill, align, width, rest_s = cv
+                    fl = fill.replace("'", "''")
+                    if rest_s and rest_s[-1] in casts:
+                        inner = (f"format_string('%{rest_s}', "
+                                 f"CAST({a} AS {casts[rest_s[-1]]}))")
+                    elif rest_s:
+                        inner = f"format_string('%{rest_s}', {a})"
+                    else:
+                        inner = f"CAST({a} AS STRING)"
+                    if align == ">":
+                        pad = f"lpad({inner}, {width}, '{fl}')"
+                    elif align == "<":
+                        pad = f"rpad({inner}, {width}, '{fl}')"
+                    else:  # '^' centers, extra space on the right
+                        pad = (f"rpad(lpad({inner}, length({inner})"
+                               f" + CAST(floor(({width} - "
+                               f"length({inner})) / 2) AS INT), "
+                               f"'{fl}'), {width}, '{fl}')")
+                    # fmt never truncates an over-width value;
+                    # lpad/rpad would
+                    return (f"(CASE WHEN length({inner}) >= {width} "
+                            f"THEN {inner} ELSE {pad} END)")
+                if cv.endswith("f"):
+                    # fmt rounds HALF-EVEN on the exact binary
+                    # value ('{:.1f}' of 2.25 → '2.2', of 2.345 →
+                    # '2.3' because 2.345 stores ABOVE the tie);
+                    # JVM printf is HALF_UP on the same exact value
+                    # — they differ ONLY on dyadic exact ties, and
+                    # bround differs elsewhere (it rounds the
+                    # shortest STRING repr). So: nudge exact ties
+                    # to the even candidate, keep printf for the
+                    # rest [measured r9]
+                    prec = re.search(r"\.(\d+)f$", cv)
+                    p_ = int(prec.group(1)) if prec else 6
+                    pw = 10 ** p_
+                    d_ = f"CAST({a} AS DOUBLE)"
+                    sc = f"({d_} * {pw})"
+                    fl = f"floor{sc}"
+                    ev = (f"(CASE WHEN pmod(CAST({fl} AS BIGINT), 2)"
+                          f" = 0 THEN {fl} ELSE {fl} + 1 END)")
+                    return (f"(CASE WHEN abs({d_}) < 1e15 AND "
+                            f"{sc} = {fl} + 0.5D "
+                            f"THEN {ev} / {pw}.0D ELSE {d_} END)")
+                if cv[-1] in casts:
+                    return f"CAST({a} AS {casts[cv[-1]]})"
+                return a
+
+            rest = "".join(f", {_one_arg(a, cv)}"
+                           for a, cv in zip(args, convs))
+            # DuckDB format() is NULL when ANY argument is NULL
+            # [measured]; JVM printf would print the string "null"
+            nullg = " OR ".join(f"({a}) IS NULL" for a in args)
+            return (
+                f"(CASE WHEN {nullg} THEN NULL "
+                f"ELSE format_string('{translated}'{rest}) END)", close)
+
+
+@_calls("printf")
+def _call_printf(toks, i, parts, column_kinds):
+    if len(parts[2]) >= 1:
+        # printf → format_string, but JVM printf is type-strict the
+        # other way: %f rejects the DECIMAL that a '3.14159' literal
+        # is, %d/%x reject narrow INT32 types (judge probe r7:
+        # printf('%5.2f', 3.14159) errored). With a LITERAL format
+        # string, cast each argument to its conversion's carrier
+        # type; DuckDB printf is NULL on any NULL argument
+        # [measured] where JVM prints 'null' — guard. Non-literal
+        # formats fall through to the plain rename. DuckDB is
+        # type-strict too ('%f' on an int errors there but succeeds
+        # here post-cast — a loud-vs-value residue, not a silent
+        # wrong answer).
+        _, close, spans = parts
+        fmt_txt = _arg_text(toks, spans[0]).strip()
+        if (fmt_txt.startswith("'") and fmt_txt.endswith("'")
+                and len(fmt_txt) >= 2):
+            body = fmt_txt[1:-1]
+            args = [_arg_text(toks, s) for s in spans[1:]]
+            # C '*' takes width/precision from the NEXT argument;
+            # Java has no '*' — fold LITERAL star operands into the
+            # spec text [measured r12: printf('%*d', 6, 42) →
+            # '    42']. Non-literal stars fall through (loud).
+            if "*" in body:
+                folded, kept, q2, ok2 = [], [], list(args), True
+                last = 0
+                for ms in re.finditer(
+                        r"%[-+ #0]*(\*|\d+)?(?:\.(\*|\d+))?"
+                        r"[a-zA-Z%]", body):
+                    if ms.group(0) == "%%":
+                        continue
+                    txt = ms.group(0)
+                    for g in (1, 2):
+                        if ms.group(g) == "*":
+                            if not (q2 and re.fullmatch(
+                                    r"[+-]?\d+", q2[0].strip())):
+                                ok2 = False
+                                break
+                            w = q2.pop(0).strip()
+                            txt = txt.replace("*", w, 1)
+                    if not ok2:
+                        break
+                    folded.append(body[last:ms.start()] + txt)
+                    last = ms.end()
+                    if txt[-1] != "%":
+                        kept.append(q2.pop(0) if q2 else None)
+                if ok2 and None not in kept:
+                    body = "".join(folded) + body[last:]
+                    args = kept + q2  # leftovers keep arity loud
+            # C ignores the 0 flag on %s (pads with SPACES);
+            # Java rejects it [measured r12: '%08s' → '      ab']
+            body = re.sub(r"%0(\d+)s", r"%\1s", body)
+            # C aliases Java lacks [measured r12: %i and %u both
+            # print like %d in DuckDB] — scanned spec-by-spec,
+            # skipping %% escapes (review r12: a raw re.sub
+            # matched '% i' inside literal text after '%%')
+            nb3, pos3 = [], 0
+            for ms3 in re.finditer(
+                    r"%[-+ #0]*\d*(?:\.\d+)?[a-zA-Z%]", body):
+                if ms3.group(0) == "%%":
+                    continue
+                if ms3.group(0)[-1] in "iu":
+                    nb3.append(body[pos3:ms3.start()]
+                               + ms3.group(0)[:-1] + "d")
+                    pos3 = ms3.end()
+            if nb3:
+                body = "".join(nb3) + body[pos3:]
+            sm = list(re.finditer(
+                r"%[-+ #0]*\d*(?:\.\d+)?([a-zA-Z%])", body))
+            specs = [m.group(1) for m in sm if m.group(1) != "%"]
+            casts = {"f": "DOUBLE", "e": "DOUBLE", "g": "DOUBLE",
+                     "E": "DOUBLE", "G": "DOUBLE", "a": "DOUBLE",
+                     "A": "DOUBLE",
+                     "d": "BIGINT", "x": "BIGINT", "X": "BIGINT",
+                     "o": "BIGINT"}
+            if len(specs) == len(args):
+                # widthless %g/%G strip trailing mantissa zeros in
+                # C (DuckDB '1.2345e-05'; Java keeps '1.23450e-05')
+                # and %a/%A exponents carry an explicit '+' in C
+                # ('0x1.8p+0' vs Java '0x1.8p0') — both repair
+                # per-argument, spliced back as %s [measured r12]
+                newb, pos2, ai = [], 0, 0
+                nargs = list(args)
+                for m2 in sm:
+                    if m2.group(1) == "%":
+                        continue
+                    st = m2.group(0)
+                    if re.fullmatch(r"%(?:\.\d+)?[gG]", st):
+                        p_ = re.search(r"\.\d+", st)
+                        inner = (f"format_string('%{(p_.group(0) if p_ else '.6')}"
+                                 f"{m2.group(1)}', "
+                                 f"CAST({args[ai]} AS DOUBLE))")
+                        s1 = (f"__java_regexp_replace__({inner}, "
+                              f"'(\\\\.\\\\d*?)0+([eE]|$)', "
+                              f"'$1$2')")
+                        nargs[ai] = (f"__java_regexp_replace__({s1}, "
+                                     f"'\\\\.([eE]|$)', '$1')")
+                        specs[ai] = "s"
+                        newb.append(body[pos2:m2.start()] + "%s")
+                        pos2 = m2.end()
+                    elif re.fullmatch(r"%[aA]", st):
+                        inner = (f"format_string('{st}', "
+                                 f"CAST({args[ai]} AS DOUBLE))")
+                        nargs[ai] = (f"__java_regexp_replace__({inner}, "
+                                     f"'([pP])(\\\\d)', '$1+$2')")
+                        specs[ai] = "s"
+                        newb.append(body[pos2:m2.start()] + "%s")
+                        pos2 = m2.end()
+                    ai += 1
+                if newb:
+                    body = "".join(newb) + body[pos2:]
+                fmt_txt = f"'{body}'"
+                rest = "".join(
+                    f", CAST({a} AS {casts[cv]})" if cv in casts
+                    else f", {a}"
+                    for a, cv in zip(nargs, specs))
+                if args:
+                    nullg = " OR ".join(f"({a}) IS NULL"
+                                        for a in args)
+                    text = (
+                        f"(CASE WHEN {nullg} THEN NULL "
+                        f"ELSE format_string({fmt_txt}{rest}) END)")
+                else:
+                    text = f"format_string({fmt_txt})"
+                return text, close
+
+
+@_calls("list_has_any", "array_has_any", nargs=2)
+def _call_list_has_any(toks, i, parts, column_kinds):
+    # NULL semantics [measured]: DuckDB yields NULL only when a
+    # LIST itself is NULL; null ELEMENTS never match (false).
+    # Spark arrays_overlap returns NULL when no common non-null
+    # exists but either side holds a null element — coalesce
+    # that tri-valued case back to DuckDB's false.
+    _, close, spans = parts
+    a = _arg_text(toks, spans[0])
+    b = _arg_text(toks, spans[1])
+    return (
+        f"(CASE WHEN {a} IS NULL OR {b} IS NULL THEN NULL "
+        f"ELSE COALESCE(arrays_overlap({a}, {b}), false) END)", close)
+
+
+@_calls("list_has_all", "array_has_all", nargs=2)
+def _call_list_has_all(toks, i, parts, column_kinds):
+    # true iff every NON-NULL element of the SECOND list is in
+    # the first (DuckDB ignores null needles [measured]); NULL
+    # when either list is NULL.
+    _, close, spans = parts
+    lst = _arg_text(toks, spans[0])
+    sub = _arg_text(toks, spans[1])
+    return (
+        f"(CASE WHEN {lst} IS NULL OR {sub} IS NULL THEN NULL "
+        f"ELSE size(array_except(filter({sub}, "
+        f"__lha -> __lha IS NOT NULL), {lst})) = 0 END)", close)
+
+
+@_calls("array_length", nargs=2)
+def _call_array_length(toks, i, parts, column_kinds):
+    if _arg_text(toks, parts[2][1]).strip() == "1":
+        # 2-arg dimension form: only dim 1 exists for LISTs in
+        # DuckDB [measured: other dims 'not implemented'] — the
+        # dim-1 spelling is len(); other dims stay loud (must
+        # precede the 1-arg rename table)
+        _, close, spans = parts
+        return f"size({_arg_text(toks, spans[0])})", close
+
+
+@_calls(*_SIMPLE_RENAMES)
+def _call_simple_rename(toks, i, parts, column_kinds):
+    name = toks[i].text.lower()
+    return _SIMPLE_RENAMES[name], i
+
+
+@_calls("epoch", nargs=1)
+def _call_epoch(toks, i, parts, column_kinds):
+    # DuckDB epoch(ts) → DOUBLE seconds incl. the sub-second
+    # fraction [measured]; unix_timestamp would truncate to
+    # whole seconds. Session-TZ caveat: Spark interprets the
+    # instant in spark.sql.session.timeZone (UTC here), DuckDB
+    # treats the naive timestamp as UTC — identical until a SET
+    # timezone diverges them (documented on the D3 surface).
+    _, close, spans = parts
+    e = _arg_text(toks, spans[0])
+    const = _try_interval_epoch(e)  # epoch(INTERVAL …) literal
+    return (const if const is not None else
+            f"(CAST(unix_micros(CAST({e} AS TIMESTAMP)) "
+            f"AS DOUBLE) / 1000000.0D)", close)
+
+
+@_calls("date_part", "datepart", nargs=2)
+def _call_date_part(toks, i, parts, column_kinds):
+    # Spark's date_part exists but three fields diverge
+    # [measured 2024-03-04, a Monday]: DuckDB dow is 0..6
+    # Sunday-based (Spark's is 1..7), isodow (1..7 Monday-based)
+    # and epoch don't exist in Spark at all. Other fields (doy,
+    # week, quarter, year, ...) agree and pass through.
+    _, close, spans = parts
+    field = _arg_text(toks, spans[0]).strip().strip("'").lower()
+    expr = _arg_text(toks, spans[1])
+    mapped = _DATE_PART_DIVERGENT(field, expr)
+    if mapped is not None:
+        return mapped, close
+
+
+@_calls("extract", nargs=1)
+def _call_extract(toks, i, parts, column_kinds):
+    # EXTRACT(DOW/ISODOW/EPOCH/MICROSECONDS/… FROM x) — same
+    # divergent fields as date_part; everything else passes
+    # through to Spark's own EXTRACT. DuckDB also accepts a
+    # QUOTED field name (extract('century' FROM d)) — strip the
+    # quotes first (r9; Spark parse-errors on them).
+    _, close, spans = parts
+    arg0 = _arg_text(toks, spans[0]).strip()
+    mq_ = re.match(r"(?is)^'([a-z_]+)'(\s+from\s+.+)$", arg0)
+    if mq_:
+        arg0 = mq_.group(1) + mq_.group(2)
+        return f"extract({arg0})", close
+    m = re.match(r"(?is)^([a-z_]+)\s+from\s+(.+)$", arg0)
+    if m:
+        mapped = _DATE_PART_DIVERGENT(m.group(1).lower(),
+                                      m.group(2).strip())
+        if mapped is not None:
+            return mapped, close
+
+
+@_calls("year", "month", "day", "hour", "minute", "second", "millisecond",
+        "microsecond", "decade", "century", "millennium", "quarter", nargs=1)
+def _call_year(toks, i, parts, column_kinds):
+    name = toks[i].text.lower()
+    # field FUNCTIONS over interval LITERALS fold on the same
+    # three-field model as extract (hour(INTERVAL '26:30:00')
+    # = 26 in DuckDB; Spark's hour() refuses the interval) —
+    # timestamp/date operands return None here and pass through
+    iconst = _try_interval_field(
+        name, _arg_text(toks, parts[2][0]))
+    if iconst is not None:
+        return iconst, parts[1]
+
+
+@_calls("timezone", nargs=2)
+def _call_timezone(toks, i, parts, column_kinds):
+    # DuckDB timezone(tz, ts) is DIRECTIONAL on the input type
+    # [measured in DuckDB 1.0.0]:
+    #   naive TIMESTAMP  → interprets ts as wall clock IN tz,
+    #     returns the instant (TIMESTAMPTZ): timezone('America/
+    #     New_York', TIMESTAMP '2024-06-05 07:08:09') →
+    #     11:08:09+00 — Spark's to_utc_timestamp (args flipped).
+    #   TIMESTAMPTZ      → converts the instant to wall clock in
+    #     tz, returns naive TIMESTAMP: timezone('America/
+    #     New_York', TIMESTAMPTZ '2024-06-05 07:08:09+00') →
+    #     03:08:09 — Spark's from_utc_timestamp (ADVICE r7: the
+    #     TIMESTAMPTZ literal/cast erasure made this spelling
+    #     reachable and the unconditional to_utc emission
+    #     silently returned the opposite conversion).
+    # The instant-typed shapes are detected BEFORE the keyword
+    # pass erases TIMESTAMPTZ→TIMESTAMP (this pass runs first):
+    # TIMESTAMPTZ '…' literals, TIMESTAMP WITH TIME ZONE '…',
+    # ::TIMESTAMPTZ postfix casts, CAST(… AS TIMESTAMPTZ), and
+    # the now()/current_timestamp family (TIMESTAMPTZ-returning
+    # in DuckDB; their session-UTC naive carrier is the instant).
+    # Known stringification divergence (SURVEY §2.4): DuckDB
+    # renders TIMESTAMPTZ results with a '+00' suffix.
+    _, close, spans = parts
+    tz = _arg_text(toks, spans[0])
+    ts = _arg_text(toks, spans[1])
+    if _span_is_instant_typed(toks, spans[1]):
+        # instant → wall clock: naive TIMESTAMP out (no marker)
+        text = f"from_utc_timestamp({ts}, {tz})"
+    else:
+        # wall clock → instant: TIMESTAMPTZ out — the marker
+        # makes a ::VARCHAR render carry DuckDB's '+00' (r11)
+        text = (
+            f"__duck_instant__(to_utc_timestamp({ts}, {tz}))")
+    return text, close
+
+
+@_calls("chr", nargs=1)
+def _call_chr(toks, i, parts, column_kinds):
+    # Spark's chr/char wraps the codepoint mod 256 (chr(8364) →
+    # '¬', silent mojibake); DuckDB decodes the full Unicode
+    # codepoint ('€'). Build the UTF-8 byte sequence with
+    # integer arithmetic and decode it JVM-side — no UDF.
+    # DuckDB errors on negatives, surrogates and > 0x10FFFF
+    # [measured "Invalid UTF8 Codepoint"] — raise_error matches
+    # loudly. hex() needs the lpad only in the 1-byte arm
+    # (leading zero for cp < 16); multi-byte values always have
+    # the high bit set, so their hex length is even.
+    _, close, spans = parts
+    e = f"({_arg_text(toks, spans[0])})"
+    return (
+        f"(CASE WHEN {e} IS NULL THEN CAST(NULL AS STRING) "
+        f"WHEN {e} < 0 OR {e} > 1114111 "
+        f"OR ({e} >= 55296 AND {e} <= 57343) "
+        f"THEN CAST(raise_error(concat('chr: invalid UTF8 "
+        f"codepoint ', CAST({e} AS STRING))) AS STRING) "
+        f"WHEN {e} < 128 THEN "
+        f"decode(unhex(lpad(hex({e}), 2, '0')), 'UTF-8') "
+        f"WHEN {e} < 2048 THEN decode(unhex(hex("
+        f"(192 + {e} div 64) * 256 + 128 + {e} % 64)), 'UTF-8') "
+        f"WHEN {e} < 65536 THEN decode(unhex(hex("
+        f"(224 + {e} div 4096) * 65536 "
+        f"+ (128 + ({e} div 64) % 64) * 256 "
+        f"+ 128 + {e} % 64)), 'UTF-8') "
+        f"ELSE decode(unhex(hex("
+        f"(240 + {e} div 262144) * 16777216 "
+        f"+ (128 + ({e} div 4096) % 64) * 65536 "
+        f"+ (128 + ({e} div 64) % 64) * 256 "
+        f"+ 128 + {e} % 64)), 'UTF-8') END)", close)
+
+
+@_calls("cast", "try_cast", nargs=1)
+def _call_cast_2(toks, i, parts, column_kinds):
+    # CAST('[1,2]' AS INTEGER[]) parses list syntax from text in
+    # DuckDB; Spark cannot cast STRING → ARRAY. from_json covers
+    # the provably-string shapes (literal or string-kind column;
+    # the ARRAY<…> spelling is already normalized by the earlier
+    # type pass). Malformed text is NULL here where plain CAST
+    # errors in DuckDB — a loud-vs-NULL residue on bad input.
+    _, close, spans = parts
+    mc = re.match(r"(?is)^(.+?)\s+AS\s+(ARRAY\s*<\s*"
+                  r"(?:INT|INTEGER|BIGINT|SMALLINT|TINYINT|"
+                  r"LONG|DOUBLE|FLOAT|REAL|BOOLEAN|"
+                  r"DECIMAL[^>]*)\s*>)\s*$",
+                  _arg_text(toks, spans[0]))
+    if mc:
+        # numeric/boolean element types only: DuckDB's list-cast
+        # text allows UNQUOTED string elements ('[a, b]') that
+        # from_json would silently NULL (review r7-2) — string
+        # element types stay loud
+        ex, ty = mc.group(1).strip(), mc.group(2)
+        is_str = ((ex.startswith("'") and ex.endswith("'"))
+                  or (column_kinds or {}).get(
+                      ex.lower()) == "string"
+                  # a ||-concat led by a string literal is a
+                  # string ('[' || x || ']')
+                  or (re.match(r"^\(*\s*'", ex) and "||" in ex))
+        if is_str:
+            return f"from_json({ex}, '{ty}')", close
+
+
+@_calls("add", "multiply", "subtract", nargs=2)
+def _call_add(toks, i, parts, column_kinds):
+    name = toks[i].text.lower()
+    # operator-function aliases; divide() is deliberately NOT
+    # mapped — like '//' it integer-divides integers but
+    # plain-divides doubles [measured divide(7,2)=3,
+    # divide(7.0,2)=3.5], so no type-blind textual mapping is
+    # safe (§2.4.15a); it stays loud
+    _, close, spans = parts
+    a = _arg_text(toks, spans[0])
+    b = _arg_text(toks, spans[1])
+    op = {"add": "+", "multiply": "*", "subtract": "-"}[name]
+    return f"(({a}) {op} ({b}))", close
+
+
+@_calls("sha256", nargs=1)
+def _call_sha256(toks, i, parts, column_kinds):
+    _, close, spans = parts
+    return f"sha2({_arg_text(toks, spans[0])}, 256)", close
+
+
+@_calls("geomean", "geometric_mean", nargs=1)
+def _call_geomean(toks, i, parts, column_kinds):
+    # exp(mean(ln x)) — avg skips NULLs like DuckDB's agg;
+    # an empty/all-NULL group is NULL on both. Non-positive
+    # values ERROR in DuckDB ('cannot take logarithm') —
+    # ln() would silently return NULL and drop them
+    # (review r7-2), so the guard raises
+    _, close, spans = parts
+    x = _arg_text(toks, spans[0])
+    over, close = _trailing_filter_over(toks, close)
+    return (
+        f"exp(avg(ln(CASE WHEN ({x}) <= 0 THEN "
+        f"CAST(raise_error('geomean: cannot take logarithm "
+        f"of non-positive value') AS DOUBLE) "
+        f"ELSE CAST({x} AS DOUBLE) END)){over})", close)
+
+
+@_calls("list_resize")
+def _call_list_resize(toks, i, parts, column_kinds):
+    if len(parts[2]) in (2, 3):
+        # truncate or pad to n; the default pad is a typed NULL —
+        # get(l, -1) is NULL of the element type [measured:
+        # list_resize([1,2],4) = [1,2,NULL,NULL]; 3-arg pads the
+        # given value]
+        _, close, spans = parts
+        l_ = _arg_text(toks, spans[0])
+        n_ = _arg_text(toks, spans[1])
+        v_ = (_arg_text(toks, spans[2]) if len(spans) == 3
+              else f"get({l_}, -1)")
+        # flatten(array(a, b)) concatenates lists without spelling
+        # "concat" — that name is the STRING rewrite's trigger
+        return (
+            f"(CASE WHEN size({l_}) >= ({n_}) "
+            f"THEN slice({l_}, 1, {n_}) "
+            f"ELSE flatten(array({l_}, array_repeat({v_}, "
+            f"({n_}) - size({l_})))) END)", close)
+
+
+@_calls("range")
+def _call_range(toks, i, parts, column_kinds):
+    if (1 <= len(parts[2]) <= 3 and not _in_from_position(toks, i)):
+        # list-producing range(): EXCLUSIVE stop, empty when the
+        # bounds cross [measured range(0) = [], range(2,2) = [],
+        # range(5,0,-2) = [5,3,1]]; Spark's sequence is INCLUSIVE.
+        # The FROM/JOIN/','-preceded forms are TABLE functions — the
+        # engine's series resolver rewrites the literal ones into
+        # Spark's native range TVF BEFORE this pass (which must not
+        # re-touch them), and non-literal TVF args stay loud. A
+        # zero step errors in DuckDB and yields [] here (documented
+        # edge).
+        _, close, spans = parts
+        args = [_arg_text(toks, s) for s in spans]
+        if len(args) == 1:
+            a, b, s = "0", args[0], "1"
+        elif len(args) == 2:
+            a, b, s = args[0], args[1], "1"
+        else:
+            a, b, s = args
+        if len(args) == 3 and _is_interval_step(s):
+            # temporal form — see _temporal_series_emission
+            return _temporal_series_emission(
+            a, b, s, inclusive=False), close
+        # a NULL bound/step is NULL in DuckDB [measured], not the
+        # empty list the guards would otherwise fall through to
+        return (
+            f"(CASE WHEN ({a}) IS NULL OR ({b}) IS NULL "
+            f"OR ({s}) IS NULL THEN NULL "
+            f"WHEN ({s}) > 0 AND ({a}) < ({b}) "
+            f"THEN sequence({a}, ({b}) - 1, {s}) "
+            f"WHEN ({s}) < 0 AND ({a}) > ({b}) "
+            f"THEN sequence({a}, ({b}) + 1, {s}) "
+            f"ELSE slice(array({a}), 1, 0) END)", close)
+
+
+@_calls("generate_series")
+def _call_generate_series(toks, i, parts, column_kinds):
+    if (1 <= len(parts[2]) <= 3 and not _in_from_position(toks, i)):
+        # list-producing generate_series(): INCLUSIVE stop
+        # [measured: (3) → [0..3], (5,1) → [] — Spark's sequence
+        # would auto-step DOWN, a silent wrong answer — and
+        # (5,1,-2) → [5,3,1]]. With an EXPLICIT step Spark's
+        # sequence matches exactly; the no-step forms guard the
+        # crossing-bounds case. FROM/JOIN forms were consumed by
+        # the engine's series-TVF resolver.
+        _, close, spans = parts
+        gs = [_arg_text(toks, s) for s in spans]
+        if len(gs) == 3 and _is_interval_step(gs[2]):
+            # temporal form — see _temporal_series_emission
+            return _temporal_series_emission(
+            gs[0], gs[1], gs[2], inclusive=True), close
+        if len(gs) == 3:
+            text = f"sequence({gs[0]}, {gs[1]}, {gs[2]})"
+        else:
+            a, b = ("0", gs[0]) if len(gs) == 1 else (gs[0], gs[1])
+            text = (
+                f"(CASE WHEN ({a}) IS NULL OR ({b}) IS NULL "
+                f"THEN NULL "
+                f"WHEN ({a}) <= ({b}) THEN sequence({a}, {b}) "
+                f"ELSE slice(array({a}), 1, 0) END)")
+        return text, close
+
+
+@_calls("list_sort", nargs=1)
+def _call_list_sort(toks, i, parts, column_kinds):
+    # 1-arg: plain rename — Spark array_sort is ASC NULLS LAST,
+    # exactly DuckDB's default [measured [3,NULL,1] → [1,3,NULL]]
+    return "array_sort", i
+
+
+@_calls("list_sort")
+def _call_list_sort_2(toks, i, parts, column_kinds):
+    if len(parts[2]) in (2, 3):
+        # string-literal direction/null-order options [measured:
+        # default is ASC NULLS LAST — matching Spark's array_sort,
+        # which the 1-arg rename uses — and 'DESC' defaults NULLS
+        # LAST too]. sort_array: asc = NULLS FIRST, desc = NULLS
+        # LAST; DESC NULLS FIRST needs the struct trick. A 2-arg
+        # LAMBDA comparator (Spark-style) falls through unrenamed
+        # (loud — DuckDB's list_sort has no comparator form).
+        _, close, spans = parts
+        l_ = _arg_text(toks, spans[0])
+        d_ = _arg_text(toks, spans[1]).strip().strip("'\"").upper()
+        n3 = (_arg_text(toks, spans[2]).strip().strip("'\"").upper()
+              if len(spans) == 3 else "")
+        emit = None
+        if d_ in ("ASC", "DESC"):
+            first = n3 == "NULLS FIRST"
+            if d_ == "ASC":
+                emit = (f"sort_array({l_})" if first
+                        else f"array_sort({l_})")
+            else:
+                emit = (f"transform(sort_array(transform({l_}, "
+                        f"__ls -> struct(__ls IS NULL AS n, "
+                        f"__ls AS v)), false), __ls -> __ls.v)"
+                        if first else f"sort_array({l_}, false)")
+        if emit is not None:
+            return emit, close
+
+
+@_calls("try_strptime", nargs=2)
+def _call_try_strptime(toks, i, parts, column_kinds):
+    if (not _arg_text(toks,
+                      parts[2][1]).strip().startswith("[")):
+        # try_to_timestamp: NULL instead of an error on parse
+        # failure [measured] — format string converts like strptime
+        # (the FORMAT-LIST form falls through to its own branch)
+        _, close, spans = parts
+        s_ = _arg_text(toks, spans[0])
+        f_ = _arg_text(toks, spans[1]).strip()
+        raw_f = f_
+        if f_.startswith("'") and f_.endswith("'"):
+            f_ = ("'" + _sql_quote(
+                convert_strftime_format(f_[1:-1])) + "'")
+        return _strptime_year_shift(
+        f"try_to_timestamp({s_}, {f_})", raw_f), close
+
+
+@_calls("date_trunc", nargs=2)
+def _call_date_trunc(toks, i, parts, column_kinds):
+    # DuckDB 1.0 date_trunc return type is decided by the FIELD,
+    # not the input [measured matrix, both DATE and TIMESTAMP
+    # inputs]: day-or-coarser fields (day/week/month/quarter/
+    # year/isoyear/decade/century/millennium + plural/short
+    # aliases) return DATE; hour-or-finer (hour/minute/second/
+    # millisecond/microsecond/epoch) return TIMESTAMP. Spark's
+    # date_trunc always returns TIMESTAMP, silently NULLs
+    # unknown fields, and lacks the DuckDB-only fields — so
+    # every literal field is normalized and re-typed here.
+    _, close, spans = parts
+    raw_fld = _arg_text(toks, spans[0]).strip()
+    fld = raw_fld.strip("'\"").lower()
+    x = _arg_text(toks, spans[1])
+    is_lit = raw_fld[:1] in ("'", '"')
+    width = {"decade": 10, "decades": 10,
+             "century": 100, "centuries": 100,
+             "millennium": 1000, "millenniums": 1000,
+             "millennia": 1000}.get(fld)
+    spark_date_fld = {  # Spark-supported, DuckDB returns DATE
+        "day": "day", "days": "day", "d": "day",
+        "week": "week", "weeks": "week", "w": "week",
+        "month": "month", "months": "month", "mon": "month",
+        "quarter": "quarter", "quarters": "quarter",
+        "year": "year", "years": "year", "y": "year",
+    }.get(fld)
+    spark_ts_fld = {  # Spark-supported, TIMESTAMP out
+        "hour": "hour", "hours": "hour", "h": "hour",
+        "hr": "hour",
+        "minute": "minute", "minutes": "minute", "m": "minute",
+        "mins": "minute",
+        "second": "second", "seconds": "second", "s": "second",
+        "secs": "second",
+        # epoch-trunc = second-trunc [measured: '...45.123456'
+        # → '...45']
+        "epoch": "second",
+        "millisecond": "millisecond",
+        "milliseconds": "millisecond", "ms": "millisecond",
+        "microsecond": "microsecond",
+        "microseconds": "microsecond", "us": "microsecond",
+    }.get(fld)
+    if width is not None:
+        # decade/century/millennium truncate by FLOOR of the
+        # year [measured: decade 2024 → 2020-01-01, century
+        # 2024 → 2000-01-01 (not the ceil-based century()
+        # FIELD, which is 21)]; make_date returns DATE,
+        # matching DuckDB's day-or-coarser return type.
+        return (f"make_date(year({x}) - pmod(year({x}), "
+                f"{width}), 1, 1)", close)
+    if fld in ("isoyear", "isoyears"):
+        # start of the ISO week-numbering year = the Monday of
+        # the week containing Jan 4 [measured: '2021-01-01' →
+        # '2019-12-30'; '2023-01-01' → '2022-01-03']
+        iso = f"extract(YEAROFWEEK FROM {x})"
+        j4 = f"make_date({iso}, 1, 4)"
+        # DAYOFWEEK_ISO is 1=Monday; plain weekday()/dayofweek()
+        # spellings would be re-captured by the DuckDB
+        # Sunday-0-based rewrite on the fixpoint pass
+        return (f"date_sub({j4}, "
+                f"extract(DAYOFWEEK_ISO FROM {j4}) - 1)", close)
+    if spark_date_fld == "day":
+        # truncation to day IS the date part; CAST avoids
+        # re-matching this rule on the fixpoint pass
+        return f"CAST({x} AS DATE)", close
+    if spark_date_fld is not None:
+        # Spark's trunc() returns DATE natively (and is a
+        # different name, so the fixpoint pass stops)
+        return (f"trunc(CAST({x} AS DATE), "
+                f"'{spark_date_fld}')", close)
+    if spark_ts_fld is not None and fld != spark_ts_fld:
+        # normalize alias → canonical; canonical spellings pass
+        # through untouched (Spark's date_trunc agrees:
+        # TIMESTAMP out) so the fixpoint pass terminates
+        return f"date_trunc('{spark_ts_fld}', {x})", close
+    # canonical hour/minute/second/millisecond/microsecond:
+    # Spark-native (TIMESTAMP out, agreeing with DuckDB) —
+    # the call passes through unchanged
+    if is_lit and spark_ts_fld is None:
+        # DuckDB errors loudly on an unrecognized specifier;
+        # Spark would silently return NULL — refuse instead.
+        raise ValueError(
+            f"date_trunc specifier {raw_fld} is not recognized "
+            f"(DuckDB 1.0 rejects it with a Conversion Error)")
+    # non-literal field (column/parameter): unknowable at
+    # rewrite time; pass through to Spark's date_trunc
+    # (TIMESTAMP out, NULL on unknown) — documented divergence.
+
+
+@_calls("array_pop_back", "array_pop_front", "list_pop_back", "list_pop_front",
+        nargs=1)
+def _call_array_pop_back(toks, i, parts, column_kinds):
+    name = toks[i].text.lower()
+    # drop the last/first element [measured r11: pop of [] →
+    # [], NULL → NULL]; Spark has no pop — slice() with a
+    # clamped length
+    _, close, spans = parts
+    lst = _arg_text(toks, spans[0])
+    if name.endswith("back"):
+        text = (f"slice({lst}, 1, "
+                f"greatest(size({lst}) - 1, 0))")
+    else:
+        text = (f"(CASE WHEN size({lst}) <= 1 THEN "
+                f"slice({lst}, 1, 0) ELSE slice({lst}, 2, "
+                f"size({lst}) - 1) END)")
+    return text, close
+
+
+@_calls("list_reverse_sort")
+def _call_list_reverse_sort(toks, i, parts, column_kinds):
+    _, close, spans = parts
+    lst = _arg_text(toks, spans[0])
+    return f"sort_array({lst}, false)", close
+
+
+@_calls("array_to_string", nargs=2)
+def _call_array_to_string(toks, i, parts, column_kinds):
+    # DuckDB returns NULL for an EMPTY list; Spark's array_join
+    # returns '' — wrap to reproduce DuckDB semantics
+    _, close, spans = parts
+    lst = _arg_text(toks, spans[0])
+    sep = _arg_text(toks, spans[1])
+    return (
+        f"(CASE WHEN size({lst}) = 0 THEN CAST(NULL AS STRING) "
+        f"ELSE array_join({lst}, {sep}) END)"
+    , close)
+
+
+@_calls("list_cosine_similarity", "array_cosine_similarity",
+        "list_cosine_distance", "array_cosine_distance", "list_inner_product",
+        "array_inner_product", "list_dot_product", "list_distance",
+        "array_distance", nargs=2)
+def _call_list_cosine_similarity(toks, i, parts, column_kinds):
+    name = toks[i].text.lower()
+    # DuckDB vector functions (measured against 1.0.0):
+    #   * list_cosine_similarity returns -1.0 when either vector has
+    #     zero norm (NOT NaN/NULL) — reproduced via the CASE guard.
+    #   * NULL *list* argument propagates NULL (zip_with/aggregate
+    #     give this for free).
+    #   * DuckDB ERRORS on length mismatch or NULL elements; the
+    #     Spark composition returns NULL there instead (zip_with
+    #     pads with NULL) — a documented soft divergence, since
+    #     raising from inside an expression isn't expressible.
+    #   * Results are DOUBLE even for integer lists — every element
+    #     is cast before multiplying.
+    # list_cosine_distance/array_cosine_distance (DuckDB >= 1.1) are
+    # accepted as 1 - similarity; DuckDB 1.0.0 lacks them, so
+    # cross-engine tests cover only the 1.0.0 trio.
+    _, close, spans = parts
+    # The ARRAY<DOUBLE> cast (a) forces double math for integer/
+    # decimal/float32 lists, matching DuckDB's DOUBLE result type,
+    # and (b) types a bare NULL literal argument, which would
+    # otherwise fail Spark analysis as VOID inside aggregate().
+    a = f"CAST({_arg_text(toks, spans[0])} AS ARRAY<DOUBLE>)"
+    b = f"CAST({_arg_text(toks, spans[1])} AS ARRAY<DOUBLE>)"
+    dot = (
+        f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), "
+        f"CAST(0 AS DOUBLE), (s, v) -> s + v)"
+    )
+    n2a = (f"aggregate({a}, CAST(0 AS DOUBLE), "
+           f"(s, x) -> s + x * x)")
+    n2b = (f"aggregate({b}, CAST(0 AS DOUBLE), "
+           f"(s, x) -> s + x * x)")
+    cos = (
+        f"(CASE WHEN ({a}) IS NULL OR ({b}) IS NULL "
+        f"THEN CAST(NULL AS DOUBLE) "
+        f"WHEN {n2a} = 0 OR {n2b} = 0 THEN CAST(-1.0 AS DOUBLE) "
+        f"ELSE {dot} / (sqrt({n2a}) * sqrt({n2b})) END)"
+        # the IS NULL arm must come FIRST: with a NULL list and a
+        # zero-norm other side, 'NULL OR TRUE' is TRUE and the
+        # -1.0 arm would fire — DuckDB returns NULL there (review)
+    )
+    base = name.split("_", 1)[1]
+    if base in ("inner_product", "dot_product"):
+        body = dot
+    elif base == "distance":
+        body = (
+            f"sqrt(aggregate(zip_with({a}, {b}, (x, y) -> "
+            f"(x - y) * (x - y)), "
+            f"CAST(0 AS DOUBLE), (s, v) -> s + v))"
+        )
+    elif base == "cosine_similarity":
+        body = cos
+    else:  # cosine_distance
+        body = f"(CAST(1.0 AS DOUBLE) - {cos})"
+    return body, close
+
+
+@_calls("list_sum", "list_avg", nargs=1)
+def _call_list_sum(toks, i, parts, column_kinds):
+    name = toks[i].text.lower()
+    # DuckDB SKIPS NULL elements and returns NULL for empty /
+    # all-NULL lists [measured: list_sum([1,NULL,2])=3,
+    # list_sum([])=NULL, list_avg([1.0,NULL,3.0])=2.0] — filter
+    # first, then guard on the filtered size (review fix; the
+    # naive aggregate gave NULL on NULL elements and 0.0 on [])
+    _, close, spans = parts
+    lst = _arg_text(toks, spans[0])
+    flt = f"filter({lst}, x -> x IS NOT NULL)"
+    s = f"aggregate({flt}, CAST(0 AS DOUBLE), (acc, x) -> acc + x)"
+    body = s if name == "list_sum" else f"({s} / size({flt}))"
+    return (f"(CASE WHEN size({flt}) = 0 "
+            f"THEN CAST(NULL AS DOUBLE) ELSE {body} END)", close)
+
+
+@_calls("list_any_value", nargs=1)
+def _call_list_any_value_2(toks, i, parts, column_kinds):
+    # first non-NULL element; get() is 0-based and NULL-safe
+    # out-of-bounds (element_at would throw under ANSI)
+    _, close, spans = parts
+    e = _arg_text(toks, spans[0])
+    return f"get(filter({e}, x -> x IS NOT NULL), 0)", close
+
+
+@_calls("list_extract", "array_extract", "list_element", nargs=2)
+def _call_list_extract(toks, i, parts, column_kinds):
+    # 1-based list element; measured pins: out-of-bounds -> NULL,
+    # index 0 -> NULL, NEGATIVE indexes count from the back
+    # (list_extract([1,2,3], -1) = 3, -5 -> NULL) — hence get()
+    # (0-based, NULL out-of-bounds; element_at throws under ANSI)
+    # plus the sign CASE. array_extract over a STRING argument is
+    # not supported — get() fails analysis loudly there.
+    _, close, spans = parts
+    lst = _arg_text(toks, spans[0])
+    idx = _arg_text(toks, spans[1])
+    is_str = ((lst.strip().startswith("'")
+               and lst.strip().endswith("'"))
+              or (column_kinds or {}).get(
+                  lst.strip().lower()) == "string")
+    if is_str:
+        # STRING overload [measured r10: list_extract('abc',2)
+        # = 'b', -1 = 'c', out-of-range/0 = '', NULL idx NULL]
+        text = (
+            f"(CASE WHEN ({idx}) IS NULL THEN NULL "
+            f"WHEN ({idx}) > 0 THEN substring({lst}, {idx}, 1) "
+            f"WHEN ({idx}) < 0 THEN substring({lst}, "
+            f"length({lst}) + ({idx}) + 1, 1) ELSE '' END)")
+    else:
+        text = (
+            f"get({lst}, CASE WHEN ({idx}) > 0 THEN ({idx}) - 1 "
+            f"WHEN ({idx}) < 0 THEN size({lst}) + ({idx}) "
+            f"ELSE NULL END)")
+    return text, close
+
+
+@_calls("like_escape", "not_like_escape", "ilike_escape", "not_ilike_escape",
+        nargs=3)
+def _call_like_escape(toks, i, parts, column_kinds):
+    name = toks[i].text.lower()
+    # function spellings of LIKE … ESCAPE [measured: escape
+    # char makes _/% literal; ilike folds case on BOTH sides]
+    _, close, spans = parts
+    s_ = _arg_text(toks, spans[0])
+    pat = _arg_text(toks, spans[1])
+    esc = _arg_text(toks, spans[2])
+    if "ilike" in name:
+        body = f"lower({s_}) LIKE lower({pat}) ESCAPE {esc}"
+    else:
+        body = f"{s_} LIKE {pat} ESCAPE {esc}"
+    neg = "NOT " if name.startswith("not_") else ""
+    return f"({neg}({body}))", close
+
+
+@_calls("divide", "multiply", "add", "subtract", "mod", nargs=2)
+def _call_divide(toks, i, parts, column_kinds):
+    name = toks[i].text.lower()
+    # operator-function spellings [measured: divide(7,2)=3 —
+    # it is the `//` semantics, NOT `/`; mod(7,0)=NULL]
+    _, close, spans = parts
+    a = _arg_text(toks, spans[0])
+    b = _arg_text(toks, spans[1])
+    if name == "divide":
+        text = f"__floordiv__({a}, {b})"
+    elif name == "mod":
+        text = f"try_mod({a}, {b})"
+    else:
+        op2 = {"multiply": "*", "add": "+",
+               "subtract": "-"}[name]
+        text = f"(({a}) {op2} ({b}))"
+    return text, close
+
+
+@_calls("encode", "decode", nargs=1)
+def _call_encode(toks, i, parts, column_kinds):
+    name = toks[i].text.lower()
+    # DuckDB's 1-arg VARCHAR↔BLOB converters are UTF-8
+    # [measured: octet_length(encode('abc')) = 3]; Spark's
+    # spellings take an explicit charset (2-arg emission, so
+    # this 1-arg branch doesn't re-trigger)
+    _, close, spans = parts
+    e = _arg_text(toks, spans[0])
+    return f"{name}({e}, 'UTF-8')", close
+
+
+@_calls("isodow", nargs=1)
+def _call_isodow(toks, i, parts, column_kinds):
+    # bare-function form of date_part('isodow'): 1..7 Monday-based
+    _, close, spans = parts
+    e = _arg_text(toks, spans[0])
+    return f"(((extract(DAYOFWEEK FROM {e}) + 5) % 7) + 1)", close
+
+
+@_calls("parse_filename", "parse_dirname", "parse_dirpath", "parse_path")
+def _call_parse_filename(toks, i, parts, column_kinds):
+    name = toks[i].text.lower()
+    if (1 <= len(parts[2]) <= (3 if name == "parse_filename"
+                               else 2)):
+        # data-lake path scalars → fixed-arity session UDFs
+        # (functions/udfs.py carries the measured pins). The
+        # optional args normalize here: parse_filename's 2nd arg is
+        # trim_extension (bool) OR the separator (a string literal
+        # naming one of the four modes).
+        _, close, spans = parts
+        args = [_arg_text(toks, sp) for sp in spans]
+        sep_lits = ("'both_slash'", "'forward_slash'",
+                    "'backslash'", "'system'")
+        if name == "parse_filename":
+            trim, sep = "false", "'both_slash'"
+            if len(args) == 2:
+                if args[1].lower() in sep_lits:
+                    sep = args[1]
+                else:
+                    trim = f"CAST({args[1]} AS BOOLEAN)"
+            elif len(args) == 3:
+                trim = f"CAST({args[1]} AS BOOLEAN)"
+                sep = args[2]
+            text = (f"__parse_filename__({args[0]}, {trim}, "
+                    f"CAST({sep} AS STRING))")
+        else:
+            sep = args[1] if len(args) == 2 else "'both_slash'"
+            text = (f"__{name}__({args[0]}, "
+                    f"CAST({sep} AS STRING))")
+        return text, close
+
+
+@_calls("make_timestamp", "__make_timestamptz__", nargs=1)
+def _call_make_timestamp(toks, i, parts, column_kinds):
+    # 1-arg form: microseconds since the epoch [measured:
+    # make_timestamp(1612325106123456) = 2021-02-03 04:05:06.
+    # 123456; negative and NULL pass through] — Spark's
+    # timestamp_micros. The timestamptz marker's 1-arg form
+    # loses its instant-ness here (render residue: no '+00'
+    # on a ::VARCHAR of make_timestamptz(micros)) — the
+    # component forms keep it via _span_is_instant_typed.
+    _, close, spans = parts
+    e = _arg_text(toks, spans[0])
+    return f"timestamp_micros(CAST({e} AS BIGINT))", close
+
+
+@_calls("date_part", "datepart", nargs=2)
+def _call_date_part_2(toks, i, parts, column_kinds):
+    if _arg_text(toks, parts[2][0]).startswith("["):
+        # list-form date_part(['year','month'], d) → STRUCT of
+        # fields [measured: BIGINT values, epoch DOUBLE; an unknown
+        # field errors — the emitted per-field date_part stays loud
+        # on it]. Each element re-enters the fixpoint, so divergent
+        # fields (dow/epoch/…) pick up their own rewrites.
+        _, close, spans = parts
+        lst = _arg_text(toks, spans[0])
+        e = _arg_text(toks, spans[1])
+        lt = tokenize(lst)
+        lspans = split_args(lt, 0, len(lt) - 1)
+        fields = [detokenize(lt[a:b]).strip() for a, b in lspans]
+        items = []
+        for f_ in fields:
+            fname = f_.strip().strip("'")
+            cast_t = ("DOUBLE" if fname.lower() == "epoch"
+                      else "BIGINT")
+            items.append(f"{f_}, CAST(date_part({f_}, {e}) "
+                         f"AS {cast_t})")
+        return f"named_struct({', '.join(items)})", close
+
+
+@_calls("date_add", nargs=2)
+def _call_date_add_2(toks, i, parts, column_kinds):
+    # DuckDB date_add(d, INTERVAL …) vs Spark date_add(d, days):
+    # the INTERVAL form becomes plain interval arithmetic; the
+    # integer-days form passes through untouched
+    _, close, spans = parts
+    a = _arg_text(toks, spans[0])
+    b = _arg_text(toks, spans[1])
+    if b.upper().lstrip().startswith("INTERVAL"):
+        return f"(({a}) + {b})", close
+
+
+@_calls("xor", nargs=2)
+def _call_xor(toks, i, parts, column_kinds):
+    # DuckDB integer xor(a, b). Spark spells bitwise XOR as the
+    # '^' operator — which the power rewrite owns in this dialect —
+    # so compose from AND/OR/NOT instead.
+    _, close, spans = parts
+    a = _arg_text(toks, spans[0])
+    b = _arg_text(toks, spans[1])
+    return f"((({a}) & ~({b})) | (~({a}) & ({b})))", close
+
+
+@_calls("trunc", nargs=1)
+def _call_trunc(toks, i, parts, column_kinds):
+    # 1-arg numeric trunc (toward zero). Spark's trunc is the
+    # 2-arg DATE truncation — only the 1-arg form is DuckDB's.
+    # Result is DOUBLE (DuckDB preserves the input type; for an
+    # INTEGER argument the value matches but the type widens —
+    # fuzz/tests use non-integer inputs).
+    _, close, spans = parts
+    e = _arg_text(toks, spans[0])
+    return (f"CAST(CASE WHEN ({e}) >= 0 THEN floor({e}) "
+            f"ELSE ceil({e}) END AS DOUBLE)", close)
+
+
+@_calls("even", nargs=1)
+def _call_even(toks, i, parts, column_kinds):
+    # round away from zero to the next EVEN number [measured:
+    # even(2.5)=4, even(-0.5)=-2, even(0)=0.0, even(3)=4]
+    _, close, spans = parts
+    e = _arg_text(toks, spans[0])
+    return (
+        f"CAST(CASE WHEN ({e}) = 0 THEN 0.0 ELSE "
+        f"signum({e}) * 2 * ceil(abs({e}) / 2.0) END AS DOUBLE)", close)
+
+
+@_calls("array_unique", nargs=1)
+def _call_array_unique(toks, i, parts, column_kinds):
+    # COUNT of distinct non-NULL elements (not the deduped list)
+    _, close, spans = parts
+    e = _arg_text(toks, spans[0])
+    return (f"size(array_distinct(filter({e}, "
+            f"x -> x IS NOT NULL)))", close)
+
+
+@_calls("list_count", nargs=1)
+def _call_list_count(toks, i, parts, column_kinds):
+    # count of non-NULL elements
+    _, close, spans = parts
+    e = _arg_text(toks, spans[0])
+    return f"size(filter({e}, x -> x IS NOT NULL))", close
+
+
+@_calls("mismatches", "hamming", nargs=2)
+def _call_mismatches(toks, i, parts, column_kinds):
+    # positionwise inequality count over equal-length strings.
+    # DuckDB ERRORS on unequal lengths and on empty strings; this
+    # composition counts over the FIRST argument's length and
+    # gives 0 for empty (soft divergences — raising from an
+    # expression isn't expressible). The empty guard also matters
+    # mechanically: Spark sequence(1, 0) yields a DESCENDING
+    # [1, 0], not an empty array.
+    _, close, spans = parts
+    a = _arg_text(toks, spans[0])
+    b = _arg_text(toks, spans[1])
+    return (
+        f"(CASE WHEN length({a}) = 0 THEN 0 ELSE "
+        f"size(filter(sequence(1, length({a})), "
+        f"i -> substr({a}, i, 1) <> substr({b}, i, 1))) END)", close)
+
+
+@_calls("bar")
+def _call_bar(toks, i, parts, column_kinds):
+    if len(parts[2]) in (3, 4):
+        # DuckDB bar(x, min, max [, width=80]): eighth-block bar
+        # chart. Measured algorithm: chars = (x-min)*width/(max-min)
+        # (multiply FIRST — 3*10/10 must be exactly 3.0), clamped to
+        # [0, width]; floor(chars) full blocks + one partial eighth
+        # block (floor of the fractional eighths); then the result is
+        # space-padded to width BYTES, not characters — block chars
+        # are 3 UTF-8 bytes, so '███' + 1 space for width 10 and
+        # 10 spaces for an empty bar (DuckDB pads the byte string).
+        _, close, spans = parts
+        x = _arg_text(toks, spans[0])
+        lo = _arg_text(toks, spans[1])
+        hi = _arg_text(toks, spans[2])
+        w = _arg_text(toks, spans[3]) if len(parts[2]) == 4 else "80"
+        # try_divide: a zero-width range (max == min) renders an
+        # EMPTY bar in DuckDB, not a divide-by-zero error (r10)
+        chars = (f"least(greatest(coalesce(try_divide((({x}) - "
+                 f"({lo})) * ({w}), ({hi}) - ({lo})), "
+                 f"CAST(0 AS DOUBLE)), CAST(0 AS DOUBLE)), "
+                 f"CAST(({w}) AS DOUBLE))")
+        full = f"CAST(floor({chars}) AS INT)"
+        kth = f"CAST(floor(({chars} - floor({chars})) * 8) AS INT)"
+        eighths = ("array('', '▏', '▎', '▍', "
+                   "'▌', '▋', '▊', '▉')")
+        body = (f"(repeat('█', {full}) || "
+                f"element_at({eighths}, {kth} + 1))")
+        bytelen = (f"({full} * 3 + CASE WHEN {kth} > 0 THEN 3 "
+                   f"ELSE 0 END)")
+        return (
+            f"(CASE WHEN ({x}) IS NULL THEN CAST(NULL AS STRING) "
+            f"ELSE ({body} || repeat(' ', "
+            f"greatest(0, CAST(({w}) AS INT) - {bytelen}))) END)", close)
+
+
+@_calls("formatreadabledecimalsize", nargs=1)
+def _call_formatreadabledecimalsize(toks, i, parts, column_kinds):
+    # decimal-prefix sibling of format_bytes [measured r10:
+    # 1500 → '1.5 kB' (lowercase k), 999949999999 → '999.9 GB'
+    # truncated, 0 → '0 bytes', -2000 → '-2.0 kB']
+    _, close, spans = parts
+    e = f"CAST({_arg_text(toks, spans[0])} AS BIGINT)"
+    tiers = [("kB", 1000), ("MB", 1000**2), ("GB", 1000**3),
+             ("TB", 1000**4), ("PB", 1000**5)]
+    ladder = []
+    for idx, (unit, div) in enumerate(tiers):
+        cond = (f"WHEN abs({e}) < {div * 1000} "
+                if idx < len(tiers) - 1 else "ELSE ")
+        if idx < len(tiers) - 1:
+            cond += "THEN "
+        ladder.append(
+            f"{cond}(CAST(abs({e}) DIV {div} AS STRING) || "
+            f"'.' || CAST((abs({e}) % {div}) * 10 DIV {div} "
+            f"AS STRING) || ' {unit}')")
+    return (
+        f"(CASE WHEN abs({e}) = 1 THEN (CAST({e} AS STRING) || "
+        f"' byte') WHEN abs({e}) < 1000 THEN "
+        f"(CAST({e} AS STRING) || ' bytes') ELSE "
+        f"((CASE WHEN ({e}) < 0 THEN '-' ELSE '' END) || "
+        f"(CASE {' '.join(ladder)} END)) END)", close)
+
+
+@_calls("format_bytes", nargs=1)
+def _call_format_bytes(toks, i, parts, column_kinds):
+    # binary-prefix rendering, one TRUNCATED decimal [measured:
+    # 1 -> '1 byte', 1500 -> '1.4 KiB' (not 1.5), 1047552 ->
+    # '1023.0 KiB', -2048 -> '-2.0 KiB', 0 -> '0 bytes']
+    _, close, spans = parts
+    # the BIGINT cast types a bare NULL literal (VOID would fail
+    # analysis inside abs()/DIV) and pins integer math
+    e = f"CAST({_arg_text(toks, spans[0])} AS BIGINT)"
+    # the ladder stops at PiB [measured: 1024^6 -> '1024.0 PiB',
+    # no EiB tier in DuckDB]
+    tiers = [("KiB", 1024), ("MiB", 1024**2), ("GiB", 1024**3),
+             ("TiB", 1024**4), ("PiB", 1024**5)]
+    # exact integer math for the truncated decimal: a double
+    # division rounds BIGINT max up to '8192.0 PiB' where DuckDB
+    # truncates to '8191.9 PiB'
+    ladder = []
+    for idx, (unit, div) in enumerate(tiers):
+        cond = (f"WHEN abs({e}) < {div * 1024} "
+                if idx < len(tiers) - 1 else "ELSE ")
+        if idx < len(tiers) - 1:
+            cond += "THEN "
+        ladder.append(
+            f"{cond}(CAST(abs({e}) DIV {div} AS STRING) || "
+            f"'.' || CAST((abs({e}) % {div}) * 10 DIV {div} "
+            f"AS STRING) || ' {unit}')")
+    return (
+        f"(CASE WHEN abs({e}) = 1 THEN (CAST({e} AS STRING) || "
+        f"' byte') WHEN abs({e}) < 1024 THEN "
+        f"(CAST({e} AS STRING) || ' bytes') ELSE "
+        f"((CASE WHEN ({e}) < 0 THEN '-' ELSE '' END) || "
+        f"(CASE {' '.join(ladder)} END)) END)", close)
+
+
+@_calls("list_count", "list_product", "list_bool_and", "list_bool_or",
+        "list_entropy", "list_first", "list_last", "array_count",
+        "array_product", nargs=1)
+def _call_list_count_2(toks, i, parts, column_kinds):
+    name = toks[i].text.lower()
+    # shortcut fold names [measured r12]: count counts
+    # non-NULL (empty → 0); product/bool_and/bool_or skip
+    # NULLs, empty → NULL (product is DOUBLE); entropy is
+    # log2 over value frequencies, empty → 0.0; first/last
+    # take the PLAIN end elements (NULLs kept), empty → NULL
+    _, close, spans = parts
+    lst = _arg_text(toks, spans[0])
+    flt = f"filter({lst}, x -> x IS NOT NULL)"
+    base = name.replace("array_", "list_")
+    if base == "list_count":
+        body = f"size({flt})"
+    elif base == "list_product":
+        body = (f"(CASE WHEN size({flt}) = 0 THEN "
+                f"CAST(NULL AS DOUBLE) ELSE "
+                f"aggregate({flt}, CAST(1 AS DOUBLE), "
+                f"(acc, x) -> acc * x) END)")
+    elif base == "list_bool_and":
+        body = (f"(CASE WHEN size({flt}) = 0 THEN "
+                f"CAST(NULL AS BOOLEAN) ELSE "
+                f"forall({flt}, x -> x) END)")
+    elif base == "list_bool_or":
+        body = (f"(CASE WHEN size({flt}) = 0 THEN "
+                f"CAST(NULL AS BOOLEAN) ELSE "
+                f"exists({flt}, x -> x) END)")
+    elif base == "list_entropy":
+        # collision-proof lambda names (review r12: a source
+        # column literally named 'v' was shadowed by the
+        # outer lambda variable inside the nested filter)
+        p_ = (f"(CAST(size(filter({flt}, "
+              f"__lee -> __lee = __lev)) "
+              f"AS DOUBLE) / size({flt}))")
+        body = (f"(CASE WHEN ({lst}) IS NULL THEN "
+                f"CAST(NULL AS DOUBLE) "
+                f"WHEN size({flt}) = 0 THEN CAST(0 AS DOUBLE) "
+                f"ELSE aggregate(array_distinct({flt}), "
+                f"CAST(0 AS DOUBLE), "
+                f"(__leacc, __lev) -> __leacc - {p_} "
+                f"* log2({p_})) END)")
+    elif base == "list_first":
+        body = f"try_element_at({lst}, 1)"
+    else:
+        body = f"try_element_at({lst}, -1)"
+    return body, close
+
+
+@_calls("list_aggregate", nargs=2)
+def _call_list_aggregate(toks, i, parts, column_kinds):
+    _, close, spans = parts
+    lst = _arg_text(toks, spans[0])
+    agg = _arg_text(toks, spans[1]).strip("'").lower()
+    # NULL-element/empty pins shared with list_sum/list_avg
+    # [measured: sum skips NULLs, empty sum -> NULL, count counts
+    # non-NULL, empty count -> 0] (review fix). Pure f-strings —
+    # str.format on text containing user SQL blows up on brace
+    # struct literals (second review).
+    _flt = f"filter({lst}, x -> x IS NOT NULL)"
+    _s = (f"aggregate({_flt}, CAST(0 AS DOUBLE), "
+          f"(acc, x) -> acc + x)")
+
+    def _guarded(inner: str) -> str:
+        return (f"(CASE WHEN size({_flt}) = 0 "
+                f"THEN CAST(NULL AS DOUBLE) ELSE {inner} END)")
+
+    body = {
+        "sum": _guarded(_s),
+        "min": f"array_min({lst})",
+        "max": f"array_max({lst})",
+        "avg": _guarded(f"({_s} / size({_flt}))"),
+        "mean": _guarded(f"({_s} / size({_flt}))"),
+        "count": f"size({_flt})",
+        # r9 additions — re-enter their dedicated rewrites
+        "median": f"list_median({lst})",
+        "any_value": f"list_any_value({lst})",
+        # 2-arg string_agg defaults to ',' [measured r9]
+        "string_agg": (f"(CASE WHEN size({_flt}) = 0 "
+                       f"THEN CAST(NULL AS STRING) "
+                       f"ELSE array_join({_flt}, ',') END)"),
+        "group_concat": (f"(CASE WHEN size({_flt}) = 0 "
+                         f"THEN CAST(NULL AS STRING) "
+                         f"ELSE array_join({_flt}, ',') END)"),
+        # r12 shortcut folds — re-enter their dedicated
+        # rewrites above
+        "product": f"list_product({lst})",
+        "bool_and": f"list_bool_and({lst})",
+        "bool_or": f"list_bool_or({lst})",
+        "entropy": f"list_entropy({lst})",
+        "first": f"list_first({lst})",
+        "last": f"list_last({lst})",
+    }.get(agg)
+    if body is not None:
+        return body, close
+
+
+@_calls("list_aggregate", nargs=3)
+def _call_list_aggregate_2(toks, i, parts, column_kinds):
+    # 3-arg form passes an agg parameter: string_agg separator
+    # [measured: list_aggregate(['a','b'],'string_agg','-') →
+    # 'a-b'; NULL elements skipped, empty → NULL like the agg]
+    _, close, spans = parts
+    lst = _arg_text(toks, spans[0])
+    agg3 = _arg_text(toks, spans[1]).strip("'").lower()
+    prm = _arg_text(toks, spans[2])
+    if agg3 in ("string_agg", "group_concat"):
+        _flt3 = f"filter({lst}, x -> x IS NOT NULL)"
+        return (
+            f"(CASE WHEN size({_flt3}) = 0 "
+            f"THEN CAST(NULL AS STRING) "
+            f"ELSE array_join({_flt3}, {prm}) END)", close)
+
+
+@_calls("regexp_full_match", nargs=2)
+def _call_regexp_full_match(toks, i, parts, column_kinds):
+    # full-match boolean [DuckDB core] — anchor a non-capturing
+    # group; a literal pattern embeds, an expression concats
+    _, close, spans = parts
+    s_ = _arg_text(toks, spans[0])
+    p_ = _arg_text(toks, spans[1]).strip()
+    if p_.startswith("'") and p_.endswith("'") and len(p_) >= 2:
+        pat = f"'^(?:{p_[1:-1]})$'"
+    else:
+        pat = f"concat('^(?:', {p_}, ')$')"
+    return f"({s_} RLIKE {pat})", close
+
+
+@_calls("strftime", nargs=2)
+def _call_strftime(toks, i, parts, column_kinds):
+    _, close, spans = parts
+    expr = _arg_text(toks, spans[0])
+    fmt = _arg_text(toks, spans[1])
+    if (expr.startswith("'") and expr.endswith("'")
+            and "%" in expr and not fmt.startswith("'")):
+        # DuckDB also accepts strftime(fmt, ts) — the REVERSED
+        # Postgres argument order [measured r10: both orders
+        # return the same text]
+        expr, fmt = fmt, expr
+    if fmt.startswith("'") and fmt.endswith("'"):
+        cc = _strftime_concat_expr(expr, fmt[1:-1])
+        if cc is not None:
+            return cc, close
+        fmt = ("'" + _sql_quote(
+            convert_strftime_format(fmt[1:-1])) + "'")
+    return f"date_format({expr}, {fmt})", close
+
+
+@_calls("strptime", "try_strptime", nargs=2)
+def _call_strptime(toks, i, parts, column_kinds):
+    name = toks[i].text.lower()
+    if _arg_text(toks, parts[2][1]).strip().startswith("["):
+        # FORMAT-LIST form [measured r9: formats try in order;
+        # strptime errors when none match, try_strptime → NULL] —
+        # coalesce over try_to_timestamp per format, with a strict
+        # to_timestamp on the LAST for the erroring spelling
+        _, close, spans = parts
+        s_ = _arg_text(toks, spans[0])
+        flist = _arg_text(toks, spans[1]).strip()
+        fmts = re.findall(r"'((?:[^']|'')*)'", flist)
+        if fmts:
+            conv = [convert_strftime_format(f.replace("''", "'"))
+                    for f in fmts]
+            # formats here were extracted FROM string literals, so
+            # re-quote for the year-shift's literal-only gate
+            tries = [_strptime_year_shift(
+                f"try_to_timestamp({s_}, '{_sql_quote(c)}')",
+                f"'{f}'")
+                for c, f in zip(conv, fmts)]
+            if name == "strptime":
+                tries[-1] = _strptime_year_shift(
+                    f"to_timestamp({s_}, "
+                    f"'{_sql_quote(conv[-1])}')", f"'{fmts[-1]}'")
+            body = ("coalesce(" + ", ".join(tries) + ")"
+                    if len(tries) > 1 else tries[0])
+            # the FORMAT-LIST forms return TIMESTAMPTZ in DuckDB
+            # [measured r11: typeof → TIMESTAMP WITH TIME ZONE;
+            # the scalar forms are naive] — the __duck_instant__
+            # marker keeps that visible to the ::VARCHAR '+00'
+            # render and erases to a plain paren group in
+            # _rewrite_keywords
+            return f"__duck_instant__({body})", close
+
+
+@_calls("strptime", nargs=2)
+def _call_strptime_2(toks, i, parts, column_kinds):
+    # DuckDB strptime(text, '%fmt') → to_timestamp with the same
+    # %-directive translation strftime uses (shared map)
+    _, close, spans = parts
+    expr = _arg_text(toks, spans[0])
+    fmt = _arg_text(toks, spans[1])
+    raw = fmt
+    if fmt.startswith("'") and fmt.endswith("'"):
+        fmt = ("'" + _sql_quote(
+            convert_strftime_format(fmt[1:-1])) + "'")
+    return _strptime_year_shift(
+    f"to_timestamp({expr}, {fmt})", raw), close
+
+
+@_calls("approx_quantile")
+def _call_approx_quantile(toks, i, parts, column_kinds):
+    return "approx_percentile", i
+
+
+@_calls("reservoir_quantile")
+def _call_reservoir_quantile(toks, i, parts, column_kinds):
+    if len(parts[2]) in (2, 3):
+        # reservoir-sampled approximate quantile_disc; the sample
+        # size (arg 3, default 8192) exceeds the oracle fixtures,
+        # where it degenerates to the exact disc quantile — mapped
+        # onto quantile_disc (re-enters that rewrite). At larger
+        # data the values are approximate on BOTH engines.
+        _, close, spans = parts
+        x_ = _arg_text(toks, spans[0])
+        q_ = _arg_text(toks, spans[1])
+        return f"quantile_disc({x_}, {q_})", close
+
+
+@_calls("date_diff", nargs=3)
+def _call_date_diff(toks, i, parts, column_kinds):
+    _, close, spans = parts
+    unit = _arg_text(toks, spans[0]).strip("'").lower()
+    a = _arg_text(toks, spans[1])
+    b = _arg_text(toks, spans[2])
+    # TIME-literal operands [measured r11: date_diff('minute',
+    # TIME '10:00', TIME '11:30') = 90 in DuckDB; Spark cannot
+    # cast a TIME literal for the arithmetic] — anchor both on
+    # the same date, preserving the within-day difference
+    tl = r"(?is)^TIME\s+'(\d{1,2}:\d{2}:\d{2}(?:\.\d+)?)'$"
+    ma_, mb_ = re.match(tl, a.strip()), re.match(tl, b.strip())
+    if ma_ and mb_:
+        a = f"TIMESTAMP '1970-01-01 {ma_.group(1)}'"
+        b = f"TIMESTAMP '1970-01-01 {mb_.group(1)}'"
+    # DuckDB date_diff counts PART BOUNDARIES CROSSED, not elapsed
+    # units: diff('month', Jan 31, Feb 1) = 1, diff('hour', 01:59,
+    # 02:01) = 1. Truncate both sides to the part first.
+    body = {
+        # emitted as date_diff (the Spark 3.5+ alias): a bare
+        # "datediff" emission would re-enter the datediff →
+        # date_diff alias rename on the next fixpoint pass
+        "day": f"CAST(date_diff({b}, {a}) AS BIGINT)",
+        "month": (
+            f"CAST((year({b}) * 12 + month({b}))"
+            f" - (year({a}) * 12 + month({a})) AS BIGINT)"
+        ),
+        "year": f"CAST(year({b}) - year({a}) AS BIGINT)",
+        "hour": (
+            f"CAST((unix_timestamp(date_trunc('hour', {b}))"
+            f" - unix_timestamp(date_trunc('hour', {a}))) DIV 3600 AS BIGINT)"
+        ),
+        "minute": (
+            f"CAST((unix_timestamp(date_trunc('minute', {b}))"
+            f" - unix_timestamp(date_trunc('minute', {a}))) DIV 60 AS BIGINT)"
+        ),
+        "second": f"CAST(unix_timestamp({b}) - unix_timestamp({a}) AS BIGINT)",
+        # week boundaries are MONDAYS (measured: Wed Jan 3 →
+        # Mon Jan 8 2024 = 1); anchor on the 2000-01-03 Monday
+        "week": (
+            f"CAST(floor(datediff({b}, DATE '2000-01-03') / 7)"
+            f" - floor(datediff({a}, DATE '2000-01-03') / 7)"
+            f" AS BIGINT)"
+        ),
+    }.get(unit)
+    if body is not None:
+        return body, close
+
+
+@_calls("regexp_extract", nargs=2)
+def _call_regexp_extract_2(toks, i, parts, column_kinds):
+    # DuckDB's 2-arg regexp_extract returns the WHOLE match
+    # (group 0); Spark's 2-arg form defaults to group 1 — a
+    # silent wrong answer whenever the pattern has groups. The
+    # emitted 3-arg call doesn't re-match this 2-arg branch.
+    _, close, spans = parts
+    a = _arg_text(toks, spans[0])
+    b = _arg_text(toks, spans[1])
+    return f"regexp_extract({a}, {b}, 0)", close
+
+
+@_calls("regexp_extract", nargs=3)
+def _call_regexp_extract_3(toks, i, parts, column_kinds):
+    # a group index PAST the pattern's capture count returns ''
+    # in DuckDB [measured r12: regexp_extract('ab12',
+    # '([a-z]+)(\d+)', 3) = '']; Spark throws
+    # REGEX_GROUP_INDEX. Provable only for a LITERAL pattern +
+    # LITERAL index (counted driver-side); negative indexes
+    # error in BOTH engines and stay loud.
+    _, close, spans = parts
+    pat = _arg_text(toks, spans[1]).strip()
+    gix = _arg_text(toks, spans[2]).strip()
+    mp = re.fullmatch(r"'((?:[^']|'')*)'", pat)
+    if mp and re.fullmatch(r"\d+", gix) and int(gix) > 0:
+        try:
+            ngroups = re.compile(
+                mp.group(1).replace("''", "'")).groups
+        except re.error:
+            ngroups = None
+        if ngroups is not None and int(gix) > ngroups:
+            # NULL subject stays NULL (review r12: the bare
+            # '' fold lost NULL propagation)
+            subj0 = _arg_text(toks, spans[0])
+            return (f"(CASE WHEN ({subj0}) IS NULL "
+                    f"THEN NULL ELSE '' END)", close)
+
+
+@_calls("regexp_replace", nargs=4)
+def _call_regexp_replace(toks, i, parts, column_kinds):
+    # 4-arg options form. 'g' = replace-all = Spark's native
+    # semantics; WITHOUT 'g' DuckDB replaces only the FIRST
+    # match, which the late _rewrite_regexp_first_match pass
+    # emulates on bare 3-arg calls — so the global form must
+    # leave through the __global_regexp_replace__ MARKER (renamed
+    # back in _rewrite_keywords) or that pass would wrongly
+    # first-match it. 'i'/'s' translate to inline (?i)/(?s)
+    # prefixes on the pattern [measured: 'i' alone stays
+    # first-only]; other option letters pass through untouched
+    # (4-arg Spark regexp_replace then fails loudly on the
+    # string position argument).
+    _, close, spans = parts
+    flag = _arg_text(toks, spans[3]).strip()
+    if (len(flag) >= 2 and flag[0] == flag[-1]
+            and flag[0] in "'\""):
+        letters = flag[1:-1]
+        if letters and all(c in "gismnp" for c in letters):
+            s_ = _arg_text(toks, spans[0])
+            p_ = _arg_text(toks, spans[1]).strip()
+            r_ = _arg_text(toks, spans[2])
+            inline = "".join(f"(?{c})" for c in "is"
+                             if c in letters)
+            if inline:
+                if p_.startswith("'") and p_.endswith("'") \
+                        and len(p_) >= 2:
+                    p_ = f"'{inline}" + p_[1:]
+                else:
+                    p_ = f"concat('{inline}', {p_})"
+            fn = ("__global_regexp_replace__"
+                  if "g" in letters else "regexp_replace")
+            return f"{fn}({s_}, {p_}, {r_})", close
+
+
+@_calls("list_cosine_similarity", nargs=2)
+def _call_list_cosine_similarity_2(toks, i, parts, column_kinds):
+    _, close, spans = parts
+    a = _arg_text(toks, spans[0])
+    b = _arg_text(toks, spans[1])
+    dot = (f"aggregate(zip_with({a}, {b}, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
+           f"CAST(0 AS DOUBLE), (acc, v) -> acc + v)")
+    na = f"sqrt(aggregate({a}, CAST(0 AS DOUBLE), (acc, x) -> acc + CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))"
+    nb = f"sqrt(aggregate({b}, CAST(0 AS DOUBLE), (acc, x) -> acc + CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))"
+    return f"({dot} / ({na} * {nb}))", close
+
+
+# NOTE ordered/plain any_value rewrites live with first/last
+# above (r12: min_by/max_by emission — no collect_list of the
+# whole group; the old sort_array form is retired).
+@_calls("string_agg", nargs=2)
+def _call_string_agg(toks, i, parts, column_kinds):
+    if re.match(r"(?is)^\s*NULL\s*(ORDER\s+BY\b.*)?$",
+                _arg_text(toks, parts[2][1])):
+        # a NULL separator makes the WHOLE aggregate NULL in DuckDB
+        # [measured: string_agg(x, NULL ORDER BY x) → NULL, empty
+        # group → NULL too] — previously this shape dodged the
+        # ordered-string_agg rewrite (separator regex wants a
+        # quoted literal) and parse-errored in Spark. max(NULL)
+        # stays an aggregate, so GROUP BY/OVER positions still work.
+        return "max(CAST(NULL AS STRING))", parts[1]
+
+
+@_calls("array_agg", "string_agg")
+def _call_array_agg(toks, i, parts, column_kinds):
+    name = toks[i].text.lower()
+    _, close, spans = parts
+    inner = detokenize(toks[parts[0] + 1:close])
+    distinct = False
+    md = re.match(r"^\s*DISTINCT\s+(.*)$", inner,
+                  re.IGNORECASE | re.DOTALL)
+    if md:
+        distinct, inner = True, md.group(1)
+    forced_sep = False
+    if name == "string_agg" and len(parts[2]) == 1:
+        # 1-arg form defaults the separator to ',' [measured] —
+        # Spark's own string_agg concatenates with NO separator,
+        # a silent wrong answer if passed through. forced_sep
+        # routes the plain form through the array_join branch
+        # below (otherwise an unmodified call would fall through).
+        m1 = re.match(r"^(?P<e>.*?)(?P<ob>\s+ORDER\s+BY\s+.*)?$",
+                      inner, re.IGNORECASE | re.DOTALL)
+        inner = (m1.group("e").rstrip() + ", ','"
+                 + (m1.group("ob") or ""))
+        forced_sep = True
+    collect = "collect_set" if distinct else "collect_list"
+    # a trailing FILTER (WHERE …) must move INSIDE the rewritten
+    # aggregate — Spark rejects it on the sort_array wrapper
+    filt, fend = "", close
+    if (close + 1 < len(toks)):
+        after = [k for k in range(close + 1, len(toks))
+                 if toks[k].kind not in ("ws", "comment")]
+        if (after and toks[after[0]].kind == "ident"
+                and toks[after[0]].text.upper() == "FILTER"
+                and len(after) > 1 and toks[after[1]].text == "("):
+            try:
+                fclose = match_bracket(toks, after[1])
+            except ValueError:
+                fclose = None
+            if fclose is not None:
+                filt = " FILTER " + detokenize(
+                    toks[after[1]:fclose + 1])
+                fend = fclose
+    m = re.match(
+        r"^(?P<expr>.*?)\s+ORDER\s+BY\s+(?P<key>.+?)"
+        r"(?:\s+(?P<dir>ASC|DESC))?\s*$",
+        inner, re.IGNORECASE | re.DOTALL)
+    if m:
+        desc = (m.group("dir") or "").upper() == "DESC"
+        sort = (lambda x: f"sort_array({x}, false)" if desc
+                else f"sort_array({x})")
+        if name == "array_agg":
+            expr = m.group("expr").strip()
+            key = m.group("key").strip()
+            # DuckDB array_agg KEEPS NULL elements (judge probe
+            # r6: (1,NULL,2 ORDER BY x) → [1,2,NULL]) and its
+            # default null order is NULLS LAST in BOTH
+            # directions [measured: DESC → [2,1,NULL]] —
+            # collect_list drops them, so collect structs (never
+            # NULL even when the value is) with an explicit
+            # null-rank flag leading the sort key. expr may
+            # differ from the (single) order key; DISTINCT with
+            # expr != key errors in DuckDB too, so that shape
+            # stays unrewritten (loud on Spark).
+            single_key = "," not in re.sub(r"\([^()]*\)", "",
+                                           key)
+            has_nulls_kw = re.search(r"(?is)\bNULLS\s+"
+                                     r"(FIRST|LAST)\b", key)
+            if (single_key and not has_nulls_kw
+                    and (not distinct or expr == key)):
+                flag = ("IS NOT NULL" if desc else "IS NULL")
+                agg = (f"{collect}(struct(({key}) {flag} AS "
+                       f"__n, {key} AS __k, {expr} AS __v))"
+                       f"{filt}")
+                res = (f"transform({sort(agg)}, "
+                       f"__s -> __s.__v)")
+                # an EMPTY aggregate is NULL in DuckDB — fully
+                # filtered group, WHERE false, zero-row relation
+                # [measured r10: array_agg(x) WHERE false →
+                # NULL; collect_list gives []] — Catalyst dedups
+                # the repeated aggregate expression
+                res = (f"(CASE WHEN size({agg}) = 0 "
+                       f"THEN NULL ELSE {res} END)")
+                return res, fend
+            if not distinct:
+                # MULTI-key / NULLS-overridden ORDER BY (r11):
+                # comparator-sorted struct collection —
+                # per-key direction, DuckDB's NULLS LAST
+                # default unless overridden. The full key TEXT
+                # (incl. a trailing dir the outer regex split
+                # off) re-parses here.
+                full_key = (key + (" " + m.group("dir")
+                                   if m.group("dir") else ""))
+                okeys = _parse_order_keys(full_key)
+                if okeys:
+                    fields = ", ".join(
+                        f"({e}) AS __k{ix}"
+                        for ix, (e, _, _) in enumerate(okeys))
+                    agg = (f"{collect}(struct({fields}, "
+                           f"{expr} AS __v)){filt}")
+                    cmp_ = _order_comparator(okeys)
+                    res = (f"transform(array_sort({agg}, "
+                           f"(__l, __r) -> {cmp_}), "
+                           f"__s -> __s.__v)")
+                    res = (f"(CASE WHEN size({agg}) = 0 "
+                           f"THEN NULL ELSE {res} END)")
+                    return res, fend
+        else:  # string_agg(x, sep ORDER BY key [dir])
+            m2 = re.match(
+                r"^(?P<expr>.+?),\s*(?P<sep>'(?:[^']|'')*')\s+"
+                r"ORDER\s+BY\s+(?P<key>.+?)"
+                r"(?:\s+(?P<dir>ASC|DESC))?\s*$",
+                inner, re.IGNORECASE | re.DOTALL)
+            if (m2 and "," not in re.sub(r"\([^()]*\)", "",
+                                         m2.group("key"))
+                    and not re.search(r"(?is)\bNULLS\s+"
+                                      r"(FIRST|LAST)\b",
+                                      m2.group("key"))):
+                # expr may differ from the (single) sort key
+                # (r7 probe): struct-wrap like array_agg, but
+                # drop NULL exprs first — string_agg skips them
+                desc = (m2.group("dir") or "").upper() == "DESC"
+                expr2 = m2.group("expr").strip()
+                key2 = m2.group("key").strip()
+                if expr2 == key2:
+                    agg = f"{collect}({expr2}){filt}"
+                    sorted_agg = (f"sort_array({agg}, false)"
+                                  if desc
+                                  else f"sort_array({agg})")
+                    joined = (f"array_join({sorted_agg}, "
+                              f"{m2.group('sep')})")
+                else:
+                    flag2 = ("IS NOT NULL" if desc else "IS NULL")
+                    agg = (f"{collect}(CASE WHEN ({expr2}) IS "
+                           f"NOT NULL THEN struct(({key2}) "
+                           f"{flag2} AS __n, {key2} AS __k, "
+                           f"{expr2} AS __v) END){filt}")
+                    sorted_agg = (f"sort_array({agg}, false)"
+                                  if desc
+                                  else f"sort_array({agg})")
+                    joined = (f"array_join(transform({sorted_agg}"
+                              f", __s -> __s.__v), "
+                              f"{m2.group('sep')})")
+                # empty aggregate → NULL (see array_agg branch;
+                # array_join would give '' — measured r10:
+                # string_agg(x, ',') WHERE false → NULL)
+                res = (f"(CASE WHEN size({agg}) = 0 "
+                       f"THEN NULL ELSE {joined} END)")
+                return res, fend
+            if m2 and not distinct:
+                # MULTI-key / NULLS-overridden ORDER BY (r11):
+                # comparator sort like the array_agg path;
+                # NULL exprs drop first (string_agg skips them)
+                full_key = (m2.group("key").strip()
+                            + (" " + m2.group("dir")
+                               if m2.group("dir") else ""))
+                okeys = _parse_order_keys(full_key)
+                if okeys:
+                    expr2 = m2.group("expr").strip()
+                    fields = ", ".join(
+                        f"({e}) AS __k{ix}"
+                        for ix, (e, _, _) in enumerate(okeys))
+                    agg = (f"{collect}(CASE WHEN ({expr2}) IS "
+                           f"NOT NULL THEN struct({fields}, "
+                           f"{expr2} AS __v) END){filt}")
+                    cmp_ = _order_comparator(okeys)
+                    joined = (
+                        f"array_join(transform(array_sort("
+                        f"{agg}, (__l, __r) -> {cmp_}), "
+                        f"__s -> __s.__v), {m2.group('sep')})")
+                    res = (f"(CASE WHEN size({agg}) = 0 "
+                           f"THEN NULL ELSE {joined} END)")
+                    return res, fend
+    elif name == "array_agg" or distinct or filt or forced_sep:
+        # DISTINCT without ORDER BY (set semantics, arbitrary
+        # order in DuckDB too), a bare FILTER (the
+        # all-filtered-group → NULL pin applies here too,
+        # review r6), a forced default separator — or ANY plain
+        # array_agg, which must struct-wrap to keep NULL
+        # elements (judge probe r6: Spark's array_agg is a
+        # collect_list alias and drops them)
+        def _null_guard(agg: str, res: str) -> str:
+            # EVERY empty aggregate is NULL in DuckDB — not
+            # just FILTERed/forced-sep shapes [measured r10:
+            # array_agg(x)/string_agg(x, ',')/list(x) over
+            # WHERE false all → NULL; collect_list gives [],
+            # array_join gives '']
+            return (f"(CASE WHEN size({agg}) = 0 "
+                    f"THEN NULL ELSE {res} END)")
+
+        if name == "array_agg":
+            # window form: the OVER clause must attach to the
+            # inner collect, not trail the transform wrapper
+            over, oend = "", fend
+            after_o = [k for k in range(fend + 1, len(toks))
+                       if toks[k].kind not in ("ws", "comment")]
+            if (after_o and toks[after_o[0]].kind == "ident"
+                    and toks[after_o[0]].text.upper() == "OVER"
+                    and len(after_o) > 1):
+                nxt = toks[after_o[1]]
+                if nxt.text == "(":
+                    try:
+                        oclose = match_bracket(toks, after_o[1])
+                        over = " OVER " + detokenize(
+                            toks[after_o[1]:oclose + 1])
+                        oend = oclose
+                    except ValueError:
+                        pass
+                elif nxt.kind == "ident":
+                    over = f" OVER {nxt.text}"
+                    oend = after_o[1]
+            agg = (f"{collect}(struct({inner.strip()} AS __v))"
+                   f"{filt}{over}")
+            return _null_guard(
+            agg, f"transform({agg}, __s -> __s.__v)"), oend
+        m3 = re.match(
+            r"^(?P<expr>.+?),\s*(?P<sep>'(?:[^']|'')*')\s*$",
+            inner, re.IGNORECASE | re.DOTALL)
+        if m3:
+            agg = (f"{collect}({m3.group('expr').strip()})"
+                   f"{filt}")
+            return _null_guard(
+            agg, f"array_join({agg}, {m3.group('sep')})"), fend
+
 
 
 # identifiers after which a +/- sign must be UNARY (SELECT -2 ^ 2, the
@@ -13652,7 +13627,11 @@ def to_spark_sql(sql: str, column_kinds: dict[str, str] | None = None) -> str:
 
     ``column_kinds`` (lowercased column name → 'array' | 'string') makes
     the ``len()`` array-vs-string dispatch schema-aware; Engine.sql
-    supplies it from the registered tables."""
+    supplies it from the registered tables.
+
+    Double-quoted identifiers are expected already normalized:
+    ``Engine.sql`` runs ``_rewrite_quoted_identifiers`` before it routes
+    the statement, so a ``"…"`` reaching this function is left as is."""
     sql = _rewrite_escape_strings(sql)
     derived = _values_column_kinds(sql)
     if derived:
@@ -13664,7 +13643,6 @@ def to_spark_sql(sql: str, column_kinds: dict[str, str] | None = None) -> str:
                 merged[c] = k
         column_kinds = merged
     sql = _rewrite_dollar_strings(sql)
-    sql = _rewrite_quoted_identifiers(sql)
     # BEFORE the raw-literal backslash doubling: \xHH blob escapes
     # decode against the literal's RAW text
     sql = _fold_blob_literals(sql)

@@ -31,20 +31,17 @@ from .dialect import substitute_select_alias, to_spark_sql
 from .sources import sinks
 
 
-# FTS scores-view memo: session-keyed (weak — a stopped session's
-# entries vanish) map of (backing path, its (mtime_ns, size), id col,
-# terms, fields, k1, b, conjunctive) → temp view name; plus a
-# session-global name sequence so concurrent Engine instances never
-# reuse a view name. Metadata only — the scores view holds a PLAN,
-# never rows.
 import itertools
-import weakref
 
 # The private view a row-level DML statement reads its target's
 # candidate files (with row ids) through, aliased as the target.
 _DML_PROBE = "__dml_probe"
 
-_FTS_SCORES_BY_PATH: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
+# FTS scores views are memoized per session on catalog.SessionState
+# (fts_views: (backing path, its (mtime_ns, size), id col, terms, fields,
+# k1, b, conjunctive) → temp view name); this process-wide sequence names
+# them, so concurrent Engine instances never reuse a view name. Metadata
+# only — the scores view holds a PLAN, never rows.
 _FTS_VIEW_SEQ = itertools.count(1)
 
 # INSTALL/FORCE INSTALL/LOAD statement shapes (LoadInfo.load_type analog,
@@ -1605,9 +1602,7 @@ class Engine:
         apply to the incoming batch)."""
         from pyspark.sql import functions as F
 
-        cons = snapshots.read_constraints(
-            self._versioned[name]) if name in self._versioned else []
-        for c in cons:
+        for c in self._constraints(name):
             if c["kind"] == "not_null":
                 if new_df.where(F.col(c["col"]).isNull()).limit(1).collect():
                     raise ValueError(
@@ -1627,9 +1622,7 @@ class Engine:
         UPDATE/MERGE do not re-validate (documented, same as D24)."""
         from pyspark.sql import functions as F
 
-        cons = snapshots.read_constraints(
-            self._versioned[name]) if name in self._versioned else []
-        for c in cons:
+        for c in self._constraints(name):
             if c["kind"] == "not_null":
                 if new_df.where(F.col(c["col"]).isNull()).limit(1).collect():
                     raise ValueError(
@@ -1791,11 +1784,24 @@ class Engine:
     def _column_defaults(self, name: str) -> dict[str, str]:
         """Declared DEFAULT expressions for ``name``'s columns (filled
         into INSERTs that omit the column, instead of NULL)."""
-        if name not in self._versioned:
-            return {}
-        return {c["col"]: c["expr"]
-                for c in snapshots.read_constraints(self._versioned[name])
+        return {c["col"]: c["expr"] for c in self._constraints(name)
                 if c["kind"] == "default"}
+
+    def _constraints(self, name: str) -> list[dict]:
+        """Declared constraints of versioned table ``name`` ([] for any
+        other relation)."""
+        table_dir = self._versioned.get(name)
+        return snapshots.read_constraints(table_dir) if table_dir else []
+
+    def _table_columns(self, name: str) -> list[tuple]:
+        """(field, DuckDB type, not_null) per column of table ``name``:
+        the view schema, with a versioned table's declared NOT NULLs
+        merged in from its constraints sidecar (Spark's schema says
+        nullable). DESCRIBE, SHOW CREATE TABLE, PRAGMA table_info and
+        information_schema.columns all report these rows."""
+        notnull = {c["col"] for c in self._constraints(name)
+                   if c["kind"] == "not_null"}
+        return _schema_columns(self.table(name).schema, notnull)
 
     def _existing_keys_df(self, name: str, kcols: list[str],
                           batch: DataFrame) -> DataFrame:
@@ -2197,48 +2203,35 @@ class Engine:
             words.add(f"{a}__{b}")
         return [n for n in names if n.lower() in words]
 
-    def _describe_df(self, schema):
+    def _describe_df(self, columns):
         """DuckDB's DESCRIBE shape [measured r10: 6 columns
         (column_name, column_type, null, key, default, extra), duck
-        type spellings, NULL tail]."""
+        type spellings, NULL tail] over ``_schema_columns`` rows."""
         return catalog.local_frame(
             self.spark,
-            [(f.name, _duck_type_name(f.dataType.simpleString()),
-              "YES" if f.nullable else "NO", None, None, None)
-             for f in schema.fields],
+            [(f.name, dtype, "NO" if not_null else "YES", None, None, None)
+             for f, dtype, not_null in columns],
             "column_name string, column_type string, null string, "
             "key string, default string, extra string",
         )
 
-    def _column_kinds(self, query: str | None = None) -> dict[str, str]:
+    def _column_kinds(self, query: str) -> dict[str, str]:
         """Lowercased column name → 'array' | 'string' | 'map' | 'date'
-        — the schema knowledge behind the dialect's len() dispatch. With
-        ``query`` given, only views referenced by the statement are
-        merged (fewer cross-table name conflicts AND no whole-catalog
-        hydration on the statement path). Names whose type class
-        conflicts across the merged tables are dropped (the rewriter then
-        falls back to its textual heuristic). Driver-side metadata only,
-        no Spark job."""
-        epoch = getattr(self, "_reg_epoch", 0)
-        names = self._registered_names()
-        if query is not None:
-            names = self._referenced_names(query, names)
-        else:
-            cached = getattr(self, "_ck_cache", None)
-            if cached is not None and cached[0] == epoch:
-                return cached[1]
+        — the schema knowledge behind the dialect's len() dispatch. Only
+        views referenced by ``query`` are merged (fewer cross-table name
+        conflicts AND no whole-catalog hydration on the statement path).
+        Names whose type class conflicts across the merged tables are
+        dropped (the rewriter then falls back to its textual heuristic).
+        Driver-side metadata only, no Spark job."""
         kinds: dict[str, str | None] = {}
-        for name in names:
+        for name in self._referenced_names(query, self._registered_names()):
             for col, k in self._fields_of(name) or []:
                 c = col.lower()
                 if c in kinds and kinds[c] != k:
                     kinds[c] = None
                 else:
                     kinds[c] = k
-        out = {c: k for c, k in kinds.items() if k}
-        if query is None:
-            self._ck_cache = (epoch, out)
-        return out
+        return {c: k for c, k in kinds.items() if k}
 
     def _columns_of(self, name: str) -> list[str] | None:
         """Ordered column list of one registered view (original casing) —
@@ -2430,7 +2423,7 @@ class Engine:
             if name.startswith(("__", "information_schema__")):
                 continue
             try:
-                schema = self.spark.table(name).schema
+                columns = self._table_columns(name)
             except Exception:
                 continue
             ttype = "BASE TABLE" if name in self._versioned else "VIEW"
@@ -2442,11 +2435,9 @@ class Engine:
                            None, None, None, None, None,
                            "YES" if ttype == "BASE TABLE" else "NO",
                            "NO", None, None))
-            for i, f in enumerate(schema.fields, 1):
-                rows_c.append(
-                    ("memory", "main", name, f.name, i,
-                     _duck_type_name(f.dataType.simpleString()),
-                     "YES" if f.nullable else "NO"))
+            for i, (f, dtype, not_null) in enumerate(columns, 1):
+                rows_c.append(("memory", "main", name, f.name, i, dtype,
+                               "NO" if not_null else "YES"))
         catalog.local_frame(
             self.spark,
             rows_t, "table_catalog string, table_schema string, "
@@ -2918,11 +2909,10 @@ class Engine:
             )
         msc = _SHOW_CREATE_RE.match(query)
         if msc:
-            schema = self.table(msc.group("name")).schema
             cols = ",\n  ".join(
                 f"{f.name} {f.dataType.simpleString().upper()}"
-                + ("" if f.nullable else " NOT NULL")
-                for f in schema.fields)
+                + (" NOT NULL" if not_null else "")
+                for f, _, not_null in self._table_columns(msc.group("name")))
             return catalog.local_frame(
                 self.spark,
                 [(f"CREATE TABLE {msc.group('name')} (\n  {cols}\n);",)],
@@ -2930,12 +2920,10 @@ class Engine:
         mdq = _DESCRIBE_QUERY_RE.match(query)
         if mdq:
             schema = self.sql(mdq.group("body"), dialect=dialect).schema
-            return self._describe_df(schema)
+            return self._describe_df(_schema_columns(schema))
         mdesc = _DESCRIBE_RE.match(query)
         if mdesc:
-            name = mdesc.group("name")
-            schema = self.table(name).schema
-            return self._describe_df(schema)
+            return self._describe_df(self._table_columns(mdesc.group("name")))
         if _SHOW_TABLES_RE.match(query):
             return catalog.local_frame(
                 self.spark,
@@ -3711,20 +3699,11 @@ class Engine:
                 and "." in key:
             db, _, t = key.partition(".")
             key = self._attached.get(db, {}).get(t, key)
-        schema = self.table(key).schema
-        cons = (snapshots.read_constraints(self._versioned[key])
-                if key in self._versioned else [])
-        notnull = {c["col"] for c in cons if c["kind"] == "not_null"}
-        defaults = {c["col"]: c["expr"] for c in cons
-                    if c["kind"] == "default"}
-        pk = {col for c in cons
+        defaults = self._column_defaults(key)
+        pk = {col for c in self._constraints(key)
               if c["kind"] == "unique" and c.get("pk") for col in c["cols"]}
-        rows = [
-            (i, f.name, _duck_type_name(f.dataType.simpleString()),
-             f.name in notnull or not f.nullable,
-             defaults.get(f.name), f.name in pk)
-            for i, f in enumerate(schema.fields)
-        ]
+        rows = [(i, f.name, dtype, not_null, defaults.get(f.name), f.name in pk)
+                for i, (f, dtype, not_null) in enumerate(self._table_columns(key))]
         return catalog.local_frame(
             self.spark,
             rows, "cid int, name string, type string, notnull boolean, "
@@ -3868,7 +3847,7 @@ class Engine:
             # parquet on every execution; nothing row-valued is cached).
             path = self._table_paths.get(tbl.lower())
             if path is not None:
-                cache = _FTS_SCORES_BY_PATH.setdefault(self.spark, {})
+                cache = catalog.session_state(self.spark).fts_views
                 # the file's identity too: a rewritten file at the same
                 # path must get a fresh view, not the old file's scores
                 try:
@@ -5996,6 +5975,13 @@ _DUCK_TYPE_NAMES = {
     "float": "FLOAT", "boolean": "BOOLEAN", "timestamp": "TIMESTAMP",
     "timestamp_ntz": "TIMESTAMP", "date": "DATE", "binary": "BLOB",
 }
+
+
+def _schema_columns(schema, notnull=frozenset()) -> list[tuple]:
+    """(field, DuckDB type, not_null) per field of ``schema``; a field
+    named in ``notnull`` is NOT NULL whatever Spark's schema says."""
+    return [(f, _duck_type_name(f.dataType.simpleString()),
+             f.name in notnull or not f.nullable) for f in schema.fields]
 
 
 def _duck_type_name(simple: str) -> str:

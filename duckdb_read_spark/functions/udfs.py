@@ -1254,12 +1254,9 @@ class SplitWords:
 # construction — measured 0.2-0.3 s per Engine() on a warm session, paid
 # by EVERY lifecycle operator that constructs an Engine per call. UDF
 # registration is session-global and idempotent, so one registration per
-# SparkSession suffices; keyed weakly on the Python session object (a
-# stopped/new session re-registers). Metadata-only — no query results
+# SparkSession suffices, remembered on the session's catalog.SessionState
+# (a stopped/new session re-registers). Metadata-only — no query results
 # are cached.
-import weakref
-
-_FUZZY_REGISTERED: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
 
 
 def register_fuzzy_udfs(spark) -> dict:
@@ -1267,9 +1264,11 @@ def register_fuzzy_udfs(spark) -> dict:
     Arrow UDFs, registered eagerly by Engine.__init__ so plain SELECTs
     resolve them like builtins. Idempotent (memoized per SparkSession);
     returns name → fn."""
-    cached = _FUZZY_REGISTERED.get(spark)
-    if cached is not None:
-        return cached
+    from .. import catalog
+
+    state = catalog.session_state(spark)
+    if state.udfs is not None:
+        return state.udfs
     fns = {"jaro_similarity": jaro_similarity,
            "jaro_winkler_similarity": jaro_winkler_similarity,
            "damerau_levenshtein": damerau_levenshtein,
@@ -1287,7 +1286,7 @@ def register_fuzzy_udfs(spark) -> dict:
            **_make_math_udfs()}
     for fn_name, fn in fns.items():
         spark.udf.register(fn_name, fn)
-    _FUZZY_REGISTERED[spark] = fns
+    state.udfs = fns
     return fns
 
 

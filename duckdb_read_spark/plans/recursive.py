@@ -19,17 +19,18 @@ storage for depth× plan replays. The remaining per-iteration cost is
 Spark's own planning+job-launch floor (~70 ms/iteration measured), which
 is intrinsic to iterative execution — documented in SCALE.md §2 (D7).
 
-Caches from the previous recursive query are unpersisted on the next
-call (bounded memory; the views are tiny by recursion's nature).
+Caches from the session's previous recursive query are unpersisted on
+its next one (bounded memory; the views are tiny by recursion's nature).
+They live on the session's ``catalog.SessionState``, so a recursive
+query in one session leaves another session's cached inputs alone.
 """
 
 from __future__ import annotations
 
 import re
 
-from .. import sqltext
+from .. import catalog, sqltext
 
-_CACHED: list = []
 _VIEW_N = [0]
 
 # Materialized recursion inputs at or below this row count are collapsed
@@ -103,12 +104,13 @@ def materialize_recursive_inputs(spark, query: str) -> str:
         _refs(r, b) for r in recursive)}
     if not needed:
         return query
-    for df in _CACHED:
+    cached = catalog.session_state(spark).recursive_inputs
+    for df in cached:
         try:
             df.unpersist()
         except Exception:
             pass
-    _CACHED.clear()
+    cached.clear()
     subst: dict[str, str] = {}
 
     def apply_subst(text: str) -> str:
@@ -151,7 +153,7 @@ def materialize_recursive_inputs(spark, query: str) -> str:
             _VIEW_N[0] += 1
             view = f"__rec_cte_{_VIEW_N[0]}"
             df.createOrReplaceTempView(view)
-            _CACHED.append(df)
+            cached.append(df)
             subst[name] = view
         else:
             remaining.append((name, body))

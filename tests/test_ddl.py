@@ -1083,3 +1083,31 @@ def test_temp_table_shadows_permanent(spark, tmp_path):
     # a fresh engine over the same warehouse sees the intact permanent
     eng2 = Engine(spark=spark, warehouse_dir=wh)
     assert eng2.sql("SELECT v FROM st").collect()[0][0] == 1
+
+
+def test_declared_not_null_in_every_catalog_view(eng):
+    """A declared NOT NULL lives in the constraints sidecar, not in the
+    Spark schema (which says nullable). DESCRIBE, information_schema,
+    PRAGMA table_info and SHOW CREATE TABLE all report it, as DuckDB 1.0
+    does for the same table."""
+    import duckdb
+
+    ddl = "CREATE TABLE nn (a INTEGER NOT NULL, b VARCHAR)"
+    con = duckdb.connect()
+    con.execute(ddl)
+    eng.sql(ddl)
+    info = ("SELECT column_name, is_nullable FROM information_schema.columns "
+            "WHERE table_name = 'nn' ORDER BY ordinal_position")
+    want = [("a", "INTEGER", "NO"), ("b", "VARCHAR", "YES")]
+    assert [r[:3] for r in con.execute("DESCRIBE nn").fetchall()] == want
+    assert [tuple(r[:3]) for r in eng.sql("DESCRIBE nn").collect()] == want
+    want = [("a", "NO"), ("b", "YES")]
+    assert con.execute(info).fetchall() == want
+    assert [tuple(r) for r in eng.sql(info, dialect="duckdb").collect()] \
+        == want
+    want = [("a", True), ("b", False)]
+    info = "PRAGMA table_info('nn')"
+    assert [(r[1], r[3]) for r in con.execute(info).fetchall()] == want
+    assert [(r[1], r[3]) for r in eng.sql(info).collect()] == want
+    ddl = eng.sql("SHOW CREATE TABLE nn").collect()[0].sql
+    assert "a INT NOT NULL," in ddl and "b STRING\n" in ddl

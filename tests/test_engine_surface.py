@@ -4,6 +4,7 @@ extension registry + safe mode (D1/D3), EXPLAIN (D2)."""
 from __future__ import annotations
 
 import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -1819,6 +1820,30 @@ def test_recursive_cte_input_materialization(engine, spark):
     self_only = ("WITH RECURSIVE r AS (SELECT 1 AS n UNION ALL "
                  "SELECT n + 1 FROM r WHERE n < 3) SELECT * FROM r")
     assert materialize_recursive_inputs(spark, self_only) == self_only
+
+
+def test_recursive_inputs_stay_cached_per_session(spark):
+    """A session's cached recursion inputs are its own: a recursive query
+    in another session (here ``a.newSession()``) leaves them cached."""
+    from duckdb_read_spark.plans.recursive import (
+        materialize_recursive_inputs,
+    )
+
+    q = ("WITH RECURSIVE nxt AS (SELECT id AS a, id + 1 AS b "
+         "FROM range(5)), chain AS (SELECT 0L AS n UNION ALL "
+         "SELECT nxt.b FROM chain JOIN nxt ON nxt.a = chain.n) "
+         "SELECT max(n) AS m FROM chain")
+    a = spark.newSession()
+    b = a.newSession()
+    rewritten = materialize_recursive_inputs(a, q)
+    view = re.search(r"__rec_cte_\d+", rewritten).group(0)
+    assert a.catalog.isCached(view)
+    # another input plan: the cache manager is shared across sessions
+    # and matches cached data by plan
+    other = q.replace("range(5)", "range(7)")
+    assert materialize_recursive_inputs(b, other) != other
+    assert a.catalog.isCached(view)
+    assert a.sql(rewritten).collect()[0].m == 5
 
 
 def test_pragma_table_info_cross_engine(engine, duck, spark, tmp_path):

@@ -1114,6 +1114,12 @@ def test_double_quoted_identifiers(engine, duck):
     _check(engine, duck, 'SELECT "upper"(\'ab\') AS u')
     _check(engine, duck,
            'SELECT x AS "from" FROM (SELECT 1 AS x) ORDER BY "from"')
+    # a registered table's column and a reserved-word name, both
+    # normalized by Engine.sql alone (to_spark_sql leaves "…" as is)
+    _check(engine, duck, 'SELECT "n_name" FROM nation ORDER BY "n_name"')
+    _check(engine, duck, (
+        'SELECT "select" FROM (SELECT n_name AS "select" FROM nation) '
+        'ORDER BY 1'))
 
 
 def test_floordiv_operator(engine, duck):
